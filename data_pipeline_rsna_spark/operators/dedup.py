@@ -28,10 +28,10 @@ from __future__ import annotations
 import hashlib
 from fractions import Fraction
 
-from pyspark.sql import DataFrame, Observation, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..lineage import lineage_cut
+from ..lineage import fixpoint, lineage_cut
 
 # ---------------------------------------------------------------------------
 # tokenization / shingling (shared with textanalysis)
@@ -718,10 +718,9 @@ def simhash_near_pairs(docs: DataFrame, id_col: str = "doc_id",
             / F.pow(F.lit(2.0), F.col("blk") * block_bits).cast("long")
         ).cast("long")
         % (1 << block_bits),
-    ).transform(lineage_cut,
-        eager=True
-    )  # self-join below would otherwise recompute the signature; local
-    # checkpoint (not persist) so the blocks free when the result drops
+    ).transform(lineage_cut)
+    # the self-join below would otherwise recompute the signature; a
+    # checkpoint, not persist, frees the blocks when the result drops
     a = blocks.select(
         F.col(id_col).alias("doc_a"), F.col("simhash").alias("sig_a"),
         "blk", "blk_val",
@@ -763,9 +762,7 @@ def ngram_jaccard_pairs(docs: DataFrame, id_col: str = "doc_id",
     # storage for the whole session (no caller can unpersist a lazy
     # result), while checkpoint blocks are freed by the ContextCleaner
     # as soon as the returned DataFrame is dropped.
-    sh = exploded_shingles(docs, id_col, text_col, shingle_n).transform(lineage_cut,
-        eager=True
-    )
+    sh = lineage_cut(exploded_shingles(docs, id_col, text_col, shingle_n))
     sizes = sh.groupBy(id_col).agg(F.count("*").alias("n_sh"))
     a = sh.select(F.col(id_col).alias("doc_a"), "shingle")
     b = sh.select(F.col(id_col).alias("doc_b"), "shingle")
@@ -806,21 +803,14 @@ def connected_components(edges: DataFrame, src: str = "doc_a",
     Each round every node adopts the minimum label over its
     neighborhood INCLUDING ITSELF (the edge set carries a self-loop
     per node), so one shuffle-join + one aggregate produce the new
-    labels directly — no second left-join back to the old labels
-    (round 12, guide §2.4: the least()/coalesce re-join per round was
-    a second shuffle of the label table). Convergence takes
-    O(component diameter) rounds — near-dup clusters are shallow
-    (stars/cliques), so a handful. Labels are lineage-cut each round
-    so the plan doesn't grow with iterations.
+    labels directly. Convergence takes O(component diameter) rounds —
+    near-dup clusters are shallow (stars/cliques), so a handful.
 
-    Convergence detection rides the cut's own materialization job via
-    ``observe()`` (round 12, guide §5: the per-round changed-count was
-    a second ACTION — a join of two label tables — per round): labels
-    are per-node non-increasing (the self-loop keeps the old label in
-    the min), so Σ component is strictly decreasing until the fixed
-    point and Σ-unchanged ⇔ no label changed. The sum accumulates in
-    decimal(38,0) — an int64 Σ over billions of 63-bit ids could wrap
-    and alias two different label states.
+    Labels are per-node non-increasing (the self-loop keeps the old
+    label in the min), so Σ component is the monotone ``fixpoint``
+    progress. The sum accumulates in decimal(38,0) — an int64 Σ over
+    billions of 63-bit ids could wrap and alias two different label
+    states.
 
     Returns (node, component) where component = min node id reachable.
     """
@@ -831,28 +821,21 @@ def connected_components(edges: DataFrame, src: str = "doc_a",
     sym = sym.unionByName(
         nodes.selectExpr("node AS u", "node AS v")
     ).persist()
-    _sum = F.sum(F.col("component").cast("decimal(38,0)")).alias("s")
-    obs0 = Observation()
-    labels = (
-        nodes.withColumn("component", F.col("node"))
-        .observe(obs0, _sum)
-        .transform(lineage_cut)
-    )
-    prev_sum = obs0.get["s"]
-    for _ in range(max_iter):
-        obs = Observation()
-        labels = (
+
+    def step(labels: DataFrame, _round: int) -> DataFrame:
+        return (
             sym.join(labels, sym.v == labels.node)
             .groupBy("u")
             .agg(F.min("component").alias("component"))
             .select(F.col("u").alias("node"), "component")
-            .observe(obs, _sum)
-            .transform(lineage_cut)
         )
-        cur_sum = obs.get["s"]
-        if cur_sum == prev_sum:
-            break
-        prev_sum = cur_sum
+
+    labels = fixpoint(
+        nodes.withColumn("component", F.col("node")),
+        step,
+        max_iter,
+        progress=F.sum(F.col("component").cast("decimal(38,0)")),
+    )
     sym.unpersist()
     return labels
 
@@ -1124,9 +1107,7 @@ def ngram_containment_pairs(docs: DataFrame, id_col: str = "doc_id",
     (doc_small, doc_big, shared, containment)."""
     # localCheckpoint, not persist — see ngram_jaccard_pairs for why
     # (cache lifetime bounded by the result, not the session).
-    sh = exploded_shingles(docs, id_col, text_col, shingle_n).transform(lineage_cut,
-        eager=True
-    )
+    sh = lineage_cut(exploded_shingles(docs, id_col, text_col, shingle_n))
     sizes = sh.groupBy(id_col).agg(F.count("*").alias("n_sh"))
     a = sh.select(F.col(id_col).alias("doc_small"), "shingle")
     b = sh.select(F.col(id_col).alias("doc_big"), "shingle")
@@ -1251,7 +1232,7 @@ def prefix_filter_jaccard_pairs(
         f"`{text_col}`), '\\\\s+'))) AS _ws",
     ).withColumn(
         "_ck", F.md5(F.expr("array_join(transform(_ws, t -> md5(t)), '')"))
-    ).transform(lineage_cut, eager=True)  # feeds members AND groups
+    ).transform(lineage_cut)  # feeds members AND groups
     ids = mem0.select("_ck", "_id")
     if max_class is None:
         members = ids
@@ -1264,7 +1245,7 @@ def prefix_filter_jaccard_pairs(
             .select(
                 "_ck", "_id", (F.col("_n_mem") > max_class).alias("_cap")
             )
-            .transform(lineage_cut, eager=True)
+            .transform(lineage_cut)
         )
     # one representative row per distinct set (_ck determines _ws, so
     # first() is deterministic; rep = min id, always inside the capped
@@ -1273,7 +1254,7 @@ def prefix_filter_jaccard_pairs(
         mem0.groupBy("_ck")
         .agg(F.min("_id").alias("_g"), F.first("_ws").alias("_ws"))
         .withColumn("_sz", F.size("_ws").cast("bigint"))
-        .transform(lineage_cut, eager=True)  # consumed by 4 branches below
+        .transform(lineage_cut)  # consumed by 4 branches below
     )
     # (class, member, rep, set size) — the expansion side of every join
     memr = members.join(groups.select("_ck", "_g", "_sz"), "_ck")
@@ -1511,7 +1492,7 @@ def tfidf_cosine_pairs(
         )
     tf = toks.groupBy("_d", "_term").agg(
         F.count(F.lit(1)).cast("bigint").alias("_tf")
-    ).transform(lineage_cut, eager=True)  # feeds df/N AND the collapse
+    ).transform(lineage_cut)  # feeds df/N AND the collapse
     dfreq = tf.groupBy("_term").agg(
         F.count(F.lit(1)).cast("bigint").alias("_df")
     )
@@ -1548,7 +1529,7 @@ def tfidf_cosine_pairs(
                 )
             ).alias("_ck")
         )
-        .transform(lineage_cut, eager=True)  # feeds members AND classes
+        .transform(lineage_cut)  # feeds members AND classes
     )
     if max_class is None:
         members = mem
@@ -1561,13 +1542,13 @@ def tfidf_cosine_pairs(
             .select(
                 "_d", "_ck", (F.col("_n_mem") > max_class).alias("_cap")
             )
-            .transform(lineage_cut, eager=True)
+            .transform(lineage_cut)
         )
     # rep = min id per class, always inside the capped member set
     classes = (
         mem.groupBy("_ck")
         .agg(F.min("_d").alias("_g"))
-        .transform(lineage_cut, eager=True)  # reps, expansion, within
+        .transform(lineage_cut)  # reps, expansion, within
     )
     reps = classes.select(F.col("_g").alias("_d"))
     post = (
@@ -1586,7 +1567,7 @@ def tfidf_cosine_pairs(
         # both candidate sides, both verify sides); without truncating
         # lineage each one re-runs the shingle explode + two shuffles
         # (measured 25 s -> 7 s at sf0.1)
-        .transform(lineage_cut, eager=True)
+        .transform(lineage_cut)
     )
     norms = post.groupBy("_d").agg(
         F.sum(F.expr("CAST(_w AS DECIMAL(38,0)) * _w")).alias("_n2")
@@ -1636,9 +1617,7 @@ def tfidf_cosine_pairs(
             f"_total - _cum_prev >= {t} - {eps} AND "
             f"1.0 - _cumsq_prev >= {t * t} - {eps}"
         )
-    ).select("_d", "_term", "_cumsq_prev").transform(
-        lineage_cut, eager=True
-    )
+    ).select("_d", "_term", "_cumsq_prev").transform(lineage_cut)
     ia = indexed.selectExpr("_d AS doc_a", "_term", "_cumsq_prev AS _qa")
     ib = indexed.selectExpr("_d AS doc_b", "_term", "_cumsq_prev AS _qb")
     # Pair-level ℓ² cross bound (L2AP family), sound because each doc

@@ -710,7 +710,7 @@ def late_arrival_audit(
         proj.repartitionByRange(int(n), *arr)
         .sortWithinPartitions(*arr)
         .withColumn("_pid", F.spark_partition_id())
-        .transform(lineage_cut, eager=True)
+        .transform(lineage_cut)
     )
     local_w = (
         Window.partitionBy("_pid")

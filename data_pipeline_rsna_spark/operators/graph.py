@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..lineage import lineage_cut
+from ..lineage import fixpoint, lineage_cut
 
 RANK_UNIT = 1_000_000
 
@@ -37,14 +37,11 @@ def pagerank_integer(
     edge list); dangling-node mass redistribution is deliberately out
     of scope for the exact-parity variant.
 
-    Execution: the per-iteration step is join(ranks, edges on src) →
-    groupBy(dst) → sum — the Pregel message pattern, two shuffles per
-    iteration. Edges are pre-joined with out-degree, repartitioned on
+    Execution: each iteration is join(ranks, edges on src) →
+    groupBy(dst) → sum, the Pregel message pattern, run through
+    ``fixpoint``. Edges are pre-joined with out-degree, repartitioned on
     src ONCE and persisted, so every iteration's join reuses that
-    layout and only the (node, rank) table (|V| rows, two columns)
-    moves per round. The lineage is cut with localCheckpoint each
-    round — without it the plan doubles per iteration and the driver,
-    not the data, becomes the bottleneck.
+    layout and only the (node, rank) table (|V| rows) moves per round.
     """
     base = (1000 - damping_millis) * RANK_UNIT // 1000
     deg = edges.groupBy(src).agg(F.count("*").alias("_deg"))
@@ -54,35 +51,29 @@ def pagerank_integer(
         .persist()
     )
     # node set from the PERSISTED edge layout, not the raw edges
-    # subtree: deriving it from `edges` recomputed the caller's whole
-    # edge-construction plan a second time inside iteration 0 (the
-    # persist only covers `ed`) — every-node-has-an-out-edge is the
-    # documented input contract, so src-distinct over ed is the same
-    # set (measured: the duplicated subtree was ~2 s of the sf0.1
-    # driver graph's 6.9 s first iteration)
+    # subtree (which would recompute the caller's edge construction):
+    # every node has an out-edge by contract, so it is the same set
     nodes = ed.select(F.col(src).alias("node")).distinct()
-    ranks = nodes.withColumn("rank", F.lit(RANK_UNIT).cast("bigint"))
-    for i in range(iterations):
+
+    def step(ranks: DataFrame, _round: int) -> DataFrame:
         contribs = ed.join(
             ranks.withColumnRenamed("node", src), src
         ).select(
             F.col(dst).alias("node"),
             F.expr("rank DIV _deg").alias("_c"),
         )
-        ranks = contribs.groupBy("node").agg(
+        return contribs.groupBy("node").agg(
             (
                 F.lit(base)
                 + F.expr(f"{damping_millis} * sum(_c) DIV 1000")
             ).alias("rank")
         )
-        # final round EAGER so the unpersist below is safe under ANY
-        # config: with lazy cuts on a non-AQE cluster, unpersisting
-        # before the first action would recompute the edge subtree
-        # once per iteration (AQE only happens to materialize lazy
-        # localCheckpoints at build time; don't rely on it)
-        ranks = ranks.transform(
-            lineage_cut, eager=(i == iterations - 1)
-        )
+
+    ranks = fixpoint(
+        nodes.withColumn("rank", F.lit(RANK_UNIT).cast("bigint")),
+        step,
+        iterations,
+    )
     ed.unpersist()
     return ranks
 
@@ -121,48 +112,37 @@ def bfs_hops(
     dst: str = "dst",
 ) -> DataFrame:
     """Multi-source BFS: minimum hop distance (0..max_hops) from the
-    source set to every reachable node, as (node, hop). Frontier-style
-    Pregel loop: each round expands the PREVIOUS frontier only and
-    anti-joins the visited set, so per-round shuffle volume is the
-    frontier × degree, not |V|² — the standard level-synchronous BFS.
-    First discovery is minimum distance because expansion is strictly
-    level-by-level.
+    source set to every reachable node, as (node, hop). Level-synchronous
+    frontier loop: round h expands only the rows discovered at hop h-1
+    and anti-joins the visited set, so per-round shuffle volume is the
+    frontier × degree, not |V|². First discovery is minimum distance
+    because expansion is strictly level-by-level; the visited count
+    only grows, so an unchanged count means no new node (the loop's
+    ``fixpoint`` progress).
 
-    Same engineering as ``pagerank_integer``: the edge list is
-    repartitioned on ``src`` once and persisted so every round's join
-    reuses the layout; the visited table is localCheckpoint-ed per
-    round to stop the plan doubling. The per-round emptiness check is
-    a driver count on the FRONTIER (bounded by |V|) — metadata-scale,
-    the loop's only action. At 100 TB-scale graphs the win over the
-    unrolled-join formulation is exactly the anti-join pruning: without
-    it round k rescans every path of length k.
+    The edge list is repartitioned on ``src`` once and persisted so
+    every round's join reuses the layout.
     """
     ed = edges.select(F.col(src).alias("_s"), F.col(dst).alias("_d"))
     ed = ed.repartition(F.col("_s")).persist()
-    visited = (
-        sources.select(F.col("node")).distinct()
-        .withColumn("hop", F.lit(0))
-        .transform(lineage_cut, eager=True)
-    )
-    frontier = visited.select("node")
-    for h in range(1, max_hops + 1):
-        nbrs = (
+
+    def step(visited: DataFrame, h: int) -> DataFrame:
+        frontier = visited.where(F.col("hop") == h - 1).select("node")
+        new = (
             frontier.join(ed, frontier.node == ed._s)
             .select(F.col("_d").alias("node"))
             .distinct()
-        )
-        new = (
-            nbrs.join(visited.select("node"), "node", "left_anti")
+            .join(visited.select("node"), "node", "left_anti")
             .withColumn("hop", F.lit(h))
-            .transform(lineage_cut, eager=True)
         )
-        if new.rdd.isEmpty():
-            break
-        visited = visited.unionByName(new).transform(lineage_cut, eager=True)
-        frontier = new.select("node")
-    # every round's cut is EAGER, so nothing downstream re-reads ed —
-    # release it instead of leaking one cached edge layout per call
-    # into a long-lived session (OPSBENCH runs 305 queries in one JVM)
+        return visited.unionByName(new)
+
+    visited = fixpoint(
+        sources.select(F.col("node")).distinct().withColumn("hop", F.lit(0)),
+        step,
+        max_hops,
+        progress=F.count(F.lit(1)),
+    )
     ed.unpersist()
     return visited
 
@@ -287,60 +267,34 @@ def kcore_vertices(
     synchronous rounds and sequential peeling converge to the same set).
 
     ``edges`` must be undirected-symmetrized (both directions present).
-    Rounds run until the survivor count stops changing (the set shrinks
-    monotonically, so equal counts mean equal sets — the exact
-    fixpoint), capped at ``iterations``. Past the fixpoint every round
-    is the identity, so a DuckDB twin that unrolls a fixed round count
-    >= the convergence depth replays the identical answer. Returns
-    (vertex, core_degree).
+    The survivor set only shrinks, so its row count is a monotone
+    ``fixpoint`` progress; rounds stop at the fixpoint, capped at
+    ``iterations``. Past the fixpoint every round is the identity, so a
+    DuckDB twin that unrolls a fixed round count >= the convergence
+    depth replays the identical answer. Returns (vertex, core_degree).
 
     Scale notes: each round is edges SEMI-JOIN survivors (on dst)
     SEMI-JOIN survivors (on src) → groupBy(src) count — membership
     tests, so AQE broadcasts the survivor side as soon as it shrinks
-    under the threshold; the shuffles partition on vertex id, and the
-    survivor list SHRINKS monotonically, so later rounds get cheaper.
-    Each round ends in an eager ``localCheckpoint``: iterative lineage
-    otherwise grows by two joins per round and Catalyst re-analyzes the
-    whole unrolled DAG at materialization (measured: the 12-round lazy
-    plan took minutes in the optimizer; checkpointed rounds run the
-    same data in seconds). On a cluster use ``checkpoint`` with an HDFS
-    dir for the same truncation with fault tolerance. AQE re-sizes the
-    shrinking shuffles automatically.
+    under the threshold, and later rounds get cheaper.
     """
-    surv = (
-        edges.select(F.col(src).alias("v"))
-        .union(edges.select(F.col(dst).alias("v")))
-        .distinct()
-        .transform(lineage_cut)
-    )
-    # The edge list is reused every round — checkpoint it once so each
-    # round's scan starts from materialized blocks, not the upstream
-    # plan (on a cluster: .persist() + a real checkpoint dir).
+    # The edge list is reused every round — cut it once so each round's
+    # scan starts from materialized blocks, not the upstream plan.
     ed = edges.select(
         F.col(src).alias("_s"), F.col(dst).alias("_d")
     ).transform(lineage_cut)
-    n_prev = surv.count()
-    deg = None
-    for _ in range(iterations):
-        deg = (
-            ed.join(surv.withColumnRenamed("v", "_d"), "_d", "left_semi")
-            .join(surv.withColumnRenamed("v", "_s"), "_s", "left_semi")
-            .groupBy("_s")
-            .agg(F.count("*").alias("core_degree"))
-            .where(F.col("core_degree") >= k)
-            .transform(lineage_cut)
-        )
-        surv = deg.select(F.col("_s").alias("v"))
-        # Monotone early stop: the survivor set only ever SHRINKS, so an
-        # unchanged COUNT implies an unchanged SET — the fixpoint. The
-        # count is free (deg is just materialized by the checkpoint) and
-        # stopping at the fixpoint is exact, not approximate: every
-        # further round is the identity, which is also why the oracle's
-        # fixed unroll of `iterations` rounds replays the same answer.
-        n_now = deg.count()
-        if n_now == n_prev:
-            break
-        n_prev = n_now
+
+    def degrees(e: DataFrame) -> DataFrame:
+        return e.groupBy("_s").agg(F.count("*").alias("core_degree"))
+
+    def peel(deg: DataFrame, _round: int) -> DataFrame:
+        surv = deg.select("_s")
+        return degrees(
+            ed.join(surv.withColumnRenamed("_s", "_d"), "_d", "left_semi")
+            .join(surv, "_s", "left_semi")
+        ).where(F.col("core_degree") >= k)
+
+    deg = fixpoint(degrees(ed), peel, iterations, progress=F.count(F.lit(1)))
     return deg.select(F.col("_s").alias("vertex"), "core_degree")
 
 
@@ -374,7 +328,7 @@ def jaccard_link_prediction(
         # four consumers (degrees, both wedge sides, the anti-join);
         # without truncating lineage each re-derives the upstream edge
         # construction — 42 static exchanges collapse to the real ~6
-        .transform(lineage_cut, eager=True)
+        .transform(lineage_cut)
     )
     deg = und.groupBy("_u").agg(
         F.count(F.lit(1)).cast("bigint").alias("_deg")
@@ -434,34 +388,27 @@ def hits_scores(
     """
     edges = pairs.selectExpr(
         f"`{hub_col}` AS _c", f"`{auth_col}` AS _s"
-    ).distinct().transform(lineage_cut, eager=True)
-    hubs = edges.select("_c").distinct().selectExpr(
-        "_c AS node", "CAST(1000000 AS BIGINT) AS score"
-    )
+    ).distinct().transform(lineage_cut)
 
-    def _normalize(df: DataFrame) -> DataFrame:
-        mx = df.agg(F.max("raw").alias("_mx"))
-        return df.crossJoin(F.broadcast(mx)).selectExpr(
-            "node", "CAST((raw * 1000000) DIV _mx AS BIGINT) AS score"
+    def _propagate(scores: DataFrame, frm: str, to: str) -> DataFrame:
+        raw = (
+            edges.join(scores.selectExpr(f"node AS {frm}", "score_micro"), frm)
+            .groupBy(F.col(to).alias("node"))
+            .agg(F.sum("score_micro").cast("bigint").alias("raw"))
+        )
+        mx = raw.agg(F.max("raw").alias("_mx"))
+        return raw.crossJoin(F.broadcast(mx)).selectExpr(
+            "node", "CAST((raw * 1000000) DIV _mx AS BIGINT) AS score_micro"
         )
 
-    auth = None
-    for _ in range(iters):
-        # per-round lineage cut, the pagerank lesson: without it the
-        # static plan doubles per iteration (measured: 134 exchanges /
-        # 44 redundant SMJs in the 2-iteration plan audit vs ~10 real)
-        auth = _normalize(
-            edges.join(hubs.selectExpr("node AS _c", "score"), "_c")
-            .groupBy(F.col("_s").alias("node"))
-            .agg(F.sum("score").cast("bigint").alias("raw"))
-        ).transform(lineage_cut, eager=False)
-        hubs = _normalize(
-            edges.join(auth.selectExpr("node AS _s", "score"), "_s")
-            .groupBy(F.col("_c").alias("node"))
-            .agg(F.sum("score").cast("bigint").alias("raw"))
-        ).transform(lineage_cut, eager=False)
-    return hubs.selectExpr(
-        "'hub' AS role", "node", "score AS score_micro"
-    ).unionByName(
-        auth.selectExpr("'authority' AS role", "node", "score AS score_micro")
+    def step(scores: DataFrame, _round: int) -> DataFrame:
+        auth = _propagate(scores.where("role = 'hub'"), "_c", "_s")
+        hubs = _propagate(auth, "_s", "_c")
+        return hubs.selectExpr("'hub' AS role", "*").unionByName(
+            auth.selectExpr("'authority' AS role", "*")
+        )
+
+    init = edges.select("_c").distinct().selectExpr(
+        "'hub' AS role", "_c AS node", "CAST(1000000 AS BIGINT) AS score_micro"
     )
+    return fixpoint(init, step, iters)

@@ -64,7 +64,7 @@ def _ranked_by_mid(
         df.repartitionByRange(n, *[F.col(c) for c in cols])
         .sortWithinPartitions(*cols)
         .withColumn("_mid", F.monotonically_increasing_id())
-        .transform(lineage_cut, eager=True)
+        .transform(lineage_cut)
     )
     return (
         part.withColumn(
@@ -748,7 +748,7 @@ def grouped_running_sums(
         df.repartitionByRange(int(n), F.col(key), F.col(order_col))
         .sortWithinPartitions(key, order_col)
         .withColumn("_pid", F.spark_partition_id())
-        .transform(lineage_cut, eager=True)
+        .transform(lineage_cut)
     )
     local_w = (
         Window.partitionBy("_pid", key)
@@ -1015,7 +1015,7 @@ def global_running_max_desc(
         df.repartitionByRange(int(n), F.col(order_col).desc())
         .sortWithinPartitions(F.col(order_col).desc())
         .withColumn("_pid", F.spark_partition_id())
-        .transform(lineage_cut, eager=True)
+        .transform(lineage_cut)
     )
     local_w = (
         Window.partitionBy("_pid")

@@ -759,7 +759,7 @@ def wasserstein_1d(
         d.repartitionByRange(int(n), F.col("cents"))
         .sortWithinPartitions("cents")
         .withColumn("_pid", F.spark_partition_id())
-        .transform(lineage_cut, eager=True)
+        .transform(lineage_cut)
     )
     local_w = Window.partitionBy("_pid").orderBy("cents")
     local = part.withColumn(

@@ -5544,7 +5544,7 @@ def q_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
         # item-domain-sized (<= brands^2/2 rows): materialize once so the
         # three triangle-join branches don't each re-derive the whole
         # basket->pair pipeline (3x the heavy shuffles in the static plan).
-        .transform(lineage_cut, eager=True)
+        .transform(lineage_cut)
     )
     return g.triangle_counts(edges)
 
@@ -9246,20 +9246,17 @@ def q_corpus_pipeline_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     # drops feeds TWO union branches (the s5 funnel count and s6's
     # mixture input): without a cut the whole MinHash-LSH candidate
     # pipeline — the funnel's heaviest subtree — runs twice (r12,
-    # guide §2.4). Eager cut, not lazy: both consumers sit in the ONE
-    # final union action and can schedule concurrently, so a lazy
-    # checkpoint could race both branches into computing the blocks;
-    # the rows are doc_id-only (metadata-sized at any corpus) and the
-    # blocks free with the result, never the session cache manager.
-    from .lineage import lineage_cut as _cut
-
+    # guide §2.4). The cut is eager: both consumers sit in the ONE
+    # final union action and can schedule concurrently. The rows are
+    # doc_id-only (metadata-sized at any corpus) and the blocks free
+    # with the result, never the session cache manager.
     drops = (
         dedup.minhash_lsh_candidates(s4, num_hashes=12, rows_per_band=2,
                                      shingle_n=3)
         .filter(F.col("n_shared_bands") >= 3)
         .select(F.col("doc_b").alias("doc_id"))
         .distinct()
-        .transform(_cut, eager=True)
+        .transform(lineage_cut)
     )
     s5 = s4.join(drops, "doc_id", "left_anti")
     rates = {f"src{i}": [1.0, 0.75, 0.5, 0.25][i % 4] for i in range(20)}
@@ -11498,7 +11495,7 @@ def q_graph_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
         pair.crossJoin(F.broadcast(total))
         .filter(F.col("pair_support") * 50 >= F.col("n_baskets"))
         .select(F.col("item_a").alias("src"), F.col("item_b").alias("dst"))
-        .transform(lineage_cut, eager=True)
+        .transform(lineage_cut)
     )
     return g.clustering_coefficient(edges)
 
@@ -13385,7 +13382,7 @@ def q_graph_degree_assortativity(
         pair.crossJoin(F.broadcast(total))
         .filter(F.col("pair_support") * 50 >= F.col("n_baskets"))
         .select(F.col("item_a").alias("src"), F.col("item_b").alias("dst"))
-        .transform(lineage_cut, eager=True)
+        .transform(lineage_cut)
     )
     return g.degree_assortativity(edges)
 
@@ -13966,7 +13963,7 @@ def q_events_sequence_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     "identity, so the fixed count IS the fixpoint and a recursive-CTE "
     "twin replays it exactly. Per round: two SEMI joins (AQE "
     "broadcasts the shrinking survivor side) + one groupBy; "
-    "localCheckpoint every 4 rounds truncates the iterative lineage. "
+    "a lineage cut every round truncates the iterative lineage. "
     "Returns each core vertex with its within-core degree.",
     tags=("graph", "iterative"),
 )
@@ -15859,7 +15856,7 @@ def q_events_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = t0.withColumn(
         "n_p",
         F.sum("n_pq").over(Window.partitionBy("p")).cast("bigint"),
-    ).transform(lineage_cut, eager=True)  # 4 iterations re-consume the matrix
+    ).transform(lineage_cut)  # 4 iterations re-consume the matrix
     pi = t.select(F.col("p").alias("event_type")).distinct().withColumn(
         "pi", F.lit(1_000_000).cast("bigint")
     )

@@ -128,6 +128,45 @@ def test_bfs_early_termination(spark):
     assert out == {"a": 0, "b": 1}
 
 
+def _kcore_peel(adj, k, iterations):
+    """Synchronous peeling in Python: each round keeps the vertices
+    with >= k neighbours among the previous survivors, stopping early
+    once a round removes nothing."""
+    surv = set(adj)
+    deg = {}
+    for _ in range(iterations):
+        deg = {v: sum(w in surv for w in adj[v]) for v in surv}
+        deg = {v: d for v, d in deg.items() if d >= k}
+        if len(deg) == len(surv):
+            break
+        surv = set(deg)
+    return deg
+
+
+@pytest.mark.parametrize("iterations", [1, 12])
+def test_kcore_clique_with_pendant_path(spark, iterations):
+    # 5-clique 0..4 plus the pendant path 4-5-6-7: the 3-core is the
+    # clique, reached after one peel round and confirmed by the next;
+    # one round leaves node 4's degree counting the peeled node 5
+    pairs = [(a, b) for a in range(5) for b in range(a + 1, 5)]
+    pairs += [(4, 5), (5, 6), (6, 7)]
+    edges = spark.createDataFrame(
+        pairs + [(y, x) for x, y in pairs], "src long, dst long"
+    )
+    adj = {}
+    for a, b in pairs:
+        adj.setdefault(a, set()).add(b)
+        adj.setdefault(b, set()).add(a)
+    want = _kcore_peel(adj, 3, iterations)
+    got = {
+        r.vertex: r.core_degree
+        for r in g.kcore_vertices(edges, k=3, iterations=iterations).collect()
+    }
+    assert got == want
+    assert set(got) == set(range(5))
+    assert got[4] == (5 if iterations == 1 else 4)
+
+
 def test_clustering_coefficient_k4_and_star(spark):
     from data_pipeline_rsna_spark.operators import graph as g
 
