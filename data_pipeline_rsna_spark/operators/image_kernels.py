@@ -13,7 +13,7 @@ Divergence ledger (documented, intended-semantics):
   interpolated gray values at non-integer grid points are not. For
   pixel parity, two spline orders are available in pure numpy,
   selectable via ``interp=`` on ``scale_image``/``zoom_box_region``
-  (and the ``*_bilinear``/``*_cubic`` kernels directly):
+  (and the ``zoom_bilinear``/``zoom_cubic`` kernels directly):
   ``"bilinear"`` = ``ndimage`` order-1; ``"cubic"`` = order-3, the
   reference's DEFAULT order — prefilter as the tridiagonal cubic
   B-spline interpolation system (mirror boundary, the system Unser's
@@ -23,9 +23,8 @@ Divergence ledger (documented, intended-semantics):
   dependency and is absent from this container, so order-3 tests are
   differential (vectorized kernel vs an independent dense-solve
   per-pixel implementation of the same published system) plus
-  exactness properties (integer-grid reproduction, integer-shift
-  equivalence, polynomial reproduction) rather than scipy-generated
-  goldens; interior values match ``ndimage`` order-3 semantics within
+  exactness properties (integer-grid reproduction, polynomial
+  reproduction) rather than scipy-generated goldens; interior values match ``ndimage`` order-3 semantics within
   integer rounding by construction of the shared system.
 - All randomness is seeded per (image_id, variant) via
   ``seeded_rng`` — the reference's unseeded ``random.*``
@@ -106,34 +105,6 @@ def zoom_bilinear(arr: np.ndarray, rf: float) -> np.ndarray:
     top = a[np.ix_(y0, x0)] * (1.0 - fx) + a[np.ix_(y0, x1)] * fx
     bot = a[np.ix_(y1, x0)] * (1.0 - fx) + a[np.ix_(y1, x1)] * fx
     return _to_dtype(top * (1.0 - fy) + bot * fy, arr.dtype)
-
-
-def shift_bilinear(arr: np.ndarray, rx: float, ry: float) -> np.ndarray:
-    """Bilinear (order-1 spline) translate by float (rx, ry) with zero
-    fill — ``ndimage.shift(order=1, cval=0)`` semantics (reference
-    ``:116-127`` shifts through the spline interpolator). Integer shifts
-    reproduce ``shift_image`` exactly."""
-    h, w = arr.shape[:2]
-    a = arr.astype(np.float64)
-    ys = np.arange(h, dtype=np.float64)[:, None] - ry
-    xs = np.arange(w, dtype=np.float64)[None, :] - rx
-    y0 = np.floor(ys)
-    x0 = np.floor(xs)
-    fy = ys - y0
-    fx = xs - x0
-    out = np.zeros((h, w), dtype=np.float64)
-    for dy, wy in ((0, 1.0 - fy), (1, fy)):
-        for dx, wx in ((0, 1.0 - fx), (1, fx)):
-            yi = y0.astype(np.int64) + dy
-            xi = x0.astype(np.int64) + dx
-            valid = (yi >= 0) & (yi < h) & (xi >= 0) & (xi < w)
-            vals = np.where(
-                valid,
-                a[np.clip(yi, 0, h - 1), np.clip(xi, 0, w - 1)],
-                0.0,
-            )
-            out += wy * wx * vals
-    return _to_dtype(out, arr.dtype)
 
 
 def _mirror_idx(idx: np.ndarray, n: int) -> np.ndarray:
@@ -231,37 +202,6 @@ def zoom_cubic(arr: np.ndarray, rf: float) -> np.ndarray:
             out += (wy[i][:, None] * wx[j][None, :]) * coeff[
                 np.ix_(yi, xj)
             ]
-    return _to_dtype(out, arr.dtype)
-
-
-def shift_cubic(arr: np.ndarray, rx: float, ry: float) -> np.ndarray:
-    """Order-3 translate by (rx, ry) with constant-0 fill — the
-    reference's ``ndimage.shift(image, (ry, rx), mode='constant',
-    cval=0)`` at its default order (``:122``). Output points whose
-    source coordinate falls outside the input extent are 0; interior
-    points evaluate the cubic spline. The shift is uniform, so the 4
-    basis weights per axis are SCALARS and evaluation is one 4×4
-    stencil over the coefficient array (mirror edge extension for
-    border nodes, the spline-filter boundary)."""
-    h, w = arr.shape[:2]
-    coeff = cubic_coeffs(arr)
-    ys = np.arange(h, dtype=np.float64) - ry
-    xs = np.arange(w, dtype=np.float64) - rx
-    y_in = (ys >= 0) & (ys <= h - 1)
-    x_in = (xs >= 0) & (xs <= w - 1)
-    y0 = np.floor(ys).astype(np.int64)
-    x0 = np.floor(xs).astype(np.int64)
-    wy = _cubic_weights(ys - y0)
-    wx = _cubic_weights(xs - x0)
-    out = np.zeros((h, w), dtype=np.float64)
-    for i in range(4):
-        yi = _mirror_idx(y0 + (i - 1), h)
-        for j in range(4):
-            xj = _mirror_idx(x0 + (j - 1), w)
-            out += (wy[i][:, None] * wx[j][None, :]) * coeff[
-                np.ix_(yi, xj)
-            ]
-    out *= y_in[:, None] & x_in[None, :]
     return _to_dtype(out, arr.dtype)
 
 

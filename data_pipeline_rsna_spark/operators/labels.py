@@ -1,10 +1,10 @@
 """Labels ingest: the reference's primary relational pipeline.
 
-Re-expresses ``create_maps`` (reference ``generate_images_from_dicom.py:15-41``):
-CSV scan with header (O1), typed projection with ``int(float(s))``
-truncation casts (O2, ``:33``), positives filter on an int-cast predicate
-(O3, ``:32``), per-patient box aggregation (O4, ``:16,33``) and per-patient
-target aggregation (O5, ``:35``).
+Re-expresses ``create_maps`` (reference ``generate_images_from_dicom.py:15-41``)
+over the CSV scan of ``sources.readers.read_labels_csv`` (O1): typed
+projection with ``int(float(s))`` truncation casts (O2, ``:33``), positives
+filter on an int-cast predicate (O3, ``:32``), per-patient box aggregation
+(O4, ``:16,33``) and per-patient target aggregation (O5, ``:35``).
 
 Instead of the reference's two Python dicts (``box_map``/``captions_map``)
 the engine keeps everything as DataFrames — one row per patient with the
@@ -20,10 +20,8 @@ needed; both aggregations are partial-aggregatable (map-side combine).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-from ..schemas import LABELS_CSV
 
 
 def int_of_float(c: Column) -> Column:
@@ -32,13 +30,6 @@ def int_of_float(c: Column) -> Column:
     double→int cast truncates toward zero, matching CPython. (DuckDB's
     rounds — oracle SQL must use ``trunc()``.)"""
     return c.cast("double").cast("int")
-
-
-def ingest_labels_csv(spark: SparkSession, path: str) -> DataFrame:
-    """O1+O2: scan the labels CSV (header skipped by the reader, not by
-    positional slicing) and apply the typed projection."""
-    raw = spark.read.option("header", "true").schema(LABELS_CSV).csv(path)
-    return typed_labels(raw)
 
 
 def typed_labels(raw: DataFrame) -> DataFrame:
@@ -61,24 +52,6 @@ def positive_boxes(labels: DataFrame) -> DataFrame:
     """O3: keep box rows only where the target is truthy
     (``if int(target):``, reference ``:32``)."""
     return labels.filter(F.col("target").cast("int") != 0)
-
-
-def boxes_per_patient(labels: DataFrame) -> DataFrame:
-    """O3+O4: per-patient box array (nested reference shape).
-
-    ``sort_array`` makes the list order deterministic — the reference's
-    insertion order is CSV row order, which a distributed shuffle does not
-    preserve; sorted order is the canonical engine semantics.
-    """
-    return (
-        positive_boxes(labels)
-        .select(
-            "patient_id",
-            F.array("x", "y", "width", "height").alias("box"),
-        )
-        .groupBy("patient_id")
-        .agg(F.sort_array(F.collect_list("box")).alias("boxes"))
-    )
 
 
 def captions_per_patient(labels: DataFrame) -> DataFrame:

@@ -905,50 +905,6 @@ def shot_boundaries(videos: DataFrame, threshold: int = 1500) -> DataFrame:
     return videos.mapInPandas(run, "vid_id long, frame_idx int, l1 long")
 
 
-def pixel_stats_arrow(images: DataFrame) -> DataFrame:
-    """`pixel_stats` on the Arrow-native path (``mapInArrow``): batches
-    arrive as ``pyarrow.RecordBatch``, so the ~1 MiB binary pixel
-    payloads are processed zero-copy — no Arrow→pandas materialization
-    of a `bytes` object per row (for binary-heavy rows the pandas
-    conversion is the dominant per-batch cost; relational-sized rows
-    don't care). Semantics identical to `pixel_stats`, pinned by
-    `tests/test_multimodal_arrow.py`.
-
-    This is the template for every decode/feature kernel here if the
-    python-side cost ever dominates at 100 TB: same iterator shape,
-    same bounded batches (arrow.maxRecordsPerBatch), RecordBatch in
-    and out."""
-    import pyarrow as pa
-
-    def stats(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-        for b in batches:
-            ids = b.column(b.schema.get_field_index("img_id"))
-            px = b.column(b.schema.get_field_index("pixels"))
-            dt = b.column(b.schema.get_field_index("dtype"))
-            sums, means, mins, maxs = [], [], [], []
-            for i in range(b.num_rows):
-                # buffer-backed memoryview, no bytes copy
-                arr = np.frombuffer(
-                    px[i].as_buffer(), dtype=np.dtype(dt[i].as_py())
-                )
-                sums.append(int(arr.sum(dtype=np.int64)))
-                means.append(float(round(arr.mean(), 6)))
-                mins.append(int(arr.min()))
-                maxs.append(int(arr.max()))
-            yield pa.RecordBatch.from_arrays(
-                [
-                    ids,
-                    pa.array(sums, pa.int64()),
-                    pa.array(means, pa.float64()),
-                    pa.array(mins, pa.int32()),
-                    pa.array(maxs, pa.int32()),
-                ],
-                names=["img_id", "sum_px", "mean_px", "min_px", "max_px"],
-            )
-
-    return images.mapInArrow(stats, STATS_SCHEMA)
-
-
 def image_entropy(images: DataFrame) -> DataFrame:
     """Per-image Shannon entropy of the pixel histogram plus the distinct
     gray-level count — the classic blank/low-information frame detector

@@ -142,16 +142,19 @@ def global_row_number(
     )
 
 
-def exact_kth_smallest(
+def exact_rank_statistic(
     df: DataFrame,
     col: str,
-    k: int,
+    rank_of_n,
     n_buckets: int = 4096,
     take_threshold: int = 32_768,
-) -> int | float | None:
+) -> tuple[int, int | None]:
     """Exact k-th smallest value (1-based) of a numeric column by
     iterative histogram refinement — the distributed order-statistic
-    without a global sort.
+    without a global sort. The rank may DEPEND on the row count (median
+    = rank ceil(n/2), a train cutoff = round(n·frac), a p99):
+    ``rank_of_n(n_nonnull) -> k``; a fixed rank is ``lambda _n: k``.
+    Returns ``(n_nonnull, value)``.
 
     Each round is one NARROW aggregation job: bucket every in-range row
     by ``(v - lo) * n // (hi - lo + 1)`` (a pure monotone function — no
@@ -160,7 +163,10 @@ def exact_kth_smallest(
     recurse into it with the residual rank. When the candidate range
     holds ≤ ``take_threshold`` rows, one ``sort().limit()`` job (Spark
     plans TakeOrdered — a per-partition top-r + driver merge, never a
-    full sort) finishes exactly.
+    full sort) finishes exactly. The fused first pass
+    (``_bucketed_stats``) produces the count alongside the first
+    histogram round, so deriving k from n costs zero extra jobs —
+    versus a caller running ``df.count()`` first.
 
     At 100 TB this converges in ~3 rounds (1e12 rows / 4096^2 ≈ 60k — a
     final TakeOrdered of thousands of rows), and every round's range
@@ -169,36 +175,15 @@ def exact_kth_smallest(
     sort would shuffle the full table once per query.
 
     Ties are fine (buckets count duplicates); NULLs are ignored (the
-    rank is over non-null values, like SQL ORDER BY ... OFFSET);
-    returns None on empty input or k out of range. Integral columns
+    rank is over non-null values, like SQL ORDER BY ... OFFSET); the
+    value is None on empty input or k out of range. Integral columns
     only — the integer bucket arithmetic silently truncates fractional
     types, so they are rejected up front.
     """
-    return exact_rank_statistic(
-        df, col, lambda _n: k, n_buckets, take_threshold
-    )[1]
-
-
-def exact_rank_statistic(
-    df: DataFrame,
-    col: str,
-    rank_of_n,
-    n_buckets: int = 4096,
-    take_threshold: int = 32_768,
-) -> tuple[int, int | None]:
-    """``exact_kth_smallest`` for ranks that DEPEND on the row count
-    (median = rank ceil(n/2), a train cutoff = round(n·frac), a p99):
-    ``rank_of_n(n_nonnull) -> k``. Returns ``(n_nonnull, value)``.
-
-    The point of the combined form: the fused first pass
-    (``_bucketed_stats``) already produces the count alongside the
-    first histogram round, so deriving k from n costs zero extra jobs —
-    versus a caller running ``df.count()`` first (one whole job-floor
-    latency, serialized before the search can start)."""
     dtype = dict(df.dtypes).get(col)
     if dtype not in ("tinyint", "smallint", "int", "bigint"):
         raise TypeError(
-            f"exact_kth_smallest needs an integral column; {col} is {dtype}"
+            f"exact_rank_statistic needs an integral column; {col} is {dtype}"
         )
     _total, n_nonnull, buckets = _bucketed_stats(df, col)
     k = rank_of_n(n_nonnull)
@@ -292,7 +277,7 @@ def _kth_smallest_in_range(
     n_buckets: int = 4096,
     take_threshold: int = 32_768,
 ) -> int:
-    """Refinement loop of ``exact_kth_smallest`` with known stats.
+    """Refinement loop of ``exact_rank_statistic`` with known stats.
 
     All bucket math is integer-exact (``DIV`` on a shifted column, bucket
     width ``ceil(range/n)``) — double division would misbucket keys past
@@ -359,34 +344,31 @@ def deterministic_split(
     df: DataFrame,
     order_col: str,
     train_frac: float = 0.8,
-    bug_compat_off_by_one: bool = False,
 ) -> DataFrame:
     """Reference ``split_images`` (generate_images_from_dicom.py:54-104):
     first ``round(N*frac)`` rows in a deterministic order → 'train',
     rest → 'val'. The reference's listing order becomes an explicit
     ``ORDER BY order_col``; ``randomSplit`` is rejected as
-    nondeterministic. ``bug_compat_off_by_one`` reproduces the
-    reference's ``index < training_size - 1`` (one row short, ``:78``).
+    nondeterministic. The reference's ``index < training_size - 1``
+    (one row short, ``:78``) is a bug and is not reproduced.
 
     Because the split ranks by ``order_col`` itself, ``rank <= cutoff``
     is equivalent to ``order_col <= (cutoff-th smallest value)`` — so
     for numeric keys the whole operator reduces to finding ONE order
-    statistic (``exact_kth_smallest``, narrow histogram jobs) and then a
+    statistic (``exact_rank_statistic``, narrow histogram jobs) and then a
     shuffle-free narrow projection. No global sort, no checkpoint, no
     data movement at all: at 100 TB the labeling pass is embarrassingly
     parallel and the order-statistic costs ~3 metadata-sized
     aggregations. Non-numeric keys fall back to the two-phase rank
     (``_ranked_by_mid``). ``order_col`` must be unique for a stable
     rank either way. For re-partition-stable assignment prefer
-    ``hash_split``, which needs no order statistic either.
+    ``kfold_assign``, which needs no order statistic either.
     """
     import math
 
     def _label(total: int) -> tuple[int, str | None]:
         # HALF_UP to match both Spark's and DuckDB's round() for positives
         cutoff = int(math.floor(total * train_frac + 0.5))
-        if bug_compat_off_by_one:
-            cutoff -= 1
         if cutoff < 1:
             return cutoff, "val"
         if cutoff >= total:
@@ -432,17 +414,6 @@ def deterministic_split(
             ).otherwise("val"),
         )
         .drop("_pid", "_local_rn")
-    )
-
-
-def hash_split(df: DataFrame, key_col: str, train_frac: float = 0.8) -> DataFrame:
-    """Scale-path split: stable per-key hash bucket. No global sort, no
-    shuffle at all (narrow transformation); survives any repartitioning
-    because it depends only on the key value."""
-    bucket = F.pmod(F.xxhash64(F.col(key_col)), F.lit(100))
-    return df.withColumn(
-        "split",
-        F.when(bucket < int(train_frac * 100), "train").otherwise("val"),
     )
 
 
@@ -617,30 +588,6 @@ def salted_aggregate(
     return stage1.groupBy(*key_cols).agg(*stage2_aggs)
 
 
-def salted_join(
-    skewed: DataFrame,
-    other: DataFrame,
-    key: str,
-    n_salt: int = 16,
-    how: str = "inner",
-) -> DataFrame:
-    """Equi-join where ``skewed`` has hot keys: salt the skewed side
-    (random 0..n_salt-1 per row), replicate ``other`` once per salt
-    value, join on (key, salt). A hot key's rows land on ``n_salt``
-    reducers instead of one, at the cost of an ``n_salt``× blow-up of
-    the other side — use when the other side is small-ish but past the
-    broadcast threshold, or when AQE's skew splitting can't kick in
-    (e.g. the skewed side feeds from a cached/exchange-free plan).
-    Result is row-identical to the plain join for any salt values.
-    """
-    salted = skewed.withColumn("_salt", (F.rand(seed=11) * n_salt).cast("int"))
-    replicated = other.withColumn(
-        "_salt",
-        F.explode(F.sequence(F.lit(0), F.lit(n_salt - 1))),
-    )
-    return salted.join(replicated, [key, "_salt"], how).drop("_salt")
-
-
 def upsert_snapshot(
     base: DataFrame,
     updates: DataFrame,
@@ -807,7 +754,7 @@ def kfold_assign(
 ) -> DataFrame:
     """K-fold cross-validation fold assignment: a pure narrow
     transformation (no shuffle, no global state) that hashes the key to
-    a fold in [0, k). Like ``hash_split`` it is stable under any
+    a fold in [0, k). It is stable under any
     repartitioning and any subset of the data — a key's fold never
     changes — which is what makes held-out folds trustworthy across
     pipeline re-runs. md5-derived (not xxhash) so the assignment is

@@ -9,11 +9,11 @@ Two paths:
   pass over the corpus per batch of queries: O(|queries| · n · d) flops
   but only O(n) I/O, which is the right baseline at any scale.
 
-- **IVF (inverted-file) approximate top-k** (`IvfIndex`): k-means
-  partitions the corpus into nlist cells; a query probes only the
-  nprobe nearest cells. At 100 TB the corpus DataFrame is written
-  partitioned by ``cluster`` so a probe prunes partitions at the
-  storage layer — the scan reads nprobe/nlist of the data.
+- **IVF (inverted-file) approximate top-k** (`srp_ivf_topk`): sign
+  random projections partition the corpus into 2**n_bits cells; a query
+  probes only the nprobe nearest cells. At 100 TB the corpus DataFrame
+  is written partitioned by ``cell`` so a probe prunes partitions at the
+  storage layer — the scan reads nprobe/2**n_bits of the data.
 
 Dot products fold left-to-right over doubles in both this engine and
 the DuckDB oracle, and similarities are rounded before ranking, so
@@ -21,8 +21,6 @@ exact-match differential checks hold.
 """
 
 from __future__ import annotations
-
-from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -571,111 +569,6 @@ def srp_ivf_topk(
     )
 
 
-@dataclass
-class IvfIndex:
-    """IVF index state: the corpus with a ``cluster`` column + centroids."""
-
-    assigned: DataFrame  # corpus + cluster:int
-    centroids: DataFrame  # cluster:int, centroid:array<double>
-    nlist: int
-
-
-def build_ivf(
-    corpus: DataFrame,
-    nlist: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 42,
-) -> IvfIndex:
-    """K-means the corpus into nlist cells (pyspark.ml, seeded).
-
-    At scale: persist ``assigned`` partitioned by ``cluster`` (e.g.
-    ``.write.partitionBy("cluster").parquet(...)``) so probes prune at
-    the file level; centroids are tiny and always broadcast.
-    """
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector, vector_to_array
-
-    spark = corpus.sparkSession
-    vecs = corpus.select(
-        id_col, vec_col, array_to_vector(as_double_array(vec_col)).alias("_fv")
-    )
-    model = KMeans(k=nlist, seed=seed, featuresCol="_fv", predictionCol="cluster").fit(vecs)
-    assigned = model.transform(vecs).select(id_col, vec_col, "cluster")
-    cents = spark.createDataFrame(
-        [(i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())],
-        "cluster int, centroid array<double>",
-    )
-    return IvfIndex(assigned=assigned, centroids=cents, nlist=nlist)
-
-
-def ivf_topk(
-    index: IvfIndex,
-    queries: DataFrame,
-    k: int = 10,
-    nprobe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-) -> DataFrame:
-    """Approximate top-k: probe the nprobe closest cells per query, then
-    exact cosine within the probed cells only."""
-    q = queries.select(
-        query_id_col, as_double_array(vec_col).alias("_qe")
-    ).withColumn("_qn", l2_norm(F.col("_qe")))
-    # rank cells by centroid distance per query (tiny crossJoin: |q|·nlist)
-    qc = (
-        q.crossJoin(F.broadcast(index.centroids))
-        .withColumn(
-            "_cdist",
-            F.aggregate(
-                F.zip_with(
-                    F.col("_qe"), F.col("centroid"), lambda x, y: (x - y) * (x - y)
-                ),
-                F.lit(0.0),
-                lambda acc, v: acc + v,
-            ),
-        )
-        .withColumn(
-            "_crank",
-            F.row_number().over(
-                Window.partitionBy(query_id_col).orderBy("_cdist", "cluster")
-            ),
-        )
-        .filter(F.col("_crank") <= nprobe)
-        .select(query_id_col, "_qe", "_qn", "cluster")
-    )
-    cand = index.assigned.select(
-        F.col(id_col).alias("neighbor_id"),
-        as_double_array(vec_col).alias("_ce"),
-        "cluster",
-    ).withColumn("_cn", l2_norm(F.col("_ce")))
-    sims = (
-        qc.join(cand, "cluster")  # cluster-pruned, not a crossJoin
-        .filter(F.col("neighbor_id") != F.col(query_id_col))
-        .select(
-            query_id_col,
-            "neighbor_id",
-            F.round(
-                dot(F.col("_qe"), F.col("_ce")) / (F.col("_qn") * F.col("_cn")),
-                6,
-            ).alias("cosine"),
-        )
-    )
-    reduced = partial_topk(
-        sims, k, group_col=query_id_col,
-        order_col="cosine", tiebreak_col="neighbor_id",
-    )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        reduced.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, "neighbor_id", "rank", "cosine")
-    )
-
-
 # ---------------------------------------------------------------------------
 # X3b — embedding dimension moments (PCA / whitening prep)
 # ---------------------------------------------------------------------------
@@ -887,16 +780,14 @@ def pq_sample_codebook(
     corpus vectors smallest in md5('{salt}|'||id) order donate their
     subvectors as centroids (exactly k-means' sample initialization —
     data-distributed, so quantization residuals are corpus-scaled, not
-    hypercube-scaled; a Lloyd refinement would train it further the way
-    ``build_ivf`` does for the coarse quantizer).
+    hypercube-scaled).
 
     Everything stays engine-reproducible: sampling is an md5 order (a
     k-minimum-values draw, same idiom as ``uniform_k_sample``), and the
     milli-unit quantization (``cast(round(v*1000) AS bigint)``) runs in
     Spark itself — the collected codebook is the integer values every
     engine's round() produces. Returns ``cb[m][j][d]`` ints; the
-    collect is k_cent rows = metadata-sized (same contract as the
-    trained ``IvfIndex`` centroids).
+    collect is k_cent rows = metadata-sized.
     """
     rows = (
         corpus.selectExpr(
@@ -1028,76 +919,6 @@ def pq_topk(
         .filter(F.col("rank") <= k)
         .select(query_id_col, "neighbor_id", "rank", "adc_dist")
     )
-
-
-def train_pq(
-    corpus: DataFrame,
-    m_sub: int = 32,
-    k_cent: int = 16,
-    sub_dim: int = 2,
-    iters: int = 25,
-    sample_cap: int = 4096,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    salt: str = "pqt",
-) -> list[list[list[int]]]:
-    """Trained PQ codebook: per-subspace Lloyd (k-means) on a bounded
-    deterministic sample — the production quantizer, exactly parallel
-    to ``build_ivf`` for the coarse index. ``pq_sample_codebook`` is the
-    engine-reproducible gate variant (its codes/ADC pipeline is what
-    the DuckDB oracle value-checks); this one trades reproducibility-
-    in-SQL for quantization quality: on the weakly-clustered synthetic
-    embeddings, top-10 recall vs exact L2 goes ~0.1 → ~0.5, and on
-    real (clustered) embedding corpora PQ recall is far higher still.
-
-    Scale contract: training reads a ``sample_cap``-row sample chosen
-    by md5 order (a k-minimum-values draw — deterministic, partition-
-    independent), which is the industry-standard shape (codebooks train
-    on 10⁵-ish samples regardless of corpus size); the collect is
-    bounded metadata. Default geometry M=32 × 2 dims × 16 centroids =
-    32 · 4 bits = 16 bytes/vector (vs 256 raw) — the compression that
-    lets the corpus' code table live in memory. Encoding the full
-    corpus and every search stay distributed (``pq_topk``).
-
-    Determinism: init picks evenly-strided rows of the lexicographically
-    sorted sample, iterations are pure numpy — same data → same
-    codebook, any partitioning.
-    """
-    import numpy as np
-
-    rows = (
-        corpus.selectExpr(
-            f"`{id_col}` AS _id",
-            f"transform(cast(`{vec_col}` AS array<double>), "
-            "v -> cast(round(v * 1000.0D) AS bigint)) AS _xi",
-        )
-        .orderBy(
-            F.md5(F.concat(F.lit(salt + "|"), F.col("_id").cast("string"))),
-            F.col("_id"),
-        )
-        .limit(sample_cap)
-        .collect()
-    )
-    X = np.array([r._xi for r in rows], dtype=np.float64)
-
-    def lloyd(xs: "np.ndarray") -> "np.ndarray":
-        order = np.lexsort(xs.T[::-1])
-        cent = xs[order[:: max(1, len(xs) // k_cent)][:k_cent]].copy()
-        for _ in range(iters):
-            d2 = ((xs[:, None, :] - cent[None, :, :]) ** 2).sum(-1)
-            assign = d2.argmin(1)
-            for j in range(len(cent)):
-                mask = assign == j
-                if mask.any():  # empty cluster keeps its old centroid
-                    cent[j] = xs[mask].mean(0)
-        return np.rint(cent)
-
-    return [
-        lloyd(X[:, m * sub_dim : (m + 1) * sub_dim])
-        .astype(np.int64)
-        .tolist()
-        for m in range(m_sub)
-    ]
 
 
 def int8_quantization_stats(

@@ -109,22 +109,6 @@ def min_shingle_fingerprint(text_col: str = "text", n: int = 3) -> Column:
     )
 
 
-def text_features(docs: DataFrame, id_col: str = "doc_id",
-                  text_col: str = "text") -> DataFrame:
-    """The single-pass feature projection: every X4 feature at once."""
-    return docs.select(
-        id_col,
-        ws_token_count(text_col).alias("n_ws_tokens"),
-        bpe_ish_token_count(text_col).alias("n_bpe_tokens"),
-        avg_token_length(text_col).alias("avg_token_len"),
-        type_token_ratio(text_col).alias("ttr"),
-        stopword_ratio(text_col).alias("en_stopword_ratio"),
-        predicted_lang(text_col).alias("predicted_lang"),
-        content_fingerprint(text_col).alias("content_fp"),
-        min_shingle_fingerprint(text_col).alias("winnow_fp"),
-    )
-
-
 def tfidf_top_terms(docs, id_col: str = "doc_id", text_col: str = "text",
                     k: int = 3):
     """X4: top-k distinguishing terms per document by TF-IDF.
@@ -363,7 +347,7 @@ def mixture_resample(
 
     Per-DOCUMENT hash, so membership is stable under repartitioning,
     subsetting, and incremental re-runs (the same property as
-    ``hash_split``/``kfold_assign``) — re-running the pipeline on a
+    ``relational.kfold_assign``) — re-running the pipeline on a
     grown corpus never flips a previously kept doc. The mixture config
     is a literal map (a handful of sources), never a join; the whole
     operator is a narrow filter: zero shuffles at any scale. Sources

@@ -1725,9 +1725,8 @@ def q_similarity_topk_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
     "within probed cells. Same storage-pruning shape as k-means IVF "
     "(cell-partitioned layout, (nlist-nprobe)/nlist of files pruned per "
     "probe) but the quantizer is engine-reproducible, so the whole ANN "
-    "search is value-hash-checkable. The learned k-means variant "
-    "(build_ivf/ivf_topk) remains the production path when a trained "
-    "codebook exists; recall vs brute force asserted in tests for both.",
+    "search is value-hash-checkable. Recall vs brute force and the "
+    "probe budget are asserted in tests.",
     tags=("similarity",),
 )
 def q_similarity_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3296,7 +3295,7 @@ def q_augmentation_dag(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="O33 round-robin shard assignment (images_to_tfrecord.py:252: "
     "idx % num_shards, 32 val shards): faithful modulo-of-global-index "
-    "semantics; hash_shards is the scale path.",
+    "semantics.",
     tags=("core",),
 )
 def q_shard_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -9903,7 +9902,7 @@ def q_text_script_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
                AS median_cents
     """,
     doc="Exact global median (lower median, rank ceil(n/2)) of a fact "
-    "column in integer cents via relational.py::exact_kth_smallest - "
+    "column in integer cents via relational.py::exact_rank_statistic - "
     "the order statistic computed by iterative histogram refinement: "
     "~3 narrow metadata-sized aggregation rounds with range predicates "
     "pushed into the scan, NO global sort, NO shuffle of data rows at "
@@ -11070,10 +11069,8 @@ def q_seasonal_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
     "arithmetic in exact milli-unit BIGINTs; map-side partial top-k "
     "before the k*|q|-row ranking window. Complements srp_ivf_topk "
     "(storage pruning) — IVF chooses WHAT to scan, PQ shrinks what "
-    "each scanned row costs. This gate variant value-checks the "
-    "code/ADC pipeline; the production quantizer is train_pq (per-"
-    "subspace Lloyd on a bounded deterministic sample, recall-floor "
-    "tested like build_ivf).",
+    "each scanned row costs. The sample-initialized codebook keeps the "
+    "code/ADC pipeline value-checkable end to end.",
     tags=("similarity",),
 )
 def q_similarity_pq(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -232,23 +232,3 @@ def ensure_bucketed_layout(
             built = True
     _register_external_bucketed(spark, table, path, spec)
     return built
-
-
-def bucketed_join(
-    spark: SparkSession,
-    left_table: str,
-    right_table: str,
-    key: str,
-    how: str = "inner",
-) -> DataFrame:
-    """Join two same-bucket-count tables on their bucket key.
-
-    With bucketing metadata present the planner emits a sort-merge join
-    with NO Exchange on either side (and no Sort when the tables were
-    ``sortBy`` the key) — reading the matching bucket-file pairs
-    side-by-side. Joining on anything other than the bucket key falls
-    back to a normal shuffled join; that is Spark semantics, not an
-    error."""
-    lt = spark.table(left_table)
-    rt = spark.table(right_table)
-    return lt.join(rt, on=key, how=how)

@@ -3,14 +3,12 @@
 The reference dumps ``{patient_id: …}`` Python dicts into single-object
 JSON documents (``generate_images_from_dicom.py:89-99,563-576``). The
 engine's canonical sink is line-delimited JSON via ``df.write.json`` —
-distributed, splittable on re-read, overwrite-safe. A single-document
-map writer is provided for byte-shape compatibility but gated to
-dimension-sized data (it collects).
+distributed, splittable on re-read, overwrite-safe. The reference's
+single-object document shape is not reproduced: it needs a driver-side
+collect.
 """
 
 from __future__ import annotations
-
-import json
 
 from pyspark.sql import DataFrame
 
@@ -21,22 +19,3 @@ def write_json(df: DataFrame, path: str, num_files: int | None = None) -> None:
     without a shuffle."""
     out = df.coalesce(num_files) if num_files else df
     out.write.mode("overwrite").json(path)
-
-
-def write_json_map_document(
-    df: DataFrame, key_col: str, value_col: str, path: str,
-    max_rows: int = 100_000,
-) -> None:
-    """O12, byte-shape-compatible path: one JSON object ``{key: value}``
-    like the reference writes. Collects — refuses beyond ``max_rows``
-    because a driver-side map is a dimension-table pattern, not a data
-    pattern."""
-    rows = df.select(key_col, value_col).limit(max_rows + 1).collect()
-    if len(rows) > max_rows:
-        raise ValueError(
-            f"write_json_map_document is for dimension-sized data "
-            f"(> {max_rows} rows); use write_json"
-        )
-    doc = {str(r[0]): r[1] for r in rows}
-    with open(path, "w", encoding="utf-8") as fh:
-        json.dump(doc, fh)

@@ -3,16 +3,10 @@
 The reference writes records round-robin across N open writers
 (``images_to_tfrecord.py:228-231,252``: shard = idx % num_shards, 256
 train / 32 val). In Spark the same outcome is a repartition + per-
-partition file write; two strategies:
-
-- ``roundrobin_shards``: faithful semantics — a global row index modulo
-  N. Needs a total order (single-partition window), so it's the
-  small-metadata path, not the 100 TB path.
-- ``hash_shards`` / ``write_sharded``: the scale path — hash-partition
-  (or Spark's own round-robin ``repartition(n)``) and write; shard
-  membership is not idx-deterministic but shard *balance* and count are,
-  which is all the sink contract requires (SURVEY.md: exact
-  shard-assignment parity is a non-goal).
+partition file write. ``roundrobin_shards`` keeps the faithful
+semantics — a global row index modulo N, ranked by the parallel
+two-phase ``global_row_number``. The TFRecord sink
+(``tfrecord.write_tfrecord_shards``) is the file-writing half.
 """
 
 from __future__ import annotations
@@ -31,57 +25,3 @@ def roundrobin_shards(df: DataFrame, order_col: str, num_shards: int) -> DataFra
     return ranked.withColumn(
         "shard", F.pmod(F.col("_rn") - 1, F.lit(num_shards)).cast("int")
     ).drop("_rn")
-
-
-def hash_shards(df: DataFrame, key_col: str, num_shards: int) -> DataFrame:
-    """Scale path: stable per-key shard, no global sort, no shuffle."""
-    return df.withColumn(
-        "shard", F.pmod(F.xxhash64(F.col(key_col)), F.lit(num_shards)).cast("int")
-    )
-
-
-def write_sharded(df: DataFrame, path: str, num_shards: int,
-                  fmt: str = "parquet") -> None:
-    """Materialize as exactly num_shards files. ``repartition(n)`` is
-    Spark's round-robin exchange — balanced shards without a sort."""
-    df.repartition(num_shards).write.mode("overwrite").format(fmt).save(path)
-
-
-def compact_parquet(
-    spark,
-    src_dir: str,
-    dst_dir: str,
-    target_mb: int = 256,
-    order_col: str | None = None,
-):
-    """Small-file compaction: rewrite a parquet directory into files of
-    ~``target_mb`` each — the periodic maintenance job every streaming
-    or fine-grained-partitioned sink needs (a 100 TB table fed by
-    per-microbatch writes degrades into millions of KB-files; scan
-    task-setup then dominates I/O and the NameNode/object-store
-    listing becomes the bottleneck).
-
-    File count = ceil(bytes / target); ``order_col`` optionally
-    re-sorts within the rewrite (repartitionByRange + local sort) so
-    compaction doubles as a clustering pass — min/max row-group stats
-    then prune reads on that column. Returns (n_files_before,
-    n_files_after, total_bytes)."""
-    import math
-    import os
-
-    files = [
-        os.path.join(src_dir, f)
-        for f in os.listdir(src_dir)
-        if f.endswith(".parquet")
-    ]
-    total = sum(os.path.getsize(f) for f in files)
-    n_out = max(1, math.ceil(total / (target_mb * 1024 * 1024)))
-    df = spark.read.parquet(src_dir)
-    if order_col is not None:
-        df = df.repartitionByRange(n_out, order_col).sortWithinPartitions(
-            order_col
-        )
-    else:
-        df = df.coalesce(n_out)
-    df.write.mode("overwrite").parquet(dst_dir)
-    return len(files), n_out, total

@@ -320,26 +320,16 @@ def frame_record(payload: bytes) -> bytes:
     )
 
 
-class TFRecordCorrupt(Exception):
-    """Raised by ``iter_verified_frames``. ``kind`` is one of
-    ``length crc`` / ``payload crc`` / ``truncated header`` /
-    ``truncated length crc`` / ``truncated payload`` /
-    ``truncated payload crc``; ``record`` is the FIRST offending
-    record index for the two crc kinds, None for truncations."""
+class TFRecordCorrupt(ValueError):
+    """Raised by ``iter_verified_frames``; the message names the shard
+    path. ``kind`` is one of ``length crc`` / ``payload crc`` /
+    ``truncated header`` / ``truncated length crc`` /
+    ``truncated payload`` / ``truncated payload crc``; ``record`` is
+    the FIRST offending record index for the two crc kinds, None for
+    truncations."""
 
-    def __init__(self, kind: str, record: int | None = None):
-        self.kind = kind
-        self.record = record
-        super().__init__(
-            kind if record is None else f"{kind} record {record}"
-        )
-
-
-def _corrupt_to_assert(exc: TFRecordCorrupt) -> AssertionError:
-    msg = exc.kind if exc.kind.startswith("truncated") else (
-        f"corrupt {exc.kind}"
-    )
-    return AssertionError(msg)
+    kind: str
+    record: int | None
 
 
 def iter_verified_frames(path: str, with_payloads: bool = True,
@@ -364,6 +354,17 @@ def iter_verified_frames(path: str, with_payloads: bool = True,
     reported. ``with_payloads=False`` skips the per-record byte copy
     for count-only callers."""
     import numpy as np
+
+    def corrupt(kind: str, record: int | None = None) -> TFRecordCorrupt:
+        if record is None:
+            where = kind.replace("truncated ", "truncated TFRecord ")
+            exc = TFRecordCorrupt(f"{where}: {path}")
+        else:
+            exc = TFRecordCorrupt(
+                f"corrupt TFRecord {kind}: {path} record {record}"
+            )
+        exc.kind, exc.record = kind, record
+        return exc
 
     with open(path, "rb") as f:
         buf = bytearray()
@@ -391,13 +392,11 @@ def iter_verified_frames(path: str, with_payloads: bool = True,
             )
             bad = np.nonzero(got_h != np.array(hcrcs, np.uint32))[0]
             if len(bad):
-                raise TFRecordCorrupt("length crc", first + int(bad[0]))
+                raise corrupt("length crc", first + int(bad[0]))
             got_p = masked_crc_batch(data, starts, lens)
             bad = np.nonzero(got_p != np.array(pcrcs, np.uint32))[0]
             if len(bad):
-                raise TFRecordCorrupt(
-                    "payload crc", first + int(bad[0])
-                )
+                raise corrupt("payload crc", first + int(bad[0]))
             out = [
                 (
                     first + k,
@@ -421,7 +420,7 @@ def iter_verified_frames(path: str, with_payloads: bool = True,
                     yield from _verified()
                     return
                 yield from _verified()
-                raise TFRecordCorrupt(
+                raise corrupt(
                     "truncated header" if avail < 8
                     else "truncated length crc"
                 )
@@ -440,7 +439,7 @@ def iter_verified_frames(path: str, with_payloads: bool = True,
                     and _masked_crc(bytes(buf[pos : pos + 8])) != hcrc
                 ):
                     yield from _verified()
-                    raise TFRecordCorrupt("length crc", idx)
+                    raise corrupt("length crc", idx)
                 if not eof:
                     block = f.read(read_block)
                     if block:
@@ -451,8 +450,8 @@ def iter_verified_frames(path: str, with_payloads: bool = True,
                 # header is corrupt, or the file is truncated
                 yield from _verified()
                 if _masked_crc(bytes(buf[pos : pos + 8])) != hcrc:
-                    raise TFRecordCorrupt("length crc", idx)
-                raise TFRecordCorrupt(
+                    raise corrupt("length crc", idx)
+                raise corrupt(
                     "truncated payload" if avail < 12 + length
                     else "truncated payload crc"
                 )
@@ -473,27 +472,11 @@ def iter_verified_frames(path: str, with_payloads: bool = True,
                 pos = 0
 
 
-def read_tfrecords(path: str) -> list[bytes]:
-    """Frame-level reader (verifies CRCs) — the test-side ground
-    truth. Raises AssertionError on any corrupt frame (same contract
-    as the original sequential walk)."""
-    try:
-        return [p for _, p in iter_verified_frames(path)]
-    except TFRecordCorrupt as exc:
-        raise _corrupt_to_assert(exc) from exc
-
-
 def count_tfrecords(path: str) -> int:
-    """Count (and CRC-verify) the records in one shard file: exactly
-    ``read_tfrecords`` without materializing payload bytes. Runs on
-    executors for distributed shard verification (see
-    queries.rsna_pipeline_counts)."""
-    try:
-        return sum(
-            1 for _ in iter_verified_frames(path, with_payloads=False)
-        )
-    except TFRecordCorrupt as exc:
-        raise _corrupt_to_assert(exc) from exc
+    """Count (and CRC-verify) the records in one shard file without
+    materializing payload bytes. Runs on executors for distributed
+    shard verification (see queries.rsna_pipeline_counts)."""
+    return sum(1 for _ in iter_verified_frames(path, with_payloads=False))
 
 
 class _FeatureRow(dict):

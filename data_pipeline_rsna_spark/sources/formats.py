@@ -83,13 +83,3 @@ def read_table(
     if schema is not None:
         reader = reader.schema(schema)
     return reader.load(path)
-
-
-def read_merged_schema(spark: SparkSession, path: str) -> DataFrame:
-    """Schema-evolution read: batches written over time may add columns;
-    `mergeSchema` unions all file footers' schemas and null-fills the
-    columns a given file lacks. Parquet-only by design — evolution needs
-    a self-describing format. (At warehouse scale mergeSchema reads
-    every footer; a table format's tracked schema replaces this, same
-    query shape.)"""
-    return spark.read.option("mergeSchema", "true").parquet(path)

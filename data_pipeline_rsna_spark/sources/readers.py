@@ -334,26 +334,3 @@ def create_category_index_from_labelmap(
         r.id: {"id": r.id, "name": r.category_name} for r in cats.collect()
     }
 
-
-# ---------------------------------------------------------------------------
-# Robust ingestion: malformed-row capture
-# ---------------------------------------------------------------------------
-
-
-def read_labels_csv_robust(spark: SparkSession, path: str) -> DataFrame:
-    """O1 with production posture: PERMISSIVE parse where malformed rows
-    land whole in ``_corrupt_record`` instead of failing the job or
-    silently vanishing (DROPMALFORMED). Callers split on
-    ``_corrupt_record IS NULL`` and route rejects to a quarantine sink —
-    at 100 TB a handful of bad rows must never kill a 6-hour job, and
-    must never disappear unaudited either."""
-    schema = T.StructType(
-        [*LABELS_CSV.fields, T.StructField("_corrupt_record", T.StringType())]
-    )
-    return (
-        spark.read.option("header", "true")
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", "_corrupt_record")
-        .schema(schema)
-        .csv(path)
-    )

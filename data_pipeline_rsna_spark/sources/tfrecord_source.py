@@ -14,7 +14,8 @@ memory the way a ``binaryFile`` scan of the same file would.
 
 Every frame's length-CRC and payload-CRC are verified (CRC32C with the
 TFRecord mask, shared with the sink) — corruption surfaces as a loud
-ValueError naming the file and record, never as silent truncation.
+``TFRecordCorrupt`` (a ValueError) naming the file and record, never as
+silent truncation.
 
 Output schema: ``path string, record_index bigint, payload binary``.
 ``payload`` is the raw protobuf ``tf.train.Example`` bytes; decode to
@@ -34,6 +35,8 @@ from pyspark.sql.datasource import (
     InputPartition,
 )
 
+from ..sinks.tfrecord import iter_verified_frames
+
 # batch bounds: flush a RecordBatch at either limit so tiny records
 # batch well and huge records don't accumulate
 _BATCH_ROWS = 512
@@ -43,29 +46,6 @@ _BATCH_BYTES = 8 << 20
 class _ShardFile(InputPartition):
     def __init__(self, path: str):
         self.path = path
-
-
-def iter_tfrecord_frames(path: str):
-    """Stream (record_index, payload) from one shard, verifying CRCs.
-
-    Thin wrapper over ``sinks.tfrecord.iter_verified_frames`` — the
-    bounded-memory sliding-buffer walk with lockstep batch CRC — that
-    re-raises ``TFRecordCorrupt`` in this source's ValueError shape
-    (message carries the path, and the first offending record index
-    for crc failures)."""
-    from ..sinks.tfrecord import TFRecordCorrupt, iter_verified_frames
-
-    try:
-        yield from iter_verified_frames(path)
-    except TFRecordCorrupt as exc:
-        if exc.kind.startswith("truncated"):
-            raise ValueError(
-                f"{exc.kind.replace('truncated ', 'truncated TFRecord ')}"
-                f": {path}"
-            ) from exc
-        raise ValueError(
-            f"corrupt TFRecord {exc.kind}: {path} record {exc.record}"
-        ) from exc
 
 
 def _list_shards(path: str) -> list[str]:
@@ -108,7 +88,7 @@ class TFRecordReader(DataSourceReader):
                 names=["path", "record_index", "payload"],
             )
 
-        for idx, payload in iter_tfrecord_frames(partition.path):
+        for idx, payload in iter_verified_frames(partition.path):
             idxs.append(idx)
             blobs.append(payload)
             nbytes += len(payload)

@@ -260,31 +260,6 @@ def _prune_stale_roots(base: str, max_age_s: float = 24 * 3600) -> None:
         pass
 
 
-def run_bounded_memory(agg: DataFrame, mode: str = "complete") -> DataFrame:
-    """MICRO-HARNESS ONLY: drive a bounded stream via Spark's memory
-    sink and collect the table into a local DataFrame. The memory sink
-    materializes the entire result in driver RAM — never a production
-    shape; kept solely to cross-check that the parquet foreachBatch
-    harness (``run_bounded``) and the memory sink agree on one small
-    query (tests/test_streaming.py)."""
-    name = f"stream_out_{uuid.uuid4().hex[:8]}"
-    q = (
-        agg.writeStream.outputMode(mode)
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    spark = agg.sparkSession
-    # materialize before the memory sink table goes away
-    out = spark.table(name)
-    result = spark.createDataFrame(out.collect(), out.schema)
-    return result
-
-
 def session_agg_stream(events: DataFrame, gap: str = "30 minutes",
                        watermark: str = "2 hours") -> DataFrame:
     """Session-window aggregation (X6): events of a user merge into one
@@ -409,42 +384,6 @@ def attribution_join_stream(events: DataFrame,
     ).select(
         "click_id", "purchase_id", F.col("c_user").alias("user_id")
     )
-
-
-def stream_append_cdc_log(stream_df: DataFrame, path: str,
-                          checkpoint: str) -> "object":
-    """CDC-log sink: every micro-batch appends its rows (plus the batch
-    id as the version column) to a parquet log directory. Append-only —
-    no rewrite amplification, safe under retries (Spark's foreachBatch
-    re-runs a failed batch with the same batch_id, and merge-on-read
-    collapses replays since version+key dedupes).
-
-    Returns the StreamingQuery handle."""
-    from pyspark.sql import functions as F
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            batch_df.withColumn("_version", F.lit(batch_id))
-            .write.mode("append").parquet(path)
-        )
-
-    return (
-        stream_df.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .start()
-    )
-
-
-def merge_on_read(spark: SparkSession, path: str, key_cols: list[str],
-                  version_col: str = "_version") -> DataFrame:
-    """The queryable view over a CDC log: latest version per key wins.
-    Compaction = materializing this view and swapping directories; until
-    then reads pay one keyed window over the log."""
-    from ..operators.relational import upsert_snapshot
-
-    log = spark.read.parquet(path)
-    empty = log.limit(0)
-    return upsert_snapshot(empty, log, key_cols, version_col)
 
 
 def _staged_events_dup_dir(sf_dir: str) -> str:
@@ -799,76 +738,6 @@ def attribution_full_outer_stream(events: DataFrame,
         "click_id",
         "purchase_id",
         F.coalesce(F.col("c_user"), F.col("p_user")).alias("user_id"),
-    )
-
-
-def user_running_totals_tws(events: DataFrame) -> DataFrame:
-    """Per-user running totals on the ``transformWithStateInPandas``
-    API — Spark 4's successor to ``applyInPandasWithState`` (kept at
-    ``user_running_totals_stream`` as the legacy twin; SAME semantics,
-    verified against the same batch oracle).
-
-    Why the new API matters at scale: state is declared through a
-    typed handle (``getValueState``/``getListState``/``getMapState``
-    instead of one opaque tuple), timers are first-class
-    (``registerTimer`` replaces the timeout-conf dance), and initial
-    state can be bootstrapped from a batch DataFrame — the pieces a
-    long-lived production aggregation actually needs. State here is
-    one (n, sum) value per user — bounded by |users|.
-
-    Environment gate: the TWS state protocol speaks protobuf between
-    the JVM and the Python state server, so this operator needs the
-    ``protobuf`` package at runtime (ImportError in the streaming
-    driver worker otherwise). It is therefore NOT in the oracle-gated
-    query registry here — the equivalence test skips when protobuf is
-    absent, and ``user_running_totals_stream`` (applyInPandasWithState,
-    no such dependency) remains the gate-checked twin with identical
-    semantics.
-    """
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    # transformWithState runs only on the RocksDB state store (the
-    # HDFS-backed default lacks the multi-column-family layout the
-    # typed handles map onto) — which is also the store a production
-    # deployment runs for incremental-checkpoint reasons
-    events.sparkSession.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-
-    class RunningTotals(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._totals = handle.getValueState(
-                "totals", "n BIGINT, s DOUBLE"
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            import pandas as pd
-
-            if self._totals.exists():
-                n, s = self._totals.get()
-            else:
-                n, s = 0, 0.0
-            for pdf in rows:
-                n += len(pdf)
-                s += float(pdf["value"].sum())
-            self._totals.update((n, s))
-            yield pd.DataFrame(
-                {"user_id": [key[0]], "n_events": [n], "sum_value": [s]}
-            )
-
-        def close(self) -> None:
-            pass
-
-    return events.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=RunningTotals(),
-        outputStructType="user_id long, n_events long, sum_value double",
-        outputMode="Update",
-        timeMode="None",
     )
 
 

@@ -1,8 +1,7 @@
 """Loading helpers for the driver-provided star schema.
 
 Parquet is the engine's canonical storage: columnar, min/max-pruned,
-predicate-pushdown-capable. ``load`` reads one table; ``load_all``
-returns the dict most operators take.
+predicate-pushdown-capable. ``load`` reads one table.
 
 ``load`` memoizes the *analyzed DataFrame* per (session, dir, table) —
 the metastore analogue. ``spark.read.parquet`` resolves the schema
@@ -292,10 +291,6 @@ def normalize_events_ts(df: DataFrame) -> DataFrame:
     """Events-stream alias of ``_normalize_temporal`` (streaming readers
     declare their raw schema, then normalize through this)."""
     return _normalize_temporal(df)
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load(spark, sf_dir, name) for name in TABLE_NAMES}
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:

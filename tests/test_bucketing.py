@@ -50,7 +50,7 @@ def test_bucketed_join_has_no_exchange(spark, bucketed_tables):
         "spark.sql.legacy.bucketedTableScan.outputOrdering", "true"
     )
     try:
-        df = bucketed.bucketed_join(spark, lt, rt, "l_orderkey")
+        df = spark.table(lt).join(spark.table(rt), "l_orderkey")
         rep = audit.plan_report(df)
         assert rep.n_sort_merge_joins == 1, rep.text
         assert rep.n_shuffle_exchanges == 0, rep.text
@@ -79,7 +79,7 @@ def test_bucketed_join_matches_shuffled_join(spark, sf_dir, bucketed_tables):
     """Layout is a performance property, never a semantics property."""
     lt, rt = bucketed_tables
     got = (
-        bucketed.bucketed_join(spark, lt, rt, "l_orderkey")
+        spark.table(lt).join(spark.table(rt), "l_orderkey")
         .agg(
             F.count("*").alias("n"),
             F.round(F.sum(F.col("l_quantity") * F.col("o_totalprice")), 2).alias(
@@ -101,94 +101,6 @@ def test_bucketed_join_matches_shuffled_join(spark, sf_dir, bucketed_tables):
         .collect()[0]
     )
     assert (got["n"], got["dot"]) == (want["n"], want["dot"])
-
-
-@pytest.mark.slow
-def test_incremental_manifest_processes_each_file_once(spark, tmp_path):
-    """Two files -> first run processes both; re-run processes nothing;
-    a third file arriving is the only thing the next run touches, and
-    the accumulated output equals a full batch run."""
-    from pyspark.sql import functions as F
-
-    from data_pipeline_rsna_spark.sinks import incremental as inc
-
-    src = str(tmp_path / "src")
-    out = str(tmp_path / "out")
-    man = str(tmp_path / "manifest")
-
-    def write_file(vals):
-        spark.createDataFrame([(v,) for v in vals], "v int").coalesce(
-            1
-        ).write.mode("append").parquet(src)
-
-    transform = lambda df: df.select((F.col("v") * 2).alias("v2"))  # noqa: E731
-
-    write_file([1, 2])
-    write_file([3])
-    r1 = inc.run_incremental(spark, src, out, man, transform)
-    assert len(r1) == 2
-    r2 = inc.run_incremental(spark, src, out, man, transform)
-    assert r2 == []
-    write_file([10])
-    r3 = inc.run_incremental(spark, src, out, man, transform)
-    assert len(r3) == 1
-    got = sorted(r.v2 for r in spark.read.parquet(out).collect())
-    assert got == [2, 4, 6, 20]
-
-
-def test_compaction_coalesce_no_shuffle_and_lossless(spark, tmp_path):
-    from data_pipeline_rsna_spark.sinks import compaction as cp
-
-    src = str(tmp_path / "many")
-    # 40 tiny files
-    spark.range(0, 400).withColumn("v", F.col("id") * 3).repartition(
-        40
-    ).write.parquet(src)
-    assert len(cp.list_data_files(src)) == 40
-
-    out = str(tmp_path / "compact")
-    # tiny target -> a handful of output files, still > 1
-    manifest = cp.compact_parquet_dir(
-        spark, src, out, target_bytes=30_000
-    ).collect()[0]
-    assert manifest.files_before == 40
-    assert manifest.files_after == manifest.files_planned < 40
-
-    # lossless: same multiset of rows
-    a = sorted(tuple(r) for r in spark.read.parquet(src).collect())
-    b = sorted(tuple(r) for r in spark.read.parquet(out).collect())
-    assert a == b
-
-    # the coalesce path must be narrow: no Exchange in the write plan
-    plan = (
-        spark.read.parquet(src)
-        .coalesce(manifest.files_planned)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "Exchange" not in plan
-
-
-def test_compaction_repartition_even_and_lossless(spark, tmp_path):
-    from data_pipeline_rsna_spark.sinks import compaction as cp
-
-    src = str(tmp_path / "skewed")
-    big = spark.range(0, 900).withColumn("v", F.col("id"))
-    dust = spark.range(900, 910).withColumn("v", F.col("id")).repartition(10)
-    big.coalesce(1).write.parquet(src)
-    dust.write.mode("append").parquet(src)
-    n_before = len(cp.list_data_files(src))
-    # AQE may coalesce some dust partitions; still a skewed multi-file dir
-    assert n_before >= 2
-
-    out = str(tmp_path / "rebalanced")
-    cp.compact_parquet_dir(
-        spark, src, out, target_bytes=10_000, mode="repartition"
-    )
-    a = sorted(r.id for r in spark.read.parquet(src).collect())
-    b = sorted(r.id for r in spark.read.parquet(out).collect())
-    assert a == b
 
 
 def test_dynamic_partition_overwrite_touches_only_written_partitions(

@@ -45,8 +45,12 @@ def test_typed_projection_truncates(raw):
 
 def test_boxes_per_patient_sorted(raw):
     labels = L.typed_labels(raw)
-    res = {r.patient_id: r.boxes for r in L.boxes_per_patient(labels).collect()}
-    assert set(res) == {"p1", "p2"}  # negatives filtered (O3)
+    res = {
+        r.patient_id: r.boxes
+        for r in L.patient_annotations(labels).collect()
+        if r.n_boxes
+    }
+    assert set(res) == {"p1", "p2"}  # negatives carry no boxes (O3)
     assert res["p1"] == [[264, 152, 213, 379], [562, 152, 256, 453]]
     assert res["p2"] == [[10, 20, 30, 40]]
 

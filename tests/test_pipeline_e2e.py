@@ -43,5 +43,5 @@ def test_pipeline_end_to_end(spark, tmp_path):
     # the sink really wrote framed TFRecords with valid CRCs
     files = sorted(glob.glob(f"{out}/train/*.tfrecord"))
     assert len(files) == 4
-    n_payloads = sum(len(tfr.read_tfrecords(f)) for f in files)
+    n_payloads = sum(tfr.count_tfrecords(f) for f in files)
     assert n_payloads == res.train_records

@@ -1,0 +1,124 @@
+"""Every top-level package definition is reached from an entry point.
+
+A name-based AST scan: the roots are the registered queries
+(``@register`` functions in ``queries.py``), ``pipelines.py``,
+``cli.py``, ``__main__.py``, module-level code and ``from`` imports of
+every package module, ``__spark_entry__.py``, ``bench.py``, ``tools/``
+and ``perfbench/`` outside its tests. A definition is reached when its
+name appears (as a name or an attribute) in a root or in a reached
+definition. Test files are not roots: code only tests call is a second
+implementation of something, or dead.
+
+``KEEP`` lists the unreached definitions that stay, each with its
+reason: a test uses it as ground truth, or it is the only
+implementation of a reference operator in COVERAGE.md.
+"""
+
+from __future__ import annotations
+
+import ast
+from pathlib import Path
+
+ROOT = Path(__file__).resolve().parents[1]
+PKG = ROOT / "data_pipeline_rsna_spark"
+
+_TEST_REF = "test reference"
+
+KEEP = {
+    "functions/md5np.py::md5_digest_bytes": _TEST_REF,
+    "functions/md5np.py::u28_draws": _TEST_REF,
+    "functions/md5np.py::md5_hashlib_fallback": _TEST_REF,
+    "sinks/tfrecord.py::frame_record": _TEST_REF,
+    "plans/audit.py::assert_columns_pruned": _TEST_REF,
+    "plans/audit.py::assert_filter_pushed": _TEST_REF,
+    "plans/audit.py::unbounded_nested_loop_joins": _TEST_REF,
+    "sources/readers.py::read_labels_csv": "reference operator O1",
+    "operators/image_kernels.py::cut_paste_box": "reference operator O16",
+    "operators/image_kernels.py::zoom_box_region": "reference operator O17",
+    "operators/multimodal.py::apply_stage_chain": "reference operators O19-O21",
+    "sources/readers.py::read_box_annotations_json": "reference operator O23",
+    "sources/readers.py::read_caption_annotations_json": "reference operator O23",
+    "sources/readers.py::read_examples_list": "reference operator O36",
+    "sources/readers.py::parse_label_map_text": "reference operator O42",
+    "sources/readers.py::parse_label_map_binary": "reference operator O42",
+    "sources/readers.py::read_label_map": "reference operator O42",
+    "sources/readers.py::create_categories_from_labelmap": "reference operator O44",
+    "sources/readers.py::create_category_index_from_labelmap": "reference operator O44",
+}
+
+_WHOLE_MODULES = ("pipelines.py", "cli.py", "__main__.py")
+
+
+def _names(node: ast.AST) -> set[str]:
+    out = set()
+    for n in ast.walk(node):
+        if isinstance(n, ast.Name):
+            out.add(n.id)
+        elif isinstance(n, ast.Attribute):
+            out.add(n.attr)
+    return out
+
+
+def _registered(node: ast.AST) -> bool:
+    return any(
+        isinstance(d, ast.Call)
+        and isinstance(d.func, ast.Name)
+        and d.func.id == "register"
+        for d in getattr(node, "decorator_list", ())
+    )
+
+
+def unreached_definitions() -> list[str]:
+    """``module::name`` of every top-level def/class no root reaches."""
+    defs: dict[str, list[tuple[str, ast.AST]]] = {}
+    seeds: set[str] = set()
+    for path in sorted(PKG.rglob("*.py")):
+        mod = path.relative_to(PKG).as_posix()
+        whole = mod in _WHOLE_MODULES
+        for stmt in ast.parse(path.read_text()).body:
+            if isinstance(
+                stmt, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+            ):
+                if whole or (mod == "queries.py" and _registered(stmt)):
+                    seeds |= _names(stmt)
+                else:
+                    defs.setdefault(stmt.name, []).append((mod, stmt))
+            elif isinstance(stmt, ast.ImportFrom):
+                seeds |= {a.name for a in stmt.names}
+            elif not isinstance(stmt, ast.Import):
+                seeds |= _names(stmt)
+    entry = [
+        ROOT / "__spark_entry__.py",
+        ROOT / "bench.py",
+        *sorted((ROOT / "tools").glob("*.py")),
+        *sorted((ROOT / "perfbench").glob("*.py")),
+    ]
+    for path in entry:
+        seeds |= _names(ast.parse(path.read_text()))
+
+    reached: set[str] = set()
+    todo = list(seeds)
+    while todo:
+        name = todo.pop()
+        if name in reached:
+            continue
+        reached.add(name)
+        for _, node in defs.get(name, ()):
+            todo.extend(_names(node))
+    return sorted(
+        f"{mod}::{name}"
+        for name, found in defs.items()
+        if name not in reached
+        for mod, _ in found
+    )
+
+
+def test_every_definition_is_reached_or_kept():
+    unreached = set(unreached_definitions())
+    extra = sorted(unreached - KEEP.keys())
+    assert not extra, (
+        "unreached package definitions (delete them, or add a KEEP entry "
+        "with its reason): " + ", ".join(extra)
+    )
+    stale = sorted(KEEP.keys() - unreached)
+    assert not stale, f"KEEP entries that are reached or gone: {stale}"

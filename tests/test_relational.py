@@ -9,8 +9,8 @@ import pytest
 
 
 def test_deterministic_split_golden(spark):
-    # FIXTURES.md F8: N=10 => round(8.0)=8 train, 2 val (intended semantics);
-    # bug-compat mode reproduces the reference's 7/3 (off-by-one, :78).
+    # FIXTURES.md F8: N=10 => round(8.0)=8 train, 2 val (intended semantics,
+    # not the reference's off-by-one 7/3).
     df = spark.range(10).select(F.col("id"))
     got = {
         r.split: r.n
@@ -19,24 +19,6 @@ def test_deterministic_split_golden(spark):
         ).collect()
     }
     assert got == {"train": 8, "val": 2}
-    compat = {
-        r.split: r.n
-        for r in rel.deterministic_split(df, "id", bug_compat_off_by_one=True)
-        .groupBy("split")
-        .agg(F.count("*").alias("n"))
-        .collect()
-    }
-    assert compat == {"train": 7, "val": 3}
-
-
-def test_hash_split_stable_and_roughly_80_20(spark):
-    df = spark.range(10000)
-    split1 = rel.hash_split(df, "id").groupBy("split").count().collect()
-    got = {r.split: r["count"] for r in split1}
-    assert 0.75 < got["train"] / 10000 < 0.85
-    # stability: same key -> same split under repartitioning
-    re = rel.hash_split(df.repartition(7), "id").groupBy("split").count()
-    assert {r.split: r["count"] for r in re.collect()} == got
 
 
 def test_dispatch_on_suffix(spark):
@@ -119,27 +101,6 @@ def test_approx_count_distinct_within_tolerance(spark, sf_dir):
         F.approx_count_distinct("o_custkey", rsd=0.02)
     ).collect()[0][0]
     assert abs(approx - exact) / exact < 0.06  # 3x the configured rsd
-
-
-def test_salted_join_matches_plain_join(spark, sf_dir):
-    from pyspark.sql import functions as F
-
-    from data_pipeline_rsna_spark import tables
-    from data_pipeline_rsna_spark.operators import relational as rel
-
-    li = tables.load(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_returnflag", "l_quantity"
-    )
-    # dim keyed on the 3-value returnflag: extreme skew by construction
-    dim = li.select("l_returnflag").distinct().withColumn(
-        "flag_rank", F.length("l_returnflag")
-    )
-    salted = rel.salted_join(li, dim, "l_returnflag", n_salt=8)
-    plain = li.join(dim, "l_returnflag")
-    assert salted.count() == plain.count()
-    s = salted.groupBy("l_returnflag").count().collect()
-    p = plain.groupBy("l_returnflag").count().collect()
-    assert {(r[0], r[1]) for r in s} == {(r[0], r[1]) for r in p}
 
 
 def test_stratified_sample_deterministic_and_proportional(spark, sf_dir):
@@ -299,6 +260,11 @@ def test_pareto_frontier_matches_bruteforce(spark):
     assert got == want
 
 
+def _kth(df, k, **kw):
+    """k-th smallest of column ``k`` for a fixed rank."""
+    return rel.exact_rank_statistic(df, "k", lambda _n: k, **kw)[1]
+
+
 def test_exact_kth_smallest_refinement_matches_sorted(spark):
     """Order statistic via histogram refinement must equal the sorted
     answer — exercised with a take_threshold small enough to force at
@@ -307,12 +273,10 @@ def test_exact_kth_smallest_refinement_matches_sorted(spark):
     df = spark.createDataFrame([(v,) for v in vals], "k long")
     s = sorted(vals)
     for k in (1, 2, 1500, 2400, len(vals)):
-        got = rel.exact_kth_smallest(
-            df, "k", k, n_buckets=16, take_threshold=64
-        )
+        got = _kth(df, k, n_buckets=16, take_threshold=64)
         assert got == s[k - 1], (k, got, s[k - 1])
-    assert rel.exact_kth_smallest(df, "k", 0) is None
-    assert rel.exact_kth_smallest(df, "k", len(vals) + 1) is None
+    assert _kth(df, 0) is None
+    assert _kth(df, len(vals) + 1) is None
 
 
 def test_deterministic_split_numeric_no_shuffle_matches_rank(spark):
@@ -341,9 +305,7 @@ def test_exact_kth_smallest_beyond_double_precision(spark):
     df = spark.createDataFrame([(v,) for v in vals], "k long")
     s = sorted(vals)
     for k in (1, 200, len(vals)):
-        got = rel.exact_kth_smallest(
-            df, "k", k, n_buckets=8, take_threshold=32
-        )
+        got = _kth(df, k, n_buckets=8, take_threshold=32)
         assert got == s[k - 1], (k, got, s[k - 1])
 
 
@@ -406,7 +368,7 @@ def test_exact_kth_smallest_rejects_fractional(spark):
 
     df = spark.createDataFrame([(0.1,), (0.5,)], "k double")
     with _pytest.raises(TypeError):
-        rel.exact_kth_smallest(df, "k", 1)
+        _kth(df, 1)
 
 
 def test_exact_kth_smallest_full_range_longs(spark):
@@ -417,9 +379,7 @@ def test_exact_kth_smallest_full_range_longs(spark):
     df = spark.createDataFrame([(v,) for v in vals], "k long")
     s = sorted(vals)
     for k in (1, 4, len(vals)):
-        got = rel.exact_kth_smallest(
-            df, "k", k, n_buckets=4, take_threshold=2
-        )
+        got = _kth(df, k, n_buckets=4, take_threshold=2)
         assert got == s[k - 1], (k, got)
 
 
@@ -677,9 +637,7 @@ def test_exact_kth_smallest_mixed_sign_extreme_domain(spark):
     df = spark.createDataFrame([(v,) for v in vals], "k long")
     s = sorted(vals)
     for k in (1, 2, 100, len(vals) // 2, len(vals) - 1, len(vals)):
-        got = rel.exact_kth_smallest(
-            df, "k", k, n_buckets=8, take_threshold=16
-        )
+        got = _kth(df, k, n_buckets=8, take_threshold=16)
         assert got == s[k - 1], (k, got, s[k - 1])
 
 

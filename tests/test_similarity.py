@@ -71,23 +71,6 @@ def test_cosine_topk_blas_tie_break_across_batches(spark):
     assert all(r.cosine == 1.0 for r in got)
 
 
-@pytest.mark.slow
-def test_ivf_recall_vs_bruteforce(spark, sf_dir):
-    emb = tables.load(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    brute = sim.cosine_topk(emb, queries, k=10)
-    index = sim.build_ivf(emb, nlist=16)
-    approx = sim.ivf_topk(index, queries, k=10, nprobe=4)
-    b = {(r.query_id, r.neighbor_id) for r in brute.collect()}
-    a = {(r.query_id, r.neighbor_id) for r in approx.collect()}
-    recall = len(a & b) / len(b)
-    # nprobe=4/16 cells; random 64-d embeddings cluster weakly, so demand
-    # a loose-but-meaningful floor
-    assert recall >= 0.4, f"IVF recall {recall:.2f} too low"
-
-
 def test_srp_ivf_recall_and_probe_budget(spark, sf_dir):
     """The deterministic SRP-cell IVF must (a) reach a meaningful recall
     floor vs brute force and (b) actually prune: every returned neighbor
@@ -314,65 +297,6 @@ def test_pq_identical_vector_ranks_first(spark):
     top = sim.pq_topk(emb, queries, cb, k=3).collect()
     first = [r for r in top if r.rank == 1][0]
     assert first.neighbor_id == 2
-
-
-def _exact_l2_topk(emb, queries, k=10):
-    """Exact L2 top-k on the same milli-quantized vectors — the metric
-    PQ approximates, so recall against it isolates quantization error."""
-    from pyspark.sql import Window
-
-    xi = (
-        "transform(cast(embedding as array<double>), "
-        "v -> cast(round(v * 1000.0D) as bigint))"
-    )
-    q = queries.selectExpr("query_id", f"{xi} AS _q")
-    c = emb.selectExpr("vec_id AS neighbor_id", f"{xi} AS _c")
-    d = (
-        F.broadcast(q)
-        .crossJoin(c)
-        .filter("neighbor_id != query_id")
-        .selectExpr(
-            "query_id",
-            "neighbor_id",
-            "aggregate(zip_with(_q, _c, (x,y) -> (x-y)*(x-y)), 0L, "
-            "(a,v) -> a+v) AS l2",
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("l2"), F.col("neighbor_id")
-    )
-    return d.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
-    )
-
-
-def test_pq_trained_recall_vs_exact_l2(spark, sf_dir):
-    emb = tables.load(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    b = {
-        (r.query_id, r.neighbor_id)
-        for r in _exact_l2_topk(emb, queries).collect()
-    }
-    cb = sim.train_pq(emb)  # M=32 x 2 dims x 16 centroids
-    approx = sim.pq_topk(emb, queries, cb, k=10)
-    a = {(r.query_id, r.neighbor_id) for r in approx.collect()}
-    recall = len(a & b) / len(b)
-    # uniform-random embeddings are PQ's worst case (no cluster
-    # structure); trained Lloyd still must beat 0.4 (chance ~0.02).
-    # The sample-init gate codebook sits ~0.1 — training is the
-    # production difference.
-    assert recall >= 0.4, f"trained PQ recall {recall:.2f} too low"
-
-
-def test_train_pq_deterministic_across_partitionings(spark, sf_dir):
-    emb = tables.load(spark, sf_dir, "embeddings")
-    cb1 = sim.train_pq(emb, m_sub=8, k_cent=8, sub_dim=8, iters=5)
-    cb2 = sim.train_pq(
-        emb.repartition(11), m_sub=8, k_cent=8, sub_dim=8, iters=5
-    )
-    assert cb1 == cb2
 
 
 def test_int8_quantization_error_bound(spark, sf_dir):

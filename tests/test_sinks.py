@@ -1,29 +1,6 @@
 import pytest
 
 
-
-def test_compact_parquet_reduces_files_preserves_rows(spark, tmp_path):
-    from data_pipeline_rsna_spark.sinks import sharded
-
-    src = str(tmp_path / "fragmented")
-    dst = str(tmp_path / "compacted")
-    spark.range(10_000).repartition(32).write.parquet(src)
-    before, n_out, total = sharded.compact_parquet(
-        spark, src, dst, target_mb=1
-    )
-    assert before == 32
-    import os
-
-    after = [f for f in os.listdir(dst) if f.endswith(".parquet")]
-    assert len(after) == n_out < before
-    assert spark.read.parquet(dst).count() == 10_000
-    # clustering variant: ordered rewrite keeps rows and sorts ranges
-    dst2 = str(tmp_path / "clustered")
-    sharded.compact_parquet(spark, src, dst2, target_mb=1, order_col="id")
-    back = spark.read.parquet(dst2)
-    assert back.count() == 10_000
-
-
 def test_scratch_dir_registers_atexit_cleanup(monkeypatch):
     """_scratch_dir must defer removal to interpreter exit: the dir
     exists after the call (lazy roundtrip plans re-read it), and the

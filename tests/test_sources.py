@@ -37,15 +37,6 @@ def test_json_sink_scan_roundtrip(spark, tmp_path):
     assert got == {"p1": [[1, 2, 3, 4], [5, 6, 7, 8]], "p2": []}
 
 
-def test_json_map_document(spark, tmp_path):
-    import json
-
-    df = spark.createDataFrame([("p1", "1"), ("p2", "0")], "k string, v string")
-    out = tmp_path / "map.json"
-    json_sink.write_json_map_document(df, "k", "v", str(out))
-    assert json.loads(out.read_text()) == {"p1": "1", "p2": "0"}
-
-
 def test_examples_list_reader(spark, tmp_path):
     p = tmp_path / "examples.txt"
     p.write_text("img001 extra tokens here\nimg002\n   \nimg003 1\n")
@@ -149,24 +140,6 @@ def test_label_map_binary_proto_fallback(spark, tmp_path):
     assert rows[2].name == "background-ish" and rows[2].display_name is None
 
 
-def test_robust_csv_quarantines_malformed(spark, tmp_path):
-    from pyspark.sql import functions as F
-
-    p = tmp_path / "labels.csv"
-    # LABELS_CSV is all-string, so a malformed row = wrong column count
-    p.write_text(
-        "patientId,x,y,width,height,Target\n"
-        "p1,1.0,2.0,3.0,4.0,1\n"
-        'p2,unclosed "quote,oops\n'
-        "p3,5.0,6.0,7.0,8.0,0\n"
-    )
-    df = readers.read_labels_csv_robust(spark, str(p)).cache()
-    good = df.filter(F.col("_corrupt_record").isNull())
-    bad = df.filter(F.col("_corrupt_record").isNotNull())
-    assert sorted(r.patientId for r in good.collect()) == ["p1", "p3"]
-    assert bad.count() == 1  # quarantined, not dropped, not fatal
-
-
 def test_orc_sink_source_roundtrip(spark, sf_dir, tmp_path):
     """ORC is the second columnar format the engine reads/writes (same
     DataFrameReader/Writer surface as parquet). Roundtrip must preserve
@@ -239,23 +212,6 @@ def test_multiformat_partitioned_write_prunes(spark, tmp_path):
     # partition pruning: the filtered scan must touch only part=2 files
     plan = got._jdf.queryExecution().executedPlan().toString()
     assert "part=2" in plan or "PartitionFilters" in plan
-
-
-def test_schema_evolution_merged_read(spark, tmp_path):
-    from data_pipeline_rsna_spark.sources import formats
-
-    path = str(tmp_path / "evolving")
-    spark.range(3).selectExpr("id", "id * 2 AS a").write.parquet(
-        path + "/batch=1"
-    )
-    spark.range(3, 6).selectExpr(
-        "id", "id * 2 AS a", "id * 10 AS b"
-    ).write.parquet(path + "/batch=2")
-    got = formats.read_merged_schema(spark, path)
-    assert {f.name for f in got.schema.fields} >= {"id", "a", "b"}
-    rows = {r.id: (r.a, r.b) for r in got.collect()}
-    assert rows[0] == (0, None)  # old rows null-fill the new column
-    assert rows[5] == (10, 50)
 
 
 @pytest.mark.slow

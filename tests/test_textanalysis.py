@@ -20,8 +20,19 @@ def docs(spark):
     )
 
 
+def _features(docs, **cols):
+    """Row per doc_id with each named column function applied to text."""
+    df = docs.select("doc_id", *(fn("text").alias(k) for k, fn in cols.items()))
+    return {r.doc_id: r for r in df.collect()}
+
+
 def test_token_counts(docs):
-    rows = {r.doc_id: r for r in tx.text_features(docs).collect()}
+    rows = _features(
+        docs,
+        n_ws_tokens=tx.ws_token_count,
+        n_bpe_tokens=tx.bpe_ish_token_count,
+        ttr=tx.type_token_ratio,
+    )
     assert rows[1].n_ws_tokens == 8
     # "x1 hello-world 42" -> x,1,hello,-,world,42
     assert rows[4].n_bpe_tokens == 6
@@ -29,7 +40,11 @@ def test_token_counts(docs):
 
 
 def test_stopword_and_lang(docs):
-    rows = {r.doc_id: r for r in tx.text_features(docs).collect()}
+    rows = _features(
+        docs,
+        en_stopword_ratio=tx.stopword_ratio,
+        predicted_lang=tx.predicted_lang,
+    )
     # doc1: 'the','and','the' are en stopwords -> 3/8
     assert rows[1].en_stopword_ratio == round(3 / 8, 6)
     assert rows[1].predicted_lang == "en"
@@ -42,7 +57,11 @@ def test_fingerprints_order_insensitive(spark):
         [(1, "alpha beta gamma"), (2, "gamma beta alpha")],
         "doc_id long, text string",
     )
-    rows = {r.doc_id: r for r in tx.text_features(a).collect()}
+    rows = _features(
+        a,
+        content_fp=tx.content_fingerprint,
+        winnow_fp=tx.min_shingle_fingerprint,
+    )
     # same bag of words -> same content fingerprint
     assert rows[1].content_fp == rows[2].content_fp
     # different shingles -> (almost surely) different winnow fingerprint

@@ -36,7 +36,7 @@ def test_frame_roundtrip(tmp_path):
     with open(p, "wb") as f:
         for pl in payloads:
             f.write(tfr.frame_record(pl))
-    assert tfr.read_tfrecords(str(p)) == payloads
+    assert [pl for _, pl in tfr.iter_verified_frames(str(p))] == payloads
 
 
 def test_write_tfrecord_shards(spark, tmp_path):
@@ -53,10 +53,10 @@ def test_write_tfrecord_shards(spark, tmp_path):
     tfr.write_tfrecord_shards(df, out, num_shards=4, to_features=to_features)
     files = sorted(glob.glob(f"{out}/*.tfrecord"))
     assert len(files) == 4
-    n = sum(len(tfr.read_tfrecords(f)) for f in files)
+    n = sum(tfr.count_tfrecords(f) for f in files)
     assert n == 100
     # spot-check one payload parses as the expected deterministic bytes
-    some = tfr.read_tfrecords(files[0])[0]
+    _, some = next(tfr.iter_verified_frames(files[0]))
     assert b"name" in some and b"rec-" in some
 
 
@@ -72,7 +72,7 @@ def test_write_tfrecord_shards_empty_shards(spark, tmp_path):
     tfr.write_tfrecord_shards(df, out, 6, lambda r: {"id": [r["id"]]})
     files = sorted(glob.glob(f"{out}/*.tfrecord"))
     assert len(files) == 6
-    counts = [len(tfr.read_tfrecords(f)) for f in files]
+    counts = [tfr.count_tfrecords(f) for f in files]
     assert sum(counts) == 3
 
 
@@ -99,7 +99,7 @@ def test_write_tfrecord_shards_row_facade(spark, tmp_path):
     tfr.write_tfrecord_shards(df, out, 2, to_features)
     payloads = []
     for f in sorted(glob.glob(f"{out}/*.tfrecord")):
-        payloads.extend(tfr.read_tfrecords(f))
+        payloads.extend(p for _, p in tfr.iter_verified_frames(f))
     got = sorted(
         tuple(
             (k, tuple(v)) for k, v in sorted(tfr.decode_example(p).items())

@@ -5,11 +5,9 @@ scipy-gated parity test (VERDICT r5 ask #3).
 Provenance model (recorded inside the .npz as ``provenance``):
 
 - On a scipy-equipped box this script generates the goldens STRAIGHT
-  from ``scipy.ndimage`` (``zoom(order=3, mode='nearest')`` /
-  ``shift(order=3, mode='constant', cval=0)`` — the reference
-  pipeline's actual default interpolator,
-  /root/reference/generate_images_from_dicom.py:122,191,211-214) and
-  stamps ``provenance='scipy.ndimage <version>'``.
+  from ``scipy.ndimage`` (``zoom(order=3, mode='nearest')`` — the
+  reference pipeline's actual default interpolator,
+  ``generate_images_from_dicom.py:191,211-214``) and stamps ``provenance='scipy.ndimage <version>'``.
 - Without scipy (this container has neither scipy nor network), it
   generates them from an INDEPENDENT dense implementation of the same
   published interpolation system: dense ``np.linalg.solve`` of the
@@ -116,28 +114,12 @@ def dense_zoom_order3(a: np.ndarray, rf: float) -> np.ndarray:
     return dense_eval_grid(coef, ys, xs)
 
 
-def dense_shift_order3(a: np.ndarray, rx: float, ry: float) -> np.ndarray:
-    """ndimage.shift(a, (ry, rx), order=3, mode='constant', cval=0) by
-    dense reference: mirror prefilter on the UNPADDED array, B3 eval,
-    zero outside the source extent."""
-    h, w = a.shape
-    coef = dense_cubic_coeffs_2d(a)
-    ys = np.arange(h, dtype=np.float64) - ry
-    xs = np.arange(w, dtype=np.float64) - rx
-    vals = dense_eval_grid(coef, ys, xs)
-    inside = ((ys >= 0) & (ys <= h - 1))[:, None] & (
-        (xs >= 0) & (xs <= w - 1)
-    )[None, :]
-    return vals * inside
-
-
 CASES = {
     # (name, dtype, shape, seed)
     "u8": (np.uint8, (16, 16), 11),
     "u16": (np.uint16, (12, 14), 23),
 }
 ZOOMS = {"z137": 1.37, "z060": 0.6}
-SHIFTS = {"s_a": (0.25, -1.75), "s_b": (1.5, 0.25)}
 
 
 def main() -> int:
@@ -166,19 +148,6 @@ def main() -> int:
                 g = dense_zoom_order3(img, rf)
             out[f"zoom_{cname}_{zname}_f64"] = g
             out[f"zoom_{cname}_{zname}"] = _round_to(g, dtype)
-        for sname, (rx, ry) in SHIFTS.items():
-            if have_scipy:
-                g = ndi.shift(
-                    img.astype(np.float64),
-                    (ry, rx),
-                    order=3,
-                    mode="constant",
-                    cval=0.0,
-                )
-            else:
-                g = dense_shift_order3(img, rx, ry)
-            out[f"shift_{cname}_{sname}_f64"] = g
-            out[f"shift_{cname}_{sname}"] = _round_to(g, dtype)
 
     os.makedirs(os.path.dirname(FIXTURE), exist_ok=True)
     np.savez_compressed(FIXTURE, **out)
