@@ -322,6 +322,76 @@ def minhash_lsh_candidates(docs: DataFrame, id_col: str = "doc_id",
     )
 
 
+def _expand_classes(members: DataFrame, rep_pairs: DataFrame,
+                    within: DataFrame,
+                    max_class: int | None = None) -> DataFrame:
+    """Member pairs of duplicate classes whose representatives were
+    verified once: the expansion step of every collapse-first pair
+    operator.
+
+    - ``members`` is ``(_g, _id)``: every document with its class
+      representative ``_g = min(_id)``.
+    - ``rep_pairs`` is ``(_ga, _gb, *values)``: the verified
+      representative pairs. Each cross-class member pair copies its
+      representative pair's values.
+    - ``within`` is ``(_g, *values)``: the values of a pair inside
+      class ``_g``. A class with no row emits no within pairs.
+
+    Returns ``(doc_a, doc_b, *values)`` with ``doc_a < doc_b``. Both
+    expansions are streamed member-row joins, so no task materializes
+    a member or pair array: a class duplicated 10⁶ times streams its
+    pairs across the join instead of OOMing one reducer.
+
+    ``max_class`` is the mega-class guard, the class-level twin of the
+    LSH ``max_bucket`` cap: each class keeps only its ``max_class``
+    smallest ids (the representative always among them) and the output
+    gains ``capped``, true when either endpoint's class overflowed, so
+    overflow groups can be routed to exact dedup instead of silently
+    exploding."""
+    values = [c for c in rep_pairs.columns if c not in ("_ga", "_gb")]
+    cap = []
+    if max_class is not None:
+        wg = Window.partitionBy("_g")
+        members = (
+            members.withColumn("_rn", F.row_number().over(wg.orderBy("_id")))
+            .withColumn("_n_mem", F.count("*").over(wg))
+            .filter(F.col("_rn") <= max_class)
+            .select("_g", "_id", (F.col("_n_mem") > max_class).alias("_cap"))
+            .transform(lineage_cut)
+        )
+        cap = [(F.col("_ca") | F.col("_cb")).alias("capped")]
+
+    def side(s: str, key: str) -> DataFrame:
+        return members.select(
+            F.col("_g").alias(key),
+            F.col("_id").alias(f"_m{s}"),
+            *([F.col("_cap").alias(f"_c{s}")] if cap else []),
+        )
+
+    # classes are disjoint id sets, so least/greatest normalizes each
+    # unordered cross pair exactly once
+    cross = (
+        rep_pairs.join(side("a", "_ga"), "_ga")
+        .join(side("b", "_gb"), "_gb")
+        .select(
+            F.least("_ma", "_mb").alias("doc_a"),
+            F.greatest("_ma", "_mb").alias("doc_b"),
+            *values, *cap,
+        )
+    )
+    inner = (
+        side("a", "_g")
+        .join(side("b", "_g"), "_g")
+        .filter(F.col("_ma") < F.col("_mb"))
+        .join(within, "_g")
+        .select(
+            F.col("_ma").alias("doc_a"), F.col("_mb").alias("doc_b"),
+            *values, *cap,
+        )
+    )
+    return inner.unionByName(cross)
+
+
 def minhash_lsh_candidates_collapsed(
     docs: DataFrame,
     id_col: str = "doc_id",
@@ -339,56 +409,41 @@ def minhash_lsh_candidates_collapsed(
     bands by construction. This variant therefore:
 
     1. collapses docs to classes keyed by an injective hash of the
-       word sequence (md5 each token, concat, md5 — same injectivity
-       argument as ``prefix_filter_jaccard_pairs``),
+       word sequence,
     2. runs the signature + band-bucket pipeline over ONE
        representative per class (cost scales with |distinct texts|,
        not |docs| — on a corpus where every page is duplicated k
        times, the expensive stages shrink k×),
-    3. expands pairs arithmetically: rep-pair shared-band counts
-       apply to every cross-class member pair; within-class pairs
-       share all ``num_hashes/rows_per_band`` bands. Both expansions
-       are streamed member-row self-joins (the round-8 distributed
-       form) — no task materializes a pair array, so a 10⁶-member
-       boilerplate class streams instead of OOMing one reducer.
+    3. expands pairs with :func:`_expand_classes`: rep-pair shared-band
+       counts apply to every cross-class member pair; within-class
+       pairs share all ``num_hashes/rows_per_band`` bands.
 
     Classes whose word count is below ``shingle_n`` produce no
     signature in the uncollapsed form and are excluded from BOTH
-    expansions here, keeping the equality exact. Measured (round 8):
-    the uncollapsed headline spends 43× more time per 10× data on the
-    sf10 verbatim-replication corpus (every doc in a ≥100-member
-    class); this form's expensive stages see 4 992 reps instead of
-    500 000 docs."""
+    expansions here, keeping the equality exact. Measured: the
+    uncollapsed form spends 43× more time per 10× data on the sf10
+    verbatim-replication corpus (every doc in a ≥100-member class);
+    this form's expensive stages see 4 992 reps instead of 500 000
+    docs."""
     n_bands = num_hashes // rows_per_band
     mem0 = docs.selectExpr(
         f"`{id_col}` AS _id",
         f"split(lower(`{text_col}`), '\\\\s+') AS _ws",
-        f"`{text_col}` AS _text",
     ).withColumn(
         # class key: md5 of the single-space re-join. Injective on the
         # word sequence: split('\\s+') yields space-FREE tokens (runs
         # collapse; only boundary empties survive), so the joined
         # string splits back to exactly one array — no separator
-        # collision is possible, and no per-token hashing is needed
-        # (round 9: the md5-per-token key cost ~n_tokens md5 calls per
-        # document for the same injectivity guarantee).
+        # collision is possible, and no per-token hashing is needed.
         "_ck", F.md5(F.expr("array_join(_ws, ' ')"))
     )
-    # one representative per distinct word sequence; drop classes too
-    # short to shingle (the uncollapsed pipeline's size(_ws) filter).
-    # Round 10 (ADVICE r9 + VERDICT what's-wrong #2): r9 persist()-ed
-    # this class table WITH full distinct texts, which (a) leaked a
-    # session-lifetime CacheManager entry per invocation (never
-    # unpersisted) and (b) at a distinct ratio just under the adaptive
-    # 0.7 routing threshold held ~70% of the corpus text volume in the
-    # block manager. Now the table is TEXT-FREE (_ck 32 B + _g 8 B per
-    # class — genuinely metadata-sized at any corpus) and pinned with
-    # lineage_cut instead of persist: the eager cut is one k-row
-    # materialization whose RDD blocks the ContextCleaner reclaims
-    # when the returned plan is dropped — nothing enters the session
-    # cache manager, so repeated invocations cannot accumulate. The
-    # corpus-sized mem0 is still never checkpointed or cached (the
-    # 100 TB write-amplification hazard r9 removed stays removed).
+    # one representative per distinct word sequence; classes too short
+    # to shingle drop here (the uncollapsed pipeline's size(_ws)
+    # filter). The table is text-free (_ck 32 B + _g 8 B per class) and
+    # pinned with lineage_cut rather than persist: the cut's blocks are
+    # reclaimed when the returned plan is dropped, so repeated calls
+    # cannot accumulate cache entries, and the corpus-sized mem0 is
+    # never cached or checkpointed.
     groups = lineage_cut(
         mem0.groupBy("_ck")
         .agg(
@@ -398,20 +453,11 @@ def minhash_lsh_candidates_collapsed(
         .filter(F.col("_nw") >= shingle_n)
         .select("_ck", "_g")
     )
-    # members carry their class REP id directly (round 9: keying by
-    # _g instead of _ck removes the two rep_to_ck mapping joins from
-    # the critical path — rep_pairs already speaks rep ids)
-    members = mem0.select("_ck", "_id").join(
-        groups, "_ck"
-    ).select("_g", "_id")
-    # signature + band pipeline over reps only. Rep text comes from an
-    # ID join against the RAW docs (the rep IS doc min(_id), so its
-    # original text row carries the class's word sequence verbatim) —
-    # this costs a plain (id, text) scan + join against the k-row cut
-    # table, but ZERO tokenization: the split+lower+md5 pass, the
-    # expensive part of any corpus consumer here, runs exactly twice
-    # per invocation (class agg + members), same as the r9 persisted
-    # form, without persisting any text.
+    members = mem0.select("_ck", "_id").join(groups, "_ck").select("_g", "_id")
+    # Rep text comes from an ID join against the raw docs (the rep IS
+    # doc min(_id), so its own text row carries the class's word
+    # sequence verbatim): no second tokenization of the corpus and no
+    # persisted text.
     reps = (
         docs.selectExpr(
             f"`{id_col}` AS _rid", f"`{text_col}` AS _rtext"
@@ -424,32 +470,11 @@ def minhash_lsh_candidates_collapsed(
         reps, id_col=id_col, text_col=text_col, num_hashes=num_hashes,
         rows_per_band=rows_per_band, shingle_n=shingle_n,
     ).withColumnRenamed("doc_a", "_ga").withColumnRenamed("doc_b", "_gb")
-    # cross-class expansion: every (a in A, b in B) member pair carries
-    # the rep pair's shared-band count; classes are disjoint id sets so
-    # least/greatest normalizes each unordered pair exactly once
-    cross = (
-        rep_pairs.join(
-            members.select(F.col("_g").alias("_ga"),
-                           F.col("_id").alias("_ida")), "_ga")
-        .join(members.select(F.col("_g").alias("_gb"),
-                             F.col("_id").alias("_idb")), "_gb")
-        .select(
-            F.least("_ida", "_idb").alias("doc_a"),
-            F.greatest("_ida", "_idb").alias("doc_b"),
-            F.col("n_shared_bands"),
-        )
+    # identical word sequences share every band
+    within = groups.select(
+        "_g", F.lit(n_bands).cast("long").alias("n_shared_bands")
     )
-    # within-class: identical word sequences share every band
-    within = (
-        members.select("_g", F.col("_id").alias("doc_a"))
-        .join(members.select("_g", F.col("_id").alias("doc_b")), "_g")
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select(
-            "doc_a", "doc_b",
-            F.lit(n_bands).cast("long").alias("n_shared_bands"),
-        )
-    )
-    return cross.unionByName(within)
+    return _expand_classes(members, rep_pairs, within)
 
 
 # (application id, semanticHash(docs), text_col) -> measured distinct
@@ -457,13 +482,19 @@ def minhash_lsh_candidates_collapsed(
 # floats, so this never holds data.
 _PROBE_RATIO_CACHE: dict[tuple, float] = {}
 
+# The adaptive router collapses first below this distinct-text ratio.
+COLLAPSE_BELOW = 0.7
+# Rows the distinct-ratio probe reads: the threshold is coarse enough
+# that a 64 k-row estimate decides it.
+PROBE_ROWS = 65536
+
 
 def _stratified_distinct_ratio(
     docs: DataFrame, text_col: str, probe_rows: int, max_files: int = 64
 ) -> float | None:
-    """Layout-UNBIASED distinct-text-ratio estimate (round 11, VERDICT
-    r10 #7): one hash-chosen row group from each of up to ``max_files``
-    hash-chosen input files, read driver-side with pyarrow. A prefix
+    """Layout-UNBIASED distinct-text-ratio estimate: one hash-chosen
+    row group from each of up to ``max_files`` hash-chosen input files,
+    read driver-side with pyarrow. A prefix
     ``take()`` reads partition 0 first, so layout-clustered duplicates
     (crawl dumps often sort near-dups together) skew its estimate; a
     per-file row-group sample sees every region of the table at the
@@ -527,9 +558,9 @@ def _stratified_distinct_ratio(
                 continue
             rg = int(hashlib.md5(p.encode()).hexdigest(), 16) % nrg
             # slice BEFORE to_pylist: a production row group can hold
-            # ~1M long strings and only per_file of them are used —
-            # materializing the full column as Python objects was a
-            # driver memory/time spike per probed file (r11 review)
+            # ~1M long strings and only per_file of them are used, so
+            # materializing the full column as Python objects would be a
+            # driver memory/time spike per probed file
             col = (
                 pf.read_row_group(rg, columns=[text_col])
                 .column(0)
@@ -565,91 +596,59 @@ def minhash_lsh_candidates_adaptive(
     num_hashes: int = 12,
     rows_per_band: int = 2,
     shingle_n: int = 3,
-    collapse_below: float = 0.7,
-    distinct_ratio_hint: float | None = None,
-    probe_rows: int = 65536,
 ) -> DataFrame:
     """MinHash-LSH candidates with a stats-driven form choice — the
     decision a cost-based optimizer makes from table statistics,
-    executed here as ONE cheap probe aggregate:
+    executed here as ONE cheap probe:
 
-    - distinct-text ratio < ``collapse_below`` (duplication-heavy —
+    - distinct-text ratio < ``COLLAPSE_BELOW`` (duplication-heavy —
       the crawl shape): run :func:`minhash_lsh_candidates_collapsed`,
       whose expensive stages see one representative per distinct word
       sequence (measured 12.7× cheaper than the direct form on the
-      sf10 heavy-dup corpus: 7.7 s vs 98.8 s DuckDB, r8 direct 227 s);
-    - ratio ≥ ``collapse_below`` (mostly-unique corpus): run the
+      sf10 heavy-dup corpus: 7.7 s vs 98.8 s DuckDB);
+    - ratio ≥ ``COLLAPSE_BELOW`` (mostly-unique corpus): run the
       direct streamed form, skipping the collapse machinery that only
       pays for itself when classes are big (measured ~0.9 s cheaper
       at sf0.1 where 92% of texts are unique).
 
-    ``distinct_ratio_hint`` is the table-statistics fast path: when
-    the caller already knows the distinct-text ratio (catalog stats, a
-    previous run, corpus provenance), NO probe job runs at all — the
-    analogue of a cost-based optimizer reading ANALYZE output instead
-    of scanning.
-
-    Without a hint the probe is two-tier (round 11, VERDICT r10 #7):
-    when the input's lineage exposes local parquet files carrying
-    ``text_col``, a LAYOUT-UNBIASED stratified sample reads one
-    hash-chosen row group from each of ≤64 files driver-side (zero
-    Spark jobs, bounded decode) — clustered duplicates at the head of
-    the table no longer skew the estimate. Otherwise it falls back to
-    the exact distinct ratio of a ``probe_rows``-row prefix, fetched
-    with ``take`` — CollectLimit scans partitions INCREMENTALLY
-    starting from one, so at any corpus size the probe reads ~one
-    input split, never the table (round 10: the r9 probe scanned and
-    md5-keyed the ENTIRE corpus just to pick a form — a full extra
-    100 TB pass spent on a routing decision; the 0.7 threshold is
-    coarse enough that a 64 k-row estimate decides it). Only digests
-    reach the driver, never retained text. Either estimate affects
-    COST only, never the answer: both forms are pair-for-pair
+    The probe is two-tier. When the input's lineage exposes local
+    parquet files carrying ``text_col``, a LAYOUT-UNBIASED stratified
+    sample reads one hash-chosen row group from each of ≤64 files
+    driver-side (zero Spark jobs, bounded decode), so clustered
+    duplicates at the head of the table do not skew the estimate.
+    Otherwise it falls back to the exact distinct ratio of a
+    ``PROBE_ROWS``-row prefix, fetched with ``take``: CollectLimit
+    scans partitions incrementally starting from one, so at any corpus
+    size the probe reads ~one input split, never the table. Only
+    digests reach the driver, never retained text. Either estimate
+    affects COST only, never the answer: both forms are pair-for-pair
     identical (pinned in tests and by the shared oracle SQL), so the
     worst a biased probe costs is the other form's runtime."""
-    if distinct_ratio_hint is not None:
-        ratio = float(distinct_ratio_hint)
-    else:
-        # memoize by the input's semantic plan hash — the engine-side
-        # analogue of ANALYZE results living in the catalog: the same
-        # corpus expression re-probed in the same session reuses the
-        # estimate with zero jobs (a served/benchmarked query re-runs
-        # the same plan many times; re-probing each time is catalog
-        # work done over and over). Cost-only: a stale or colliding
-        # entry can only pick the other (identical-output) form.
-        cache_key = (
-            docs.sparkSession.sparkContext.applicationId,
-            docs.semanticHash(),
-            text_col,
-        )
-        cached = _PROBE_RATIO_CACHE.get(cache_key)
-        if cached is not None:
-            ratio = cached
-        else:
-            # preferred: the layout-unbiased stratified row-group
-            # sample (one hash-chosen row group per input file, driver
-            # -side, zero jobs); prefix take() remains the fallback
-            # when lineage hides the files — its layout bias is
-            # documented cost-only
-            est = _stratified_distinct_ratio(
-                docs, text_col, int(probe_rows)
-            )
-            if est is not None:
-                ratio = est
-            else:
-                digests = docs.selectExpr(
-                    f"md5(array_join(split(lower(`{text_col}`), "
-                    "'\\\\s+'), ' ')) AS _ck"
-                ).take(int(probe_rows))
-                n = len(digests) or 1
-                ratio = len({r[0] for r in digests}) / n
-            _PROBE_RATIO_CACHE[cache_key] = ratio
-    if ratio < collapse_below:
-        return minhash_lsh_candidates_collapsed(
-            docs, id_col=id_col, text_col=text_col,
-            num_hashes=num_hashes, rows_per_band=rows_per_band,
-            shingle_n=shingle_n,
-        )
-    return minhash_lsh_candidates(
+    # memoize by the input's semantic plan hash — the engine-side
+    # analogue of ANALYZE results living in the catalog: a served or
+    # benchmarked query re-running the same plan reuses the estimate
+    # with zero jobs. Cost-only: a stale or colliding entry can only
+    # pick the other (identical-output) form.
+    cache_key = (
+        docs.sparkSession.sparkContext.applicationId,
+        docs.semanticHash(),
+        text_col,
+    )
+    ratio = _PROBE_RATIO_CACHE.get(cache_key)
+    if ratio is None:
+        ratio = _stratified_distinct_ratio(docs, text_col, PROBE_ROWS)
+        if ratio is None:
+            digests = docs.selectExpr(
+                f"md5(array_join(split(lower(`{text_col}`), "
+                "'\\\\s+'), ' ')) AS _ck"
+            ).take(PROBE_ROWS)
+            ratio = len({r[0] for r in digests}) / (len(digests) or 1)
+        _PROBE_RATIO_CACHE[cache_key] = ratio
+    form = (
+        minhash_lsh_candidates_collapsed if ratio < COLLAPSE_BELOW
+        else minhash_lsh_candidates
+    )
+    return form(
         docs, id_col=id_col, text_col=text_col, num_hashes=num_hashes,
         rows_per_band=rows_per_band, shingle_n=shingle_n,
     )
@@ -1205,22 +1204,10 @@ def prefix_filter_jaccard_pairs(
     bucket-cap the posting list like the LSH mega-bucket guard if a
     corpus manufactures one.
 
-    Member expansion is DISTRIBUTED (round 8): members stay as ROWS
-    keyed by an injective class hash and every pair expansion is a
-    streamed self-join, so no task ever materializes a member array or
-    an N²/2 pair array — a boilerplate page duplicated 10⁶ times in a
-    crawl streams its pairs across the join instead of OOMing one
-    reducer (the round-7 form collected each class to ONE
-    collect_list row and exploded a flattened pair array in a single
-    task). ``max_class`` mirrors the LSH ``max_bucket`` guard: each
-    duplicate class keeps only its ``max_class`` smallest ids for
-    expansion and the output gains a ``capped`` column (true when
-    either endpoint's class overflowed) so overflow groups can be
-    routed to exact dedup instead of silently exploding. Default
+    Member pairs expand with :func:`_expand_classes`; ``max_class``
+    is its mega-class guard and adds a ``capped`` column. Default
     ``None`` keeps exact semantics and the oracle-checked schema.
     """
-    from pyspark.sql import Window
-
     # Injective class key for the sorted token set: md5 each token to a
     # fixed-width 32-hex digest, join, md5. Tokens are split on \s+ so
     # they may contain ANY non-space byte (including \x00-\x02 control
@@ -1233,55 +1220,17 @@ def prefix_filter_jaccard_pairs(
     ).withColumn(
         "_ck", F.md5(F.expr("array_join(transform(_ws, t -> md5(t)), '')"))
     ).transform(lineage_cut)  # feeds members AND groups
-    ids = mem0.select("_ck", "_id")
-    if max_class is None:
-        members = ids
-    else:
-        wck = Window.partitionBy("_ck")
-        members = (
-            ids.withColumn("_rn", F.row_number().over(wck.orderBy("_id")))
-            .withColumn("_n_mem", F.count("*").over(wck))
-            .filter(F.col("_rn") <= max_class)
-            .select(
-                "_ck", "_id", (F.col("_n_mem") > max_class).alias("_cap")
-            )
-            .transform(lineage_cut)
-        )
     # one representative row per distinct set (_ck determines _ws, so
-    # first() is deterministic; rep = min id, always inside the capped
-    # member set because the rank keeps the smallest ids)
+    # first() is deterministic)
     groups = (
         mem0.groupBy("_ck")
         .agg(F.min("_id").alias("_g"), F.first("_ws").alias("_ws"))
         .withColumn("_sz", F.size("_ws").cast("bigint"))
-        .transform(lineage_cut)  # consumed by 4 branches below
+        .transform(lineage_cut)  # members, index, verify and within
     )
-    # (class, member, rep, set size) — the expansion side of every join
-    memr = members.join(groups.select("_ck", "_g", "_sz"), "_ck")
-    # within-group pairs: every member pair of a duplicate-set class is
-    # Jaccard 1 by construction — a streamed self-join on the class key
-    # (sort-merge buffers one side's class members, output streams)
-    _wcols = ["_ck", F.col("_id").alias("doc_a"), "_sz"]
-    _wcols_b = ["_ck", F.col("_id").alias("doc_b")]
-    if max_class is not None:
-        _wcols.append(F.col("_cap").alias("_ca"))
-        _wcols_b.append(F.col("_cap").alias("_cb"))
-    within = (
-        memr.select(*_wcols)
-        .join(members.select(*_wcols_b), "_ck")
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select(
-            "doc_a",
-            "doc_b",
-            F.col("_sz").alias("overlap"),
-            F.lit(1.0).cast("double").alias("jaccard"),
-            *(
-                [(F.col("_ca") | F.col("_cb")).alias("capped")]
-                if max_class is not None
-                else []
-            ),
-        )
-    )
+    members = mem0.select("_ck", "_id").join(
+        groups.select("_ck", "_g"), "_ck"
+    ).select("_g", "_id")
     # prefix-filter candidate generation over DISTINCT sets only
     gtoks = groups.selectExpr("_g", "explode(_ws) AS w")
     dfc = gtoks.groupBy("w").agg(F.count("*").alias("_dfw"))
@@ -1295,8 +1244,11 @@ def prefix_filter_jaccard_pairs(
         F.col("_rn")
         <= F.col("_n") - F.expr(f"CAST(ceil({threshold} * _n) AS INT)") + 1
     ).select("_g", "w", "_rn", "_n")
-    _tf = Fraction(str(threshold))
-    _tn, _td = _tf.numerator, _tf.denominator
+    # The threshold as an exact rational (0.95 -> 19/20): str() recovers
+    # the decimal the caller wrote, so the integer filters below test
+    # the INTENDED threshold, not the float's binary neighbor.
+    _t = Fraction(str(threshold))
+    _tn, _td = _t.numerator, _t.denominator
     # PPJoin's two candidate-side filters, both exact integer tests,
     # applied INSIDE the join so mega posting lists (a "rare" token
     # still shared by thousands of sets) never fan out:
@@ -1352,11 +1304,6 @@ def prefix_filter_jaccard_pairs(
         F.col("_ws").alias("_wsb"),
         F.col("_sz").alias("_szb"),
     )
-    # The threshold as an exact rational (0.95 -> 19/20): str() recovers
-    # the decimal the caller wrote, so the integer filter below tests
-    # the INTENDED threshold, not the float's binary neighbor.
-    _t = Fraction(str(threshold))
-    _t_num, _t_den = _t.numerator, _t.denominator
     rep_pairs = (
         cand.join(sa, "_ga")
         .join(sb, "_gb")
@@ -1365,13 +1312,13 @@ def prefix_filter_jaccard_pairs(
             F.size(F.array_intersect("_wsa", "_wsb")).cast("bigint"),
         )
         # Threshold test in EXACT integer arithmetic: overlap/union >= t
-        # iff overlap * t_den >= t_num * union for t = t_num/t_den.
-        # Filtering on a float rounded to 6 decimals would admit pairs
-        # up to 5e-7 BELOW threshold, contradicting the exact contract;
-        # `jaccard` stays rounded for display only.
+        # iff overlap * td >= tn * union. Filtering on a float rounded
+        # to 6 decimals would admit pairs up to 5e-7 BELOW threshold,
+        # contradicting the exact contract; `jaccard` stays rounded for
+        # display only.
         .filter(
-            F.col("overlap") * F.lit(_t_den)
-            >= F.lit(_t_num)
+            F.col("overlap") * F.lit(_td)
+            >= F.lit(_tn)
             * (F.col("_sza") + F.col("_szb") - F.col("overlap"))
         )
         .withColumn(
@@ -1384,30 +1331,12 @@ def prefix_filter_jaccard_pairs(
         )
         .select("_ga", "_gb", "overlap", "jaccard")
     )
-    # verified ONCE per set pair; member pairs expand arithmetically via
-    # two streamed joins on the rep key — never a per-row pair array
-    # (doc_a < doc_b normalized per emitted pair)
-    _ecols_a = [F.col("_g").alias("_ga"), F.col("_id").alias("_ma")]
-    _ecols_b = [F.col("_g").alias("_gb"), F.col("_id").alias("_mb")]
-    if max_class is not None:
-        _ecols_a.append(F.col("_cap").alias("_ca"))
-        _ecols_b.append(F.col("_cap").alias("_cb"))
-    cross = (
-        rep_pairs.join(memr.select(*_ecols_a), "_ga")
-        .join(memr.select(*_ecols_b), "_gb")
-        .select(
-            F.least("_ma", "_mb").alias("doc_a"),
-            F.greatest("_ma", "_mb").alias("doc_b"),
-            "overlap",
-            "jaccard",
-            *(
-                [(F.col("_ca") | F.col("_cb")).alias("capped")]
-                if max_class is not None
-                else []
-            ),
-        )
+    # within a class the sets are identical: Jaccard 1, overlap = size
+    within = groups.select(
+        "_g", F.col("_sz").alias("overlap"),
+        F.lit(1.0).cast("double").alias("jaccard"),
     )
-    return within.unionByName(cross)
+    return _expand_classes(members, rep_pairs, within, max_class)
 
 
 def tfidf_cosine_pairs(
@@ -1453,17 +1382,17 @@ def tfidf_cosine_pairs(
     scale with candidates, which the prefix bound caps — at threshold
     1−ε only genuine near-dups survive pruning).
 
-    OUTPUT-OPTIMAL on duplicate-heavy corpora (round 7, the
+    OUTPUT-OPTIMAL on duplicate-heavy corpora (the
     prefix_filter_jaccard_pairs move): identical token MULTISETS
     collapse first (df/idf/N stay full-corpus, so weights are
     unchanged — a duplicate's vector equals its representative's
     exactly), the prefix index / candidate join / verification run
-    over distinct vectors only, and member pairs expand
-    arithmetically: within-class pairs are cosine 1 by construction,
-    cross-class pairs copy their representative pair's exact values.
-    Measured at sf1 (10× replication ⇒ every class ~10 members):
-    315 s → output-bound seconds for the identical 407,500-pair
-    answer.
+    over distinct vectors only, and member pairs expand with
+    :func:`_expand_classes` (``max_class`` is its mega-class guard):
+    within-class pairs are cosine 1 by construction, cross-class pairs
+    copy their representative pair's exact values. Measured at sf1
+    (10× replication ⇒ every class ~10 members): 315 s → output-bound
+    seconds for the identical 407,500-pair answer.
     """
     eps = 1e-9
     t = threshold_num / threshold_den
@@ -1502,13 +1431,11 @@ def tfidf_cosine_pairs(
     # identical-multiset collapse: docs whose (term, tf) multisets are
     # equal have IDENTICAL weight vectors (df/idf/N are full-corpus),
     # so one representative runs the pipeline and members expand at
-    # the end. The class key is INJECTIVE (round 8, ADVICE fix): each
-    # (term, tf) element is md5'd first — md5(term) is fixed-width so
-    # 'digest:tf' parses uniquely, and the element digests are
-    # fixed-width so their sorted concatenation is too. (Raw \x01/\x02
-    # separators were ambiguous: \s+-split tokens CAN contain control
-    # chars, so two different multisets could concat to one key and
-    # silently merge distinct documents.)
+    # the end. The class key is INJECTIVE: each (term, tf) element is
+    # md5'd first — md5(term) is fixed-width so 'digest:tf' parses
+    # uniquely, and the element digests are fixed-width so their sorted
+    # concatenation is too. (Raw separators would be ambiguous: \s+-split
+    # tokens CAN contain control chars.)
     mem = (
         tf.groupBy("_d")
         .agg(
@@ -1531,25 +1458,13 @@ def tfidf_cosine_pairs(
         )
         .transform(lineage_cut)  # feeds members AND classes
     )
-    if max_class is None:
-        members = mem
-    else:
-        wck = Window.partitionBy("_ck")
-        members = (
-            mem.withColumn("_rn", F.row_number().over(wck.orderBy("_d")))
-            .withColumn("_n_mem", F.count("*").over(wck))
-            .filter(F.col("_rn") <= max_class)
-            .select(
-                "_d", "_ck", (F.col("_n_mem") > max_class).alias("_cap")
-            )
-            .transform(lineage_cut)
-        )
-    # rep = min id per class, always inside the capped member set
+    # rep = min id per class
     classes = (
         mem.groupBy("_ck")
         .agg(F.min("_d").alias("_g"))
-        .transform(lineage_cut)  # reps, expansion, within
+        .transform(lineage_cut)  # reps and members
     )
+    members = mem.join(classes, "_ck").select("_g", F.col("_d").alias("_id"))
     reps = classes.select(F.col("_g").alias("_d"))
     post = (
         tf.join(reps, "_d", "left_semi")
@@ -1655,6 +1570,11 @@ def tfidf_cosine_pairs(
     )
     na = norms.selectExpr("_d AS doc_a", "_n2 AS _n2a")
     nb = norms.selectExpr("_d AS doc_b", "_n2 AS _n2b")
+    ppm = (
+        "CAST(floor(1000000 * CAST({dot} AS DOUBLE) / "
+        "(sqrt(CAST({a} AS DOUBLE)) * sqrt(CAST({b} AS DOUBLE)))) "
+        "AS BIGINT) AS cosine_ppm"
+    )
     rep_pairs = (
         dots.join(na, "doc_a")
         .join(nb, "doc_b")
@@ -1666,71 +1586,17 @@ def tfidf_cosine_pairs(
             )
         )
         .selectExpr(
-            "doc_a",
-            "doc_b",
-            "CAST(floor(1000000 * CAST(_dot AS DOUBLE) / "
-            "(sqrt(CAST(_n2a AS DOUBLE)) * sqrt(CAST(_n2b AS DOUBLE)))) "
-            "AS BIGINT) AS cosine_ppm",
-        )
-    )
-    # member expansion: a duplicate's vector IS its representative's,
-    # so every member pair of a verified rep pair carries the same
-    # exact cosine. DISTRIBUTED (round 8): members stay rows and the
-    # expansion is two streamed joins on the rep key — never a per-row
-    # pair array (doc_a < doc_b normalized per emitted pair).
-    memr = members.join(classes, "_ck")  # (_d, _ck[, _cap], _g)
-    _ecols_a = [F.col("_g").alias("doc_a"), F.col("_d").alias("_ma")]
-    _ecols_b = [F.col("_g").alias("doc_b"), F.col("_d").alias("_mb")]
-    if max_class is not None:
-        _ecols_a.append(F.col("_cap").alias("_ca"))
-        _ecols_b.append(F.col("_cap").alias("_cb"))
-    cross = (
-        rep_pairs.join(memr.select(*_ecols_a), "doc_a")
-        .join(memr.select(*_ecols_b), "doc_b")
-        .select(
-            F.least("_ma", "_mb").alias("doc_a"),
-            F.greatest("_ma", "_mb").alias("doc_b"),
-            "cosine_ppm",
-            *(
-                [(F.col("_ca") | F.col("_cb")).alias("capped")]
-                if max_class is not None
-                else []
-            ),
+            "doc_a AS _ga",
+            "doc_b AS _gb",
+            ppm.format(dot="_dot", a="_n2a", b="_n2b"),
         )
     )
     # within-class pairs: identical vectors, cosine exactly 1 — the
     # ppm export uses the SAME float display expression (dot = n2) so
     # values match the uncollapsed oracle bit-for-bit; classes whose
     # rep has no positive-weight posting (no norm row) drop, exactly
-    # as their members did pre-collapse. Streamed self-join on the
-    # class key, same round-8 shape as the cross expansion.
-    cls_norm = classes.join(
-        norms.selectExpr("_d AS _g", "_n2"), "_g"
-    ).selectExpr(
-        "_ck",
-        "CAST(floor(1000000 * CAST(_n2 AS DOUBLE) / "
-        "(sqrt(CAST(_n2 AS DOUBLE)) * sqrt(CAST(_n2 AS DOUBLE)))) "
-        "AS BIGINT) AS cosine_ppm",
+    # as their members did pre-collapse.
+    within = norms.selectExpr(
+        "_d AS _g", ppm.format(dot="_n2", a="_n2", b="_n2")
     )
-    _wcols_a = ["_ck", F.col("_d").alias("doc_a")]
-    _wcols_b = ["_ck", F.col("_d").alias("doc_b")]
-    if max_class is not None:
-        _wcols_a.append(F.col("_cap").alias("_ca"))
-        _wcols_b.append(F.col("_cap").alias("_cb"))
-    within = (
-        members.select(*_wcols_a)
-        .join(members.select(*_wcols_b), "_ck")
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .join(cls_norm, "_ck")
-        .select(
-            "doc_a",
-            "doc_b",
-            "cosine_ppm",
-            *(
-                [(F.col("_ca") | F.col("_cb")).alias("capped")]
-                if max_class is not None
-                else []
-            ),
-        )
-    )
-    return within.unionByName(cross)
+    return _expand_classes(members, rep_pairs, within, max_class)

@@ -20,24 +20,19 @@ needed; both aggregations are partial-aggregatable (map-side combine).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def int_of_float(c: Column) -> Column:
-    """Python ``int(float(s))`` semantics: parse as double, truncate toward
-    zero (reference ``generate_images_from_dicom.py:33``). Spark's
-    double→int cast truncates toward zero, matching CPython. (DuckDB's
-    rounds — oracle SQL must use ``trunc()``.)"""
-    return c.cast("double").cast("int")
 
 
 def typed_labels(raw: DataFrame) -> DataFrame:
     """O2: positional/raw string columns → named, typed columns.
 
     Built as ONE ``selectExpr`` (same analyzed plan as the
-    ``int_of_float(F.col(...))`` chain — one py4j round trip instead of
-    ~25; see dedup.exploded_shingles for the measurement)."""
+    ``functions.scalars.int_of_float(F.col(...))`` chain — one py4j
+    round trip instead of ~25; see dedup.exploded_shingles for the
+    measurement). ``cast(cast(s AS double) AS int)`` is Python's
+    ``int(float(s))``: parse as double, truncate toward zero
+    (reference ``generate_images_from_dicom.py:33``)."""
     return raw.selectExpr(
         "patientId AS patient_id",
         "cast(cast(x AS double) AS int) AS x",

@@ -520,16 +520,17 @@ def _frame_examples(chunk: list[bytes]):
 
 
 def write_tfrecord_shards(df, out_dir: str, num_shards: int,
-                          to_features) -> None:
+                          to_features) -> int:
     """O33: one ``-%05d-of-%05d.tfrecord`` file per shard (the
     reference's shard filename pattern, images_to_tfrecord.py:229).
     ``to_features(row) -> dict[str, list]`` maps a row to its Example
     feature dict (attribute or item access). Runs on executors — no
-    driver materialization.
+    driver materialization. Returns the number of records written,
+    summed from the writer tasks' counts, so callers need no second
+    counting job.
 
     Both JVM↔Python crossings are Arrow (``mapInArrow``), not pickled
-    Rows (round 12, guide §4.1 — the ``df.rdd`` ingress was the last
-    pickled-Row boundary in the engine): encode receives columnar
+    Rows: encode receives columnar
     batches at the INPUT's parallelism, the framed byte blobs shuffle
     as binary rows into ``num_shards`` writer tasks, and the writer
     receives Arrow binary batches and appends them to disk. Encoding
@@ -609,4 +610,7 @@ def write_tfrecord_shards(df, out_dir: str, num_shards: int,
         yield pa.record_batch([pa.array([n], type=pa.int64())],
                               names=["n_written"])
 
-    framed.mapInArrow(_write_batches, "n_written long").collect()
+    return sum(
+        r.n_written
+        for r in framed.mapInArrow(_write_batches, "n_written long").collect()
+    )

@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..schemas import LABELS_CSV
+from ..sinks.tfrecord import _read_varint, _skip_field
 
 # ---------------------------------------------------------------------------
 # O1 — labels CSV
@@ -207,35 +208,6 @@ def parse_label_map_text(text: str) -> list[dict[str, Any]]:
             item[key] = int(ival) if ival is not None else sval
         items.append(item)
     return items
-
-
-def _read_varint(data: bytes, pos: int) -> tuple[int, int]:
-    """Protobuf base-128 varint at ``pos`` → (value, next_pos). A varint
-    truncated by the end of the buffer raises ValueError (not IndexError)
-    so corrupt input is a clean parse error, never a stray indexing bug."""
-    result = shift = 0
-    while True:
-        if pos >= len(data):
-            raise ValueError("truncated varint at end of buffer")
-        b = data[pos]
-        result |= (b & 0x7F) << shift
-        pos += 1
-        if not b & 0x80:
-            return result, pos
-        shift += 7
-
-
-def _skip_field(data: bytes, pos: int, wire_type: int) -> int:
-    if wire_type == 0:
-        return _read_varint(data, pos)[1]
-    if wire_type == 1:
-        return pos + 8
-    if wire_type == 2:
-        ln, pos = _read_varint(data, pos)
-        return pos + ln
-    if wire_type == 5:
-        return pos + 4
-    raise ValueError(f"unsupported protobuf wire type {wire_type}")
 
 
 def parse_label_map_binary(data: bytes) -> list[dict[str, Any]]:

@@ -21,6 +21,40 @@ def docs(spark):
     return spark.createDataFrame(DOCS, "doc_id long, text string")
 
 
+_BASE = ("the quick brown fox jumps over the lazy dog near the river bank "
+         "while seven small birds watch from an old oak tree")
+
+
+def _small_corpus():
+    """25 documents for the fast-tier parity cases: a 3-member
+    exact-duplicate class (1, 2, 9), a near-duplicate of it (4, one
+    word changed), twins too short to shingle (30, 31) and 19 filler
+    documents drawn from a seeded 300-word vocabulary."""
+    import random
+
+    rng = random.Random(25)
+    vocab = [f"w{k}" for k in range(300)]
+    return [
+        (1, _BASE), (2, _BASE), (9, _BASE),
+        (4, _BASE.replace("oak", "elm")),
+        (30, "tiny doc"), (31, "tiny doc"),
+    ] + [(100 + i, " ".join(rng.sample(vocab, 12))) for i in range(19)]
+
+
+SMALL = _small_corpus()
+
+
+def _exact_dup_pairs(rows, min_words=1):
+    """(a, b), a < b, of documents with identical text and at least
+    ``min_words`` words."""
+    return {
+        (a, b)
+        for a, ta in rows
+        for b, tb in rows
+        if a < b and ta == tb and len(ta.split()) >= min_words
+    }
+
+
 @pytest.mark.slow
 def test_exact_dedup(docs):
     groups = dedup.exact_dedup_groups(docs).filter(F.col("n_copies") > 1).collect()
@@ -452,21 +486,21 @@ def test_lsh_bucket_histogram_accounts_all_docs(spark):
         assert any(r.bucket_size >= 2 for r in rows), band
 
 
-@pytest.mark.slow
-def test_prefix_filter_jaccard_equals_full_inverted_index(spark):
-    """Prefix-filter blocking must lose NOTHING: on a corpus with
-    planted high-overlap pairs, the result equals the brute-force
-    token-Jaccard over all pairs (python reference), including exact
-    duplicates (j=1.0) and a pair exactly at the threshold boundary."""
-    from data_pipeline_rsna_spark.operators import dedup
-
-    texts = {
+@pytest.mark.parametrize("texts", [
+    pytest.param(dict(SMALL), id="small"),
+    pytest.param({
         1: "alpha beta gamma delta epsilon",
         2: "alpha beta gamma delta epsilon",        # exact dup of 1
         3: "alpha beta gamma delta zeta",            # j=4/6 with 1
         4: "totally different words here now",
         5: "alpha beta gamma delta epsilon eta",     # j=5/6 with 1
-    }
+    }, id="planted", marks=pytest.mark.slow),
+])
+def test_prefix_filter_jaccard_equals_full_inverted_index(spark, texts):
+    """Prefix-filter blocking must lose NOTHING: on a corpus with
+    planted high-overlap pairs, the result equals the brute-force
+    token-Jaccard over all pairs (python reference), including exact
+    duplicates (j=1.0) and a pair exactly at the threshold boundary."""
     docs = spark.createDataFrame(
         list(texts.items()), "doc_id long, text string"
     )
@@ -487,22 +521,30 @@ def test_prefix_filter_jaccard_equals_full_inverted_index(spark):
                 if j >= t:
                     expected[(a, b)] = (ov, j)
     assert got == expected
-    assert (1, 2) in got and got[(1, 2)][1] == 1.0
+    dups = _exact_dup_pairs(texts.items())
+    assert (1, 2) in dups
+    assert all(got[p][1] == 1.0 for p in dups)
 
 
-@pytest.mark.slow
-def test_tfidf_cosine_pairs_brute_force_parity(spark):
+_TFIDF_PLANTED = [
+    (1, "red fox jumps over the lazy dog tonight"),
+    (2, "red fox jumps over the lazy dog today"),   # near-copy of 1
+    (3, "completely different words appear here now"),
+    (4, "red fox jumps over the lazy dog tonight"),  # exact copy of 1
+]
+
+
+@pytest.mark.parametrize("rows", [
+    pytest.param(SMALL, id="small"),
+    pytest.param(_TFIDF_PLANTED, id="planted", marks=pytest.mark.slow),
+])
+def test_tfidf_cosine_pairs_brute_force_parity(spark, rows):
     """Exact python rederivation (weights, norms, threshold, ppm) on a
-    small corpus with one planted near-copy and one unrelated doc."""
+    small corpus with planted exact and near copies and unrelated
+    docs."""
     import math
     from collections import Counter
 
-    rows = [
-        (1, "red fox jumps over the lazy dog tonight"),
-        (2, "red fox jumps over the lazy dog today"),   # near-copy of 1
-        (3, "completely different words appear here now"),
-        (4, "red fox jumps over the lazy dog tonight"),  # exact copy of 1
-    ]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     got = {
         (r.doc_a, r.doc_b): r.cosine_ppm
@@ -517,7 +559,7 @@ def test_tfidf_cosine_pairs_brute_force_parity(spark):
 
     tf = {d: Counter(sh(t)) for d, t in rows}
     df = Counter(term for c in tf.values() for term in c)
-    n = len(rows)
+    n = sum(1 for c in tf.values() if c)  # docs with no term are not counted
     lnn = round(math.log(n) * 1000)
     w = {
         d: {
@@ -539,15 +581,17 @@ def test_tfidf_cosine_pairs_brute_force_parity(spark):
                     1_000_000 * dot / (math.sqrt(n2[a]) * math.sqrt(n2[b]))
                 )
     assert got == want
-    # the exact copy scores cosine 1 (up to the display floor)
-    assert got[(1, 4)] in (999_999, 1_000_000)
-    # TF-IDF semantics: the near-copy's two UNSHARED tail shingles are
-    # corpus-unique (df=1, max idf) and outweigh the shared df=3
-    # shingles, so (1,2) correctly falls BELOW t=0.8 — exactly the
-    # re-weighting that distinguishes this operator from set Jaccard
-    # (which scores the same pair 5/7)
-    assert (1, 2) not in got
-    assert not any(3 in p for p in got)  # unrelated doc pairs with no one
+    # exact copies score cosine 1 (up to the display floor)
+    dups = _exact_dup_pairs(rows, min_words=3)
+    assert dups and all(got[p] in (999_999, 1_000_000) for p in dups)
+    if rows is _TFIDF_PLANTED:
+        # TF-IDF semantics: the near-copy's two UNSHARED tail shingles
+        # are corpus-unique (df=1, max idf) and outweigh the shared
+        # df=3 shingles, so (1,2) correctly falls BELOW t=0.8 — exactly
+        # the re-weighting that distinguishes this operator from set
+        # Jaccard (which scores the same pair 5/7)
+        assert (1, 2) not in got
+        assert not any(3 in p for p in got)  # unrelated doc pairs with no one
 
 
 @pytest.mark.slow
@@ -639,20 +683,20 @@ def test_prefix_filter_max_class_caps_mega_duplicate_class(spark):
     assert all(r.doc_b == n for r in cross)
 
 
-@pytest.mark.slow
-def test_max_class_large_enough_matches_uncapped(spark):
+@pytest.mark.parametrize("rows", [
+    pytest.param(SMALL, id="small"),
+    pytest.param([
+        (1, "red fox lazy dog"),
+        (5, "dog lazy fox red red"),
+        (9, "fox red dog lazy"),
+        (3, "red fox lazy dog extra"),
+        (7, "totally different words here"),
+    ], id="planted", marks=pytest.mark.slow),
+])
+def test_max_class_large_enough_matches_uncapped(spark, rows):
     """max_class >= every class size must reproduce the uncapped output
     exactly, with capped=False everywhere (both operators)."""
-    docs = spark.createDataFrame(
-        [
-            (1, "red fox lazy dog"),
-            (5, "dog lazy fox red red"),
-            (9, "fox red dog lazy"),
-            (3, "red fox lazy dog extra"),
-            (7, "totally different words here"),
-        ],
-        "doc_id long, text string",
-    )
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
     base = sorted(
         (r.doc_a, r.doc_b, r.overlap, r.jaccard)
         for r in dedup.prefix_filter_jaccard_pairs(docs, 0.75).collect()
@@ -660,6 +704,7 @@ def test_max_class_large_enough_matches_uncapped(spark):
     capped = dedup.prefix_filter_jaccard_pairs(
         docs, 0.75, max_class=1000
     ).collect()
+    assert base
     assert sorted((r.doc_a, r.doc_b, r.overlap, r.jaccard) for r in capped) == base
     assert not any(r.capped for r in capped)
     base_t = sorted(
@@ -669,6 +714,7 @@ def test_max_class_large_enough_matches_uncapped(spark):
     capped_t = dedup.tfidf_cosine_pairs(
         docs, 4, 5, shingle_n=None, max_class=1000
     ).collect()
+    assert base_t
     assert sorted((r.doc_a, r.doc_b, r.cosine_ppm) for r in capped_t) == base_t
     assert not any(r.capped for r in capped_t)
 
@@ -703,31 +749,36 @@ def test_tfidf_collapse_key_injective_on_control_char_tokens(spark):
     assert out == []
 
 
-@pytest.mark.slow
-def test_minhash_collapsed_equals_uncollapsed(spark):
-    """minhash_lsh_candidates_collapsed must reproduce the uncollapsed
-    candidate set PAIR-FOR-PAIR (ids and n_shared_bands): identical
-    word sequences share every band, cross-class member pairs inherit
-    their reps' shared-band count, and sub-shingle-length classes are
-    excluded from both forms. Mixed corpus: two identical classes that
-    are near-dups of each other, short twins, uniques, a partial
-    near-dup."""
-    base = ("the quick brown fox jumps over the lazy dog near the "
+_MH_BASE = ("the quick brown fox jumps over the lazy dog near the "
             "river bank today")
-    near = base.replace("today", "tonight")
-    docs = spark.createDataFrame(
-        [(100 + i, base) for i in range(6)]
-        + [(200 + i, near) for i in range(3)]
+_MH_NEAR = _MH_BASE.replace("today", "tonight")
+
+
+@pytest.mark.parametrize("rows", [
+    pytest.param(SMALL, id="small"),
+    pytest.param(
+        [(100 + i, _MH_BASE) for i in range(6)]
+        + [(200 + i, _MH_NEAR) for i in range(3)]
         + [
             (300, "tiny doc"),              # < shingle_n words:
             (301, "tiny doc"),              # excluded even as twins
             (400, "completely different content about catalyst "
                   "optimizer internals"),
-            (402, near + " extra trailing words changing some "
+            (402, _MH_NEAR + " extra trailing words changing some "
                   "shingles slightly"),
         ],
-        "doc_id long, text string",
-    )
+        id="planted", marks=pytest.mark.slow,
+    ),
+])
+def test_minhash_collapsed_equals_uncollapsed(spark, rows):
+    """minhash_lsh_candidates_collapsed must reproduce the uncollapsed
+    candidate set PAIR-FOR-PAIR (ids and n_shared_bands): identical
+    word sequences share every band, cross-class member pairs inherit
+    their reps' shared-band count, and sub-shingle-length classes are
+    excluded from both forms. Mixed corpus: identical classes that
+    are near-dups of each other, short twins, uniques, a partial
+    near-dup."""
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
     a = sorted(
         (r.doc_a, r.doc_b, r.n_shared_bands)
         for r in dedup.minhash_lsh_candidates(docs).collect()
@@ -737,10 +788,14 @@ def test_minhash_collapsed_equals_uncollapsed(spark):
         for r in dedup.minhash_lsh_candidates_collapsed(docs).collect()
     )
     assert a == b
-    assert len(a) >= 15 + 3  # two classes fully cross-paired + within
-    # round-9 contract (VERDICT r8 #1): NO path — collapsed (the
-    # headline), direct, or capped — materializes a pair array; every
-    # pair expansion is a streamed self-join
+    # every exact-duplicate pair long enough to shingle shares all 6
+    # bands; the short twins pair in neither form
+    got = {(x, y): n for x, y, n in a}
+    dups = _exact_dup_pairs(rows, min_words=3)
+    assert dups and all(got.get(p) == 6 for p in dups)
+    assert not any(set(p) & {30, 31, 300, 301} for p in got)
+    # NO path — collapsed, direct, or capped — materializes a pair
+    # array; every pair expansion is a streamed self-join
     for df in (
         dedup.minhash_lsh_candidates_collapsed(docs),
         dedup.minhash_lsh_candidates(docs),
@@ -854,30 +909,6 @@ def test_minhash_capped_pair_join_reuses_signature_exchange(spark):
     out.collect()  # finalize the AQE plan
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "ReusedExchange" in plan
-
-
-@pytest.mark.slow
-def test_minhash_adaptive_hint_skips_probe(spark):
-    """distinct_ratio_hint is the table-statistics fast path: the form
-    is chosen without any probe job, and both hinted routes return the
-    same pairs as the probed route."""
-    docs = spark.createDataFrame(
-        [(i, f"shared boilerplate body of words number {i % 4} here "
-             "padded long enough to shingle") for i in range(40)],
-        "doc_id long, text string",
-    )
-    probed = {
-        (r.doc_a, r.doc_b, r.n_shared_bands)
-        for r in dedup.minhash_lsh_candidates_adaptive(docs).collect()
-    }
-    for hint in (0.05, 0.95):  # force collapsed / force direct
-        hinted = {
-            (r.doc_a, r.doc_b, r.n_shared_bands)
-            for r in dedup.minhash_lsh_candidates_adaptive(
-                docs, distinct_ratio_hint=hint
-            ).collect()
-        }
-        assert hinted == probed
 
 
 def test_minhash_adaptive_probe_memoized(spark):

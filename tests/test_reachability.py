@@ -12,6 +12,11 @@ implementation of something, or dead.
 ``KEEP`` lists the unreached definitions that stay, each with its
 reason: a test uses it as ground truth, or it is the only
 implementation of a reference operator in COVERAGE.md.
+
+The scan is by name, so a second definition of a reached name counts
+as reached too. The second test therefore fails when two package
+modules define the same top-level name, unless ``SAME_NAME`` lists it
+with its reason.
 """
 
 from __future__ import annotations
@@ -46,6 +51,14 @@ KEEP = {
     "sources/readers.py::create_category_index_from_labelmap": "reference operator O44",
 }
 
+SAME_NAME = {
+    "register": "queries.register is the query-registry decorator; "
+                "tfrecord_source and pydatasource each register their "
+                "own Spark data source format with the session",
+    "_decode_scan": "the JPEG and JPEG-LS codecs each decode their own "
+                    "entropy-coded scan format",
+}
+
 _WHOLE_MODULES = ("pipelines.py", "cli.py", "__main__.py")
 
 
@@ -66,6 +79,20 @@ def _registered(node: ast.AST) -> bool:
         and d.func.id == "register"
         for d in getattr(node, "decorator_list", ())
     )
+
+
+def same_name_definitions() -> dict[str, list[str]]:
+    """Top-level names defined in more than one package module, with
+    the modules that define them."""
+    where: dict[str, list[str]] = {}
+    for path in sorted(PKG.rglob("*.py")):
+        mod = path.relative_to(PKG).as_posix()
+        for stmt in ast.parse(path.read_text()).body:
+            if isinstance(
+                stmt, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+            ):
+                where.setdefault(stmt.name, []).append(mod)
+    return {n: mods for n, mods in where.items() if len(set(mods)) > 1}
 
 
 def unreached_definitions() -> list[str]:
@@ -122,3 +149,14 @@ def test_every_definition_is_reached_or_kept():
     )
     stale = sorted(KEEP.keys() - unreached)
     assert not stale, f"KEEP entries that are reached or gone: {stale}"
+
+
+def test_no_top_level_name_defined_twice():
+    dups = same_name_definitions()
+    extra = {n: m for n, m in dups.items() if n not in SAME_NAME}
+    assert not extra, (
+        "top-level names defined in more than one package module (keep "
+        f"one definition, or add a SAME_NAME entry with its reason): {extra}"
+    )
+    stale = sorted(SAME_NAME.keys() - dups.keys())
+    assert not stale, f"SAME_NAME entries no longer duplicated: {stale}"

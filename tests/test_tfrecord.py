@@ -50,7 +50,10 @@ def test_write_tfrecord_shards(spark, tmp_path):
             "name": [f"rec-{row.id}"],
         }
 
-    tfr.write_tfrecord_shards(df, out, num_shards=4, to_features=to_features)
+    n_written = tfr.write_tfrecord_shards(
+        df, out, num_shards=4, to_features=to_features
+    )
+    assert n_written == 100
     files = sorted(glob.glob(f"{out}/*.tfrecord"))
     assert len(files) == 4
     n = sum(tfr.count_tfrecords(f) for f in files)
@@ -69,7 +72,9 @@ def test_write_tfrecord_shards_empty_shards(spark, tmp_path):
     silently break the shard-count contract)."""
     df = spark.range(3).selectExpr("id")
     out = str(tmp_path / "eshards")
-    tfr.write_tfrecord_shards(df, out, 6, lambda r: {"id": [r["id"]]})
+    assert tfr.write_tfrecord_shards(
+        df, out, 6, lambda r: {"id": [r["id"]]}
+    ) == 3
     files = sorted(glob.glob(f"{out}/*.tfrecord"))
     assert len(files) == 6
     counts = [tfr.count_tfrecords(f) for f in files]
