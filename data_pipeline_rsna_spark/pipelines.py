@@ -136,29 +136,35 @@ def run_rsna_pipeline(
             "image/object/class/label": [1] * row.n_boxes,
         }
 
-    # Materialize the assembled records ONCE: both shard writes fan out
-    # from the cache instead of re-running the
-    # ingest->split->augment->assembly DAG per consumer. The writes
-    # return their record counts, and the skip Observation fills on
-    # the first write, so no separate counting job runs. At cluster
+    # Materialize the assembled records ONCE: counts and both shard
+    # writes fan out from the cache instead of re-running the
+    # ingest->split->augment->assembly DAG per consumer. At cluster
     # scale the same staging is a write to a parquet scratch table;
     # MEMORY_AND_DISK spills rather than recomputing when records
     # outgrow executor memory.
     records = records.persist(StorageLevel.MEMORY_AND_DISK)
     try:
-        n_train = tfr.write_tfrecord_shards(
+        counts = {
+            r["split"]: r["n"]
+            for r in records.groupBy("split")
+            .agg(F.count("*").alias("n"))
+            .collect()
+        }
+        n_train = int(counts.get("train", 0))
+        n_val = int(counts.get("val", 0))
+        skipped = int(obs.get["skipped"] or 0)
+        tfr.write_tfrecord_shards(
             records.filter(F.col("split") == "train"),
             f"{out_dir}/train",
             train_shards,
             to_features,
         )
-        n_val = tfr.write_tfrecord_shards(
+        tfr.write_tfrecord_shards(
             records.filter(F.col("split") == "val"),
             f"{out_dir}/val",
             val_shards,
             to_features,
         )
-        skipped = int(obs.get["skipped"] or 0)
     finally:
         records.unpersist()
     return PipelineResult(n_train, n_val, skipped, out_dir)
