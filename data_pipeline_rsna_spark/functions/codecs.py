@@ -886,7 +886,7 @@ def encode_dicom_j2k(arr: np.ndarray, levels: int = 2) -> bytes:
     return b"\x00" * 128 + b"DICM" + meta + meta_body + body
 
 
-def encode_dicom_j2k_lossy(arr: np.ndarray, levels: int = 2,
+def encode_dicom_j2k_lossy(arr: np.ndarray,
                            delta: float = 1.0 / 256.0) -> bytes:
     """HxW uint8/uint16/int16 ndarray → Part-10 JPEG 2000 (lossy)
     DICOM: the irreversible-9/7 codestream from
@@ -910,8 +910,7 @@ def encode_dicom_j2k_lossy(arr: np.ndarray, levels: int = 2,
         raise ValueError(f"dtype {arr.dtype} unsupported")
     h, w = arr.shape
     us = lambda v: struct.pack("<H", v)  # noqa: E731
-    frame = jpeg2000.encode_j2k_gray_lossy(arr, levels=levels,
-                                           delta=delta)
+    frame = jpeg2000.encode_j2k_gray_lossy(arr, delta=delta)
     if len(frame) % 2:
         frame += b"\x00"
     item = lambda payload: (  # noqa: E731

@@ -1160,7 +1160,6 @@ def _quant_fields(delta: float, r_b: int) -> tuple[int, int, float]:
 
 
 def encode_j2k_gray_lossy(arr: np.ndarray, levels: int = 2,
-                          cblk_exp: int = _DEFAULT_CBLK,
                           delta: float = 1.0 / 64.0,
                           qcd_style: str = "expounded") -> bytes:
     """HxW uint8/uint16/int16 ndarray → IRREVERSIBLE (9/7) JPEG 2000
@@ -1190,8 +1189,6 @@ def encode_j2k_gray_lossy(arr: np.ndarray, levels: int = 2,
         prec, signed = 16, True
     else:
         raise ValueError(f"dtype {arr.dtype} unsupported")
-    if not 4 <= cblk_exp <= 6:
-        raise ValueError("code-block exponent must be in 4..6")
     if not 0 < delta <= 1.0:
         raise ValueError("delta must be in (0, 1]")
     if qcd_style not in ("expounded", "derived"):
@@ -1289,7 +1286,9 @@ def encode_j2k_gray_lossy(arr: np.ndarray, levels: int = 2,
     # COD: tform=0 → irreversible 9/7
     cod = struct.pack(
         ">BBHB", 0, 0, 1, 0
-    ) + struct.pack(">BBBBB", levels, cblk_exp - 2, cblk_exp - 2, 0, 0)
+    ) + struct.pack(
+        ">BBBBB", levels, _DEFAULT_CBLK - 2, _DEFAULT_CBLK - 2, 0, 0
+    )
     out += struct.pack(">HH", _COD, len(cod) + 2) + cod
     # QCD: style 1 (derived) or 2 (expounded), 16-bit (ε<<11|μ) fields
     style = 1 if qcd_style == "derived" else 2
@@ -1298,7 +1297,7 @@ def encode_j2k_gray_lossy(arr: np.ndarray, levels: int = 2,
     )
     out += struct.pack(">HH", _QCD, len(qcd) + 2) + qcd
 
-    body = _write_tile_body(q_res, sub_eps, guard, cblk_exp)
+    body = _write_tile_body(q_res, sub_eps, guard, _DEFAULT_CBLK)
 
     psot = 12 + 2 + len(body)
     out += struct.pack(">HHHIBB", _SOT, 10, 0, psot, 0, 1)

@@ -20,13 +20,11 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-def strip_suffix(c: Column | str, suffix: str = ".dcm") -> Column:
-    """Basename minus a literal suffix (generate_images_from_dicom.py:77).
+def strip_suffix(c: Column | str) -> Column:
+    """Basename minus a trailing ``.dcm`` (generate_images_from_dicom.py:77).
     Anchored — only a trailing match is removed."""
     col = F.col(c) if isinstance(c, str) else c
-    import re
-
-    return F.regexp_replace(col, re.escape(suffix) + "$", "")
+    return F.regexp_replace(col, r"\.dcm$", "")
 
 
 def synth_variant_id(pid: Column, op: str, variant: Column,
@@ -56,13 +54,13 @@ def content_key(c: Column | str) -> Column:
     return F.sha2(col, 256)
 
 
-def py_round(c: Column | str, scale: int = 0) -> Column:
+def py_round(c: Column | str) -> Column:
     """CPython ``round``: banker's (half-even) rounding — Spark's
     ``bround``, NOT ``round`` (half-up). The reference leans on
     ``round`` in all box geometry (generate_images_from_dicom.py:72,
     179-250), so geometry parity requires this."""
     col = F.col(c) if isinstance(c, str) else c
-    return F.bround(col, scale)
+    return F.bround(col, 0)
 
 
 def seeded_uniform(*key_cols: Column | str, salt: str = "") -> Column:

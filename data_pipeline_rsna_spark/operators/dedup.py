@@ -33,6 +33,10 @@ from pyspark.sql import functions as F
 
 from ..lineage import fixpoint, lineage_cut
 
+ID_COL = "doc_id"
+TEXT_COL = "text"
+SAMPLE_MAX_FILES = 64
+
 # ---------------------------------------------------------------------------
 # tokenization / shingling (shared with textanalysis)
 # ---------------------------------------------------------------------------
@@ -112,25 +116,25 @@ def exploded_shingles(docs: DataFrame, id_col: str = "doc_id",
 # ---------------------------------------------------------------------------
 
 
-def exact_dedup_groups(docs: DataFrame, id_col: str = "doc_id",
-                       text_col: str = "text") -> DataFrame:
+def exact_dedup_groups(docs: DataFrame) -> DataFrame:
     """Group identical content by md5; keeper = min id per group.
     Returns (content_hash, n_copies, keeper_id). ``dropDuplicates`` would
     pick an arbitrary survivor; min-id is deterministic."""
     return (
-        docs.select(F.md5(F.col(text_col)).alias("content_hash"), F.col(id_col))
+        docs.select(
+            F.md5(F.col(TEXT_COL)).alias("content_hash"), F.col(ID_COL)
+        )
         .groupBy("content_hash")
         .agg(
             F.count("*").alias("n_copies"),
-            F.min(id_col).alias("keeper_id"),
+            F.min(ID_COL).alias("keeper_id"),
         )
     )
 
 
-def exact_dedup(docs: DataFrame, id_col: str = "doc_id",
-                text_col: str = "text") -> DataFrame:
+def exact_dedup(docs: DataFrame) -> DataFrame:
     """The dedup itself: keep one row per distinct content (min-id wins)."""
-    w = Window.partitionBy(F.md5(F.col(text_col))).orderBy(id_col)
+    w = Window.partitionBy(F.md5(F.col(TEXT_COL))).orderBy(ID_COL)
     return (
         docs.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
@@ -490,16 +494,16 @@ PROBE_ROWS = 65536
 
 
 def _stratified_distinct_ratio(
-    docs: DataFrame, text_col: str, probe_rows: int, max_files: int = 64
+    docs: DataFrame, text_col: str, probe_rows: int
 ) -> float | None:
     """Layout-UNBIASED distinct-text-ratio estimate: one hash-chosen
-    row group from each of up to ``max_files`` hash-chosen input files,
-    read driver-side with pyarrow. A prefix
-    ``take()`` reads partition 0 first, so layout-clustered duplicates
-    (crawl dumps often sort near-dups together) skew its estimate; a
-    per-file row-group sample sees every region of the table at the
-    same bounded cost (≤ max_files row-group column decodes, no Spark
-    job, no text leaves the driver beyond the sampled column).
+    row group from each of up to ``SAMPLE_MAX_FILES`` hash-chosen input
+    files, read driver-side with pyarrow. A prefix ``take()`` reads
+    partition 0 first, so layout-clustered duplicates (crawl dumps
+    often sort near-dups together) skew its estimate; a per-file
+    row-group sample sees every region of the table at the same bounded
+    cost (≤ SAMPLE_MAX_FILES row-group column decodes, no Spark job, no
+    text leaves the driver beyond the sampled column).
 
     Returns None — callers fall back to the prefix probe — when the
     input's lineage doesn't expose LOCAL parquet files carrying
@@ -526,10 +530,10 @@ def _stratified_distinct_ratio(
             return None  # remote FS: not reachable driver-side here
         else:
             paths.append(u)
-    if len(paths) > max_files:
+    if len(paths) > SAMPLE_MAX_FILES:
         paths = sorted(
             paths, key=lambda s: hashlib.md5(s.encode()).hexdigest()
-        )[:max_files]
+        )[:SAMPLE_MAX_FILES]
     per_file = max(256, probe_rows // max(len(paths), 1))
     # Two estimates, combined by min():
     # - WEIGHTED per-file ratio (each file's sample ratio weighted by
@@ -591,8 +595,6 @@ def _stratified_distinct_ratio(
 
 def minhash_lsh_candidates_adaptive(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     num_hashes: int = 12,
     rows_per_band: int = 2,
     shingle_n: int = 3,
@@ -612,8 +614,9 @@ def minhash_lsh_candidates_adaptive(
       at sf0.1 where 92% of texts are unique).
 
     The probe is two-tier. When the input's lineage exposes local
-    parquet files carrying ``text_col``, a LAYOUT-UNBIASED stratified
-    sample reads one hash-chosen row group from each of ≤64 files
+    parquet files carrying the ``text`` column, a LAYOUT-UNBIASED
+    stratified sample reads one hash-chosen row group from each of ≤64
+    files
     driver-side (zero Spark jobs, bounded decode), so clustered
     duplicates at the head of the table do not skew the estimate.
     Otherwise it falls back to the exact distinct ratio of a
@@ -632,14 +635,14 @@ def minhash_lsh_candidates_adaptive(
     cache_key = (
         docs.sparkSession.sparkContext.applicationId,
         docs.semanticHash(),
-        text_col,
+        TEXT_COL,
     )
     ratio = _PROBE_RATIO_CACHE.get(cache_key)
     if ratio is None:
-        ratio = _stratified_distinct_ratio(docs, text_col, PROBE_ROWS)
+        ratio = _stratified_distinct_ratio(docs, TEXT_COL, PROBE_ROWS)
         if ratio is None:
             digests = docs.selectExpr(
-                f"md5(array_join(split(lower(`{text_col}`), "
+                f"md5(array_join(split(lower(`{TEXT_COL}`), "
                 "'\\\\s+'), ' ')) AS _ck"
             ).take(PROBE_ROWS)
             ratio = len({r[0] for r in digests}) / (len(digests) or 1)
@@ -649,7 +652,7 @@ def minhash_lsh_candidates_adaptive(
         else minhash_lsh_candidates
     )
     return form(
-        docs, id_col=id_col, text_col=text_col, num_hashes=num_hashes,
+        docs, id_col=ID_COL, text_col=TEXT_COL, num_hashes=num_hashes,
         rows_per_band=rows_per_band, shingle_n=shingle_n,
     )
 
@@ -691,8 +694,7 @@ def simhash(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
     return votes.select(id_col, sig.alias("simhash"))
 
 
-def simhash_near_pairs(docs: DataFrame, id_col: str = "doc_id",
-                       text_col: str = "text", max_hamming: int = 3) -> DataFrame:
+def simhash_near_pairs(docs: DataFrame, max_hamming: int = 3) -> DataFrame:
     """Near-dup pairs by SimHash Hamming distance, without a crossJoin.
 
     Pigeonhole blocking: split the signature into ``max_hamming + 1``
@@ -703,9 +705,9 @@ def simhash_near_pairs(docs: DataFrame, id_col: str = "doc_id",
     n_blocks = max_hamming + 1
     block_bits = SIMHASH_BITS // n_blocks
     assert block_bits >= 1, "too many blocks for the signature width"
-    sig = simhash(docs, id_col, text_col)
+    sig = simhash(docs, ID_COL, TEXT_COL)
     blocks = sig.select(
-        id_col,
+        ID_COL,
         "simhash",
         F.explode(F.sequence(F.lit(0), F.lit(n_blocks - 1))).alias("blk"),
     ).withColumn(
@@ -721,11 +723,11 @@ def simhash_near_pairs(docs: DataFrame, id_col: str = "doc_id",
     # the self-join below would otherwise recompute the signature; a
     # checkpoint, not persist, frees the blocks when the result drops
     a = blocks.select(
-        F.col(id_col).alias("doc_a"), F.col("simhash").alias("sig_a"),
+        F.col(ID_COL).alias("doc_a"), F.col("simhash").alias("sig_a"),
         "blk", "blk_val",
     )
     b = blocks.select(
-        F.col(id_col).alias("doc_b"), F.col("simhash").alias("sig_b"),
+        F.col(ID_COL).alias("doc_b"), F.col("simhash").alias("sig_b"),
         "blk", "blk_val",
     )
     hamming = F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b")))
@@ -745,8 +747,7 @@ def simhash_near_pairs(docs: DataFrame, id_col: str = "doc_id",
 # ---------------------------------------------------------------------------
 
 
-def ngram_jaccard_pairs(docs: DataFrame, id_col: str = "doc_id",
-                        text_col: str = "text", shingle_n: int = 3,
+def ngram_jaccard_pairs(docs: DataFrame, shingle_n: int = 3,
                         threshold: float = 0.5) -> DataFrame:
     """Exact Jaccard similarity on shingle sets for every pair sharing at
     least one shingle. jaccard = shared / (|A| + |B| - shared).
@@ -761,18 +762,18 @@ def ngram_jaccard_pairs(docs: DataFrame, id_col: str = "doc_id",
     # storage for the whole session (no caller can unpersist a lazy
     # result), while checkpoint blocks are freed by the ContextCleaner
     # as soon as the returned DataFrame is dropped.
-    sh = lineage_cut(exploded_shingles(docs, id_col, text_col, shingle_n))
-    sizes = sh.groupBy(id_col).agg(F.count("*").alias("n_sh"))
-    a = sh.select(F.col(id_col).alias("doc_a"), "shingle")
-    b = sh.select(F.col(id_col).alias("doc_b"), "shingle")
+    sh = lineage_cut(exploded_shingles(docs, ID_COL, TEXT_COL, shingle_n))
+    sizes = sh.groupBy(ID_COL).agg(F.count("*").alias("n_sh"))
+    a = sh.select(F.col(ID_COL).alias("doc_a"), "shingle")
+    b = sh.select(F.col(ID_COL).alias("doc_b"), "shingle")
     shared = (
         a.join(b, "shingle")
         .filter(F.col("doc_a") < F.col("doc_b"))
         .groupBy("doc_a", "doc_b")
         .agg(F.count("*").alias("shared"))
     )
-    sa = sizes.select(F.col(id_col).alias("doc_a"), F.col("n_sh").alias("n_a"))
-    sb = sizes.select(F.col(id_col).alias("doc_b"), F.col("n_sh").alias("n_b"))
+    sa = sizes.select(F.col(ID_COL).alias("doc_a"), F.col("n_sh").alias("n_a"))
+    sb = sizes.select(F.col(ID_COL).alias("doc_b"), F.col("n_sh").alias("n_b"))
     return (
         shared.join(sa, "doc_a")
         .join(sb, "doc_b")
@@ -795,7 +796,7 @@ def ngram_jaccard_pairs(docs: DataFrame, id_col: str = "doc_id",
 
 
 def connected_components(edges: DataFrame, src: str = "doc_a",
-                         dst: str = "doc_b", max_iter: int = 20) -> DataFrame:
+                         dst: str = "doc_b") -> DataFrame:
     """Cluster candidate pairs into duplicate groups: connected
     components by iterative min-label propagation.
 
@@ -832,25 +833,24 @@ def connected_components(edges: DataFrame, src: str = "doc_a",
     labels = fixpoint(
         nodes.withColumn("component", F.col("node")),
         step,
-        max_iter,
+        20,
         progress=F.sum(F.col("component").cast("decimal(38,0)")),
     )
     sym.unpersist()
     return labels
 
 
-def dedup_clusters(docs: DataFrame, id_col: str = "doc_id",
-                   text_col: str = "text", **lsh_kwargs) -> DataFrame:
+def dedup_clusters(docs: DataFrame, **lsh_kwargs) -> DataFrame:
     """End-to-end near-dup grouping: MinHash-LSH candidates → connected
     components → one row per clustered doc with its component id and the
     deterministic keeper (min id in component)."""
-    pairs = minhash_lsh_candidates(docs, id_col, text_col, **lsh_kwargs)
+    pairs = minhash_lsh_candidates(docs, ID_COL, TEXT_COL, **lsh_kwargs)
     comps = connected_components(pairs)
     sizes = comps.groupBy("component").agg(F.count("*").alias("cluster_size"))
     return (
         comps.join(sizes, "component")
         .select(
-            F.col("node").alias(id_col),
+            F.col("node").alias(ID_COL),
             "component",
             "cluster_size",
             (F.col("node") == F.col("component")).alias("is_keeper"),
@@ -866,8 +866,6 @@ def dedup_clusters(docs: DataFrame, id_col: str = "doc_id",
 def incremental_minhash_matches(
     index_bands: DataFrame,
     new_docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     num_hashes: int = 12,
     rows_per_band: int = 2,
     shingle_n: int = 3,
@@ -890,8 +888,8 @@ def incremental_minhash_matches(
     docs with at least one collision; verify candidates with an exact
     measure downstream exactly as in the batch path."""
     nb = lsh_band_buckets(
-        minhash_signatures(new_docs, id_col, text_col, num_hashes, shingle_n),
-        id_col,
+        minhash_signatures(new_docs, ID_COL, TEXT_COL, num_hashes, shingle_n),
+        ID_COL,
         num_hashes,
         rows_per_band,
     )
@@ -901,22 +899,22 @@ def incremental_minhash_matches(
     # blanket `_m_id < id` filter would silently drop collisions with
     # index docs whose ids happen to sort after the new doc's.
     idx = index_bands.select(
-        F.col(id_col).alias("_m_id"),
+        F.col(ID_COL).alias("_m_id"),
         "band",
         "band_hash",
         F.lit(True).alias("_from_index"),
     )
     batch_idx = nb.select(
-        F.col(id_col).alias("_m_id"),
+        F.col(ID_COL).alias("_m_id"),
         "band",
         "band_hash",
         F.lit(False).alias("_from_index"),
     )
     hits = nb.join(idx.unionByName(batch_idx), ["band", "band_hash"]).filter(
-        (F.col("_from_index") & (F.col("_m_id") != F.col(id_col)))
-        | (~F.col("_from_index") & (F.col("_m_id") < F.col(id_col)))
+        (F.col("_from_index") & (F.col("_m_id") != F.col(ID_COL)))
+        | (~F.col("_from_index") & (F.col("_m_id") < F.col(ID_COL)))
     )
-    return hits.groupBy(id_col).agg(
+    return hits.groupBy(ID_COL).agg(
         F.min("_m_id").alias("matched_id"),
         F.countDistinct("_m_id").alias("n_matched_docs"),
     )
@@ -950,8 +948,7 @@ def _window_hashes(docs: DataFrame, id_col: str, text_col: str,
     )
 
 
-def duplicate_spans(docs: DataFrame, id_col: str = "doc_id",
-                    text_col: str = "text", window: int = 5,
+def duplicate_spans(docs: DataFrame, window: int = 5,
                     min_count: int = 2) -> DataFrame:
     """Maximal exact-duplicated token spans per document — the
     shuffle-native form of suffix-array substring dedup ("Deduplicating
@@ -987,15 +984,15 @@ def duplicate_spans(docs: DataFrame, id_col: str = "doc_id",
     positions 0-based, token counts in post-``lower``-whitespace-split
     units.
     """
-    wins = _window_hashes(docs, id_col, text_col, window)
+    wins = _window_hashes(docs, ID_COL, TEXT_COL, window)
     dup = (
         wins.withColumn(
             "_cnt", F.count("*").over(Window.partitionBy("h"))
         )
         .filter(F.col("_cnt") >= min_count)
-        .select(id_col, "pos")
+        .select(ID_COL, "pos")
     )
-    byd = Window.partitionBy(id_col).orderBy("pos")
+    byd = Window.partitionBy(ID_COL).orderBy("pos")
     spans = (
         dup.withColumn("_gap", F.col("pos") - F.lag("pos").over(byd))
         .withColumn(
@@ -1009,14 +1006,14 @@ def duplicate_spans(docs: DataFrame, id_col: str = "doc_id",
                 byd.rowsBetween(Window.unboundedPreceding, 0)
             ),
         )
-        .groupBy(id_col, "_island")
+        .groupBy(ID_COL, "_island")
         .agg(
             F.min("pos").alias("_s"),
             (F.max("pos") + window - 1).alias("_e"),
             F.count("*").alias("_nw"),
         )
     )
-    return spans.groupBy(id_col).agg(
+    return spans.groupBy(ID_COL).agg(
         F.count("*").alias("n_spans"),
         F.sum("_nw").alias("n_dup_windows"),
         F.sum(F.col("_e") - F.col("_s") + 1).alias("covered_tokens"),
@@ -1024,8 +1021,7 @@ def duplicate_spans(docs: DataFrame, id_col: str = "doc_id",
     )
 
 
-def remove_duplicate_spans(docs: DataFrame, id_col: str = "doc_id",
-                           text_col: str = "text", window: int = 5,
+def remove_duplicate_spans(docs: DataFrame, window: int = 5,
                            min_count: int = 2) -> DataFrame:
     """The REMOVAL half of substring dedup (Lee et al. 2022 §4: "when a
     duplicate substring is found, keep one occurrence"): every
@@ -1047,29 +1043,29 @@ def remove_duplicate_spans(docs: DataFrame, id_col: str = "doc_id",
     md5('') when everything was removed). Hash output keeps the result
     small and value-comparable; the cleaned token array itself is the
     obvious variant when the consumer is the next pipeline stage."""
-    wins = _window_hashes(docs, id_col, text_col, window)
+    wins = _window_hashes(docs, ID_COL, TEXT_COL, window)
     byh = Window.partitionBy("h")
     flagged = wins.withColumn("_cnt", F.count("*").over(byh)).withColumn(
         "_rn",
-        F.row_number().over(byh.orderBy(id_col, "pos")),
+        F.row_number().over(byh.orderBy(ID_COL, "pos")),
     )
     removed = (
         flagged.filter((F.col("_cnt") >= min_count) & (F.col("_rn") > 1))
         .selectExpr(
-            f"`{id_col}`",
+            f"`{ID_COL}`",
             f"explode(sequence(pos, pos + {window - 1})) AS t",
         )
         .distinct()
     )
     toks = (
         docs.selectExpr(
-            f"`{id_col}`", f"split(lower(`{text_col}`), '\\\\s+') AS _ws"
+            f"`{ID_COL}`", f"split(lower(`{TEXT_COL}`), '\\\\s+') AS _ws"
         )
-        .selectExpr(f"`{id_col}`", "posexplode(_ws) AS (t, tok)")
+        .selectExpr(f"`{ID_COL}`", "posexplode(_ws) AS (t, tok)")
     )
-    kept = toks.join(removed, [id_col, "t"], "left_anti")
-    totals = toks.groupBy(id_col).agg(F.count("*").alias("n_tokens"))
-    cleaned = kept.groupBy(id_col).agg(
+    kept = toks.join(removed, [ID_COL, "t"], "left_anti")
+    totals = toks.groupBy(ID_COL).agg(F.count("*").alias("n_tokens"))
+    cleaned = kept.groupBy(ID_COL).agg(
         F.count("*").alias("_n_kept"),
         F.md5(
             F.array_join(
@@ -1079,8 +1075,8 @@ def remove_duplicate_spans(docs: DataFrame, id_col: str = "doc_id",
             )
         ).alias("clean_hash"),
     )
-    return totals.join(cleaned, id_col, "left").select(
-        id_col,
+    return totals.join(cleaned, ID_COL, "left").select(
+        ID_COL,
         "n_tokens",
         (F.col("n_tokens") - F.coalesce(F.col("_n_kept"), F.lit(0))).alias(
             "n_removed"
@@ -1089,8 +1085,7 @@ def remove_duplicate_spans(docs: DataFrame, id_col: str = "doc_id",
     )
 
 
-def ngram_containment_pairs(docs: DataFrame, id_col: str = "doc_id",
-                            text_col: str = "text", shingle_n: int = 3,
+def ngram_containment_pairs(docs: DataFrame,
                             threshold: float = 0.8) -> DataFrame:
     """Shingle-set CONTAINMENT — the asymmetric cousin of Jaccard:
     containment(A in B) = |A ∩ B| / |A|. This is the right measure for
@@ -1106,10 +1101,10 @@ def ngram_containment_pairs(docs: DataFrame, id_col: str = "doc_id",
     (doc_small, doc_big, shared, containment)."""
     # localCheckpoint, not persist — see ngram_jaccard_pairs for why
     # (cache lifetime bounded by the result, not the session).
-    sh = lineage_cut(exploded_shingles(docs, id_col, text_col, shingle_n))
-    sizes = sh.groupBy(id_col).agg(F.count("*").alias("n_sh"))
-    a = sh.select(F.col(id_col).alias("doc_small"), "shingle")
-    b = sh.select(F.col(id_col).alias("doc_big"), "shingle")
+    sh = lineage_cut(exploded_shingles(docs, ID_COL, TEXT_COL, 3))
+    sizes = sh.groupBy(ID_COL).agg(F.count("*").alias("n_sh"))
+    a = sh.select(F.col(ID_COL).alias("doc_small"), "shingle")
+    b = sh.select(F.col(ID_COL).alias("doc_big"), "shingle")
     shared = (
         a.join(b, "shingle")
         .filter(F.col("doc_small") != F.col("doc_big"))
@@ -1117,7 +1112,7 @@ def ngram_containment_pairs(docs: DataFrame, id_col: str = "doc_id",
         .agg(F.count("*").alias("shared"))
     )
     ssm = sizes.select(
-        F.col(id_col).alias("doc_small"), F.col("n_sh").alias("n_small")
+        F.col(ID_COL).alias("doc_small"), F.col("n_sh").alias("n_small")
     )
     return (
         shared.join(ssm, "doc_small")
@@ -1130,8 +1125,7 @@ def ngram_containment_pairs(docs: DataFrame, id_col: str = "doc_id",
     )
 
 
-def lsh_bucket_histogram(docs: DataFrame, id_col: str = "doc_id",
-                         text_col: str = "text", num_hashes: int = 12,
+def lsh_bucket_histogram(docs: DataFrame, num_hashes: int = 12,
                          rows_per_band: int = 2,
                          shingle_n: int = 3) -> DataFrame:
     """LSH load diagnostic: per band, the histogram of bucket sizes —
@@ -1149,8 +1143,8 @@ def lsh_bucket_histogram(docs: DataFrame, id_col: str = "doc_id",
     where the dedup job wouldn't be.
     """
     bands = lsh_band_buckets(
-        minhash_signatures(docs, id_col, text_col, num_hashes, shingle_n),
-        id_col,
+        minhash_signatures(docs, ID_COL, TEXT_COL, num_hashes, shingle_n),
+        ID_COL,
         num_hashes,
         rows_per_band,
     )
@@ -1167,8 +1161,6 @@ def lsh_bucket_histogram(docs: DataFrame, id_col: str = "doc_id",
 def prefix_filter_jaccard_pairs(
     docs: DataFrame,
     threshold: float = 0.5,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     max_class: int | None = None,
 ) -> DataFrame:
     """Exact token-set Jaccard pairs ≥ ``threshold`` via PREFIX
@@ -1214,9 +1206,9 @@ def prefix_filter_jaccard_pairs(
     # chars — Java \s excludes them); hashing elements first is what
     # makes the concatenation injective.
     mem0 = docs.selectExpr(
-        f"`{id_col}` AS _id",
+        f"`{ID_COL}` AS _id",
         "sort_array(array_distinct(split(lower("
-        f"`{text_col}`), '\\\\s+'))) AS _ws",
+        f"`{TEXT_COL}`), '\\\\s+'))) AS _ws",
     ).withColumn(
         "_ck", F.md5(F.expr("array_join(transform(_ws, t -> md5(t)), '')"))
     ).transform(lineage_cut)  # feeds members AND groups
@@ -1343,8 +1335,6 @@ def tfidf_cosine_pairs(
     docs: DataFrame,
     threshold_num: int = 4,
     threshold_den: int = 5,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     shingle_n: int | None = 3,
     max_class: int | None = None,
 ) -> DataFrame:
@@ -1398,8 +1388,8 @@ def tfidf_cosine_pairs(
     t = threshold_num / threshold_den
     if shingle_n is None:
         toks = docs.selectExpr(
-            f"`{id_col}` AS _d",
-            f"explode(split(lower(`{text_col}`), '\\\\s+')) AS _term",
+            f"`{ID_COL}` AS _d",
+            f"explode(split(lower(`{TEXT_COL}`), '\\\\s+')) AS _term",
         )
     else:
         # n-gram shingle terms WITH multiplicity (tf counts repeats);
@@ -1407,8 +1397,8 @@ def tfidf_cosine_pairs(
         # once per doc, not once per shingle position (see shingles_col)
         toks = (
             docs.selectExpr(
-                f"`{id_col}` AS _d",
-                f"split(lower(`{text_col}`), '\\\\s+') AS _ws",
+                f"`{ID_COL}` AS _d",
+                f"split(lower(`{TEXT_COL}`), '\\\\s+') AS _ws",
             )
             # sequence(0, negative) would generate a DESCENDING range
             .filter(f"size(_ws) >= {shingle_n}")

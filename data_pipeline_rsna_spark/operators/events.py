@@ -17,6 +17,15 @@ from pyspark.sql import functions as F
 
 from ..lineage import lineage_cut
 
+KEY_COL = "user_id"
+TS_COL = "ts"
+VALUE_COL = "value"
+FUNNEL_STEPS = ("view", "click", "purchase")
+BAR_SECONDS = 3600
+MAX_SEQUENCE_LEN = 3
+TYPE_COL = "event_type"
+SLO_ERROR_PPM = 10_000
+
 EVENT_TYPES = ("click", "view", "signup", "purchase", "error")
 
 
@@ -121,19 +130,13 @@ def top_events_per_type(events: DataFrame, k: int = 5) -> DataFrame:
     )
 
 
-def gap_fill_locf(
-    obs: DataFrame,
-    key: str = "user_id",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    tiebreak: str = "event_id",
-) -> DataFrame:
+def gap_fill_locf(obs: DataFrame) -> DataFrame:
     """Hypertable-style daily gap fill with LOCF (last observation
     carried forward): densify each key's observed [first_day, last_day]
     span to one row per calendar day, carrying the day's last value
     across the gap days.
 
-    Single-exchange plan: one explicit hash repartition on ``key``
+    Single-exchange plan: one explicit hash repartition on ``user_id``
     satisfies every downstream requirement — the per-(key, day) dedup
     window (subset clustering), the per-key lead() window, and the
     explode are all partition-local. No dense-calendar cross join and no
@@ -145,21 +148,21 @@ def gap_fill_locf(
     Value exported as integer cents and day as epoch days, so the
     differential hash never depends on float/date-to-string formatting.
     """
-    df = obs.repartition(F.col(key))
-    day = F.date_trunc("day", F.col(ts_col)).cast("date")
-    w_day = Window.partitionBy(key, "day").orderBy(
-        F.col(ts_col).desc(), F.col(tiebreak).desc()
+    df = obs.repartition(F.col(KEY_COL))
+    day = F.date_trunc("day", F.col(TS_COL)).cast("date")
+    w_day = Window.partitionBy(KEY_COL, "day").orderBy(
+        F.col(TS_COL).desc(), F.col("event_id").desc()
     )
     daily = (
         df.withColumn("day", day)
         .withColumn("rn", F.row_number().over(w_day))
         .filter(F.col("rn") == 1)
-        .select(key, "day", value_col)
+        .select(KEY_COL, "day", VALUE_COL)
     )
-    w_seq = Window.partitionBy(key).orderBy("day")
+    w_seq = Window.partitionBy(KEY_COL).orderBy("day")
     seq = daily.withColumn("next_day", F.lead("day").over(w_seq))
     filled = seq.select(
-        key,
+        KEY_COL,
         F.col("day").alias("obs_day"),
         F.explode(
             F.sequence(
@@ -167,22 +170,21 @@ def gap_fill_locf(
                 F.coalesce(F.date_sub("next_day", 1), F.col("day")),
             )
         ).alias("gen_day"),
-        value_col,
+        VALUE_COL,
     )
     return filled.select(
-        key,
+        KEY_COL,
         F.datediff("gen_day", F.lit("1970-01-01")).alias("epoch_day"),
         (F.col("gen_day") == F.col("obs_day")).cast("int").alias("is_observed"),
-        F.expr(f"CAST(round({value_col} * 100) AS BIGINT)").alias("value_cents"),
+        F.expr(f"CAST(round({VALUE_COL} * 100) AS BIGINT)").alias(
+            "value_cents"
+        ),
     )
 
 
-def funnel_steps(
-    events: DataFrame,
-    steps: tuple[str, ...] = ("view", "click", "purchase"),
-) -> DataFrame:
+def funnel_steps(events: DataFrame) -> DataFrame:
     """Ordered same-day funnel analysis: for each (user, day), the
-    furthest step of ``steps`` reached as an in-order (not necessarily
+    furthest step of ``FUNNEL_STEPS`` reached as an in-order (not necessarily
     adjacent) subsequence of that day's events; output = user-days per
     furthest step.
 
@@ -191,7 +193,7 @@ def funnel_steps(
     broken by event_id so the sequence is deterministic — and the
     subsequence check is a regex over that string (JVM-side, no UDF).
     State per task is one user-day's events; the funnel aggregate
-    itself is a #steps-row table."""
+    itself is a #FUNNEL_STEPS-row table."""
     seq = (
         events.groupBy("user_id", F.to_date("ts").alias("day"))
         .agg(
@@ -209,8 +211,8 @@ def funnel_steps(
         )
     )
     furthest = F.lit(0)
-    for i in range(len(steps)):
-        pattern = ".*".join(steps[: i + 1])
+    for i in range(len(FUNNEL_STEPS)):
+        pattern = ".*".join(FUNNEL_STEPS[: i + 1])
         furthest = F.when(F.col("seq").rlike(pattern), i + 1).otherwise(
             furthest
         )
@@ -273,9 +275,7 @@ def sliding_type_agg(events: DataFrame) -> DataFrame:
     )
 
 
-def session_concurrency_by_day(
-    events: DataFrame, gap_seconds: int = 1800
-) -> DataFrame:
+def session_concurrency_by_day(events: DataFrame) -> DataFrame:
     """Peak concurrent sessions per day, by sweep line: each session
     span emits +1 at its start and -1 at its end (closed intervals —
     starts sort before ends at the same microsecond via the 2k / 2k+1
@@ -291,7 +291,7 @@ def session_concurrency_by_day(
     -1s sort after the +1s of the same instant."""
     from . import relational as rel
 
-    sess = sessionize(events, gap_seconds)
+    sess = sessionize(events, 1800)
     spans = sess.groupBy("user_id", "session_id").agg(
         F.min("ts").alias("s"), F.max("ts").alias("e")
     )
@@ -500,7 +500,7 @@ def transition_matrix(events: DataFrame) -> DataFrame:
     )
 
 
-def ohlc_bars(events: DataFrame, bar_seconds: int = 3600) -> DataFrame:
+def ohlc_bars(events: DataFrame) -> DataFrame:
     """OHLC candlestick downsampling per (event_type, bar): open/close
     by event time, high/low/count — the time-series compaction kernel.
 
@@ -510,7 +510,7 @@ def ohlc_bars(events: DataFrame, bar_seconds: int = 3600) -> DataFrame:
     on t_us, unique within its group by construction. Both levels
     map-side combine, so the shuffle carries bar-grain rows only.
     """
-    bar_us = bar_seconds * 1_000_000
+    bar_us = BAR_SECONDS * 1_000_000
     v = events.select(
         "event_type",
         F.unix_micros("ts").alias("t_us"),
@@ -519,7 +519,7 @@ def ohlc_bars(events: DataFrame, bar_seconds: int = 3600) -> DataFrame:
     )
     l1 = v.groupBy(
         "event_type",
-        (F.expr(f"t_us DIV {bar_us}") * bar_seconds).alias("bar_s"),
+        (F.expr(f"t_us DIV {bar_us}") * BAR_SECONDS).alias("bar_s"),
         "t_us",
     ).agg(
         F.min_by("cents", "event_id").alias("first_c"),
@@ -600,13 +600,11 @@ def acf_lags(
     )
 
 
-def frequent_event_sequences(
-    events: DataFrame, min_support_ppm: int = 100_000, max_len: int = 3
-) -> DataFrame:
-    """Frequent ordered event-type sequences (length 2..max_len) per
+def frequent_event_sequences(events: DataFrame) -> DataFrame:
+    """Frequent ordered event-type sequences (length 2..MAX_SEQUENCE_LEN) per
     user stream: a sequence counts once per user that exhibits it as
     consecutive events in (ts, event_id) order; support is reported in
-    ppm of the user population.
+    ppm of the user population, keeping those with support ≥ 10%.
 
     This is the bounded-length core of sequential pattern mining
     (GSP/PrefixSpan restricted to contiguous sequences), which is the
@@ -620,20 +618,21 @@ def frequent_event_sequences(
     Scale: the window shuffle partitions by user_id (even fan-out at
     any corpus size); the sequence aggregation partial-aggregates
     map-side, so the second shuffle carries at most the distinct
-    sequence vocabulary per partition (bounded by |event_type|^max_len,
-    a few hundred rows here, never the event count).
+    sequence vocabulary per partition (bounded by
+    |event_type|^MAX_SEQUENCE_LEN, a few hundred rows here, never the
+    event count).
     """
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     nexts = [
         F.lead("event_type", i).over(w).alias(f"_n{i}")
-        for i in range(1, max_len)
+        for i in range(1, MAX_SEQUENCE_LEN)
     ]
     base = events.select("user_id", "event_type", *nexts)
     pop = events.select("user_id").distinct().groupBy().agg(
         F.count("*").alias("n_users")
     )
     outs = []
-    for length in range(2, max_len + 1):
+    for length in range(2, MAX_SEQUENCE_LEN + 1):
         parts = [F.col("event_type")] + [
             F.col(f"_n{i}") for i in range(1, length)
         ]
@@ -664,14 +663,13 @@ def frequent_event_sequences(
             .cast("bigint")
             .alias("support_ppm"),
         )
-        .where(F.col("support_ppm") >= min_support_ppm)
+        .where(F.col("support_ppm") >= 100_000)
     )
 
 
 def late_arrival_audit(
     events: DataFrame,
     arrival_cols: list[str] | None = None,
-    ts_col: str = "ts",
     allowed_lateness_sec: int = 600,
     partitions: int | None = None,
 ) -> DataFrame:
@@ -701,9 +699,9 @@ def late_arrival_audit(
     arr = [F.col(c) for c in arrival_cols]
     proj = events.select(
         *arr,
-        F.expr(f"unix_micros(`{ts_col}`)").alias("_tsu"),
+        F.expr(f"unix_micros(`{TS_COL}`)").alias("_tsu"),
         F.expr(
-            f"unix_seconds(date_trunc('hour', `{ts_col}`))"
+            f"unix_seconds(date_trunc('hour', `{TS_COL}`))"
         ).alias("window_start"),
     )
     part = (
@@ -759,18 +757,11 @@ def late_arrival_audit(
     )
 
 
-def slo_burn_rate(
-    events: DataFrame,
-    ts_col: str = "ts",
-    type_col: str = "event_type",
-    error_type: str = "error",
-    slo_error_ppm: int = 10_000,
-    slow_window_hours: int = 6,
-) -> DataFrame:
+def slo_burn_rate(events: DataFrame) -> DataFrame:
     """Multi-window error-budget burn rate (the Google SRE alerting
     recipe): per hour, the error rate as a multiple of the SLO budget
-    (burn 1.0 = exactly consuming budget), plus the rolling
-    ``slow_window_hours`` burn — paging only when BOTH the fast and the
+    (burn 1.0 = exactly consuming budget), plus the rolling 6-hour
+    burn — paging only when BOTH the fast and the
     slow window burn hot kills the flappy-alert problem.
 
     Integer exact: burn_milli = 1000 · (err/n) / (slo_ppm/1e6)
@@ -780,10 +771,10 @@ def slo_burn_rate(
     windows rule — never over raw events; the raw pass is one
     map-side-combined groupBy(hour).
 
-    The slow window is a RANGE frame over window_start seconds
-    (round-7 fix): a ROWS frame over the rollup spans arbitrarily more
-    wall-clock hours across quiet periods with no events, inflating
-    burn_slow vs the SRE recipe's calendar window. Hours with zero
+    The slow window is a RANGE frame over window_start seconds: a ROWS
+    frame over the rollup spans arbitrarily more wall-clock hours across
+    quiet periods with no events, inflating burn_slow vs the SRE
+    recipe's calendar window. Hours with zero
     events carry zero errors AND zero budget consumption, so skipping
     them (rather than densifying) matches the recipe exactly.
 
@@ -791,18 +782,18 @@ def slo_burn_rate(
     burn_slow_milli, page (both windows ≥ the 14.4×/6× SRE thresholds).
     """
     hourly = events.groupBy(
-        F.expr(f"unix_seconds(date_trunc('hour', `{ts_col}`))").alias(
+        F.expr(f"unix_seconds(date_trunc('hour', `{TS_COL}`))").alias(
             "window_start"
         )
     ).agg(
         F.count(F.lit(1)).cast("bigint").alias("n_events"),
         F.sum(
-            F.expr(f"CAST(`{type_col}` = '{error_type}' AS BIGINT)")
+            F.expr(f"CAST(`{TYPE_COL}` = 'error' AS BIGINT)")
         ).cast("bigint").alias("n_errors"),
     )
     w = (
         Window.orderBy("window_start")
-        .rangeBetween(-(slow_window_hours - 1) * 3600, Window.currentRow)
+        .rangeBetween(-5 * 3600, Window.currentRow)
     )
     return (
         hourly.withColumn("_n_slow", F.sum("n_events").over(w))
@@ -813,9 +804,9 @@ def slo_burn_rate(
             "n_errors",
             "CAST((1000000 * n_errors) DIV n_events AS BIGINT) AS err_ppm",
             "CAST((1000000000 * n_errors) DIV "
-            f"(n_events * {slo_error_ppm}) AS BIGINT) AS burn_fast_milli",
+            f"(n_events * {SLO_ERROR_PPM}) AS BIGINT) AS burn_fast_milli",
             "CAST((1000000000 * _e_slow) DIV "
-            f"(_n_slow * {slo_error_ppm}) AS BIGINT) AS burn_slow_milli",
+            f"(_n_slow * {SLO_ERROR_PPM}) AS BIGINT) AS burn_slow_milli",
         )
         .selectExpr(
             "*",
@@ -824,11 +815,7 @@ def slo_burn_rate(
     )
 
 
-def burstiness_fano(
-    events: DataFrame,
-    ts_col: str = "ts",
-    type_col: str = "event_type",
-) -> DataFrame:
+def burstiness_fano(events: DataFrame) -> DataFrame:
     """Per-type burstiness as the Fano factor (index of dispersion) of
     per-minute counts over the stream's full minute span: 1 for a
     Poisson process, > 1 for bursty arrivals (retry storms, batch
@@ -845,8 +832,8 @@ def burstiness_fano(
     one per-type reduce, a broadcast 1-row span.
     """
     per_min = events.selectExpr(
-        f"`{type_col}` AS event_type",
-        f"unix_seconds(date_trunc('minute', `{ts_col}`)) DIV 60 AS _m",
+        f"`{TYPE_COL}` AS event_type",
+        f"unix_seconds(date_trunc('minute', `{TS_COL}`)) DIV 60 AS _m",
     ).groupBy("event_type", "_m").agg(
         F.count(F.lit(1)).cast("bigint").alias("_c")
     )
@@ -870,7 +857,7 @@ def burstiness_fano(
             # Integral `div`, not floor(/): exact truncation on both
             # engines at every rounding boundary (numerator >= 0 by
             # Cauchy-Schwarz: span·Σc² >= (Σc)², so div == floor); the
-            # decimal `/` form rounded HALF_UP at scale 6 first (r12)
+            # decimal `/` form would round HALF_UP at scale 6 first
             "CAST(((CAST(_span AS DECIMAL(38,0)) * _ssq "
             "- CAST(n_events AS DECIMAL(38,0)) * n_events) * 1000000) "
             "div (CAST(_span AS DECIMAL(38,0)) * n_events) AS BIGINT) "

@@ -18,20 +18,18 @@ from pyspark.sql import functions as F
 
 from ..lineage import fixpoint, lineage_cut
 
+DAMPING_MILLIS = 850
+SRC_COL = "src"
+DST_COL = "dst"
+
 RANK_UNIT = 1_000_000
 
 
-def pagerank_integer(
-    edges: DataFrame,
-    iterations: int = 3,
-    damping_millis: int = 850,
-    src: str = "src",
-    dst: str = "dst",
-) -> DataFrame:
+def pagerank_integer(edges: DataFrame, iterations: int = 3) -> DataFrame:
     """Fixed-iteration PageRank in exact integer micro-rank units.
 
-    ``new_rank(v) = (1000 - damping_millis) * RANK_UNIT DIV 1000
-                    + damping_millis * sum(rank(u) DIV deg(u)) DIV 1000``
+    ``new_rank(v) = (1000 - DAMPING_MILLIS) * RANK_UNIT DIV 1000
+                    + DAMPING_MILLIS * sum(rank(u) DIV deg(u)) DIV 1000``
     over in-neighbors u. Callers must pass a graph where EVERY node has
     at least one out-edge and one in-edge (e.g. a bidirectionalized
     edge list); dangling-node mass redistribution is deliberately out
@@ -43,29 +41,29 @@ def pagerank_integer(
     src ONCE and persisted, so every iteration's join reuses that
     layout and only the (node, rank) table (|V| rows) moves per round.
     """
-    base = (1000 - damping_millis) * RANK_UNIT // 1000
-    deg = edges.groupBy(src).agg(F.count("*").alias("_deg"))
+    base = (1000 - DAMPING_MILLIS) * RANK_UNIT // 1000
+    deg = edges.groupBy(SRC_COL).agg(F.count("*").alias("_deg"))
     ed = (
-        edges.join(deg, src)
-        .repartition(F.col(src))
+        edges.join(deg, SRC_COL)
+        .repartition(F.col(SRC_COL))
         .persist()
     )
     # node set from the PERSISTED edge layout, not the raw edges
     # subtree (which would recompute the caller's edge construction):
     # every node has an out-edge by contract, so it is the same set
-    nodes = ed.select(F.col(src).alias("node")).distinct()
+    nodes = ed.select(F.col(SRC_COL).alias("node")).distinct()
 
     def step(ranks: DataFrame, _round: int) -> DataFrame:
         contribs = ed.join(
-            ranks.withColumnRenamed("node", src), src
+            ranks.withColumnRenamed("node", SRC_COL), SRC_COL
         ).select(
-            F.col(dst).alias("node"),
+            F.col(DST_COL).alias("node"),
             F.expr("rank DIV _deg").alias("_c"),
         )
         return contribs.groupBy("node").agg(
             (
                 F.lit(base)
-                + F.expr(f"{damping_millis} * sum(_c) DIV 1000")
+                + F.expr(f"{DAMPING_MILLIS} * sum(_c) DIV 1000")
             ).alias("rank")
         )
 
@@ -108,8 +106,6 @@ def bfs_hops(
     edges: DataFrame,
     sources: DataFrame,
     max_hops: int = 3,
-    src: str = "src",
-    dst: str = "dst",
 ) -> DataFrame:
     """Multi-source BFS: minimum hop distance (0..max_hops) from the
     source set to every reachable node, as (node, hop). Level-synchronous
@@ -123,7 +119,7 @@ def bfs_hops(
     The edge list is repartitioned on ``src`` once and persisted so
     every round's join reuses the layout.
     """
-    ed = edges.select(F.col(src).alias("_s"), F.col(dst).alias("_d"))
+    ed = edges.select(F.col(SRC_COL).alias("_s"), F.col(DST_COL).alias("_d"))
     ed = ed.repartition(F.col("_s")).persist()
 
     def step(visited: DataFrame, h: int) -> DataFrame:
@@ -257,8 +253,6 @@ def kcore_vertices(
     edges: DataFrame,
     k: int,
     iterations: int = 12,
-    src: str = "src",
-    dst: str = "dst",
 ) -> DataFrame:
     """Vertices of the k-core — the maximal subgraph where every vertex
     has degree >= k — by synchronous peeling: each round recomputes
@@ -281,7 +275,7 @@ def kcore_vertices(
     # The edge list is reused every round — cut it once so each round's
     # scan starts from materialized blocks, not the upstream plan.
     ed = edges.select(
-        F.col(src).alias("_s"), F.col(dst).alias("_d")
+        F.col(SRC_COL).alias("_s"), F.col(DST_COL).alias("_d")
     ).transform(lineage_cut)
 
     def degrees(e: DataFrame) -> DataFrame:
@@ -302,10 +296,9 @@ def jaccard_link_prediction(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
-    min_common: int = 2,
 ) -> DataFrame:
     """Neighbor-set Jaccard link prediction: for node pairs NOT joined
-    by an edge but sharing ≥ ``min_common`` neighbors, the Jaccard of
+    by an edge but sharing ≥ 2 neighbors, the Jaccard of
     their neighbor sets |N(u)∩N(v)| / |N(u)∪N(v)| — the classic
     "edges most likely to appear next" score (Liben-Nowell & Kleinberg
     2003) behind related-item backfill and graph densification.
@@ -340,7 +333,7 @@ def jaccard_link_prediction(
         .filter("node_a < node_b")
         .groupBy("node_a", "node_b")
         .agg(F.count(F.lit(1)).cast("bigint").alias("common_neighbors"))
-        .filter(f"common_neighbors >= {min_common}")
+        .filter("common_neighbors >= 2")
     )
     existing = und.filter("_u < _v").selectExpr(
         "_u AS node_a", "_v AS node_b"

@@ -31,6 +31,11 @@ from pyspark.sql import functions as F
 
 from . import image_kernels as ik
 
+SHIFT_MAX = 4
+FIXTURE_SIDE = 16
+DHASH_H = 8
+DHASH_W = 8
+
 PIXELS_SCHEMA = (
     "img_id long, pixels binary, dtype string, height int, width int"
 )
@@ -263,15 +268,13 @@ def j2k_lossy_roundtrip_check(images: DataFrame,
     )
 
 
-def jpegls_roundtrip(images: DataFrame, near: int = 0) -> DataFrame:
+def jpegls_roundtrip(images: DataFrame) -> DataFrame:
     """Pixels → JPEG-LS DICOM encode → decode → pixels, all inside the
     Arrow batch: the T.87/LOCO-I transfer syntaxes
     (1.2.840.10008.1.2.4.80 lossless / .4.81 near-lossless —
     functions/jpegls.py) through the encapsulated-PixelData wrapper.
-    With ``near=0`` this must reproduce ANY corpus bit-exactly, same
-    contract as ``jpeg_lossless_roundtrip``; with ``near>0`` the codec
-    guarantees ``|out - in| <= near`` elementwise (asserted in tests,
-    not oracle-checked — the reconstruction is encoder-specific)."""
+    Lossless (``near=0``): this must reproduce ANY corpus bit-exactly,
+    same contract as ``jpeg_lossless_roundtrip``."""
     from ..functions import codecs as C
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -281,7 +284,7 @@ def jpegls_roundtrip(images: DataFrame, near: int = 0) -> DataFrame:
                 arr = np.frombuffer(r.pixels, dtype=np.dtype(r.dtype)).reshape(
                     r.height, r.width
                 )
-                back = C.decode_dicom_gray(C.encode_dicom_jpegls(arr, near))
+                back = C.decode_dicom_gray(C.encode_dicom_jpegls(arr, 0))
                 out.append(
                     (r.img_id, back.tobytes(), str(back.dtype),
                      back.shape[0], back.shape[1])
@@ -293,7 +296,7 @@ def jpegls_roundtrip(images: DataFrame, near: int = 0) -> DataFrame:
     return images.mapInPandas(run, PIXELS_SCHEMA)
 
 
-def j2k_roundtrip(images: DataFrame, levels: int = 2) -> DataFrame:
+def j2k_roundtrip(images: DataFrame) -> DataFrame:
     """Pixels → JPEG 2000 Lossless DICOM encode → decode → pixels,
     all inside the Arrow batch: transfer syntax 1.2.840.10008.1.2.4.90
     (reversible 5/3 + EBCOT/MQ — functions/jpeg2000.py) through the
@@ -311,7 +314,7 @@ def j2k_roundtrip(images: DataFrame, levels: int = 2) -> DataFrame:
                 arr = np.frombuffer(r.pixels, dtype=np.dtype(r.dtype)).reshape(
                     r.height, r.width
                 )
-                back = C.decode_dicom_gray(C.encode_dicom_j2k(arr, levels))
+                back = C.decode_dicom_gray(C.encode_dicom_j2k(arr, 2))
                 out.append(
                     (r.img_id, back.tobytes(), str(back.dtype),
                      back.shape[0], back.shape[1])
@@ -404,15 +407,12 @@ def pixel_stats(images: DataFrame) -> DataFrame:
 
 
 def apply_kernel(images: DataFrame, op: str, variant: int = 0,
-                 shift_max: int = 4, delta: int = 3,
-                 interp: str = "nearest") -> DataFrame:
+                 delta: int = 3) -> DataFrame:
     """Run one augmentation pixel kernel over a multimodal column, with
     the engine's seeded-RNG convention. Returns the same schema with
     transformed pixels and a synthetic image id suffix (O19).
-    ``delta`` parameterizes the deterministic ``brighten`` kernel;
-    ``interp`` selects the scale kernel's interpolation order
-    ("nearest" | "bilinear" | "cubic" — the last two are ndimage
-    order-1/order-3 pixel parity, image_kernels.py)."""
+    ``delta`` parameterizes the deterministic ``brighten`` kernel; the
+    ``scale`` kernel samples nearest-neighbor."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -425,13 +425,13 @@ def apply_kernel(images: DataFrame, op: str, variant: int = 0,
                     res = ik.flip_image(arr)
                 elif op == "shift":
                     rng = ik.seeded_rng(str(r.img_id), variant, op)
-                    rx = int(rng.integers(-shift_max, shift_max + 1))
-                    ry = int(rng.integers(-shift_max, shift_max + 1))
+                    rx = int(rng.integers(-SHIFT_MAX, SHIFT_MAX + 1))
+                    ry = int(rng.integers(-SHIFT_MAX, SHIFT_MAX + 1))
                     res = ik.shift_image(arr, rx, ry)
                 elif op == "scale":
                     rng = ik.seeded_rng(str(r.img_id), variant, op)
                     rf = float(rng.uniform(0.8, 1.25))
-                    res = ik.scale_image(arr, rf, interp=interp)
+                    res = ik.scale_image(arr, rf, interp="nearest")
                 elif op == "brighten":
                     res = ik.brighten(arr, delta)
                 else:
@@ -447,8 +447,7 @@ def apply_kernel(images: DataFrame, op: str, variant: int = 0,
     return images.mapInPandas(run, PIXELS_SCHEMA)
 
 
-def stage_dicom_fixture_dir(n: int = 40, height: int = 16,
-                            width: int = 16) -> str:
+def stage_dicom_fixture_dir(n: int = 40) -> str:
     """Write a deterministic directory of real ``.dcm`` files (once) —
     the file-based input the reference job consumes (a dir of DICOMs,
     generate_images_from_dicom.py:70-78). pixel[i] of patient p is
@@ -459,14 +458,15 @@ def stage_dicom_fixture_dir(n: int = 40, height: int = 16,
 
     from ..functions.codecs import encode_dicom_gray
 
-    d = pathlib.Path("/tmp/spark_graft_fixtures") / f"dicom_{n}_{height}x{width}"
+    side = FIXTURE_SIDE
+    d = pathlib.Path("/tmp/spark_graft_fixtures") / f"dicom_{n}_{side}x{side}"
     marker = d / ".complete"
     if not marker.exists():
         d.mkdir(parents=True, exist_ok=True)
-        npx = height * width
+        npx = side * side
         for pid in range(n):
             px = ((pid * 31 + np.arange(npx, dtype=np.int64) * 7) % 256)
-            arr = px.astype(np.uint8).reshape(height, width)
+            arr = px.astype(np.uint8).reshape(side, side)
             tmp = d / f".tmp_{pid:04d}"
             with open(tmp, "wb") as f:
                 f.write(encode_dicom_gray(arr))
@@ -839,13 +839,13 @@ def tile_patches(images: DataFrame, patch: int = 8) -> DataFrame:
     return images.mapInPandas(run, PATCH_SCHEMA)
 
 
-def dhash_images(images: DataFrame, hash_h: int = 8,
-                 hash_w: int = 8) -> DataFrame:
+def dhash_images(images: DataFrame) -> DataFrame:
     """Difference hash (dHash) per image: downsample to
-    ``hash_h × (hash_w+1)`` by index sampling (``yi = y*H // hash_h``,
-    ``xi = x*W // (hash_w+1)``), one bit per adjacent-column comparison
-    (left > right), row-major. Returned as a '0'/'1' string of
-    ``hash_h*hash_w`` chars — engine-portable, directly groupable.
+    ``DHASH_H × (DHASH_W+1)`` by index sampling
+    (``yi = y*H // DHASH_H``, ``xi = x*W // (DHASH_W+1)``), one bit per
+    adjacent-column comparison (left > right), row-major. Returned as a
+    '0'/'1' string of ``DHASH_H*DHASH_W`` chars — engine-portable,
+    directly groupable.
 
     This is the image-side near-dup key (X2×X7): invariant under
     brightness/contrast shifts that preserve pixel order, cheap enough
@@ -861,10 +861,10 @@ def dhash_images(images: DataFrame, hash_h: int = 8,
                 arr = np.frombuffer(r.pixels, dtype=np.dtype(r.dtype)).reshape(
                     r.height, r.width
                 )
-                yi = (np.arange(hash_h, dtype=np.int64) * r.height) // hash_h
+                yi = (np.arange(DHASH_H, dtype=np.int64) * r.height) // DHASH_H
                 xi = (
-                    np.arange(hash_w + 1, dtype=np.int64) * r.width
-                ) // (hash_w + 1)
+                    np.arange(DHASH_W + 1, dtype=np.int64) * r.width
+                ) // (DHASH_W + 1)
                 s = arr[np.ix_(yi, xi)].astype(np.int64)
                 bits = (s[:, :-1] > s[:, 1:]).astype(np.uint8).ravel()
                 out.append(
@@ -1025,17 +1025,14 @@ def hist_equalize_stats(images: DataFrame) -> DataFrame:
     )
 
 
-def audio_silence_gate(
-    clips: DataFrame,
-    frame: int = 256,
-    energy_threshold: int = 89_000_000,
-) -> DataFrame:
+def audio_silence_gate(clips: DataFrame) -> DataFrame:
     """VAD-style silence gate per clip — the audio-corpus quality
-    filter: frame the waveform (``audio_frame_features``'s framing),
-    call a frame "silent" when its integer energy Σs² falls below
-    ``energy_threshold``, and report per-clip frame counts plus the
-    silence ratio in ppm. Mostly-silent clips are dead weight in a
-    speech corpus; an all-silent clip is usually a decode failure.
+    filter: frame the waveform into 256-sample frames
+    (``audio_frame_features``'s framing), call a frame "silent" when
+    its integer energy Σs² falls below 89,000,000, and report per-clip
+    frame counts plus the silence ratio in ppm. Mostly-silent clips are
+    dead weight in a speech corpus; an all-silent clip is usually a
+    decode failure.
 
     Composition, not new kernel code: the Arrow-batched framing pass
     emits integer energies, and everything after is a JVM-side
@@ -1044,13 +1041,13 @@ def audio_silence_gate(
     and its scale shape (one mapInPandas pass, one
     map-side-combined groupBy(clip)).
     """
-    frames = audio_frame_features(clips, frame=frame)
+    frames = audio_frame_features(clips, frame=256)
     return (
         frames.groupBy("clip_id")
         .agg(
             F.count("*").cast("bigint").alias("n_frames"),
             F.sum(
-                (F.col("energy") < energy_threshold).cast("long")
+                (F.col("energy") < 89_000_000).cast("long")
             )
             .cast("bigint")
             .alias("n_silent"),
@@ -1065,14 +1062,13 @@ def audio_silence_gate(
     )
 
 
-def plant_watermark(images: DataFrame, every: int = 5, tile_row: int = 1,
-                    tile_col: int = 1, patch: int = 8,
-                    mod: int = 200) -> DataFrame:
-    """Overwrite one ``patch×patch`` tile of every ``every``-th image
-    with a FIXED pattern (w[i] = i·13 % mod) — the deterministic stand-
-    in for a corpus whose pages carry a shared logo/watermark. Pure
-    narrow Arrow work; the closed-form pattern keeps the corpus fully
-    SQL-rederivable (the multimodal oracle contract)."""
+def plant_watermark(images: DataFrame, every: int = 5) -> DataFrame:
+    """Overwrite the 8×8 tile at grid position (1, 1) of every
+    ``every``-th image with a FIXED pattern (w[i] = i·13 % 200) — the
+    deterministic stand-in for a corpus whose pages carry a shared
+    logo/watermark. Pure narrow Arrow work; the closed-form pattern
+    keeps the corpus fully SQL-rederivable (the multimodal oracle
+    contract)."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -1082,13 +1078,10 @@ def plant_watermark(images: DataFrame, every: int = 5, tile_row: int = 1,
                     r.pixels, dtype=np.dtype(r.dtype)
                 ).reshape(r.height, r.width).copy()
                 if r.img_id % every == 0:
-                    w = (
-                        np.arange(patch * patch, dtype=np.int64) * 13 % mod
-                    ).reshape(patch, patch).astype(px.dtype)
-                    px[
-                        tile_row * patch:(tile_row + 1) * patch,
-                        tile_col * patch:(tile_col + 1) * patch,
-                    ] = w
+                    w = (np.arange(64, dtype=np.int64) * 13 % 200).reshape(
+                        8, 8
+                    )
+                    px[8:16, 8:16] = w.astype(px.dtype)
                 out.append(
                     (r.img_id, px.tobytes(), r.dtype, r.height, r.width)
                 )
@@ -1099,8 +1092,7 @@ def plant_watermark(images: DataFrame, every: int = 5, tile_row: int = 1,
     return images.mapInPandas(run, PIXELS_SCHEMA)
 
 
-def patch_dhash(patches: DataFrame, hash_h: int = 8,
-                hash_w: int = 8) -> DataFrame:
+def patch_dhash(patches: DataFrame) -> DataFrame:
     """dHash per TILE, keyed by (img_id, patch_row, patch_col) — the
     region-level perceptual key behind watermark/logo detection: a
     patch hash repeating across many otherwise-distinct images at the
@@ -1115,10 +1107,10 @@ def patch_dhash(patches: DataFrame, hash_h: int = 8,
                 arr = np.frombuffer(
                     r.pixels, dtype=np.dtype(r.dtype)
                 ).reshape(r.height, r.width)
-                yi = (np.arange(hash_h, dtype=np.int64) * r.height) // hash_h
+                yi = (np.arange(DHASH_H, dtype=np.int64) * r.height) // DHASH_H
                 xi = (
-                    np.arange(hash_w + 1, dtype=np.int64) * r.width
-                ) // (hash_w + 1)
+                    np.arange(DHASH_W + 1, dtype=np.int64) * r.width
+                ) // (DHASH_W + 1)
                 s = arr[np.ix_(yi, xi)].astype(np.int64)
                 bits = (s[:, :-1] > s[:, 1:]).astype(np.uint8).ravel()
                 out.append(

@@ -12,6 +12,12 @@ from pyspark.sql import functions as F
 
 from ..lineage import lineage_cut
 
+KEY_COL = "user_id"
+ID_COL = "event_id"
+VALUE_COL = "value"
+SIZE_COL = "size_bytes"
+FILE_COL = "file_id"
+
 # ---------------------------------------------------------------------------
 # O9 — deterministic train/val split
 # ---------------------------------------------------------------------------
@@ -34,9 +40,7 @@ def _order_cols(order_col) -> list[str]:
     return list(order_col)
 
 
-def _ranked_by_mid(
-    df: DataFrame, order_col, partitions: int | None = None
-) -> DataFrame:
+def _ranked_by_mid(df: DataFrame, order_col) -> DataFrame:
     """Range-partition + local sort, with ``(_pid, _local_rn)`` derived
     from ``monotonically_increasing_id`` instead of a WindowExec.
 
@@ -55,10 +59,7 @@ def _ranked_by_mid(
     different boundaries per execution, which would silently misalign
     the offsets. ``order_col`` must be unique for a stable rank.
     """
-    n = int(
-        partitions
-        or df.sparkSession.conf.get("spark.sql.shuffle.partitions")
-    )
+    n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     cols = _order_cols(order_col)
     part = (
         df.repartitionByRange(n, *[F.col(c) for c in cols])
@@ -111,7 +112,7 @@ def _offset_col(offsets: dict[int, int]) -> Column:
 
 
 def global_row_number(
-    df: DataFrame, order_col, out_col: str = "rn", partitions: int | None = None
+    df: DataFrame, order_col, out_col: str = "rn"
 ) -> DataFrame:
     """Scalable deterministic global 1-based rank by ``order_col``.
 
@@ -132,7 +133,7 @@ def global_row_number(
     arithmetic key-packing, which silently corrupts on overflow); the
     key must be unique for a stable rank.
     """
-    ranked = _ranked_by_mid(df, order_col, partitions)
+    ranked = _ranked_by_mid(df, order_col)
     offsets, _ = _partition_offsets(ranked)
     return (
         ranked.withColumn(
@@ -749,20 +750,18 @@ def grouped_running_sums(
     )
 
 
-def kfold_assign(
-    df: DataFrame, key_col: str, k: int, salt: str = "cv"
-) -> DataFrame:
+def kfold_assign(df: DataFrame, key_col: str, k: int) -> DataFrame:
     """K-fold cross-validation fold assignment: a pure narrow
     transformation (no shuffle, no global state) that hashes the key to
     a fold in [0, k). It is stable under any
     repartitioning and any subset of the data — a key's fold never
     changes — which is what makes held-out folds trustworthy across
     pipeline re-runs. md5-derived (not xxhash) so the assignment is
-    bit-reproducible in any engine, and salted so independent CV
-    experiments decorrelate."""
+    bit-reproducible in any engine, and salted with 'cv' so folds are
+    independent of the other md5-keyed samplers."""
     h = F.conv(
         F.substring(
-            F.md5(F.concat_ws("|", F.lit(salt), F.col(key_col).cast("string"))),
+            F.md5(F.concat_ws("|", F.lit("cv"), F.col(key_col).cast("string"))),
             1, 8,
         ),
         16, 10,
@@ -862,13 +861,7 @@ def snapshot_diff(
     return joined.select(F.col(key), status.alias("diff_status"))
 
 
-def cogrouped_reconcile(
-    old: DataFrame,
-    new: DataFrame,
-    key: str = "user_id",
-    id_col: str = "event_id",
-    value_col: str = "value",
-) -> DataFrame:
+def cogrouped_reconcile(old: DataFrame, new: DataFrame) -> DataFrame:
     """Per-key snapshot reconciliation via ``cogroup().applyInPandas`` —
     the escape hatch for per-key logic joins can't express (custom
     matching, ordered merges, model scoring over both sides at once).
@@ -899,18 +892,16 @@ def cogrouped_reconcile(
 
     def reconcile(kdf_old: pd.DataFrame, kdf_new: pd.DataFrame) -> pd.DataFrame:
         ko = (
-            dict(zip(kdf_old[id_col], kdf_old[value_col]))
+            dict(zip(kdf_old[ID_COL], kdf_old[VALUE_COL]))
             if len(kdf_old)
             else {}
         )
         kn = (
-            dict(zip(kdf_new[id_col], kdf_new[value_col]))
+            dict(zip(kdf_new[ID_COL], kdf_new[VALUE_COL]))
             if len(kdf_new)
             else {}
         )
-        kval = (
-            kdf_old[key].iloc[0] if len(kdf_old) else kdf_new[key].iloc[0]
-        )
+        kval = (kdf_old if len(kdf_old) else kdf_new)[KEY_COL].iloc[0]
         common = ko.keys() & kn.keys()
         changed = sum(1 for i in common if ko[i] != kn[i])
         return pd.DataFrame(
@@ -923,15 +914,15 @@ def cogrouped_reconcile(
                     len(common) - changed,
                 )
             ],
-            columns=[key, "n_added", "n_removed", "n_changed", "n_same"],
+            columns=[KEY_COL, "n_added", "n_removed", "n_changed", "n_same"],
         )
 
     return (
-        old.groupBy(key)
-        .cogroup(new.groupBy(key))
+        old.groupBy(KEY_COL)
+        .cogroup(new.groupBy(KEY_COL))
         .applyInPandas(
             reconcile,
-            f"{key} long, n_added long, n_removed long, "
+            f"{KEY_COL} long, n_added long, n_removed long, "
             "n_changed long, n_same long",
         )
     )
@@ -942,7 +933,6 @@ def global_running_max_desc(
     order_col: str,
     val_col: str,
     out_col: str,
-    partitions: int | None = None,
 ) -> DataFrame:
     """Strict-predecessor running max over ``order_col`` DESCENDING,
     two-phase (no unpartitioned WindowExec): range-partition on the
@@ -957,9 +947,9 @@ def global_running_max_desc(
     per-partition maxima are two consumers of the range exchange, and
     re-executed boundary sampling must not diverge between them.
     """
-    n = partitions or df.sparkSession.conf.get("spark.sql.shuffle.partitions")
+    n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     part = (
-        df.repartitionByRange(int(n), F.col(order_col).desc())
+        df.repartitionByRange(n, F.col(order_col).desc())
         .sortWithinPartitions(F.col(order_col).desc())
         .withColumn("_pid", F.spark_partition_id())
         .transform(lineage_cut)
@@ -1019,10 +1009,9 @@ def stratified_sample(
     strata_col: str,
     key_col: str,
     fractions_ppm: dict[str, int],
-    salt: str = "strat",
 ) -> DataFrame:
     """Deterministic stratified sampling: keep a row iff
-    md5(salt|key) % 1e6 < fractions_ppm[stratum].
+    md5('strat'|key) % 1e6 < fractions_ppm[stratum].
 
     Unlike ``DataFrame.sampleBy`` (seeded Bernoulli per task — resample
     on every retry/repartition), this is a pure function of the KEY:
@@ -1039,7 +1028,7 @@ def stratified_sample(
     )
     h = F.conv(
         F.substring(
-            F.md5(F.concat_ws("|", F.lit(salt), F.col(key_col).cast("string"))),
+            F.md5(F.concat_ws("|", F.lit("strat"), F.col(key_col).cast("string"))),
             1, 8,
         ),
         16, 10,
@@ -1052,10 +1041,10 @@ def stratified_sample(
 
 
 def uniform_k_sample(
-    df: DataFrame, group_col: str, key_col: str, k: int, salt: str = "ks"
+    df: DataFrame, group_col: str, key_col: str, k: int
 ) -> DataFrame:
     """Fixed-SIZE deterministic uniform sample: the k members of each
-    group with the smallest md5(salt|key) — the hash order is a random
+    group with the smallest md5('ks'|key) — the hash order is a random
     permutation as far as any real attribute is concerned, so this is
     a uniform k-subset, yet fully reproducible (same members on every
     run/engine) and incremental-friendly: a member only leaves the
@@ -1069,7 +1058,7 @@ def uniform_k_sample(
     the standard sample-and-prune refinement; not needed at dim-sized
     group counts.
     """
-    h = F.md5(F.concat_ws("|", F.lit(salt), F.col(key_col).cast("string")))
+    h = F.md5(F.concat_ws("|", F.lit("ks"), F.col(key_col).cast("string")))
     w = Window.partitionBy(group_col).orderBy(h.asc())
     return (
         df.withColumn("_krn", F.row_number().over(w))
@@ -1084,11 +1073,10 @@ def weighted_k_sample(
     key_col: str,
     weight_col: str,
     k: int,
-    salt: str = "ws",
 ) -> DataFrame:
     """Fixed-size WEIGHTED sample without replacement per group — the
     Efraimidis-Spirakis A-Res scheme (2006): each row draws a
-    deterministic uniform u = md5-normalized(salt|key) and competes on
+    deterministic uniform u = md5-normalized('ws'|key) and competes on
     score ln(u)/w; the k largest scores per group are a weighted
     k-subset (inclusion probability proportional to weight, exactly the
     reservoir property A-Res proves). The quality-weighted document
@@ -1111,7 +1099,7 @@ def weighted_k_sample(
         F.conv(
             F.substring(
                 F.md5(
-                    F.concat_ws("|", F.lit(salt), F.col(key_col).cast("string"))
+                    F.concat_ws("|", F.lit("ws"), F.col(key_col).cast("string"))
                 ),
                 1,
                 12,
@@ -1531,8 +1519,6 @@ def blocked_levenshtein_join(
 
 def compaction_plan(
     files: DataFrame,
-    size_col: str = "size_bytes",
-    file_col: str = "file_id",
     target_bytes: int = 128 * 1024 * 1024,
 ) -> DataFrame:
     """Small-file compaction planning — the lakehouse maintenance job
@@ -1557,20 +1543,20 @@ def compaction_plan(
     (bin, n_files, total_bytes, min_file, max_file).
     """
     w = (
-        Window.orderBy(F.col(size_col).desc(), F.col(file_col))
+        Window.orderBy(F.col(SIZE_COL).desc(), F.col(FILE_COL))
         .rowsBetween(Window.unboundedPreceding, -1)
     )
-    before = F.coalesce(F.sum(size_col).over(w), F.lit(0))
+    before = F.coalesce(F.sum(SIZE_COL).over(w), F.lit(0))
     binned = files.select(
-        file_col,
-        size_col,
+        FILE_COL,
+        SIZE_COL,
         F.floor(before / F.lit(float(target_bytes))).cast("bigint").alias("bin"),
     )
     return binned.groupBy("bin").agg(
         F.count("*").alias("n_files"),
-        F.sum(size_col).alias("total_bytes"),
-        F.min(file_col).alias("min_file"),
-        F.max(file_col).alias("max_file"),
+        F.sum(SIZE_COL).alias("total_bytes"),
+        F.min(FILE_COL).alias("min_file"),
+        F.max(FILE_COL).alias("max_file"),
     )
 
 

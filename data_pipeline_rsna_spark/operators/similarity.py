@@ -25,6 +25,13 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+ID_COL = "vec_id"
+VEC_COL = "embedding"
+QUERY_ID_COL = "query_id"
+SRP_BITS = 4
+SRP_DIM = 64
+PQ_SUB_DIM = 16
+
 
 def dot(a: Column, b: Column) -> Column:
     """Σ aᵢ·bᵢ via zip_with+aggregate (sequential fold, bit-reproducible).
@@ -109,9 +116,6 @@ def cosine_topk(
     corpus: DataFrame,
     queries: DataFrame,
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
 ) -> DataFrame:
     """Exact top-k cosine neighbors for every query vector.
 
@@ -132,16 +136,16 @@ def cosine_topk(
         "(acc, v) -> acc + v)"
     )
     q = queries.selectExpr(
-        f"`{query_id_col}`",
-        f"cast(`{vec_col}` AS array<double>) AS _qe",
+        f"`{QUERY_ID_COL}`",
+        f"cast(`{VEC_COL}` AS array<double>) AS _qe",
     ).selectExpr(
-        f"`{query_id_col}`",
+        f"`{QUERY_ID_COL}`",
         "_qe",
         f"sqrt({_dot.format(a='_qe', b='_qe')}) AS _qn",
     )
     c = corpus.selectExpr(
-        f"`{id_col}` AS neighbor_id",
-        f"cast(`{vec_col}` AS array<double>) AS _ce",
+        f"`{ID_COL}` AS neighbor_id",
+        f"cast(`{VEC_COL}` AS array<double>) AS _ce",
     ).selectExpr(
         "neighbor_id",
         "_ce",
@@ -150,25 +154,25 @@ def cosine_topk(
     sims = (
         F.broadcast(q)
         .crossJoin(c)
-        .filter(F.col("neighbor_id") != F.col(query_id_col))
+        .filter(F.col("neighbor_id") != F.col(QUERY_ID_COL))
         .selectExpr(
-            f"`{query_id_col}`",
+            f"`{QUERY_ID_COL}`",
             "neighbor_id",
             f"round({_dot.format(a='_qe', b='_ce')} / (_qn * _cn), 6) "
             "AS cosine",
         )
     )
     reduced = partial_topk(
-        sims, k, group_col=query_id_col,
+        sims, k, group_col=QUERY_ID_COL,
         order_col="cosine", tiebreak_col="neighbor_id",
     )
-    w = Window.partitionBy(query_id_col).orderBy(
+    w = Window.partitionBy(QUERY_ID_COL).orderBy(
         F.col("cosine").desc(), F.col("neighbor_id")
     )
     return (
         reduced.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
-        .select(query_id_col, "neighbor_id", "rank", "cosine")
+        .select(QUERY_ID_COL, "neighbor_id", "rank", "cosine")
     )
 
 
@@ -176,9 +180,6 @@ def cosine_topk_blas(
     corpus: DataFrame,
     queries: DataFrame,
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
 ) -> DataFrame:
     """Exact top-k cosine neighbors — the SIMD scale path.
 
@@ -187,8 +188,8 @@ def cosine_topk_blas(
     loop is one ``mapInArrow`` pass that computes the whole query-batch
     × corpus-batch similarity block as a single numpy matmul
     (BLAS/SIMD) and folds a running top-k per query across the
-    partition's batches. Round 9: mapInArrow instead of mapInPandas —
-    the list<double> column flattens to ONE contiguous numpy buffer per
+    partition's batches. mapInArrow, not mapInPandas: the list<double>
+    column flattens to ONE contiguous numpy buffer per
     Arrow batch (zero object-per-row cost; the pandas path built a
     Python ndarray object per corpus row), measured 0.69 → 0.57 s on
     the 200k×64 sf10 corpus. One task emits ≤ k·|q| rows per
@@ -216,14 +217,14 @@ def cosine_topk_blas(
 
     q_rows = (
         queries.select(
-            F.col(query_id_col), as_double_array(vec_col).alias("_qe")
+            F.col(QUERY_ID_COL), as_double_array(VEC_COL).alias("_qe")
         )
         .collect()
     )
     if not q_rows:
         empty = corpus.sparkSession.createDataFrame(
             [],
-            schema=f"{query_id_col} long, neighbor_id long, "
+            schema=f"{QUERY_ID_COL} long, neighbor_id long, "
             "rank int, cosine double",
         )
         return empty
@@ -234,7 +235,7 @@ def cosine_topk_blas(
     import pyarrow as pa
 
     out_schema = (
-        f"{query_id_col} long, neighbor_id long, cosine double"
+        f"{QUERY_ID_COL} long, neighbor_id long, cosine double"
     )
 
     def _score(batches):
@@ -332,20 +333,20 @@ def cosine_topk_blas(
                         pa.float64(),
                     ),
                 ],
-                names=[query_id_col, "neighbor_id", "cosine"],
+                names=[QUERY_ID_COL, "neighbor_id", "cosine"],
             )
 
     scored = corpus.selectExpr(
-        f"cast(`{id_col}` AS bigint) AS neighbor_id",
-        f"`{vec_col}` AS _ce",  # no JVM-side cast: widen in numpy
+        f"cast(`{ID_COL}` AS bigint) AS neighbor_id",
+        f"`{VEC_COL}` AS _ce",  # no JVM-side cast: widen in numpy
     ).mapInArrow(_score, schema=out_schema)
-    w = Window.partitionBy(query_id_col).orderBy(
+    w = Window.partitionBy(QUERY_ID_COL).orderBy(
         F.col("cosine").desc(), F.col("neighbor_id")
     )
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
-        .select(query_id_col, "neighbor_id", "rank", "cosine")
+        .select(QUERY_ID_COL, "neighbor_id", "rank", "cosine")
     )
 
 
@@ -502,52 +503,50 @@ def srp_ivf_topk(
     queries: DataFrame,
     k: int = 10,
     nprobe: int = 4,
-    n_bits: int = 4,
-    dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
 ) -> DataFrame:
     """IVF top-k with the deterministic SRP coarse quantizer.
 
     Probe order is Hamming distance between the query's cell signature
-    and each of the 2**n_bits cells (ties by cell id) — the SRP analogue
+    and each of the 2**SRP_BITS cells (ties by cell id) — the SRP analogue
     of k-means' nearest-centroids probe: cells whose sign pattern agrees
     with the query's hold the geometrically close vectors. Within the
     probed cells the cosine is exact. At 100 TB the corpus is written
-    ``partitionBy("cell")`` so each probe prunes (2^n_bits - nprobe)/2^n_bits
-    of the files; the candidate join is cell-keyed, never a crossJoin.
+    ``partitionBy("cell")`` so each probe prunes
+    (2^SRP_BITS - nprobe)/2^SRP_BITS of the files; the candidate join is
+    cell-keyed, never a crossJoin.
     """
     spark = corpus.sparkSession
     assigned = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        as_double_array(vec_col).alias("_ce"),
+        F.col(ID_COL).alias("neighbor_id"),
+        as_double_array(VEC_COL).alias("_ce"),
     ).withColumn("_cn", l2_norm(F.col("_ce"))).withColumn(
-        "cell", srp_cell_col(F.col("_ce"), n_bits, dim)
+        "cell", srp_cell_col(F.col("_ce"), SRP_BITS, SRP_DIM)
     )
     q = queries.select(
-        query_id_col, as_double_array(vec_col).alias("_qe")
+        QUERY_ID_COL, as_double_array(VEC_COL).alias("_qe")
     ).withColumn("_qn", l2_norm(F.col("_qe"))).withColumn(
-        "qcell", srp_cell_col(F.col("_qe"), n_bits, dim)
+        "qcell", srp_cell_col(F.col("_qe"), SRP_BITS, SRP_DIM)
     )
-    cells = spark.range(1 << n_bits).select(F.col("id").cast("int").alias("cell"))
+    cells = spark.range(1 << SRP_BITS).select(
+        F.col("id").cast("int").alias("cell")
+    )
     probes = (
-        q.crossJoin(F.broadcast(cells))  # |q| * 2^n_bits rows — tiny
+        q.crossJoin(F.broadcast(cells))  # |q| * 2^SRP_BITS rows — tiny
         .withColumn("_hd", F.expr("bit_count(qcell ^ cell)"))
         .withColumn(
             "_pr",
             F.row_number().over(
-                Window.partitionBy(query_id_col).orderBy("_hd", "cell")
+                Window.partitionBy(QUERY_ID_COL).orderBy("_hd", "cell")
             ),
         )
         .filter(F.col("_pr") <= nprobe)
-        .select(query_id_col, "_qe", "_qn", "cell")
+        .select(QUERY_ID_COL, "_qe", "_qn", "cell")
     )
     sims = (
         probes.join(assigned, "cell")  # cell-pruned candidate join
-        .filter(F.col("neighbor_id") != F.col(query_id_col))
+        .filter(F.col("neighbor_id") != F.col(QUERY_ID_COL))
         .select(
-            query_id_col,
+            QUERY_ID_COL,
             "neighbor_id",
             F.round(
                 dot(F.col("_qe"), F.col("_ce")) / (F.col("_qn") * F.col("_cn")),
@@ -556,16 +555,16 @@ def srp_ivf_topk(
         )
     )
     reduced = partial_topk(
-        sims, k, group_col=query_id_col,
+        sims, k, group_col=QUERY_ID_COL,
         order_col="cosine", tiebreak_col="neighbor_id",
     )
-    w = Window.partitionBy(query_id_col).orderBy(
+    w = Window.partitionBy(QUERY_ID_COL).orderBy(
         F.col("cosine").desc(), F.col("neighbor_id")
     )
     return (
         reduced.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
-        .select(query_id_col, "neighbor_id", "rank", "cosine")
+        .select(QUERY_ID_COL, "neighbor_id", "rank", "cosine")
     )
 
 
@@ -683,8 +682,7 @@ def covariance_matrix(emb: DataFrame, id_col: str = "vec_id",
     return spark.createDataFrame(rows, "i long, j long, cov_val double")
 
 
-def standardize(emb: DataFrame, id_col: str = "vec_id",
-                vec_col: str = "embedding") -> DataFrame:
+def standardize(emb: DataFrame) -> DataFrame:
     """Apply per-dimension standardization z = (x − μ)/σ — the whitening
     APPLY step that pairs with ``dim_moments``. The d-row stats table is
     folded into two length-d arrays in ONE row, broadcast, and applied
@@ -699,7 +697,7 @@ def standardize(emb: DataFrame, id_col: str = "vec_id",
     of correctly-rounded IEEE ops — bit-identical everywhere.
 
     Returns (id, z: array<double>)."""
-    stats = dim_moments(emb, id_col, vec_col)
+    stats = dim_moments(emb, ID_COL, VEC_COL)
     packed = stats.agg(
         F.array_sort(
             F.collect_list(F.struct("dim", "mean_val", "var_val"))
@@ -711,11 +709,11 @@ def standardize(emb: DataFrame, id_col: str = "vec_id",
     )
     return (
         emb.selectExpr(
-            f"`{id_col}`", f"cast(`{vec_col}` AS array<double>) AS _e"
+            f"`{ID_COL}`", f"cast(`{VEC_COL}` AS array<double>) AS _e"
         )
         .crossJoin(F.broadcast(packed))
         .selectExpr(
-            f"`{id_col}`",
+            f"`{ID_COL}`",
             "zip_with(zip_with(_e, _means, (x, m) -> x - m), _stds, "
             "(c, s) -> c / s) AS z",
         )
@@ -723,8 +721,6 @@ def standardize(emb: DataFrame, id_col: str = "vec_id",
 
 
 def random_project(emb: DataFrame, out_dim: int, in_dim: int,
-                   id_col: str = "vec_id",
-                   vec_col: str = "embedding",
                    keep_vec: bool = False) -> DataFrame:
     """Johnson-Lindenstrauss dimensionality reduction by deterministic
     Rademacher projection: z_h = ⟨x, s_h⟩ / sqrt(out_dim) against the
@@ -751,12 +747,12 @@ def random_project(emb: DataFrame, out_dim: int, in_dim: int,
     )
     keep = ["_e AS x"] if keep_vec else []
     return emb.selectExpr(
-        f"`{id_col}`",
-        f"cast(`{vec_col}` AS array<double>) AS _e",
+        f"`{ID_COL}`",
+        f"cast(`{VEC_COL}` AS array<double>) AS _e",
     ).selectExpr(
-        f"`{id_col}`",
+        f"`{ID_COL}`",
         f"transform(array({rows}), s -> "
-        f"aggregate(zip_with(_e, s, (x, y) -> x * y), 0.0D, "
+        "aggregate(zip_with(_e, s, (x, y) -> x * y), 0.0D, "
         f"(acc, v) -> acc + v) * {scale!r}D) AS z",
         *keep,
     )
@@ -767,47 +763,39 @@ def random_project(emb: DataFrame, out_dim: int, in_dim: int,
 # ---------------------------------------------------------------------------
 
 
-def pq_sample_codebook(
-    corpus: DataFrame,
-    m_sub: int = 4,
-    k_cent: int = 8,
-    sub_dim: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    salt: str = "pqs",
-) -> list[list[list[int]]]:
-    """Deterministic sample-initialized PQ codebook: the ``k_cent``
-    corpus vectors smallest in md5('{salt}|'||id) order donate their
-    subvectors as centroids (exactly k-means' sample initialization —
-    data-distributed, so quantization residuals are corpus-scaled, not
-    hypercube-scaled).
+def pq_sample_codebook(corpus: DataFrame) -> list[list[list[int]]]:
+    """Deterministic sample-initialized PQ codebook: the 8 corpus
+    vectors smallest in md5('pqs|'||id) order donate their
+    ``PQ_SUB_DIM``-wide subvectors of 4 sub-spaces as centroids
+    (exactly k-means' sample initialization — data-distributed, so
+    quantization residuals are corpus-scaled, not hypercube-scaled).
 
     Everything stays engine-reproducible: sampling is an md5 order (a
     k-minimum-values draw, same idiom as ``uniform_k_sample``), and the
     milli-unit quantization (``cast(round(v*1000) AS bigint)``) runs in
     Spark itself — the collected codebook is the integer values every
     engine's round() produces. Returns ``cb[m][j][d]`` ints; the
-    collect is k_cent rows = metadata-sized.
+    collect is 8 rows = metadata-sized.
     """
     rows = (
         corpus.selectExpr(
-            f"`{id_col}` AS _id",
-            f"transform(cast(`{vec_col}` AS array<double>), "
+            f"`{ID_COL}` AS _id",
+            f"transform(cast(`{VEC_COL}` AS array<double>), "
             "v -> cast(round(v * 1000.0D) AS bigint)) AS _xi",
         )
         .orderBy(
-            F.md5(F.concat(F.lit(salt + "|"), F.col("_id").cast("string"))),
+            F.md5(F.concat(F.lit("pqs|"), F.col("_id").cast("string"))),
             F.col("_id"),
         )
-        .limit(k_cent)
+        .limit(8)
         .collect()
     )
     return [
         [
-            [int(r._xi[m * sub_dim + d]) for d in range(sub_dim)]
+            [int(r._xi[m * PQ_SUB_DIM + d]) for d in range(PQ_SUB_DIM)]
             for r in rows
         ]
-        for m in range(m_sub)
+        for m in range(4)
     ]
 
 
@@ -816,9 +804,6 @@ def pq_topk(
     queries: DataFrame,
     codebook: list[list[list[int]]],
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
 ) -> DataFrame:
     """Asymmetric-style PQ top-k search with an integer ADC pipeline
     (X3): each corpus vector is stored as M sub-space codes (argmin
@@ -850,7 +835,7 @@ def pq_topk(
     sub_dim = len(codebook[0][0])
 
     xi = (
-        f"transform(cast(`{vec_col}` AS array<double>), "
+        f"transform(cast(`{VEC_COL}` AS array<double>), "
         "v -> cast(round(v * 1000.0D) AS bigint))"
     )
 
@@ -870,7 +855,7 @@ def pq_topk(
     # corpus → per-subspace argmin code (ties → smaller centroid index:
     # array_position returns the FIRST match)
     docs = (
-        corpus.selectExpr(f"`{id_col}` AS neighbor_id", f"{xi} AS _xi")
+        corpus.selectExpr(f"`{ID_COL}` AS neighbor_id", f"{xi} AS _xi")
         .selectExpr(
             "neighbor_id",
             *[f"{dist_array(m)} AS _da{m}" for m in range(m_sub)],
@@ -888,9 +873,9 @@ def pq_topk(
     )
     # queries → full M×K distance table, carried as array<array<bigint>>
     q = queries.selectExpr(
-        f"`{query_id_col}`", f"{xi} AS _xi"
+        f"`{QUERY_ID_COL}`", f"{xi} AS _xi"
     ).selectExpr(
-        f"`{query_id_col}`",
+        f"`{QUERY_ID_COL}`",
         "array("
         + ", ".join(dist_array(m) for m in range(m_sub))
         + ") AS _qd",
@@ -898,9 +883,9 @@ def pq_topk(
     scored = (
         F.broadcast(q)
         .crossJoin(docs)
-        .filter(F.col("neighbor_id") != F.col(query_id_col))
+        .filter(F.col("neighbor_id") != F.col(QUERY_ID_COL))
         .selectExpr(
-            f"`{query_id_col}`",
+            f"`{QUERY_ID_COL}`",
             "neighbor_id",
             "aggregate(zip_with(_codes, _qd, "
             "(cd, row) -> element_at(row, cd + 1)), 0L, "
@@ -908,24 +893,20 @@ def pq_topk(
         )
     )
     reduced = partial_topk(
-        scored, k, group_col=query_id_col,
+        scored, k, group_col=QUERY_ID_COL,
         order_col="adc_dist", tiebreak_col="neighbor_id", ascending=True,
     )
-    w = Window.partitionBy(query_id_col).orderBy(
+    w = Window.partitionBy(QUERY_ID_COL).orderBy(
         F.col("adc_dist"), F.col("neighbor_id")
     )
     return (
         reduced.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
-        .select(query_id_col, "neighbor_id", "rank", "adc_dist")
+        .select(QUERY_ID_COL, "neighbor_id", "rank", "adc_dist")
     )
 
 
-def int8_quantization_stats(
-    emb: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def int8_quantization_stats(emb: DataFrame) -> DataFrame:
     """Per-dimension affine int8 quantization (min/max → 255 levels)
     with exact reconstruction-error accounting — the serving-side
     compression audit: before a corpus ships as int8, measure what the
@@ -945,7 +926,7 @@ def int8_quantization_stats(
     no UDF, no second shuffle. Returns (id, sum_abs_err_micro,
     max_err_micro).
     """
-    ve = f"cast(`{vec_col}` AS array<double>)"
+    ve = f"cast(`{VEC_COL}` AS array<double>)"
     dims = (
         emb.selectExpr(f"posexplode({ve}) AS (d, x)")
         .groupBy("d")
@@ -970,26 +951,21 @@ def int8_quantization_stats(
         "* 1000000.0D + 0.5D) AS BIGINT) ELSE 0L END"
     )
     return (
-        emb.selectExpr(f"`{id_col}`", f"{ve} AS _e")
+        emb.selectExpr(f"`{ID_COL}`", f"{ve} AS _e")
         .crossJoin(F.broadcast(rng))
         .selectExpr(
-            f"`{id_col}`",
+            f"`{ID_COL}`",
             f"transform(_e, (x, i) -> {err_el}) AS _errs",
         )
         .selectExpr(
-            f"`{id_col}`",
+            f"`{ID_COL}`",
             "aggregate(_errs, 0L, (a, v) -> a + v) AS sum_abs_err_micro",
             "array_max(_errs) AS max_err_micro",
         )
     )
 
 
-def centered_norm_outliers(
-    emb: DataFrame,
-    top_n: int = 20,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def centered_norm_outliers(emb: DataFrame, top_n: int = 20) -> DataFrame:
     """Embedding outlier scan: the ``top_n`` vectors farthest from the
     corpus centroid, by squared distance — the cheap gate that catches
     corrupt rows (all-zero vectors, NaN-scrubbed junk, off-manifold
@@ -1011,8 +987,8 @@ def centered_norm_outliers(
     any scale are the two d-bounded aggregations.
     """
     v = emb.selectExpr(
-        f"`{id_col}` AS vec_id",
-        f"transform(cast(`{vec_col}` AS array<double>), "
+        f"`{ID_COL}` AS vec_id",
+        f"transform(cast(`{VEC_COL}` AS array<double>), "
         "x -> CAST(round(x * 1000000) AS BIGINT)) AS _m",
     )
     dim_sums = (
@@ -1045,9 +1021,7 @@ def centered_norm_outliers(
     )
 
 
-def pca_top_component(emb: DataFrame, id_col: str = "vec_id",
-                      vec_col: str = "embedding",
-                      iterations: int = 15) -> DataFrame:
+def pca_top_component(emb: DataFrame) -> DataFrame:
     """Top principal component of the embedding corpus by power
     iteration on the d×d covariance matrix — distributed where the data
     is, exact where the math is.
@@ -1064,7 +1038,7 @@ def pca_top_component(emb: DataFrame, id_col: str = "vec_id",
     re-anchors both engines to the same grid every iteration, so a SQL
     twin replaying the identical recurrence (recursive CTE) reproduces
     the trajectory bit-for-bit instead of drifting on summation order.
-    After ``iterations`` rounds (fixed — past convergence the step is
+    After 15 rounds (fixed — past convergence the step is
     identity on the 9-decimal grid), the reported loading is the
     L2-normalized vector (6 decimals) and the eigenvalue the Rayleigh
     quotient (6 decimals). Returns (dim, loading, eigval) ordered by
@@ -1072,14 +1046,14 @@ def pca_top_component(emb: DataFrame, id_col: str = "vec_id",
     import numpy as np
 
     spark = emb.sparkSession
-    cov_rows = covariance_matrix(emb, id_col, vec_col).collect()
+    cov_rows = covariance_matrix(emb, ID_COL, VEC_COL).collect()
     d = max(r["j"] for r in cov_rows) + 1
     C = np.zeros((d, d))
     for r in cov_rows:
         C[r["i"], r["j"]] = r["cov_val"]
         C[r["j"], r["i"]] = r["cov_val"]
     v = np.full(d, round(1.0 / d, 9))
-    for _ in range(iterations):
+    for _ in range(15):
         u = C @ v
         v = np.round(u / np.abs(u).sum(), 9)
     l2 = float(np.sqrt((v * v).sum()))
@@ -1094,12 +1068,7 @@ def pca_top_component(emb: DataFrame, id_col: str = "vec_id",
     )
 
 
-def centroid_drift(
-    emb: DataFrame,
-    split_pred: str,
-    label_col: str = "label",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def centroid_drift(emb: DataFrame, split_pred: str) -> DataFrame:
     """Per-label embedding-centroid drift between two populations (e.g.
     training snapshot vs serving window, selected by ``split_pred``):
     the embedding-space counterpart of the scalar drift family — a
@@ -1114,7 +1083,7 @@ def centroid_drift(
     is an exact decimal(38,0); only the display column
     (l2_micro = 1e6·√num/(n₁·n₂·1e6)) touches floats.
 
-    EXACTNESS CEILING (round-7 correction): the squared cross-product
+    EXACTNESS CEILING: the squared cross-product
     term bounds to 4·(n₁·n₂·qmax)², qmax = 1e6·max|component|, so
     decimal(38,0) holds only while n₁·n₂·qmax ≤ ~1.5e18 — about
     2×10⁶ unit-norm vectors PER LABEL per side (ANSI mode raises on
@@ -1132,9 +1101,9 @@ def centroid_drift(
     different alert (category novelty), not a drift distance.
     """
     sides = emb.selectExpr(
-        f"`{label_col}` AS label",
+        "`label` AS label",
         f"CAST(({split_pred}) AS BOOLEAN) AS _s1",
-        f"cast(`{vec_col}` AS array<double>) AS _e",
+        f"cast(`{VEC_COL}` AS array<double>) AS _e",
     ).selectExpr(
         "label",
         "_s1",

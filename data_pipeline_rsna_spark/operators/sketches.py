@@ -32,6 +32,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+CMS_SALT = "cms"
+
 HLL_M = 256
 HLL_ALPHA = 0.7182725932495458  # 0.7213/(1 + 1.079/256), exact double literal
 HLL_RHO_CAP = 48  # clamp so 2^(48-rho) unit terms stay integer-exact in bigint
@@ -104,11 +106,9 @@ def hll_estimate(registers: DataFrame) -> DataFrame:
     )
 
 
-def hll_distinct(
-    df: DataFrame, group_col: str, key_col: str, salt: str = "hll"
-) -> DataFrame:
+def hll_distinct(df: DataFrame, group_col: str, key_col: str) -> DataFrame:
     """groupBy(group).approxDistinct(key) as an HLL register pipeline."""
-    return hll_estimate(hll_registers(df, group_col, key_col, salt))
+    return hll_estimate(hll_registers(df, group_col, key_col, "hll"))
 
 
 # ---------------------------------------------------------------------------
@@ -133,20 +133,20 @@ def _cms_cols(key: F.Column, salt: str) -> F.Column:
     )
 
 
-def cms_registers(df: DataFrame, key_col: str, salt: str = "cms") -> DataFrame:
+def cms_registers(df: DataFrame, key_col: str) -> DataFrame:
     """Count-Min register table (row, col, cnt): every input row
     increments one cell per hash row. depth×width cells total — the
     groupBy's map-side partial sum merges per-partition sketches, so the
     shuffle is O(depth·width) regardless of input size."""
     return (
-        df.select(F.explode(_cms_cols(F.col(key_col), salt)).alias("rc"))
+        df.select(F.explode(_cms_cols(F.col(key_col), CMS_SALT)).alias("rc"))
         .groupBy(F.col("rc.row").alias("row"), F.col("rc.col").alias("col"))
         .agg(F.count("*").alias("cnt"))
     )
 
 
 def cms_estimate(
-    registers: DataFrame, keys: DataFrame, key_col: str, salt: str = "cms"
+    registers: DataFrame, keys: DataFrame, key_col: str
 ) -> DataFrame:
     """Point-query the sketch for each key in ``keys``: the min over
     hash rows of the addressed cells (classic CMS upper bound —
@@ -154,7 +154,7 @@ def cms_estimate(
     table is sketch-sized, so the probe join broadcasts."""
     probes = keys.select(
         F.col(key_col).alias("key"),
-        F.explode(_cms_cols(F.col(key_col), salt)).alias("rc"),
+        F.explode(_cms_cols(F.col(key_col), CMS_SALT)).alias("rc"),
     ).select("key", F.col("rc.row").alias("row"), F.col("rc.col").alias("col"))
     return (
         probes.join(F.broadcast(registers), ["row", "col"])

@@ -29,13 +29,7 @@ from pyspark.sql import functions as F
 from ..lineage import lineage_cut
 
 
-def synth_points(
-    df: DataFrame,
-    key_col: str,
-    extent: int = 100_000,
-    salt_x: str = "px",
-    salt_y: str = "py",
-) -> DataFrame:
+def synth_points(df: DataFrame, key_col: str) -> DataFrame:
     """Deterministic synthetic integer points from a key column — the
     testdata has no geo columns, so geometry is derived (md5-uniform,
     bit-reproducible in any engine) rather than invented row-by-row."""
@@ -43,11 +37,13 @@ def synth_points(
     def coord(salt: str) -> F.Column:
         h = F.md5(F.concat_ws("|", F.lit(salt), F.col(key_col).cast("string")))
         return (
-            F.conv(F.substring(h, 1, 8), 16, 10).cast("bigint") % extent
+            F.conv(F.substring(h, 1, 8), 16, 10).cast("bigint") % 100_000
         ).alias(salt)
 
     return df.select(
-        F.col(key_col).alias("id"), coord(salt_x).alias("x"), coord(salt_y).alias("y")
+        F.col(key_col).alias("id"),
+        coord("px").alias("x"),
+        coord("py").alias("y"),
     )
 
 
@@ -166,7 +162,6 @@ def _grid_best(probes_src: DataFrame, owners_src: DataFrame,
 
 
 def nearest_neighbor(points: DataFrame, cell: int | None = None,
-                     max_rounds: int = 4,
                      diagnostics: dict | None = None) -> DataFrame:
     """EXACT 1-nearest-neighbor for every point: (id, nn_id, dist_sq),
     ties broken toward the smallest neighbor id. ``cell=None`` (the
@@ -181,9 +176,9 @@ def nearest_neighbor(points: DataFrame, cell: int | None = None,
        dist_sq is at least (cell+1)² > cell². A candidate with
        dist_sq <= cell² is therefore the certified global NN — no tie
        with an outside point is even possible.
-    2. Escalation (round 9, the adversarial-density guard): points the
-       grid could not certify re-probe with the cell edge ×8 per
-       round, up to ``max_rounds`` rounds. On a corpus where most
+    2. Escalation (the adversarial-density guard): points the grid
+       could not certify re-probe with the cell edge ×8 per round, up
+       to 4 rounds. On a corpus where most
        neighborhoods are empty (sparse halo around a dense core — the
        shape that makes auto_cell's uniform-density estimate wrong),
        each escalation multiplies the certified radius 8×, so the
@@ -194,8 +189,8 @@ def nearest_neighbor(points: DataFrame, cell: int | None = None,
     3. Fallback tier: whatever survives every escalation gets the
        exact brute-force pass. BOUND (documented contract, asserted in
        test_spatial): the broadcast side is at most the points whose
-       true NN distance exceeds cell·8^(max_rounds−1) — with the
-       default auto_cell and 4 rounds that is ~512 domain-sides/√n,
+       true NN distance exceeds cell·8^3 — with the default
+       auto_cell that is ~512 domain-sides/√n,
        i.e. at most a handful of pathological outliers on ANY
        distribution, never a constant fraction of n. The nested-loop
        join is |unresolved| × n with |unresolved| tiny; correctness
@@ -220,15 +215,14 @@ def nearest_neighbor(points: DataFrame, cell: int | None = None,
     remaining = points
     rounds_log: list[int] = []
     n_rem = points.count()  # one metadata agg to seed the round ledger
-    for rnd in range(max(1, max_rounds)):
+    for rnd in range(4):
         # lineage_cut (eager): ONE job runs this round's grid join and
         # pins its per-probe best rows; `resolved`, the next round's
         # anti-join, and the final union all read those blocks instead
-        # of re-running the join lineage. (Pre-r10 the per-round
-        # remaining.count() re-executed every prior round's grid join,
-        # the common fully-resolved-in-round-1 case computed the grid
-        # join twice more at evaluation, and pathological inputs paid
-        # O(rounds²) joins.) Blocks are sliver-sized — ≤ |remaining|
+        # of re-running the join lineage (without the cut, a per-round
+        # remaining.count() would re-execute every prior round's grid
+        # join, and pathological inputs would pay O(rounds²) joins).
+        # Blocks are sliver-sized — ≤ |remaining|
         # rows of (id, dist_sq, id) — shrink geometrically per round,
         # and die with the returned plan; nothing enters the session
         # cache manager.

@@ -32,6 +32,8 @@ from ..lineage import lineage_cut
 
 from .relational import grouped_running_sum
 
+VALUE_COL = "value"
+
 # Truncated-Poisson(1) CDF thresholds in 2^28 units (the range of a
 # 7-hex md5 slice): P(X=k) = e^-1/k! for k<4, remainder mass on k=4.
 # Decimal-derived, exactly rounded; shared verbatim by the Spark CASE
@@ -68,10 +70,9 @@ def ks_two_sample(
     group_col: str,
     group_a: str,
     group_b: str,
-    value_col: str = "value",
 ) -> DataFrame:
     """Exact two-sample Kolmogorov–Smirnov statistic between the
-    ``value_col`` distributions of two populations.
+    ``value`` distributions of two populations.
 
     D = max_v |F_a(v) − F_b(v)| is computed without a single float:
     per distinct cents value, the count difference is cross-multiplied
@@ -87,7 +88,7 @@ def ks_two_sample(
     never a single-task window) over the |distinct values| count table.
     """
     v = df.filter(F.col(group_col).isin(group_a, group_b)).select(
-        cents(value_col).alias("cents"),
+        cents(VALUE_COL).alias("cents"),
         (F.col(group_col) == group_a).cast("long").alias("_a"),
         (F.col(group_col) == group_b).cast("long").alias("_b"),
     )
@@ -127,7 +128,6 @@ def psi_buckets(
     group_col: str,
     group_a: str,
     group_b: str,
-    value_col: str = "value",
     n_buckets: int = 10,
 ) -> DataFrame:
     """Population Stability Index contributions over equal-width value
@@ -154,7 +154,7 @@ def psi_buckets(
     them via aggregate pushdown).
     """
     v = df.filter(F.col(group_col).isin(group_a, group_b)).select(
-        cents(value_col).alias("cents"),
+        cents(VALUE_COL).alias("cents"),
         (F.col(group_col) == group_a).cast("long").alias("_a"),
         (F.col(group_col) == group_b).cast("long").alias("_b"),
     )
@@ -601,19 +601,15 @@ def _bootstrap_means_arrow(
     )
 
 
-def seasonal_anomalies(
-    events: DataFrame,
-    value_col: str = "value",
-    k_mads: int = 3,
-) -> DataFrame:
+def seasonal_anomalies(events: DataFrame) -> DataFrame:
     """Seasonal robust-outlier counts: per (event_type, hour-of-day)
     median/MAD baseline, then count the rows where
-    |x − median| > k·MAD — the "is this hour's traffic shaped like this
+    |x − median| > 3·MAD — the "is this hour's traffic shaped like this
     hour usually is" monitor, robust to the outliers it hunts.
 
     Exactness: medians in doubled cents (``2·median`` is integral for
     both parities), MAD in quadrupled cents, and the flag compares
-    ``2·|2x − med2| > k·mad4`` — all integers, no float thresholds.
+    ``2·|2x − med2| > 3·mad4`` — all integers, no float thresholds.
     Same co-partitioned two-pass shape as ``events_median_mad``: the
     (type, hour) clustering is established once and both the baseline
     aggregation and the flag re-aggregation ride it.
@@ -621,7 +617,7 @@ def seasonal_anomalies(
     v = events.select(
         "event_type",
         F.hour("ts").alias("hod"),
-        cents(value_col).alias("c"),
+        cents(VALUE_COL).alias("c"),
     )
     base = v.groupBy("event_type", "hod").agg(
         F.expr("CAST(2 * percentile(c, 0.5) AS BIGINT)").alias("med2")
@@ -643,7 +639,7 @@ def seasonal_anomalies(
             F.sum(
                 (
                     2 * F.abs(2 * F.col("c") - F.col("med2"))
-                    > k_mads * F.col("mad4")
+                    > 3 * F.col("mad4")
                 ).cast("long")
             ).alias("n_anomalies"),
         )
@@ -717,7 +713,6 @@ def wasserstein_1d(
     group_col: str,
     group_a: str,
     group_b: str,
-    value_col: str = "value",
     partitions: int | None = None,
 ) -> DataFrame:
     """Exact 1-D Wasserstein (earth mover's) distance between two
@@ -737,7 +732,7 @@ def wasserstein_1d(
     unpartitioned window at any scale.
     """
     v = df.filter(F.col(group_col).isin(group_a, group_b)).select(
-        cents(value_col).alias("cents"),
+        cents(VALUE_COL).alias("cents"),
         (F.col(group_col) == group_a).cast("long").alias("_a"),
         (F.col(group_col) == group_b).cast("long").alias("_b"),
     )
@@ -909,7 +904,6 @@ def ks_two_sample_by_group(
     group_col: str,
     group_a: str,
     group_b: str,
-    value_col: str = "value",
 ) -> DataFrame:
     """Per-segment exact KS — ``ks_two_sample`` computed independently
     for every value of ``seg_col`` in ONE pass: the drift gate sliced
@@ -924,7 +918,7 @@ def ks_two_sample_by_group(
     """
     v = df.filter(F.col(group_col).isin(group_a, group_b)).select(
         F.col(seg_col).alias("seg"),
-        cents(value_col).alias("cents"),
+        cents(VALUE_COL).alias("cents"),
         (F.col(group_col) == group_a).cast("long").alias("_a"),
         (F.col(group_col) == group_b).cast("long").alias("_b"),
     )
@@ -1386,8 +1380,6 @@ def split_conformal_interval(
     group_col: str,
     value_col: str,
     cal_pred: str,
-    alpha_num: int = 1,
-    alpha_den: int = 10,
 ) -> DataFrame:
     """Split conformal prediction (Vovk et al.; Lei et al. 2018): fit a
     point model on the calibration slice, take the ceil((n+1)(1-α))-th
@@ -1401,7 +1393,7 @@ def split_conformal_interval(
     cents) per ``group_col``, trained on rows where ``cal_pred`` holds;
     residuals are exact |v·1e6 − mean_micro| integers, the rank index
     k = ceil((1-α)(n+1)) is computed in pure integer arithmetic
-    (``((aden-anum)(n+1) + aden-1) DIV aden``, clamped to n), and the
+    (``(9(n+1) + 9) DIV 10`` for α = 1/10, clamped to n), and the
     k-th smallest residual comes from the histogram order-statistic
     (``relational.exact_rank_statistic`` — narrow metadata-sized jobs,
     never a global sort). Coverage ships in ppm.
@@ -1435,10 +1427,8 @@ def split_conformal_interval(
         "_is_cal",
         "CAST(abs(_v * 1000000 - _mean_micro) AS BIGINT) AS r",
     )
-    keep = alpha_den - alpha_num
-
     def _k(n: int) -> int:
-        return min((keep * (n + 1) + alpha_den - 1) // alpha_den, n)
+        return min((9 * (n + 1) + 9) // 10, n)
 
     n_cal, q = exact_rank_statistic(resid.filter("_is_cal"), "r", _k)
     return resid.filter("NOT _is_cal").agg(
@@ -1457,7 +1447,6 @@ def neyman_allocation(
     df: DataFrame,
     stratum_col: str,
     value_col: str,
-    sample_n: int = 1000,
 ) -> DataFrame:
     """Neyman-optimal stratified sample allocation: n_h ∝ N_h·σ_h —
     the allocation minimizing the variance of the stratified mean
@@ -1476,7 +1465,7 @@ def neyman_allocation(
 
     One map-side-combined shuffle on the stratum key plus a broadcast
     1-row total. Returns (stratum, n_rows, w_micro, alloc_ppm,
-    alloc_n) — alloc_n out of ``sample_n``, largest-remainder NOT
+    alloc_n) — alloc_n out of 1000, largest-remainder NOT
     applied (truncation may undershoot by ≤ #strata; callers that need
     the exact budget add the remainder to the largest stratum).
     """
@@ -1507,7 +1496,7 @@ def neyman_allocation(
     # weights pass ~9e12 (a few TB of cents²). Integral `div`, not
     # floor(/): Spark decimal division rounds HALF_UP at the result
     # scale before a floor(), diverging from DuckDB's truncating //
-    # within 5e-7 of an integer (r12 fix)
+    # within 5e-7 of an integer
     return per.crossJoin(F.broadcast(total)).selectExpr(
         "stratum",
         "n_rows",
@@ -1515,7 +1504,7 @@ def neyman_allocation(
         # all-constant strata -> total weight 0 -> NULL allocation
         "CAST((CAST(w_micro AS DECIMAL(38,0)) * 1000000) div "
         "nullif(_t, 0) AS BIGINT) AS alloc_ppm",
-        f"CAST((CAST(w_micro AS DECIMAL(38,0)) * {sample_n}) div "
+        "CAST((CAST(w_micro AS DECIMAL(38,0)) * 1000) div "
         "nullif(_t, 0) AS BIGINT) AS alloc_n",
     )
 

@@ -26,15 +26,16 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+TS_COL = "ts"
+START_COL = "start"
+END_COL = "end"
+
 
 def asof_join(
     left: DataFrame,
     right: DataFrame,
     key: str,
-    left_ts: str = "ts",
-    right_ts: str = "ts",
     value_cols: list[str] | None = None,
-    suffix: str = "_asof",
     tolerance_seconds: int | None = None,
 ) -> DataFrame:
     """Left as-of join: latest right values with right.ts <= left.ts.
@@ -60,17 +61,17 @@ def asof_join(
     past the freshness check.
     """
     value_cols = value_cols or [
-        c for c in right.columns if c not in (key, right_ts)
+        c for c in right.columns if c not in (key, TS_COL)
     ]
     lcols = [c for c in left.columns]
     l_tagged = left.select(
         F.col(key).alias("_k"),
-        F.col(left_ts).alias("_ts"),
+        F.col(TS_COL).alias("_ts"),
         F.lit(1).alias("_is_left"),
         F.struct(*lcols).alias("_lrow"),
         F.lit(None).cast(
             "struct<" + ",".join(
-                [f"_ts:{right.schema[right_ts].dataType.simpleString()}"]
+                [f"_ts:{right.schema[TS_COL].dataType.simpleString()}"]
                 + [
                     f"{c}:{right.schema[c].dataType.simpleString()}"
                     for c in value_cols
@@ -80,13 +81,13 @@ def asof_join(
     )
     r_tagged = right.select(
         F.col(key).alias("_k"),
-        F.col(right_ts).alias("_ts"),
+        F.col(TS_COL).alias("_ts"),
         F.lit(0).alias("_is_left"),
         F.lit(None).cast(
             l_tagged.schema["_lrow"].dataType
         ).alias("_lrow"),
         F.struct(
-            F.col(right_ts).alias("_ts"),
+            F.col(TS_COL).alias("_ts"),
             *[F.col(c) for c in value_cols],
         ).alias("_rrow"),
     )
@@ -114,7 +115,7 @@ def asof_join(
     return filled.filter(F.col("_is_left") == 1).select(
         *[F.col(f"_lrow.{c}").alias(c) for c in lcols],
         *[
-            F.when(fresh, F.col(f"_rrow.{c}")).alias(f"{c}{suffix}")
+            F.when(fresh, F.col(f"_rrow.{c}")).alias(f"{c}_asof")
             for c in value_cols
         ],
     )
@@ -124,9 +125,6 @@ def range_join_bucketed(
     points: DataFrame,
     intervals: DataFrame,
     key: str,
-    point_ts: str = "ts",
-    start_col: str = "start",
-    end_col: str = "end",
     bucket_seconds: int = 3600,
 ) -> DataFrame:
     """Inner join of points into half-open intervals [start, end) that
@@ -137,18 +135,18 @@ def range_join_bucketed(
     Choose ``bucket_seconds`` near the typical interval span: fan-out
     per interval is ceil(span/bucket)+1 rows.
     """
-    p_bucket = (F.unix_timestamp(F.col(point_ts)) / bucket_seconds).cast("long")
+    p_bucket = (F.unix_timestamp(F.col(TS_COL)) / bucket_seconds).cast("long")
     p = points.withColumn("_bucket", p_bucket)
-    s = (F.unix_timestamp(F.col(start_col)) / bucket_seconds).cast("long")
-    e = (F.unix_timestamp(F.col(end_col)) / bucket_seconds).cast("long")
+    s = (F.unix_timestamp(F.col(START_COL)) / bucket_seconds).cast("long")
+    e = (F.unix_timestamp(F.col(END_COL)) / bucket_seconds).cast("long")
     iv = intervals.withColumn(
         "_bucket", F.explode(F.sequence(s, e))
     )
     cond = (
         (F.col(f"p.{key}") == F.col(f"i.{key}"))
-        & (F.col(f"p._bucket") == F.col(f"i._bucket"))
-        & (F.col(f"p.{point_ts}") >= F.col(f"i.{start_col}"))
-        & (F.col(f"p.{point_ts}") < F.col(f"i.{end_col}"))
+        & (F.col("p._bucket") == F.col("i._bucket"))
+        & (F.col(f"p.{TS_COL}") >= F.col(f"i.{START_COL}"))
+        & (F.col(f"p.{TS_COL}") < F.col(f"i.{END_COL}"))
     )
     out_cols = [F.col(f"p.{c}") for c in points.columns] + [
         F.col(f"i.{c}") for c in intervals.columns if c != key

@@ -13,6 +13,15 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+TEXT_COL = "text"
+ID_COL = "doc_id"
+LANG_COL = "lang"
+BM25_K1 = 1.2
+BM25_B = 0.75
+NB_TRAIN_MOD = 5
+NB_TRAIN_LT = 4
+DSIR_BUCKETS = 256
+
 # A BPE-ish pre-tokenization: letter runs, digit runs, single punctuation.
 BPE_ISH_PATTERN = r"[a-z]+|[0-9]+|[^a-z0-9\s]"
 
@@ -46,8 +55,8 @@ def bpe_ish_token_count(text_col: str = "text") -> Column:
     )
 
 
-def avg_token_length(text_col: str = "text") -> Column:
-    ws = whitespace_tokens(text_col)
+def avg_token_length() -> Column:
+    ws = whitespace_tokens(TEXT_COL)
     total = F.aggregate(
         F.transform(ws, F.length), F.lit(0), lambda acc, x: acc + x
     )
@@ -109,8 +118,7 @@ def min_shingle_fingerprint(text_col: str = "text", n: int = 3) -> Column:
     )
 
 
-def tfidf_top_terms(docs, id_col: str = "doc_id", text_col: str = "text",
-                    k: int = 3):
+def tfidf_top_terms(docs, k: int = 3):
     """X4: top-k distinguishing terms per document by TF-IDF.
 
     tf = in-document term count; idf = ln(N / df) over distinct-document
@@ -122,11 +130,11 @@ def tfidf_top_terms(docs, id_col: str = "doc_id", text_col: str = "text",
     from pyspark.sql import Window
 
     tokens = docs.select(
-        id_col, F.explode(whitespace_tokens(text_col)).alias("term")
+        ID_COL, F.explode(whitespace_tokens(TEXT_COL)).alias("term")
     ).filter(F.col("term") != "")
     n_docs = docs.count()  # dimension-sized driver scalar (job metadata)
-    tf = tokens.groupBy(id_col, "term").agg(F.count("*").alias("tf"))
-    df_ = tokens.select(id_col, "term").distinct().groupBy("term").agg(
+    tf = tokens.groupBy(ID_COL, "term").agg(F.count("*").alias("tf"))
+    df_ = tokens.select(ID_COL, "term").distinct().groupBy("term").agg(
         F.count("*").alias("df")
     )
     idf = df_.select(
@@ -134,22 +142,21 @@ def tfidf_top_terms(docs, id_col: str = "doc_id", text_col: str = "text",
         F.round(F.log(F.lit(float(n_docs)) / F.col("df")), 6).alias("idf"),
     )
     scored = tf.join(F.broadcast(idf), "term").select(
-        id_col,
+        ID_COL,
         "term",
         F.round(F.col("tf") * F.col("idf"), 6).alias("tfidf"),
     )
-    w = Window.partitionBy(id_col).orderBy(
+    w = Window.partitionBy(ID_COL).orderBy(
         F.col("tfidf").desc(), F.col("term")
     )
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
-        .select(id_col, "rank", "term", "tfidf")
+        .select(ID_COL, "rank", "term", "tfidf")
     )
 
 
-def pack_sequences(docs, capacity: int = 2048, n_shards: int = 32,
-                   id_col: str = "doc_id", text_col: str = "text"):
+def pack_sequences(docs, capacity: int = 2048, n_shards: int = 32):
     """Sequence packing for training-data assembly: assign documents to
     fixed-capacity token bins ("which context window does this document
     ride in").
@@ -166,27 +173,21 @@ def pack_sequences(docs, capacity: int = 2048, n_shards: int = 32,
     from pyspark.sql import Window
 
     toks = docs.select(
-        id_col,
-        (F.col(id_col) % n_shards).alias("shard"),
-        ws_token_count(text_col).alias("n_tokens"),
+        ID_COL,
+        (F.col(ID_COL) % n_shards).alias("shard"),
+        ws_token_count(TEXT_COL).alias("n_tokens"),
     )
-    w = Window.partitionBy("shard").orderBy(id_col)
+    w = Window.partitionBy("shard").orderBy(ID_COL)
     cum = F.sum("n_tokens").over(w)
     return toks.select(
-        id_col,
+        ID_COL,
         "shard",
         "n_tokens",
         F.floor((cum - F.col("n_tokens")) / capacity).cast("int").alias("bin"),
     )
 
 
-def token_budget_sample(
-    docs: DataFrame,
-    budget_tokens: int,
-    lang_col: str = "lang",
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def token_budget_sample(docs: DataFrame, budget_tokens: int) -> DataFrame:
     """Per-language token-budget quota sampling: take documents in a
     seeded-shuffle priority order (md5 of the id — uniform, deterministic,
     bit-identical across engines) until each language's cumulative token
@@ -201,12 +202,12 @@ def token_budget_sample(
     """
     from . import relational as rel
 
-    pri = F.concat(F.md5(F.col(id_col).cast("string")),
-                   F.col(id_col).cast("string"))
+    pri = F.concat(F.md5(F.col(ID_COL).cast("string")),
+                   F.col(ID_COL).cast("string"))
     toks = docs.select(
-        F.col(lang_col).alias("lang"),
-        F.col(id_col),
-        ws_token_count(text_col).cast("bigint").alias("n_tokens"),
+        F.col(LANG_COL).alias("lang"),
+        F.col(ID_COL),
+        ws_token_count(TEXT_COL).cast("bigint").alias("n_tokens"),
         pri.alias("_pri"),
     )
     cum = rel.grouped_running_sum(
@@ -215,15 +216,11 @@ def token_budget_sample(
     )
     return (
         cum.filter(F.col("cum_tokens") - F.col("n_tokens") < budget_tokens)
-        .select("lang", id_col, "n_tokens", "cum_tokens")
+        .select("lang", ID_COL, "n_tokens", "cum_tokens")
     )
 
 
-def bigram_next_token_table(
-    docs: DataFrame,
-    min_count: int = 5,
-    text_col: str = "text",
-) -> DataFrame:
+def bigram_next_token_table(docs: DataFrame, min_count: int = 5) -> DataFrame:
     """Corpus bigram statistics → argmax next-token table: for every
     leading token whose best bigram occurs ≥ ``min_count`` times, the
     most frequent following token (ties broken lexicographically so the
@@ -237,10 +234,10 @@ def bigram_next_token_table(
     bigrams = docs.select(
         F.explode(
             F.expr(
-                f"transform(slice(split(lower({text_col}), '\\\\s+'), 1, "
-                f"size(split(lower({text_col}), '\\\\s+')) - 1), "
+                f"transform(slice(split(lower({TEXT_COL}), '\\\\s+'), 1, "
+                f"size(split(lower({TEXT_COL}), '\\\\s+')) - 1), "
                 "(t, i) -> struct(t AS w1, "
-                f"split(lower({text_col}), '\\\\s+')[i + 1] AS w2))"
+                f"split(lower({TEXT_COL}), '\\\\s+')[i + 1] AS w2))"
             )
         ).alias("bg")
     ).select("bg.w1", "bg.w2")
@@ -257,8 +254,6 @@ def benchmark_contamination(
     train: DataFrame,
     benchmark: DataFrame,
     n: int = 8,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """Train/benchmark n-gram overlap — decontamination, the GPT-3/PaLM
     report procedure: a training document is contaminated to the degree
@@ -278,21 +273,21 @@ def benchmark_contamination(
     from .dedup import exploded_shingles
 
     bench_sh = (
-        exploded_shingles(benchmark, id_col, text_col, n)
+        exploded_shingles(benchmark, ID_COL, TEXT_COL, n)
         .select("shingle")
         .distinct()
     )
-    train_sh = exploded_shingles(train, id_col, text_col, n)
-    totals = train_sh.groupBy(id_col).agg(
+    train_sh = exploded_shingles(train, ID_COL, TEXT_COL, n)
+    totals = train_sh.groupBy(ID_COL).agg(
         F.count("*").alias("n_shingles")
     )
     overlaps = (
         train_sh.join(F.broadcast(bench_sh), "shingle")
-        .groupBy(id_col)
+        .groupBy(ID_COL)
         .agg(F.count("*").alias("n_overlap"))
     )
     return (
-        totals.join(overlaps, id_col)
+        totals.join(overlaps, ID_COL)
         .withColumn(
             "contam_ppm",
             F.expr("CAST(n_overlap * 1000000 DIV n_shingles AS BIGINT)"),
@@ -300,11 +295,7 @@ def benchmark_contamination(
     )
 
 
-def bpe_first_merge_pairs(
-    docs: DataFrame,
-    k: int = 20,
-    text_col: str = "text",
-) -> DataFrame:
+def bpe_first_merge_pairs(docs: DataFrame, k: int = 20) -> DataFrame:
     """First BPE iteration over the corpus: frequency of every adjacent
     CHARACTER pair inside whitespace words — the statistic whose argmax
     is the first merge a byte-pair-encoding tokenizer learns. Returns
@@ -318,7 +309,7 @@ def bpe_first_merge_pairs(
     the wire) and a global top-k via TakeOrderedAndProject, never a
     single-partition sort."""
     words = docs.select(
-        F.explode(whitespace_tokens(text_col)).alias("w")
+        F.explode(whitespace_tokens(TEXT_COL)).alias("w")
     ).filter(F.length("w") >= 2)
     pairs = words.select(
         F.explode(
@@ -332,16 +323,9 @@ def bpe_first_merge_pairs(
     return counts.orderBy(F.col("n").desc(), F.col("pair")).limit(k)
 
 
-def mixture_resample(
-    docs: DataFrame,
-    rates: dict[str, float],
-    source_col: str = "source",
-    id_col: str = "doc_id",
-    salt: str = "mix",
-    default_rate: float = 0.0,
-) -> DataFrame:
+def mixture_resample(docs: DataFrame, rates: dict[str, float]) -> DataFrame:
     """Deterministic source-mixture resampling: keep a document iff
-    ``md5(salt|id) % 10^6 < rate(source) * 10^6`` — the domain
+    ``md5('mix'|id) % 10^6 < rate(source) * 10^6`` — the domain
     up-/down-weighting step that turns a raw crawl into a training
     mixture (downsample boilerplate-heavy domains, keep books at 1.0).
 
@@ -351,22 +335,22 @@ def mixture_resample(
     grown corpus never flips a previously kept doc. The mixture config
     is a literal map (a handful of sources), never a join; the whole
     operator is a narrow filter: zero shuffles at any scale. Sources
-    absent from ``rates`` get ``default_rate`` (0 = excluded — curated
-    mixtures enumerate their sources)."""
+    absent from ``rates`` are excluded (curated mixtures enumerate
+    their sources)."""
     pairs: list[Column] = []
     for s, r in sorted(rates.items()):
         pairs.append(F.lit(s))
         pairs.append(F.lit(int(round(r * 1_000_000))))
     rate_ppm = F.coalesce(
-        F.create_map(*pairs)[F.col(source_col)],
-        F.lit(int(round(default_rate * 1_000_000))),
+        F.create_map(*pairs)[F.col("source")],
+        F.lit(0),
     )
     bucket = (
         F.conv(
             F.substring(
                 F.md5(
                     F.concat_ws(
-                        "|", F.lit(salt), F.col(id_col).cast("string")
+                        "|", F.lit("mix"), F.col(ID_COL).cast("string")
                     )
                 ),
                 1,
@@ -385,8 +369,6 @@ def boilerplate_ngrams(
     n: int = 5,
     min_docs: int = 2,
     k: int = 50,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """Boilerplate mining: the word n-grams appearing in at least
     ``min_docs`` DISTINCT documents, ranked by spread — the removal
@@ -402,7 +384,7 @@ def boilerplate_ngrams(
     skew problem."""
     from .dedup import exploded_shingles
 
-    sh = exploded_shingles(docs, id_col, text_col, n)
+    sh = exploded_shingles(docs, ID_COL, TEXT_COL, n)
     return (
         sh.groupBy(F.col("shingle").alias("gram"))
         .agg(F.count("*").alias("n_docs"))
@@ -416,8 +398,6 @@ def winnowing_fingerprints(
     docs: DataFrame,
     shingle_n: int = 3,
     window: int = 4,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """Full winnowing (the MOSS local-fingerprinting algorithm): hash
     every word ``shingle_n``-gram in position order, slide a window of
@@ -434,7 +414,7 @@ def winnowing_fingerprints(
     strings. At scale the fingerprint explode joins an inverted index
     exactly like ``exploded_shingles`` — fingerprints are just a
     w-times-smaller shingle set with the same guarantees."""
-    ws = F.split(F.lower(F.col(text_col)), r"\s+")
+    ws = F.split(F.lower(F.col(TEXT_COL)), r"\s+")
     min_tokens = shingle_n + window - 1
     hs = F.transform(
         F.sequence(F.lit(1), F.size(F.col("_ws")) - (shingle_n - 1)),
@@ -448,12 +428,12 @@ def winnowing_fingerprints(
     )
     fp = F.array_sort(F.array_distinct(F.col("_wins")))
     return (
-        docs.select(id_col, ws.alias("_ws"))
+        docs.select(ID_COL, ws.alias("_ws"))
         .filter(F.size("_ws") >= min_tokens)
-        .select(id_col, hs.alias("_hs"))
-        .select(id_col, wins.alias("_wins"))
+        .select(ID_COL, hs.alias("_hs"))
+        .select(ID_COL, wins.alias("_wins"))
         .select(
-            id_col,
+            ID_COL,
             F.size(fp).alias("n_fp"),
             F.md5(F.array_join(fp, "|")).alias("fp_digest"),
         )
@@ -471,9 +451,7 @@ GOPHER_RULES = (
 )
 
 
-def gopher_quality_flags(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def gopher_quality_flags(docs: DataFrame) -> DataFrame:
     """The published Gopher/MassiveText quality heuristics as one narrow
     projection: per document, every rule's verdict plus ``reason`` (the
     FIRST failed rule in gate order, null when clean).
@@ -484,18 +462,18 @@ def gopher_quality_flags(
     Zero shuffles; at 100 TB this is scan-bound, exactly like the rest
     of the X4 feature family, and composes with mixture_resample +
     exact_dedup into the standard curation cascade."""
-    ws = F.split(F.lower(F.col(text_col)), r"\s+")
+    ws = F.split(F.lower(F.col(TEXT_COL)), r"\s+")
     n = F.size(ws)
     total_len = F.aggregate(
         F.transform(ws, F.length), F.lit(0), lambda a, x: a + x
     )
     n_alpha = F.size(F.filter(ws, lambda w: w.rlike("[a-z]")))
-    hashes = F.length(F.col(text_col)) - F.length(
-        F.regexp_replace(F.col(text_col), "#", "")
+    hashes = F.length(F.col(TEXT_COL)) - F.length(
+        F.regexp_replace(F.col(TEXT_COL), "#", "")
     )
     dots = (
-        F.length(F.col(text_col))
-        - F.length(F.regexp_replace(F.col(text_col), r"\.\.\.", ""))
+        F.length(F.col(TEXT_COL))
+        - F.length(F.regexp_replace(F.col(TEXT_COL), r"\.\.\.", ""))
     ) / 3
     n_sym = (hashes + dots).cast("long")
     sw = F.array(*[F.lit(s) for s in LANG_PROFILES["en"]])
@@ -512,18 +490,14 @@ def gopher_quality_flags(
     for rule in reversed(GOPHER_RULES):
         reason = F.when(~ok[rule], rule).otherwise(reason)
     return docs.select(
-        id_col,
+        ID_COL,
         n.alias("n_words"),
         *[ok[r].alias(f"ok_{r}") for r in GOPHER_RULES],
         reason.alias("reason"),
     )
 
 
-def blocklist_flags(
-    docs: DataFrame,
-    terms: tuple[str, ...],
-    text_col: str = "text",
-) -> Column:
+def blocklist_flags(docs: DataFrame, terms: tuple[str, ...]) -> Column:
     """C4-style blocklist predicate: true when ANY whitespace token is
     in ``terms`` (exact token match, not substring — 'class' never
     trips a 'ass' entry, the classic C4 false-positive). The list ships
@@ -531,7 +505,7 @@ def blocklist_flags(
     at 100 TB this is a narrow scan-bound filter like every X4 gate —
     for 10⁵+-entry lists swap the literal array for a broadcast join
     against the exploded token index."""
-    ws = whitespace_tokens(text_col)
+    ws = whitespace_tokens(TEXT_COL)
     blocked = F.array(*[F.lit(t) for t in terms])
     return F.arrays_overlap(ws, blocked)
 
@@ -540,8 +514,6 @@ def chunk_token_windows(
     docs: DataFrame,
     size: int = 64,
     stride: int = 48,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """Fixed-size overlapping token windows per document — the RAG /
     context-window chunker (size=window tokens, stride<size ⇒ overlap
@@ -555,14 +527,14 @@ def chunk_token_windows(
     window may be short (kept — truncating it would drop tail text).
 
     Returns (id, chunk_id, start_token, n_tokens, chunk_text)."""
-    ws = F.split(F.lower(F.col(text_col)), r"\s+")
+    ws = F.split(F.lower(F.col(TEXT_COL)), r"\s+")
     d = docs.select(
-        id_col, ws.alias("_ws"), F.size(ws).alias("_n")
+        ID_COL, ws.alias("_ws"), F.size(ws).alias("_n")
     )
     last_start = F.greatest(F.col("_n") - size, F.lit(0))
     n_windows = ((last_start + stride - 1) / stride).cast("int") + F.lit(1)
     exploded = d.select(
-        id_col,
+        ID_COL,
         "_ws",
         "_n",
         F.explode(F.sequence(F.lit(0), n_windows - 1)).alias("chunk_id"),
@@ -570,7 +542,7 @@ def chunk_token_windows(
     start = F.col("chunk_id") * stride
     piece = F.slice(F.col("_ws"), start + 1, size)
     return exploded.select(
-        id_col,
+        ID_COL,
         F.col("chunk_id").cast("int").alias("chunk_id"),
         start.cast("int").alias("start_token"),
         F.size(piece).cast("int").alias("n_tokens"),
@@ -578,11 +550,7 @@ def chunk_token_windows(
     )
 
 
-def bigram_cross_entropy(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def bigram_cross_entropy(docs: DataFrame) -> DataFrame:
     """Per-document average bigram cross-entropy against the corpus's
     own bigram LM — the perplexity-style quality filter (CCNet-shape):
     templated/boilerplate text scores low, out-of-distribution noise
@@ -608,7 +576,7 @@ def bigram_cross_entropy(
     # regex split per element — measured 4.4 s vs 0.27 s at sf0.1 for
     # the pair construction alone (16×)
     base = docs.select(
-        id_col, F.split(F.lower(F.col(text_col)), r"\s+").alias("_ws")
+        ID_COL, F.split(F.lower(F.col(TEXT_COL)), r"\s+").alias("_ws")
     )
     wsc = F.col("_ws")
     tail_len = F.greatest(F.size(wsc) - 1, F.lit(0))
@@ -624,8 +592,8 @@ def bigram_cross_entropy(
     # later join then moves |distinct doc-bigram| rows instead of every
     # occurrence, and the exploded occurrence stream is consumed once
     db = (
-        base.select(id_col, F.explode(pairs).alias("bigram"))
-        .groupBy(id_col, "bigram")
+        base.select(ID_COL, F.explode(pairs).alias("bigram"))
+        .groupBy(ID_COL, "bigram")
         .agg(F.count("*").alias("m"))
     )
     c2 = db.groupBy("bigram").agg(F.sum("m").alias("c2"))
@@ -652,7 +620,7 @@ def bigram_cross_entropy(
         )
     )
     scored = db.join(xent, "bigram")
-    return scored.groupBy(id_col).agg(
+    return scored.groupBy(ID_COL).agg(
         F.sum("m").cast("bigint").alias("n_bigrams"),
         F.sum(F.col("m") * F.col("x")).cast("bigint").alias("sum_xent_micro"),
         F.expr(
@@ -673,13 +641,7 @@ DEFAULT_BPE_MERGES: tuple[tuple[str, str], ...] = (
 )
 
 
-def bpe_apply(
-    docs: DataFrame,
-    merges: tuple[tuple[str, str], ...] = DEFAULT_BPE_MERGES,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    passes: int = 2,
-) -> DataFrame:
+def bpe_apply(docs: DataFrame) -> DataFrame:
     """Apply a frozen BPE merge table to every document and report the
     resulting symbol counts — the tokenizer-application operator (the
     cost model behind every token-budget decision; a corpus is priced
@@ -689,7 +651,7 @@ def bpe_apply(
     (`` c a t ``); each merge rule (x, y) then rewrites `` x y `` →
     `` xy `` via plain string replace, applied in rank order. replace()
     scans left-to-right over non-overlapping occurrences in BOTH
-    engines, which is exactly BPE's leftmost-greedy order; ``passes``
+    engines, which is exactly BPE's leftmost-greedy order; two
     repetitions per rule close the alternation gap where one pass
     leaves an odd run unmerged (2 passes handle runs ≤ 4 of the same
     pair — longer uniform runs are noise text by definition).
@@ -702,15 +664,15 @@ def bpe_apply(
     (tokenizer tables are KBs — config, not data).
     """
     sym = "concat(' ', regexp_replace(w, '(.)', '$1 '))"
-    for _ in range(passes):
-        for x, y in merges:
+    for _ in range(2):
+        for x, y in DEFAULT_BPE_MERGES:
             sym = f"replace({sym}, ' {x} {y} ', ' {x}{y} ')"
     words = (
-        f"filter(split(lower(`{text_col}`), '\\\\s+'), "
+        f"filter(split(lower(`{TEXT_COL}`), '\\\\s+'), "
         "w -> length(w) > 0)"
     )
     return docs.selectExpr(
-        f"`{id_col}`",
+        f"`{ID_COL}`",
         f"size({words}) AS n_words",
         f"aggregate(transform({words}, w -> length(w)), 0, "
         "(acc, v) -> acc + v) AS n_chars",
@@ -750,12 +712,7 @@ def temperature_mixture_shares(
     )
 
 
-def ngram_novelty(
-    docs: DataFrame,
-    n: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def ngram_novelty(docs: DataFrame, n: int = 3) -> DataFrame:
     """Per-document n-gram novelty: what fraction of a document's
     distinct word n-grams appear in NO other document. Low novelty is
     the boilerplate/template signal (near-zero: the page is assembled
@@ -778,20 +735,20 @@ def ngram_novelty(
     """
     from . import dedup
 
-    sh = dedup.exploded_shingles(docs, id_col=id_col, text_col=text_col,
+    sh = dedup.exploded_shingles(docs, id_col=ID_COL, text_col=TEXT_COL,
                                  n=n)
     df_counts = sh.groupBy("shingle").agg(
         F.count("*").alias("_df")
     )
     return (
         sh.join(df_counts, "shingle")
-        .groupBy(F.col(id_col))
+        .groupBy(F.col(ID_COL))
         .agg(
             F.count("*").cast("bigint").alias("n_shingles"),
             F.sum((F.col("_df") == 1).cast("long")).alias("n_novel"),
         )
         .selectExpr(
-            id_col,
+            ID_COL,
             "n_shingles",
             "n_novel",
             "CAST(n_novel * 1000000 DIV n_shingles AS BIGINT) "
@@ -800,11 +757,7 @@ def ngram_novelty(
     )
 
 
-def unigram_doc_surprisal(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def unigram_doc_surprisal(docs: DataFrame) -> DataFrame:
     """Per-document mean token surprisal under the corpus's own unigram
     LM — the cheap perplexity proxy quality filters rank on: junk
     (mojibake, random ids, boilerplate-free noise) scores high because
@@ -825,9 +778,9 @@ def unigram_doc_surprisal(
     standard split-join), which preserves this exact output.
     """
     toks = docs.select(
-        F.col(id_col),
+        F.col(ID_COL),
         F.explode(
-            F.split(F.lower(F.col(text_col)), r"\s+")
+            F.split(F.lower(F.col(TEXT_COL)), r"\s+")
         ).alias("w"),
     )
     freq = toks.groupBy("w").agg(F.count("*").alias("c"))
@@ -839,7 +792,7 @@ def unigram_doc_surprisal(
     )
     per_doc = (
         toks.join(freq, "w")
-        .groupBy(id_col)
+        .groupBy(ID_COL)
         .agg(
             F.count("*").cast("bigint").alias("n_tokens"),
             F.sum(F.expr("CAST(round(ln(c) * 1000000) AS BIGINT)"))
@@ -848,7 +801,7 @@ def unigram_doc_surprisal(
         )
     )
     return per_doc.crossJoin(F.broadcast(total)).selectExpr(
-        id_col,
+        ID_COL,
         "n_tokens",
         "CAST(ln_t_micro - sum_ln_c_micro DIV n_tokens AS BIGINT) "
         "AS surprisal_micro",
@@ -858,7 +811,6 @@ def unigram_doc_surprisal(
 def vocab_coverage(
     docs: DataFrame,
     ks: tuple[int, ...] = (10, 100, 1000),
-    text_col: str = "text",
 ) -> DataFrame:
     """Vocabulary coverage curve: for each k, what share of all token
     OCCURRENCES the top-k most frequent types cover — the tokenizer /
@@ -880,7 +832,7 @@ def vocab_coverage(
 
     freq = (
         docs.selectExpr(
-            f"explode(split(lower(`{text_col}`), '\\\\s+')) AS w"
+            f"explode(split(lower(`{TEXT_COL}`), '\\\\s+')) AS w"
         )
         .groupBy("w")
         .agg(F.count("*").cast("bigint").alias("f"))
@@ -928,7 +880,6 @@ def collocations_pmi(
     docs: DataFrame,
     min_count: int = 5,
     top_n: int = 30,
-    text_col: str = "text",
 ) -> DataFrame:
     """Collocation mining: adjacent token pairs ranked by pointwise
     mutual information — the phrase detector ("new york", "machine
@@ -949,7 +900,7 @@ def collocations_pmi(
     fanned out read-only), two 1-row broadcasts.
     """
     toks = docs.selectExpr(
-        f"split(lower(`{text_col}`), '\\\\s+') AS _ws"
+        f"split(lower(`{TEXT_COL}`), '\\\\s+') AS _ws"
     ).filter(F.size("_ws") >= 2)
     bigrams = (
         toks.selectExpr(
@@ -963,7 +914,7 @@ def collocations_pmi(
     )
     uni = (
         docs.selectExpr(
-            f"explode(split(lower(`{text_col}`), '\\\\s+')) AS w"
+            f"explode(split(lower(`{TEXT_COL}`), '\\\\s+')) AS w"
         )
         .groupBy("w")
         .agg(F.count("*").cast("bigint").alias("c"))
@@ -995,14 +946,12 @@ def collocations_pmi(
     )
 
 
-def bm25_rank(docs, id_col: str = "doc_id", text_col: str = "text",
-              n_query_terms: int = 3, k: int = 20,
-              k1: float = 1.2, b: float = 0.75):
+def bm25_rank(docs):
     """BM25 document ranking against a deterministic query: the
-    ``n_query_terms`` highest-document-frequency corpus terms (ties by
-    term) form the query, every document is scored with the standard
-    Okapi BM25 formula, and the global top-``k`` (score desc, doc_id)
-    is returned.
+    3 highest-document-frequency corpus terms (ties by term) form the
+    query, every document is scored with the standard Okapi BM25
+    formula (k1 = BM25_K1, b = BM25_B), and the global top-20
+    (score desc, doc_id) is returned.
 
     idf uses the non-negative Robertson form ln(1 + (N-df+0.5)/(df+0.5)).
     Plan shape mirrors ``tfidf_top_terms``: exploded inverted index,
@@ -1014,18 +963,18 @@ def bm25_rank(docs, id_col: str = "doc_id", text_col: str = "text",
     whole query at any corpus size.
     """
     toks = docs.select(
-        id_col, F.explode(whitespace_tokens(text_col)).alias("term")
+        ID_COL, F.explode(whitespace_tokens(TEXT_COL)).alias("term")
     ).filter(F.col("term") != "")
-    doclen = toks.groupBy(id_col).agg(F.count("*").alias("dl"))
+    doclen = toks.groupBy(ID_COL).agg(F.count("*").alias("dl"))
     stats = doclen.groupBy().agg(
         F.count("*").alias("n_docs"), F.avg("dl").alias("avgdl")
     )
-    df_ = toks.select(id_col, "term").distinct().groupBy("term").agg(
+    df_ = toks.select(ID_COL, "term").distinct().groupBy("term").agg(
         F.count("*").alias("df")
     )
     qterms = (
         df_.orderBy(F.col("df").desc(), "term")
-        .limit(n_query_terms)
+        .limit(3)
         .join(F.broadcast(stats))
         .select(
             "term",
@@ -1040,35 +989,34 @@ def bm25_rank(docs, id_col: str = "doc_id", text_col: str = "text",
             "avgdl",
         )
     )
-    tf = toks.groupBy(id_col, "term").agg(F.count("*").alias("tf"))
+    tf = toks.groupBy(ID_COL, "term").agg(F.count("*").alias("tf"))
     scored = (
         tf.join(F.broadcast(qterms), "term")
-        .join(doclen, id_col)
+        .join(doclen, ID_COL)
         .select(
-            id_col,
+            ID_COL,
             F.round(
                 F.col("idf")
-                * (F.col("tf") * (k1 + 1.0))
+                * (F.col("tf") * (BM25_K1 + 1.0))
                 / (
                     F.col("tf")
-                    + k1
-                    * (1.0 - b + b * F.col("dl") / F.col("avgdl"))
+                    + BM25_K1
+                    * (1.0 - BM25_B + BM25_B * F.col("dl") / F.col("avgdl"))
                 ),
                 6,
             ).alias("term_score"),
         )
-        .groupBy(id_col)
+        .groupBy(ID_COL)
         .agg(F.round(F.sum("term_score"), 6).alias("bm25"))
     )
     return (
-        scored.orderBy(F.col("bm25").desc(), id_col)
-        .limit(k)
-        .select(id_col, "bm25")
+        scored.orderBy(F.col("bm25").desc(), ID_COL)
+        .limit(20)
+        .select(ID_COL, "bm25")
     )
 
 
-def readability_scores(docs, id_col: str = "doc_id",
-                       text_col: str = "text"):
+def readability_scores(docs):
     """Flesch reading-ease per document from three exact counts —
     sentences (maximal [.!?]+ runs, minimum 1), words (whitespace
     tokens), syllables (maximal [aeiouy]+ vowel groups per word,
@@ -1082,7 +1030,7 @@ def readability_scores(docs, id_col: str = "doc_id",
     and engine-portable, which is what a 100 TB quality-scoring pass
     needs (the score feeds corpus filtering, so two engines must agree
     bit-for-bit)."""
-    lower = F.lower(F.col(text_col))
+    lower = F.lower(F.col(TEXT_COL))
     n_sent = F.greatest(
         F.size(F.regexp_extract_all(lower, F.lit(r"[.!?]+"), 0)), F.lit(1)
     )
@@ -1103,7 +1051,7 @@ def readability_scores(docs, id_col: str = "doc_id",
         4,
     )
     return docs.select(
-        id_col,
+        ID_COL,
         n_sent.alias("n_sentences"),
         n_words.alias("n_words"),
         n_syll.alias("n_syllables"),
@@ -1111,14 +1059,7 @@ def readability_scores(docs, id_col: str = "doc_id",
     )
 
 
-def naive_bayes_lang_confusion(
-    docs: DataFrame,
-    text_col: str = "text",
-    class_col: str = "lang",
-    id_col: str = "doc_id",
-    train_mod: int = 5,
-    train_lt: int = 4,
-) -> DataFrame:
+def naive_bayes_lang_confusion(docs: DataFrame) -> DataFrame:
     """Multinomial Naive Bayes trained AND scored in one distributed
     DAG — the counts-based quality/language classifier pattern
     (fastText-style corpus routing) expressed relationally: the model
@@ -1126,7 +1067,8 @@ def naive_bayes_lang_confusion(
     driver-side object, so vocabulary size is unbounded by driver
     memory and training is one map-side-combined shuffle.
 
-    Split: ``doc_id % train_mod < train_lt`` trains, the rest scores.
+    Split: ``doc_id % NB_TRAIN_MOD < NB_TRAIN_LT`` trains, the rest
+    scores.
     Score(d, c) = ln(docs_c) − |d| · ln(tok_c + V)
                   + Σ_t∈d  k_t · ln(cnt(t,c) + 1)
     (add-one smoothing; the constant −ln(docs_total) is dropped — it
@@ -1144,42 +1086,42 @@ def naive_bayes_lang_confusion(
     collect of anything data-sized.
     """
     ln = "CAST(round(ln({x}) * 1000000) AS BIGINT)"
-    is_train = F.pmod(F.col(id_col), F.lit(train_mod)) < F.lit(train_lt)
+    is_train = F.pmod(F.col(ID_COL), F.lit(NB_TRAIN_MOD)) < F.lit(NB_TRAIN_LT)
     toks = docs.select(
-        id_col,
-        class_col,
-        F.explode(whitespace_tokens(text_col)).alias("w"),
+        ID_COL,
+        LANG_COL,
+        F.explode(whitespace_tokens(TEXT_COL)).alias("w"),
     )
-    tr = toks.filter(F.pmod(F.col(id_col), F.lit(train_mod)) < train_lt)
-    te = toks.filter(F.pmod(F.col(id_col), F.lit(train_mod)) >= train_lt)
+    tr = toks.filter(F.pmod(F.col(ID_COL), F.lit(NB_TRAIN_MOD)) < NB_TRAIN_LT)
+    te = toks.filter(F.pmod(F.col(ID_COL), F.lit(NB_TRAIN_MOD)) >= NB_TRAIN_LT)
 
-    cnt = tr.groupBy("w", class_col).agg(
+    cnt = tr.groupBy("w", LANG_COL).agg(
         F.count(F.lit(1)).cast("bigint").alias("cnt")
     )
-    tok_c = tr.groupBy(class_col).agg(
+    tok_c = tr.groupBy(LANG_COL).agg(
         F.count(F.lit(1)).cast("bigint").alias("tok_c")
     )
-    docs_c = docs.filter(is_train).groupBy(class_col).agg(
+    docs_c = docs.filter(is_train).groupBy(LANG_COL).agg(
         F.count(F.lit(1)).cast("bigint").alias("docs_c")
     )
     vocab = tr.agg(
         F.countDistinct("w").cast("bigint").alias("v")
     )
 
-    tt = te.groupBy(id_col, "w").agg(
+    tt = te.groupBy(ID_COL, "w").agg(
         F.count(F.lit(1)).cast("bigint").alias("k")
     )
-    dlen = te.groupBy(id_col).agg(
+    dlen = te.groupBy(ID_COL).agg(
         F.count(F.lit(1)).cast("bigint").alias("n_tok")
     )
 
-    classes = tok_c.join(F.broadcast(docs_c), class_col).crossJoin(
+    classes = tok_c.join(F.broadcast(docs_c), LANG_COL).crossJoin(
         F.broadcast(vocab)
     )
     terms = (
-        tt.crossJoin(F.broadcast(classes.select(class_col)))
-        .join(cnt, ["w", class_col], "left")
-        .groupBy(id_col, class_col)
+        tt.crossJoin(F.broadcast(classes.select(LANG_COL)))
+        .join(cnt, ["w", LANG_COL], "left")
+        .groupBy(ID_COL, LANG_COL)
         .agg(
             F.sum(
                 F.expr("k * " + ln.format(x="coalesce(cnt, 0) + 1"))
@@ -1189,11 +1131,11 @@ def naive_bayes_lang_confusion(
         )
     )
     scores = (
-        terms.join(dlen, id_col)
-        .join(F.broadcast(classes), class_col)
+        terms.join(dlen, ID_COL)
+        .join(F.broadcast(classes), LANG_COL)
         .select(
-            id_col,
-            class_col,
+            ID_COL,
+            LANG_COL,
             (
                 F.expr(ln.format(x="docs_c"))
                 - F.col("n_tok") * F.expr(ln.format(x="tok_c + v"))
@@ -1201,19 +1143,19 @@ def naive_bayes_lang_confusion(
             ).alias("score"),
         )
     )
-    win = Window.partitionBy(id_col).orderBy(
-        F.col("score").desc(), F.col(class_col).asc()
+    win = Window.partitionBy(ID_COL).orderBy(
+        F.col("score").desc(), F.col(LANG_COL).asc()
     )
     pred = (
         scores.withColumn("rn", F.row_number().over(win))
         .filter(F.col("rn") == 1)
-        .select(id_col, F.col(class_col).alias("lang_pred"))
+        .select(ID_COL, F.col(LANG_COL).alias("lang_pred"))
     )
     truth = docs.filter(~is_train).select(
-        id_col, F.col(class_col).alias("lang_true")
+        ID_COL, F.col(LANG_COL).alias("lang_true")
     )
     return (
-        pred.join(truth, id_col)
+        pred.join(truth, ID_COL)
         .groupBy("lang_true", "lang_pred")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
     )
@@ -1222,9 +1164,6 @@ def naive_bayes_lang_confusion(
 def dsir_importance_weights(
     docs: DataFrame,
     target_pred: str = "lang = 'en'",
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n_buckets: int = 256,
 ) -> DataFrame:
     """Data Selection with Importance Resampling (DSIR, Xie et al. 2023):
     score every document by how much more likely its hashed-unigram
@@ -1233,8 +1172,8 @@ def dsir_importance_weights(
     pretraining data at corpus scale.
 
     weight(doc) = Σ_tokens ln( p_target(bucket(w)) / p_raw(bucket(w)) )
-    with add-one smoothing over ``n_buckets`` hashed feature buckets.
-    bucket(w) = first 4 hex chars of md5(w) mod n_buckets — the same
+    with add-one smoothing over ``DSIR_BUCKETS`` hashed feature buckets.
+    bucket(w) = first 4 hex chars of md5(w) mod DSIR_BUCKETS — the same
     engine-portable hash family the SRP/fold kernels use, so an oracle
     re-derives every bucket exactly. Shipped as integer micro-nats: the
     log of each (integer) smoothed count rounds to a micro-nat int once,
@@ -1242,24 +1181,24 @@ def dsir_importance_weights(
     bit-identical across engines and partitionings.
 
     Plan shape (two shuffles, both map-side combined):
-      1. token explode → groupBy(bucket): ≤ n_buckets rows AFTER the
+      1. token explode → groupBy(bucket): ≤ DSIR_BUCKETS rows AFTER the
          partial agg — the "training" pass for BOTH distributions at
          once (the target's counts are a conditional sum in the same
          aggregate, not a second scan).
       2. tokens ⋈ broadcast(bucket log-ratio dim) → groupBy(doc).
     At 100 TB both passes stream; the only materialized state is the
-    n_buckets-row dim. Raising n_buckets (e.g. 65536 for real corpora)
-    changes nothing structurally.
+    DSIR_BUCKETS-row dim. Raising DSIR_BUCKETS (e.g. 65536 for real
+    corpora) changes nothing structurally.
     """
     bucket = (
-        f"CAST(conv(substr(md5(w), 1, 4), 16, 10) AS BIGINT) "
-        f"% {n_buckets}"
+        "CAST(conv(substr(md5(w), 1, 4), 16, 10) AS BIGINT) "
+        f"% {DSIR_BUCKETS}"
     )
     toks = docs.selectExpr(
-        f"`{id_col}`",
+        f"`{ID_COL}`",
         f"CAST(({target_pred}) AS BOOLEAN) AS _is_t",
-        f"explode(split(lower(`{text_col}`), '\\\\s+')) AS w",
-    ).selectExpr(f"`{id_col}`", "_is_t", f"{bucket} AS bkt")
+        f"explode(split(lower(`{TEXT_COL}`), '\\\\s+')) AS w",
+    ).selectExpr(f"`{ID_COL}`", "_is_t", f"{bucket} AS bkt")
     counts = toks.groupBy("bkt").agg(
         F.count(F.lit(1)).cast("bigint").alias("c_raw"),
         F.sum(F.expr("CAST(_is_t AS BIGINT)")).cast("bigint").alias("c_t"),
@@ -1271,7 +1210,7 @@ def dsir_importance_weights(
     ).selectExpr(
         "CAST(round(ln(t_raw + {b}) * 1000000) AS BIGINT) - "
         "CAST(round(ln(t_t + {b}) * 1000000) AS BIGINT) AS const_micro"
-        .format(b=n_buckets)
+        .format(b=DSIR_BUCKETS)
     )
     diff = counts.selectExpr(
         "bkt",
@@ -1280,14 +1219,14 @@ def dsir_importance_weights(
     )
     return (
         toks.join(F.broadcast(diff), "bkt")
-        .groupBy(id_col)
+        .groupBy(ID_COL)
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_tokens"),
             F.sum("d_micro").cast("bigint").alias("_sd"),
         )
         .crossJoin(F.broadcast(const))
         .selectExpr(
-            f"`{id_col}`",
+            f"`{ID_COL}`",
             "n_tokens",
             "CAST(_sd + n_tokens * const_micro AS BIGINT) "
             "AS dsir_weight_micro",
@@ -1295,15 +1234,10 @@ def dsir_importance_weights(
     )
 
 
-def rake_keyphrases(
-    docs: DataFrame,
-    stopwords: tuple[str, ...] = ("a", "the", "and", "of", "in"),
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    top_k: int = 25,
-) -> DataFrame:
+def rake_keyphrases(docs: DataFrame, top_k: int = 25) -> DataFrame:
     """RAKE-style keyphrase extraction (Rose et al. 2010), exact-integer
-    variant: candidate phrases are maximal stopword-free token runs;
+    variant: candidate phrases are maximal runs free of the stopwords
+    a/the/and/of/in;
     each word scores degree/frequency (degree = Σ length of phrases
     containing it — co-occurrence weight; frequency = its corpus
     count); a phrase scores the sum of its words' scores. The unsupervised
@@ -1322,11 +1256,12 @@ def rake_keyphrases(
     are one map-side-combined shuffle; the final global top-k is a
     TakeOrdered, never a full sort.
     """
-    stop_set = ", ".join(f"'{s}'" for s in stopwords)
     toks = docs.selectExpr(
-        f"`{id_col}` AS _d",
-        f"posexplode(split(lower(`{text_col}`), '\\\\s+')) AS (_pos, _w)",
-    ).selectExpr("_d", "_pos", "_w", f"_w IN ({stop_set}) AS _stop")
+        f"`{ID_COL}` AS _d",
+        f"posexplode(split(lower(`{TEXT_COL}`), '\\\\s+')) AS (_pos, _w)",
+    ).selectExpr(
+        "_d", "_pos", "_w", "_w IN ('a', 'the', 'and', 'of', 'in') AS _stop"
+    )
     grp = Window.partitionBy("_d").orderBy("_pos").rowsBetween(
         Window.unboundedPreceding, Window.currentRow
     )

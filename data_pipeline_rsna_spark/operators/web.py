@@ -29,6 +29,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+URL_COL = "url"
+ID_COL = "doc_id"
+HTML_COL = "html"
+
 _SCHEME_RE = "^([A-Za-z][A-Za-z0-9+.-]*)://"
 _HOST_RE = "^[A-Za-z][A-Za-z0-9+.-]*://([^/?#]*)"
 _REST_RE = "^[A-Za-z][A-Za-z0-9+.-]*://[^/?#]*(.*)$"
@@ -66,17 +70,15 @@ def canonical_url_expr(url_col: str) -> str:
     )
 
 
-def url_canonical_dedup(
-    df: DataFrame, url_col: str = "url"
-) -> DataFrame:
+def url_canonical_dedup(df: DataFrame) -> DataFrame:
     """Group raw URLs by canonical form: (canonical_url, n_raw rows,
     n_variants distinct spellings). The frontier-dedup primitive — at
     crawl scale this one map-side-combined shuffle (key = canonical
     string) replaces a fetch per spelling variant."""
     return (
         df.selectExpr(
-            f"{canonical_url_expr(url_col)} AS canonical_url",
-            f"`{url_col}` AS _raw",
+            f"{canonical_url_expr(URL_COL)} AS canonical_url",
+            f"`{URL_COL}` AS _raw",
         )
         .groupBy("canonical_url")
         .agg(
@@ -114,9 +116,7 @@ def strip_html_expr(col: str) -> str:
     return f"trim(regexp_replace({x}, '\\\\s+', ' '))"
 
 
-def html_extract_stats(
-    df: DataFrame, id_col: str = "doc_id", html_col: str = "html"
-) -> DataFrame:
+def html_extract_stats(df: DataFrame) -> DataFrame:
     """Per-document extraction accounting: raw vs visible-text sizes
     and the retained ratio in ppm — the boilerplate-share metric a
     curation pipeline tracks per site (a site whose retained ppm
@@ -124,10 +124,10 @@ def html_extract_stats(
     integer ppm via floor division. Empty documents yield NULL ppm
     (guarded: Spark 4's ANSI mode raises DIVIDE_BY_ZERO otherwise)."""
     return df.selectExpr(
-        f"`{id_col}`",
-        f"length(`{html_col}`) AS n_chars_raw",
-        f"length({strip_html_expr(html_col)}) AS n_chars_text",
-        f"CASE WHEN length(`{html_col}`) > 0 THEN "
-        f"CAST(length({strip_html_expr(html_col)}) * 1000000 "
-        f"DIV length(`{html_col}`) AS BIGINT) END AS retained_ppm",
+        f"`{ID_COL}`",
+        f"length(`{HTML_COL}`) AS n_chars_raw",
+        f"length({strip_html_expr(HTML_COL)}) AS n_chars_text",
+        f"CASE WHEN length(`{HTML_COL}`) > 0 THEN "
+        f"CAST(length({strip_html_expr(HTML_COL)}) * 1000000 "
+        f"DIV length(`{HTML_COL}`) AS BIGINT) END AS retained_ppm",
     )

@@ -29,6 +29,9 @@ from .operators import labels as labels_ops
 from .operators import relational as rel
 from .sinks import tfrecord as tfr
 
+IMAGE_W = 1024
+IMAGE_H = 1024
+
 
 @dataclass
 class PipelineResult:
@@ -44,8 +47,6 @@ def run_rsna_pipeline(
     out_dir: str,
     train_shards: int = 256,
     val_shards: int = 32,
-    image_w: int = 1024,
-    image_h: int = 1024,
 ) -> PipelineResult:
     """EP1+EP2 end to end over a raw labels table (the CSV shape of O1).
 
@@ -64,7 +65,7 @@ def run_rsna_pipeline(
 
     # EP1: the 7-stage augmentation DAG (geometry path)
     augmented = aug.augment(
-        patients.select("patient_id", "target"), boxes, image_w, image_h
+        patients.select("patient_id", "target"), boxes, IMAGE_W, IMAGE_H
     )
 
     # EP2: validity filter (skip-counted) + normalization + assembly.
@@ -86,22 +87,22 @@ def run_rsna_pipeline(
         F.sum(
             F.when(
                 F.col("x").isNotNull()
-                & ~rel.box_valid(image_w, image_h),
+                & ~rel.box_valid(IMAGE_W, IMAGE_H),
                 1,
             ).otherwise(0)
         ).alias("skipped"),
     )
 
-    mask = F.col("x").isNotNull() & rel.box_valid(image_w, image_h)
+    mask = F.col("x").isNotNull() & rel.box_valid(IMAGE_W, IMAGE_H)
     x, y, w, h = (F.col(c) for c in ("x", "y", "width", "height"))
     box_struct = F.when(
         mask,
         F.struct(
             F.struct("x", "y", "width", "height").alias("k"),
-            F.round(x / image_w, 9).alias("xmin"),
-            F.round((x + w) / image_w, 9).alias("xmax"),
-            F.round(y / image_h, 9).alias("ymin"),
-            F.round((y + h) / image_h, 9).alias("ymax"),
+            F.round(x / IMAGE_W, 9).alias("xmin"),
+            F.round((x + w) / IMAGE_W, 9).alias("xmax"),
+            F.round(y / IMAGE_H, 9).alias("ymin"),
+            F.round((y + h) / IMAGE_H, 9).alias("ymax"),
         ),
     )
     collected = with_split.groupBy("image_id").agg(
@@ -127,8 +128,8 @@ def run_rsna_pipeline(
     def to_features(row) -> dict[str, list]:
         return {
             "image/source_id": [row.image_id.encode()],
-            "image/height": [1024],
-            "image/width": [1024],
+            "image/height": [IMAGE_H],
+            "image/width": [IMAGE_W],
             "image/object/bbox/xmin": list(row.xmins),
             "image/object/bbox/xmax": list(row.xmaxs),
             "image/object/bbox/ymin": list(row.ymins),

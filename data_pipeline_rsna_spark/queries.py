@@ -181,12 +181,12 @@ def _lineitem_as_raw_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _box_sig(boxes_col: str = "boxes") -> F.Column:
+def _box_sig() -> F.Column:
     """array<array<int>> → canonical 'x,y,w,h;x,y,w,h' string (sorted).
     One expr string: the nested-lambda F.transform form costs ~8 py4j
     round trips per construction for the identical analyzed plan."""
     return F.expr(
-        f"array_join(transform(`{boxes_col}`, b -> "
+        "array_join(transform(`boxes`, b -> "
         "array_join(transform(b, v -> cast(v AS string)), ',')), ';')"
     )
 

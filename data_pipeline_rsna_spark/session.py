@@ -3,8 +3,9 @@
 One place to own the configuration that matters at scale: AQE on (runtime
 re-planning, skew-join splitting, partition coalescing), Arrow on (pandas
 UDF batches), UTC session timezone (so results compare bit-for-bit with a
-UTC-naive oracle such as DuckDB), and shuffle parallelism sized to the
-machine instead of Spark's legacy default of 200.
+UTC-naive oracle such as DuckDB), ANSI mode on (overflow raises instead of
+turning into NULL), and shuffle parallelism sized to the machine instead
+of Spark's legacy default of 200.
 
 On a real cluster the same builder is used; only ``master`` and the
 memory/instance settings change. Everything else (AQE, Arrow, timezone,
@@ -110,6 +111,9 @@ def get_spark(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "256")
         # --- determinism for differential testing ---
         .config("spark.sql.session.timeZone", "UTC")
+        # ANSI mode is Spark 4's default; pinned so a deployment's
+        # spark-defaults cannot turn overflow and bad casts into NULLs
+        .config("spark.sql.ansi.enabled", "true")
         # --- local mode: keep the UI off for headless runs ---
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))

@@ -49,14 +49,13 @@ def write_table(
     path: str,
     fmt: str,
     partition_by: list[str] | None = None,
-    mode: str = "overwrite",
 ) -> None:
     """Write a DataFrame in any supported format. `partition_by` gives
     Hive-style directory partitioning (partition pruning on read) for
     every format alike."""
     if fmt not in FORMATS:
         raise ValueError(f"unsupported format {fmt!r}; one of {FORMATS}")
-    writer = df.write.mode(mode).format(fmt)
+    writer = df.write.mode("overwrite").format(fmt)
     for k, v in _text_options(fmt).items():
         writer = writer.option(k, v)
     if partition_by:

@@ -146,7 +146,7 @@ VOC_SCHEMA = T.StructType(
 )
 
 
-def parse_voc_annotations(xml_docs: DataFrame, xml_col: str = "xml") -> DataFrame:
+def parse_voc_annotations(xml_docs: DataFrame) -> DataFrame:
     """O37 at scale: one XML document per row → typed VOC-shaped record.
     The recursive parser runs inside ``mapInPandas`` (Arrow-batched), so
     throughput scales with partitions; the driver never sees a document."""
@@ -155,7 +155,7 @@ def parse_voc_annotations(xml_docs: DataFrame, xml_col: str = "xml") -> DataFram
     def parse_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
-            for xml_text in pdf[xml_col]:
+            for xml_text in pdf["xml"]:
                 d = recursive_parse_xml(xml_text)["annotation"]
                 size = d.get("size") or {}
                 objs = [

@@ -24,6 +24,10 @@ from pyspark.sql import functions as F
 from ..schemas import EVENTS, EVENTS_RAW_NANOS, EVENTS_RAW_TS_NTZ
 from ..tables import events_ts_kind, normalize_events_ts
 
+WATERMARK = "2 hours"
+ATTRIBUTION_WATERMARK = "4 hours"
+SESSION_GAP_SECONDS = 1800
+
 
 def _source_schema(staged_dir: str):
     """Streaming sources never infer schemas — declare the one matching
@@ -181,8 +185,7 @@ def run_bounded_to_parquet(
     return out
 
 
-def run_bounded(agg: DataFrame, mode: str = "complete",
-                state_partitions: int | None = 8) -> DataFrame:
+def run_bounded(agg: DataFrame, mode: str = "complete") -> DataFrame:
     """Drive a streaming aggregation over its bounded source to
     completion and return the result as a batch DataFrame.
 
@@ -191,10 +194,10 @@ def run_bounded(agg: DataFrame, mode: str = "complete",
     path every equivalence test and registered query exercises is the
     path a deployed pipeline runs, not a test-only memory sink. Output
     and checkpoint live under a per-run unique tmp directory (results
-    are aggregated/metadata-sized). ``state_partitions`` defaults to 8
-    for bounded replays — their state is tiny by construction, and the
-    per-batch state-store commit cost scales with the shard count (see
-    run_bounded_to_parquet); pass None to keep the session setting."""
+    are aggregated/metadata-sized). State uses 8 shards for bounded
+    replays — their state is tiny by construction, and the per-batch
+    state-store commit cost scales with the shard count (see
+    run_bounded_to_parquet)."""
     # Per-process runs root: a concurrent session (parallel pytest /
     # CLI) pruning a SHARED directory could delete another process's
     # run dir whose returned DataFrame is still lazily unread; scoping
@@ -210,7 +213,7 @@ def run_bounded(agg: DataFrame, mode: str = "complete",
         out_dir=os.path.join(run_dir, "out"),
         checkpoint_dir=os.path.join(run_dir, "ckpt"),
         mode=mode,
-        state_partitions=state_partitions,
+        state_partitions=8,
     )
 
 
@@ -231,7 +234,7 @@ def _prune_old_runs(runs_root: str, keep: int = 64) -> None:
         pass
 
 
-def _prune_stale_roots(base: str, max_age_s: float = 24 * 3600) -> None:
+def _prune_stale_roots(base: str) -> None:
     """Reap OTHER processes' per-pid runs roots, but only once they are
     both old (>24 h — far past any lazy DataFrame's lifetime) AND their
     owning pid is gone. Age + liveness together make the cross-process
@@ -247,7 +250,7 @@ def _prune_stale_roots(base: str, max_age_s: float = 24 * 3600) -> None:
                 continue
             if pid == os.getpid():
                 continue
-            if now - e.stat().st_mtime < max_age_s:
+            if now - e.stat().st_mtime < 24 * 3600:
                 continue
             try:
                 os.kill(pid, 0)  # raises if the owner is gone
@@ -286,11 +289,13 @@ def session_agg_stream(events: DataFrame, gap: str = "30 minutes",
     )
 
 
-def session_agg_batch(events: DataFrame, gap: str = "30 minutes") -> DataFrame:
+def session_agg_batch(events: DataFrame) -> DataFrame:
     """The batch twin of ``session_agg_stream`` — identical expression,
     no watermark (bounded input needs none)."""
     return (
-        events.groupBy(F.session_window("ts", gap).alias("w"), "user_id")
+        events.groupBy(
+            F.session_window("ts", "30 minutes").alias("w"), "user_id"
+        )
         .agg(
             F.count("*").alias("n_events"),
             F.round(F.sum("value"), 2).alias("sum_value"),
@@ -415,8 +420,7 @@ def read_events_stream_duplicated(spark: SparkSession,
     return normalize_events_ts(raw)
 
 
-def dedup_counts_stream(events: DataFrame,
-                        watermark: str = "2 hours") -> DataFrame:
+def dedup_counts_stream(events: DataFrame) -> DataFrame:
     """Streaming exact dedup (X6 twin of X1): drop re-delivered events by
     event_id, then aggregate per type. ``dropDuplicates`` keeps one state
     entry per id seen within the watermark horizon — the watermark is
@@ -425,7 +429,7 @@ def dedup_counts_stream(events: DataFrame,
     the downstream agg on event_type — Spark inserts the two stateful
     exchanges; both are key-partitioned and skew-free."""
     deduped = (
-        events.withWatermark("ts", watermark)
+        events.withWatermark("ts", WATERMARK)
         .dropDuplicates(["event_id"])
     )
     return deduped.groupBy("event_type").agg(
@@ -434,8 +438,7 @@ def dedup_counts_stream(events: DataFrame,
     )
 
 
-def attribution_left_outer_stream(events: DataFrame,
-                                  watermark: str = "4 hours") -> DataFrame:
+def attribution_left_outer_stream(events: DataFrame) -> DataFrame:
     """Stream-stream LEFT OUTER interval join: every click emits exactly
     once — joined to qualifying purchases when they exist, or with NULL
     purchase columns once the watermark guarantees no match can still
@@ -457,7 +460,7 @@ def attribution_left_outer_stream(events: DataFrame,
             F.col("user_id").alias("c_user"),
             F.col("ts").alias("click_ts"),
         )
-        .withWatermark("click_ts", watermark)
+        .withWatermark("click_ts", ATTRIBUTION_WATERMARK)
     )
     purchases = (
         events.filter(F.col("event_type") == "purchase")
@@ -466,7 +469,7 @@ def attribution_left_outer_stream(events: DataFrame,
             F.col("user_id").alias("p_user"),
             F.col("ts").alias("purchase_ts"),
         )
-        .withWatermark("purchase_ts", watermark)
+        .withWatermark("purchase_ts", ATTRIBUTION_WATERMARK)
     )
     return clicks.join(
         purchases,
@@ -580,8 +583,9 @@ def read_events_stream_with_flush(spark: SparkSession, sf_dir: str) -> DataFrame
     return normalize_events_ts(raw)
 
 
-def enriched_segment_agg_stream(events: DataFrame, customers: DataFrame,
-                                watermark: str = "2 hours") -> DataFrame:
+def enriched_segment_agg_stream(
+    events: DataFrame, customers: DataFrame
+) -> DataFrame:
     """Stream-static enrichment join + windowed aggregate: the streaming
     events join a STATIC dimension (customer segments) and aggregate
     revenue per (hour, segment).
@@ -598,7 +602,7 @@ def enriched_segment_agg_stream(events: DataFrame, customers: DataFrame,
         F.col("c_custkey").alias("user_id"), "c_mktsegment"
     )
     return (
-        events.withWatermark("ts", watermark)
+        events.withWatermark("ts", WATERMARK)
         .join(F.broadcast(dim), "user_id")
         .groupBy(F.window("ts", "1 hour").alias("w"), "c_mktsegment")
         .agg(
@@ -616,10 +620,9 @@ def enriched_segment_agg_stream(events: DataFrame, customers: DataFrame,
     )
 
 
-def session_finalizer_stream(events: DataFrame, gap_seconds: int = 1800,
-                             watermark: str = "2 hours") -> DataFrame:
+def session_finalizer_stream(events: DataFrame) -> DataFrame:
     """Event-time-TIMEOUT stateful sessionizer (X6): per user, sessions
-    split on a ``gap_seconds`` silence; a session closed by a successor
+    split on a ``SESSION_GAP_SECONDS`` silence; a session closed by a successor
     inside the data emits immediately, and each user's trailing OPEN
     session emits only when the event-time timeout fires — i.e. when
     the watermark passes ``last_event + gap``, the state-store
@@ -639,7 +642,7 @@ def session_finalizer_stream(events: DataFrame, gap_seconds: int = 1800,
         "n_events int"
     )
     state_schema = "start_us long, last_us long, n int"
-    gap_us = gap_seconds * 1_000_000
+    gap_us = SESSION_GAP_SECONDS * 1_000_000
 
     def finalize(key, pdfs, state: GroupState):
         import pandas as pd
@@ -670,7 +673,9 @@ def session_finalizer_stream(events: DataFrame, gap_seconds: int = 1800,
             state.update((int(start_us), int(last_us), int(n)))
             # timeout in event-time MILLIS: fires once watermark passes
             # the open session's gap horizon
-            state.setTimeoutTimestamp(last_us // 1_000 + gap_seconds * 1_000)
+            state.setTimeoutTimestamp(
+                last_us // 1_000 + SESSION_GAP_SECONDS * 1_000
+            )
         yield pd.DataFrame(
             closed,
             columns=[
@@ -679,7 +684,7 @@ def session_finalizer_stream(events: DataFrame, gap_seconds: int = 1800,
         )
 
     return (
-        events.withWatermark("ts", watermark)
+        events.withWatermark("ts", WATERMARK)
         .groupBy("user_id")
         .applyInPandasWithState(
             finalize,
@@ -691,8 +696,7 @@ def session_finalizer_stream(events: DataFrame, gap_seconds: int = 1800,
     )
 
 
-def attribution_full_outer_stream(events: DataFrame,
-                                  watermark: str = "4 hours") -> DataFrame:
+def attribution_full_outer_stream(events: DataFrame) -> DataFrame:
     """Stream-stream FULL OUTER interval join — both directions of the
     outer contract at once: every click emits exactly once (matched or
     null-padded like the left-outer variant), AND every purchase that
@@ -713,7 +717,7 @@ def attribution_full_outer_stream(events: DataFrame,
             F.col("user_id").alias("c_user"),
             F.col("ts").alias("click_ts"),
         )
-        .withWatermark("click_ts", watermark)
+        .withWatermark("click_ts", ATTRIBUTION_WATERMARK)
     )
     purchases = (
         events.filter(F.col("event_type") == "purchase")
@@ -722,7 +726,7 @@ def attribution_full_outer_stream(events: DataFrame,
             F.col("user_id").alias("p_user"),
             F.col("ts").alias("purchase_ts"),
         )
-        .withWatermark("purchase_ts", watermark)
+        .withWatermark("purchase_ts", ATTRIBUTION_WATERMARK)
     )
     return clicks.join(
         purchases,
@@ -774,8 +778,7 @@ def fingerprint_stream(events: DataFrame) -> DataFrame:
     )
 
 
-def srm_monitor_stream(events: DataFrame,
-                       watermark: str = "24 hours") -> DataFrame:
+def srm_monitor_stream(events: DataFrame) -> DataFrame:
     """Streaming sample-ratio-mismatch monitor (X6 twin of the batch
     ``stats.srm_check``): distinct experiment units per md5-hashed arm,
     maintained continuously — the assignment-health dashboard number
@@ -809,7 +812,7 @@ def srm_monitor_stream(events: DataFrame,
         "THEN 'variant_a' ELSE 'variant_b' END AS arm",
     )
     deduped = (
-        assigned.withWatermark("ts", watermark)
+        assigned.withWatermark("ts", "24 hours")
         .dropDuplicates(["arm", "user_id"])
     )
     return deduped.groupBy("arm").agg(
@@ -817,10 +820,7 @@ def srm_monitor_stream(events: DataFrame,
     )
 
 
-def slo_burn_stream(events: DataFrame,
-                    error_type: str = "error",
-                    slo_error_ppm: int = 10_000,
-                    watermark: str = "2 hours") -> DataFrame:
+def slo_burn_stream(events: DataFrame) -> DataFrame:
     """Streaming twin of ``operators.events.slo_burn_rate``'s FAST
     window: per tumbling event-time hour, the error-budget burn in
     exact integer milli-burn, maintained live — the pager looks at
@@ -835,12 +835,12 @@ def slo_burn_stream(events: DataFrame,
     equals the batch fast-window columns bit-for-bit.
     """
     return (
-        events.withWatermark("ts", watermark)
+        events.withWatermark("ts", WATERMARK)
         .groupBy(F.window("ts", "1 hour").alias("w"))
         .agg(
             F.count("*").cast("bigint").alias("n_events"),
             F.sum(
-                F.expr(f"CAST(event_type = '{error_type}' AS BIGINT)")
+                F.expr("CAST(event_type = 'error' AS BIGINT)")
             ).cast("bigint").alias("n_errors"),
         )
         .select(
@@ -852,7 +852,7 @@ def slo_burn_stream(events: DataFrame,
             ).alias("err_ppm"),
             F.expr(
                 "CAST((1000000000 * n_errors) DIV "
-                f"(n_events * {slo_error_ppm}) AS BIGINT)"
+                "(n_events * 10000) AS BIGINT)"
             ).alias("burn_fast_milli"),
         )
     )

@@ -24,38 +24,39 @@ from pyspark.sql import functions as F
 
 from ..operators import textanalysis as ta
 
+N_FILES = 4
+
 DOCS_SCHEMA = (
     "doc_id long, text string, lang string, source string, n_chars long"
 )
 
 
-def staged_docs_dir(spark: SparkSession, sf_dir: str, n_files: int = 4) -> str:
-    """Stage the documents table as ``n_files`` parquet files so a
+def staged_docs_dir(spark: SparkSession, sf_dir: str) -> str:
+    """Stage the documents table as ``N_FILES`` parquet files so a
     maxFilesPerTrigger=1 replay yields that many micro-batches. Staged
-    once per (sf_dir, n_files); the batch↔stream equivalence is
+    once per sf_dir; the batch↔stream equivalence is
     file-assignment-independent (the funnel aggregates over all
     batches)."""
     src = pathlib.Path(sf_dir) / "documents.parquet"
     key = sf_dir.strip("/").replace("/", "_")
-    dst = pathlib.Path("/tmp/spark_graft_streams") / f"{key}_docs{n_files}"
+    dst = pathlib.Path("/tmp/spark_graft_streams") / f"{key}_docs{N_FILES}"
     marker = dst / "_SUCCESS"
     if not marker.exists() or marker.stat().st_mtime < src.stat().st_mtime:
         (
             spark.read.parquet(str(src))
-            .repartition(n_files)
+            .repartition(N_FILES)
             .write.mode("overwrite")
             .parquet(str(dst))
         )
     return str(dst)
 
 
-def read_docs_stream(spark: SparkSession, sf_dir: str,
-                     files_per_trigger: int = 1) -> DataFrame:
+def read_docs_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bounded file-source stream of incoming documents."""
     staged = staged_docs_dir(spark, sf_dir)
     return (
         spark.readStream.schema(DOCS_SCHEMA)
-        .option("maxFilesPerTrigger", files_per_trigger)
+        .option("maxFilesPerTrigger", 1)
         .parquet(staged)
     )
 

@@ -1,11 +1,20 @@
-"""Scalar library, salted aggregation, composed label-map loaders."""
+"""Session settings, scalar library, salted aggregation, composed
+label-map loaders."""
 
 from __future__ import annotations
 
+import pytest
+from pyspark.errors import ArithmeticException
 from pyspark.sql import functions as F
 
 from data_pipeline_rsna_spark.functions import scalars as sc
 from data_pipeline_rsna_spark.operators import relational as rel
+
+
+def test_session_pins_ansi_mode(spark):
+    assert spark.conf.get("spark.sql.ansi.enabled") == "true"
+    with pytest.raises(ArithmeticException):
+        spark.sql("SELECT CAST(9223372036854775807 AS BIGINT) + 1").collect()
 
 
 def test_strip_suffix_only_trailing(spark):

@@ -45,3 +45,22 @@ def test_pipeline_end_to_end(spark, tmp_path):
     assert len(files) == 4
     n_payloads = sum(tfr.count_tfrecords(f) for f in files)
     assert n_payloads == res.train_records
+
+    # every written Example carries the image size the boxes were
+    # normalized by, one label per box, and boxes inside the image
+    examples = [
+        tfr.decode_example(payload)
+        for f in sorted(glob.glob(f"{out}/*/*.tfrecord"))
+        for _, payload in tfr.iter_verified_frames(f)
+    ]
+    assert len(examples) == total
+    for ex in examples:
+        assert ex["image/height"] == [1024]
+        assert ex["image/width"] == [1024]
+        xmin, xmax = ex["image/object/bbox/xmin"], ex["image/object/bbox/xmax"]
+        ymin, ymax = ex["image/object/bbox/ymin"], ex["image/object/bbox/ymax"]
+        assert ex["image/object/class/label"] == [1] * len(xmin)
+        assert len(xmax) == len(ymin) == len(ymax) == len(xmin)
+        for x0, x1, y0, y1 in zip(xmin, xmax, ymin, ymax):
+            assert 0 <= x0 <= x1 <= 1
+            assert 0 <= y0 <= y1 <= 1

@@ -17,6 +17,12 @@ The scan is by name, so a second definition of a reached name counts
 as reached too. The second test therefore fails when two package
 modules define the same top-level name, unless ``SAME_NAME`` lists it
 with its reason.
+
+The third test applies the same rule to options: every defaulted
+parameter of a top-level package function is passed by some call in
+the package, ``tools/``, ``perfbench/``, ``bench.py``,
+``__spark_entry__.py`` or ``tests/``. A value no call sets is a
+constant, not an option.
 """
 
 from __future__ import annotations
@@ -81,18 +87,108 @@ def _registered(node: ast.AST) -> bool:
     )
 
 
-def same_name_definitions() -> dict[str, list[str]]:
-    """Top-level names defined in more than one package module, with
-    the modules that define them."""
-    where: dict[str, list[str]] = {}
+def _top_level_defs() -> dict[str, list[tuple[str, ast.AST]]]:
+    """Every top-level def/class of the package by name, with the
+    module that defines it."""
+    defs: dict[str, list[tuple[str, ast.AST]]] = {}
     for path in sorted(PKG.rglob("*.py")):
         mod = path.relative_to(PKG).as_posix()
         for stmt in ast.parse(path.read_text()).body:
             if isinstance(
                 stmt, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
             ):
-                where.setdefault(stmt.name, []).append(mod)
-    return {n: mods for n, mods in where.items() if len(set(mods)) > 1}
+                defs.setdefault(stmt.name, []).append((mod, stmt))
+    return defs
+
+
+def same_name_definitions() -> dict[str, list[str]]:
+    """Top-level names defined in more than one package module, with
+    the modules that define them."""
+    return {
+        n: [mod for mod, _ in found]
+        for n, found in _top_level_defs().items()
+        if len({mod for mod, _ in found}) > 1
+    }
+
+
+def _callee(call: ast.Call) -> str | None:
+    f = call.func
+    if isinstance(f, ast.Name):
+        return f.id
+    if isinstance(f, ast.Attribute):
+        return f.attr
+    return None
+
+
+def _defaulted(fn: ast.FunctionDef) -> list[tuple[int | None, str]]:
+    """(positional index or None for keyword-only, name) of every
+    parameter with a default."""
+    a = fn.args
+    pos = a.posonlyargs + a.args
+    first = len(pos) - len(a.defaults)
+    out = [(i, p.arg) for i, p in enumerate(pos) if i >= first]
+    out += [
+        (None, p.arg)
+        for p, d in zip(a.kwonlyargs, a.kw_defaults)
+        if d is not None
+    ]
+    return out
+
+
+def unpassed_options() -> list[str]:
+    """``module::function(param)`` of every defaulted parameter of a
+    top-level package function that no call passes, by keyword or
+    positionally. A call matches by callee name. Exempt: names defined
+    more than once in the package, names also used as values (passed
+    around, so their calls are not all visible by name), functions
+    some call reaches with ``*``/``**``, and ``KEEP`` entries."""
+    files = [
+        *PKG.rglob("*.py"),
+        *(ROOT / "tools").rglob("*.py"),
+        *(ROOT / "perfbench").rglob("*.py"),
+        ROOT / "bench.py",
+        ROOT / "__spark_entry__.py",
+        *(ROOT / "tests").rglob("*.py"),
+    ]
+    calls: dict[str, list[ast.Call]] = {}
+    values: set[str] = set()
+    for path in files:
+        tree = ast.parse(path.read_text())
+        callees = set()
+        for n in ast.walk(tree):
+            if isinstance(n, ast.Call):
+                callees.add(id(n.func))
+                name = _callee(n)
+                if name:
+                    calls.setdefault(name, []).append(n)
+        for n in ast.walk(tree):
+            if id(n) not in callees:
+                if isinstance(n, ast.Name):
+                    values.add(n.id)
+                elif isinstance(n, ast.Attribute):
+                    values.add(n.attr)
+    out = []
+    for name, found in _top_level_defs().items():
+        if len(found) > 1 or name in values:
+            continue
+        mod, fn = found[0]
+        if isinstance(fn, ast.ClassDef) or f"{mod}::{name}" in KEEP:
+            continue
+        cs = calls.get(name, [])
+        if any(
+            any(isinstance(a, ast.Starred) for a in c.args)
+            or any(k.arg is None for k in c.keywords)
+            for c in cs
+        ):
+            continue
+        for i, param in _defaulted(fn):
+            if not any(
+                any(k.arg == param for k in c.keywords)
+                or (i is not None and len(c.args) > i)
+                for c in cs
+            ):
+                out.append(f"{mod}::{name}({param})")
+    return sorted(out)
 
 
 def unreached_definitions() -> list[str]:
@@ -160,3 +256,12 @@ def test_no_top_level_name_defined_twice():
     )
     stale = sorted(SAME_NAME.keys() - dups.keys())
     assert not stale, f"SAME_NAME entries no longer duplicated: {stale}"
+
+
+def test_every_option_is_passed_by_some_call():
+    unpassed = unpassed_options()
+    assert not unpassed, (
+        f"{len(unpassed)} defaulted parameters no call passes (make each "
+        "a constant, or pass it where a caller needs another value): "
+        + ", ".join(unpassed)
+    )
