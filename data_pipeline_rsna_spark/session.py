@@ -10,6 +10,15 @@ of Spark's legacy default of 200.
 On a real cluster the same builder is used; only ``master`` and the
 memory/instance settings change. Everything else (AQE, Arrow, timezone,
 broadcast threshold) is cluster-size independent.
+
+Python workers fork from ``worker_daemon`` instead of ``pyspark.daemon``.
+Stock workers re-read every zip archive on ``sys.path`` (``pyspark.zip``
+among them) at the start of each task; the package daemon skips an
+archive that has not changed. Executors must therefore be able to import
+this package, as its Python UDFs already require. The package's parent
+directory is appended to the workers' ``PYTHONPATH``, which covers
+local mode and any executor that shares the driver's file system; on
+other clusters ship the package (``--py-files`` or an install).
 """
 
 from __future__ import annotations
@@ -23,6 +32,11 @@ from pyspark.sql import SparkSession
 # coalescePartitions then shrinks small stages automatically, so we set the
 # *initial* number generously and let AQE adapt downward.
 _DEFAULT_SHUFFLE_PARTITIONS = str(max(os.cpu_count() or 8, 8))
+
+_PACKAGE_PARENT = os.path.dirname(
+    os.path.dirname(os.path.abspath(__file__))
+)
+_WORKER_PYTHONPATH = "spark.executorEnv.PYTHONPATH"
 
 
 def get_spark(
@@ -39,6 +53,10 @@ def get_spark(
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
         master = f"local[{cpus}]"
+    conf = dict(extra_conf or {})
+    conf[_WORKER_PYTHONPATH] = os.pathsep.join(
+        p for p in (conf.get(_WORKER_PYTHONPATH), _PACKAGE_PARENT) if p
+    )
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
@@ -109,6 +127,11 @@ def get_spark(
         # image-sized rows (1 MiB+ binary payloads) need small Arrow
         # batches or an executor python worker holds k*row_size in RAM
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "256")
+        # workers fork from the package daemon (see the module docstring)
+        .config(
+            "spark.python.daemon.module",
+            "data_pipeline_rsna_spark.worker_daemon",
+        )
         # --- determinism for differential testing ---
         .config("spark.sql.session.timeZone", "UTC")
         # ANSI mode is Spark 4's default; pinned so a deployment's
@@ -118,7 +141,7 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -343,8 +343,8 @@ def iter_verified_frames(path: str, with_payloads: bool = True,
     chunk's payloads yield only after the whole chunk verifies.
 
     This is the single frame-walk shared by the sink-side readers and
-    the Spark DataSource scan (the two parallel walkers it replaced
-    had already drifted in error shape).
+    ``scan_tfrecords`` (the two parallel walkers it replaced had
+    already drifted in error shape).
 
     Corruption always names the FIRST offending record: a flipped bit
     in a length field misframes every later parse, so on any apparent
@@ -610,7 +610,12 @@ def write_tfrecord_shards(df, out_dir: str, num_shards: int,
         yield pa.record_batch([pa.array([n], type=pa.int64())],
                               names=["n_written"])
 
-    return sum(
-        r.n_written
-        for r in framed.mapInArrow(_write_batches, "n_written long").collect()
-    )
+    written = framed.mapInArrow(_write_batches, "n_written long").collect()
+    # the explicit repartition count is what keeps AQE from coalescing
+    # the writer exchange, and the -of-%05d names depend on it
+    if len(written) != num_shards:
+        raise RuntimeError(
+            f"{len(written)} TFRecord writer tasks ran, expected "
+            f"{num_shards}: {out_dir}"
+        )
+    return sum(r.n_written for r in written)

@@ -59,8 +59,8 @@ KEEP = {
 
 SAME_NAME = {
     "register": "queries.register is the query-registry decorator; "
-                "tfrecord_source and pydatasource each register their "
-                "own Spark data source format with the session",
+                "pydatasource.register registers its Spark data source "
+                "format with the session",
     "_decode_scan": "the JPEG and JPEG-LS codecs each decode their own "
                     "entropy-coded scan format",
 }

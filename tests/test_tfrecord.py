@@ -3,7 +3,10 @@
 from __future__ import annotations
 
 import glob
+import os
 import struct
+
+import pytest
 
 from data_pipeline_rsna_spark.sinks import tfrecord as tfr
 
@@ -130,7 +133,7 @@ def test_float_list_layout():
 
 
 # ---------------------------------------------------------------------------
-# read side: decode_example + the tfrecord Python DataSource (round 8)
+# read side: decode_example + the scan_tfrecords scan
 # ---------------------------------------------------------------------------
 
 
@@ -177,19 +180,31 @@ def test_decode_example_hypothesis_roundtrip():
     check()
 
 
-def test_tfrecord_source_scan_matches_write(spark, tmp_path):
+@pytest.mark.parametrize(
+    "n_rows,n_shards",
+    [
+        pytest.param(1200, 3, id="full_shards"),
+        pytest.param(3, 6, id="empty_shards"),
+    ],
+)
+def test_tfrecord_source_scan_matches_write(spark, tmp_path, n_rows,
+                                            n_shards):
     from pyspark.sql import functions as F
 
     from data_pipeline_rsna_spark.sources import tfrecord_source as tfs
 
-    df = spark.range(1200).selectExpr("id", "concat('payload-', id) AS text")
+    df = spark.range(n_rows).selectExpr(
+        "id", "concat('payload-', id) AS text"
+    )
     out = str(tmp_path / "shards")
     tfr.write_tfrecord_shards(
-        df, out, 3, lambda r: {"id": [r["id"]], "text": [r["text"]]}
+        df, out, n_shards, lambda r: {"id": [r["id"]], "text": [r["text"]]}
     )
     back = tfs.scan_tfrecords(spark, out)
-    assert back.count() == 1200  # >512/shard: spans multiple Arrow batches
-    assert back.select("path").distinct().count() == 3
+    assert back.count() == n_rows
+    non_empty = [f for f in glob.glob(out + "/*.tfrecord")
+                 if os.path.getsize(f)]
+    assert back.select("path").distinct().count() == len(non_empty)
     # payload byte-level equality: sha2 multiset of scanned payloads ==
     # sha2 of the pre-sink encoded examples
     import hashlib
@@ -216,8 +231,6 @@ def test_tfrecord_source_scan_matches_write(spark, tmp_path):
 
 
 def test_tfrecord_source_detects_corruption(spark, tmp_path):
-    import pytest
-
     from data_pipeline_rsna_spark.sources import tfrecord_source as tfs
 
     df = spark.range(20).selectExpr("id")
@@ -241,6 +254,10 @@ def test_tfrecord_source_glob_and_single_file(spark, tmp_path):
     assert tfs.scan_tfrecords(spark, out + "/*.tfrecord").count() == 10
     one = tfs.scan_tfrecords(spark, files[0])
     assert one.select("path").distinct().count() == 1
+    # no shards: raises on the driver at call time, before any job
+    (tmp_path / "no_shards").mkdir()
+    with pytest.raises(ValueError, match="no TFRecord shards match"):
+        tfs.scan_tfrecords(spark, str(tmp_path / "no_shards"))
 
 
 def test_crc32c_batch_parity_and_edges():
@@ -314,8 +331,6 @@ def test_corrupt_length_field_names_first_offending_record():
     import os
     import struct
     import tempfile
-
-    import pytest
 
     from data_pipeline_rsna_spark.sinks import tfrecord as tfr
 
