@@ -7,12 +7,16 @@ synthetic ids ``{pid}-{op}-{i}-{stage}``. Eligibility: stages 1 and 4
 take every image; stages 2, 3, 5, 6, 7 take positive (box-bearing)
 patients only (``:331,372,449,492,533``).
 
-Engine shape: ONE lazy DAG. The source is scanned once (and should be
-cached by the caller when the pixel path runs); each stage is an
-``explode(sequence())`` fan-out (narrow — no shuffle) plus column
-arithmetic for the box geometry; stages are ``unionByName``-ed. The 7×
+Engine shape: ONE fan-out over a stage table, no union. Patients are
+left-joined to their boxes once; each joined row crosses the 7-row
+``STAGES`` table (``inline``), drops the positives-only stages when it
+has no box, and fans out to its stage's k variants
+(``explode(sequence)``) and their flip twins — all narrow, no shuffle
+after the join. Each stage's box geometry is a ``CASE stage WHEN …``
+branch over its op chain, built as SQL text from ``geometry``. The 7×
 rescan anti-pattern of the reference (SURVEY.md §4) disappears by
-construction.
+construction, and the plan is one join and one pipeline of projections
+and generators whatever the stage count.
 
 Stage table (k, positives-only, op-chain):
 
@@ -37,10 +41,10 @@ yields 2·(5+5) = 20 variants, a positive 2·(5+25+25+5+25+5+5) = 190.
 
 from __future__ import annotations
 
+import itertools
 from dataclasses import dataclass
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
 from . import geometry as geo
 
@@ -51,78 +55,80 @@ class Stage:
     op: str
     k: int
     positives_only: bool
+    chain: tuple[str, ...]  # box-geometry steps: shift, zoom or affine
 
 
 STAGES: tuple[Stage, ...] = (
-    Stage(1, "shift_image", 5, False),
-    Stage(2, "shift_bbox", 25, True),
-    Stage(3, "scale_bbox", 25, True),
-    Stage(4, "scale_image", 5, False),
-    Stage(5, "scale_shift_bbox", 25, True),
-    Stage(6, "shift_image_shift_bbox", 5, True),
-    Stage(7, "scale_image_scale_shift_bbox", 5, True),
+    Stage(1, "shift_image", 5, False, ("shift",)),
+    Stage(2, "shift_bbox", 25, True, ("shift",)),
+    Stage(3, "scale_bbox", 25, True, ("zoom",)),
+    Stage(4, "scale_image", 5, False, ("affine",)),
+    Stage(5, "scale_shift_bbox", 25, True, ("zoom", "shift")),
+    Stage(6, "shift_image_shift_bbox", 5, True, ("shift", "shift")),
+    Stage(7, "scale_image_scale_shift_bbox", 5, True,
+          ("affine", "zoom", "shift")),
 )
 
+# random draws per step: (salt suffix, lo, hi); zoom and affine draw a
+# scale step, shift an offset per axis
+_DRAWS = {
+    "shift": ((":x", -50, 50), (":y", -50, 50)),
+    "zoom": (("", -8, 8),),
+    "affine": (("", -2, 2),),
+}
 
-def _rand_int(*cols: Column, lo: int, hi: int, salt: str) -> Column:
-    """Deterministic pseudo-random int in [lo, hi], keyed on the given
-    columns — the engine's seeded-RNG convention for column expressions
-    (pixel kernels use image_kernels.seeded_rng with the same keying)."""
-    h = F.abs(F.xxhash64(F.lit(salt), *cols))
-    return (h % (hi - lo + 1) + lo).cast("int")
+
+def _rand_int(salt: str, lo: int, hi: int) -> str:
+    """Deterministic pseudo-random int in [lo, hi], keyed on
+    (salt, patient_id, variant_i, stage) — the engine's seeded-RNG
+    convention for column expressions (pixel kernels use
+    image_kernels.seeded_rng with the same keying)."""
+    h = f"abs(xxhash64('{salt}', patient_id, variant_i, stage))"
+    return f"CAST({h} % {hi - lo + 1} + ({lo}) AS INT)"
 
 
-def _op_chain_exprs(stage: Stage, image_w: int,
-                    image_h: int) -> tuple[Column, Column, Column, Column]:
-    """The stage's box-geometry chain as four COMPOSED column
-    expressions (x, y, width, height). Pixel halves are applied by
-    multimodal.apply_kernel when the pipeline carries pixels.
+def _draws(st: Stage) -> list[str]:
+    """The stage's random draws in chain order."""
+    return [
+        _rand_int(f"{st.op}:{step}{suffix}", lo, hi)
+        for step, op in enumerate(st.chain)
+        for suffix, lo, hi in _DRAWS[op]
+    ]
 
-    Returning expressions instead of chaining ``withColumns`` per op
-    lets the caller emit ONE projection per branch — the chained form
-    cost 4-6 analyzer passes per branch × 7 branches, which dominated
-    the DAG's driver-side plan-build time (measured seconds at 30
-    columns; the composed expression trees are semantically
-    identical, value-pinned by the oracle gate)."""
-    key = [F.col("patient_id"), F.col("variant_i"), F.lit(stage.stage)]
-    # interpret the op name the way the reference's function chain does
-    if stage.op == "shift_image":
-        ops = ["shift"]
-    elif stage.op == "shift_bbox":
-        ops = ["shift"]
-    elif stage.op == "scale_bbox":
-        ops = ["zoom"]
-    elif stage.op == "scale_image":
-        ops = ["affine"]
-    elif stage.op == "scale_shift_bbox":
-        ops = ["zoom", "shift"]
-    elif stage.op == "shift_image_shift_bbox":
-        ops = ["shift", "shift"]
-    elif stage.op == "scale_image_scale_shift_bbox":
-        ops = ["affine", "zoom", "shift"]
-    else:  # pragma: no cover
-        raise ValueError(f"unknown op {stage.op!r}")
-    x, y, w, h = (F.col(c) for c in ("x", "y", "width", "height"))
-    for step, op in enumerate(ops):
-        salt = f"{stage.op}:{step}"
+
+def _op_chain(st: Stage, image_w: int, image_h: int) -> list[str]:
+    """The stage's box-geometry chain as (x, y, width, height) SQL text
+    over the draw columns ``_r0``, ``_r1``, … of ``_draws``. Pixel halves
+    are applied by multimodal.apply_kernel when the pipeline carries
+    pixels."""
+    draws = (f"_r{i}" for i in itertools.count())
+    box = ["x", "y", "width", "height"]
+    for op in st.chain:
         if op == "shift":
-            rx = _rand_int(*key, lo=-50, hi=50, salt=salt + ":x")
-            ry = _rand_int(*key, lo=-50, hi=50, salt=salt + ":y")
-            x, y = geo.shift_box(x, y, rx, ry)
-        elif op == "zoom":
-            rf = 1.0 + _rand_int(*key, lo=-8, hi=8, salt=salt) * 0.03125
-            x, y, w, h = geo.scale_bbox_recenter(x, y, w, h, rf)
-        elif op == "affine":
-            rf = 1.0 + _rand_int(*key, lo=-2, hi=2, salt=salt) * 0.03125
-            x, y, w, h = geo.scale_image_box_affine(
-                x, y, w, h, rf, image_w, image_h
-            )
-    return x, y, w, h
+            box[:2] = geo.shift_box(*box[:2], next(draws), next(draws))
+        else:
+            rf = f"(1.0D + {next(draws)} * 0.03125D)"
+            if op == "zoom":
+                box = geo.scale_bbox_recenter(*box, rf)
+            else:
+                box = geo.scale_image_box_affine(*box, rf, image_w, image_h)
+    return box
+
+
+def _by_stage(exprs: dict[int, str]) -> str:
+    whens = " ".join(f"WHEN {s} THEN {e}" for s, e in exprs.items())
+    return f"CASE stage {whens} END"
+
+
+_STAGE_TABLE = "inline(array({}))".format(", ".join(
+    f"named_struct('stage', {st.stage}, 'op', '{st.op}', 'k', {st.k}, "
+    f"'positives_only', {str(st.positives_only).lower()})"
+    for st in STAGES
+))
 
 
 def augment(patients: DataFrame, boxes: DataFrame, image_w: int = 1024,
-            image_h: int = 1024,
-            stages: tuple[Stage, ...] = STAGES) -> DataFrame:
+            image_h: int = 1024) -> DataFrame:
     """Run the full DAG over (patient_id, target) + per-box rows.
 
     Returns one row per generated *box instance* for positives and one
@@ -130,59 +136,37 @@ def augment(patients: DataFrame, boxes: DataFrame, image_w: int = 1024,
     patient_id, stage, op, variant_i, flipped, and transformed box
     coords (null for negatives).
     """
+    stage_draws = {st.stage: _draws(st) for st in STAGES}
+    draws = [
+        _by_stage({s: d[i] for s, d in stage_draws.items() if i < len(d)})
+        + f" AS _r{i}"
+        for i in range(max(map(len, stage_draws.values())))
+    ]
+    chains = {st.stage: _op_chain(st, image_w, image_h) for st in STAGES}
+    geometry = [
+        _by_stage({s: c[j] for s, c in chains.items()}) + f" AS {name}"
+        for j, name in enumerate(("x", "y", "width", "height"))
+    ]
     # join BEFORE the fan-out: the per-patient boxes join shuffles
-    # |patients|+|boxes| rows once, and every stage's ×2k explode is a
-    # narrow op on top of it. (Joining after the explode — the naive
-    # order — shuffles the fanned rows separately per stage: 7 shuffles
-    # of up to 50× the data. With the join hoisted, all 7 branches share
-    # one identical join subtree and Spark's ReuseExchange materializes
-    # it once.)
-    base = patients.join(boxes, "patient_id", "left").withColumn(
-        "_has_box", F.col("x").isNotNull()
+    # |patients|+|boxes| rows once, and the ×2k fan-out is narrow on
+    # top of it. Draws and geometry are computed once per variant,
+    # before the flip twin doubles the rows.
+    return (
+        patients.join(boxes, "patient_id", "left")
+        .selectExpr("patient_id", "x", "y", "width", "height", _STAGE_TABLE)
+        .where("NOT positives_only OR x IS NOT NULL")
+        .selectExpr("patient_id", "stage", "op", "x", "y", "width",
+                    "height", "explode(sequence(0, k - 1)) AS variant_i")
+        .selectExpr("*", *draws)
+        .selectExpr("patient_id", "stage", "op", "variant_i", *geometry)
+        .selectExpr("*", "explode(array(0, 1)) AS flipped")
+        .selectExpr(
+            "concat_ws('-', patient_id, op, "
+            "CASE WHEN flipped = 1 THEN 'fl' ELSE 'o' END, variant_i, "
+            "stage) AS image_id",
+            "patient_id", "stage", "op", "variant_i", "flipped",
+            "CASE WHEN flipped = 1 THEN "
+            f"{geo.flip_box_x('x', 'width', image_w)} ELSE x END AS x",
+            "y", "width", "height",
+        )
     )
-    branches: list[DataFrame] = []
-    for st in stages:
-        src = base.filter(F.col("_has_box")) if st.positives_only else base
-        with_boxes = (
-            src.select(
-                "*",
-                F.explode(F.sequence(F.lit(0), F.lit(st.k - 1))).alias(
-                    "variant_i"
-                ),
-            )
-            .select(
-                "*",
-                F.explode(F.array(F.lit(0), F.lit(1))).alias("flipped"),
-            )
-        )
-        tx, ty, tw, th = _op_chain_exprs(st, image_w, image_h)
-        flipped_x = F.when(
-            F.col("flipped") == 1, geo.flip_box_x(tx, tw, image_w)
-        ).otherwise(tx)
-        branches.append(
-            with_boxes.select(
-                F.concat_ws(
-                    "-",
-                    F.col("patient_id"),
-                    F.lit(st.op),
-                    F.when(F.col("flipped") == 1, F.lit("fl")).otherwise(
-                        F.lit("o")
-                    ),
-                    F.col("variant_i"),
-                    F.lit(str(st.stage)),
-                ).alias("image_id"),
-                "patient_id",
-                F.lit(st.stage).alias("stage"),
-                F.lit(st.op).alias("op"),
-                "variant_i",
-                "flipped",
-                flipped_x.alias("x"),
-                ty.alias("y"),
-                tw.alias("width"),
-                th.alias("height"),
-            )
-        )
-    out = branches[0]
-    for b in branches[1:]:
-        out = out.unionByName(b)
-    return out

@@ -2,12 +2,19 @@
 
 The reference mixes pixel work and box arithmetic inside each
 augmentation function; the engine splits them. Box geometry is pure
-Column arithmetic (this module — codegen'd, oracle-checkable); pixel
+SQL arithmetic (this module — codegen'd, oracle-checkable); pixel
 work lives in ``image_kernels.py`` pandas UDFs. Keeping the two apart is
 what lets 99% of an augmentation pipeline stay JVM-side.
 
-All functions take/return columns over rows shaped (x, y, width, height)
-in absolute pixels.
+The four transforms take SQL expression text and return SQL expression
+text over boxes shaped (x, y, width, height) in absolute pixels, for
+``selectExpr``/``F.expr``. Each output is an atom (parenthesized or a
+function call), so an output can be passed back in as an input:
+``augmentation.augment`` chains them per stage and ``q_box_geometry``
+applies each once. Building text instead of Columns costs no py4j round
+trip per operator. Fractional constants are double literals (``512.0D``),
+as the Python floats of a Column expression would be; a bare ``512.0``
+is a DECIMAL in Spark SQL.
 
 Reference citations:
 - shift:  generate_images_from_dicom.py:124-125 (translate, no clip)
@@ -26,40 +33,39 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def shift_box(x: Column, y: Column, rx: Column, ry: Column) -> list[Column]:
+def shift_box(x: str, y: str, rx: str, ry: str) -> list[str]:
     """Translate by (rx, ry); the reference does not clip (quirk §2.2-5)."""
-    return [x + rx, y + ry]
+    return [f"({x} + {rx})", f"({y} + {ry})"]
 
 
-def flip_box_x(x: Column, width: Column, image_w: int) -> Column:
+def flip_box_x(x: str, width: str, image_w: int) -> str:
     """Horizontal mirror: x' = W - x - w."""
-    return F.lit(image_w) - x - width
+    return f"({image_w} - {x} - {width})"
 
 
 def scale_image_box_affine(
-    x: Column, y: Column, w: Column, h: Column, rf: Column, image_w: int,
-    image_h: int,
-) -> list[Column]:
+    x: str, y: str, w: str, h: str, rf: str, image_w: int, image_h: int,
+) -> list[str]:
     """Whole-image zoom by rf about the image center: every box corner
     maps through the same affine. Spark round() is HALF_UP like the
     oracle's; ties only arise at exact .5 doubles."""
-    cx, cy = image_w / 2, image_h / 2
+    cx, cy = f"{image_w / 2!r}D", f"{image_h / 2!r}D"
     return [
-        F.round(rf * (x - cx) + cx).cast("int"),
-        F.round(rf * (y - cy) + cy).cast("int"),
-        F.round(rf * w).cast("int"),
-        F.round(rf * h).cast("int"),
+        f"CAST(round({rf} * ({x} - {cx}) + {cx}) AS INT)",
+        f"CAST(round({rf} * ({y} - {cy}) + {cy}) AS INT)",
+        f"CAST(round({rf} * {w}) AS INT)",
+        f"CAST(round({rf} * {h}) AS INT)",
     ]
 
 
 def scale_bbox_recenter(
-    x: Column, y: Column, w: Column, h: Column, rf: Column
-) -> list[Column]:
+    x: str, y: str, w: str, h: str, rf: str
+) -> list[str]:
     """Zoom one box about its own center; clamp origin into frame."""
-    nw = F.round(w * rf).cast("int")
-    nh = F.round(h * rf).cast("int")
-    nx = F.greatest(F.lit(0), (x + w / 2 - nw / 2).cast("int"))
-    ny = F.greatest(F.lit(0), (y + h / 2 - nh / 2).cast("int"))
+    nw = f"CAST(round({w} * {rf}) AS INT)"
+    nh = f"CAST(round({h} * {rf}) AS INT)"
+    nx = f"greatest(0, CAST({x} + {w} / 2 - {nw} / 2 AS INT))"
+    ny = f"greatest(0, CAST({y} + {h} / 2 - {nh} / 2 AS INT))"
     return [nx, ny, nw, nh]
 
 

@@ -769,8 +769,8 @@ def audio_features(clips: DataFrame) -> DataFrame:
     )
 
 
-# stage op-name → pixel-kernel sequence, mirroring the geometry chains in
-# augmentation._op_chain_exprs (same stage vocabulary)
+# stage op-name → pixel-kernel sequence, mirroring the geometry chains of
+# augmentation.STAGES (same stage vocabulary)
 STAGE_KERNEL_CHAINS = {
     "shift_image": ("shift",),
     "shift_bbox": ("shift",),

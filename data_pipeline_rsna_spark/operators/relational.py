@@ -453,11 +453,9 @@ def dispatch_on_suffix(id_col: Column) -> Column:
 def box_valid(width_px: int, height_px: int) -> Column:
     """images_to_tfrecord.py:113-120: drop degenerate or out-of-bounds
     boxes. Kept as a Column predicate so Catalyst can push it into scans."""
-    return (
-        (F.col("width") > 0)
-        & (F.col("height") > 0)
-        & (F.col("x") + F.col("width") <= width_px)
-        & (F.col("y") + F.col("height") <= height_px)
+    return F.expr(
+        f"width > 0 AND height > 0 AND x + width <= {width_px} "
+        f"AND y + height <= {height_px}"
     )
 
 

@@ -80,49 +80,30 @@ def run_rsna_pipeline(
     # metric, so no standalone count() re-executes the whole
     # ingest->split->augment DAG just for one number.
     obs = Observation("rsna_skip_accounting")
-    with_split = augmented.join(
-        split.select("patient_id", "split"), "patient_id"
-    ).observe(
-        obs,
-        F.sum(
-            F.when(
-                F.col("x").isNotNull()
-                & ~rel.box_valid(IMAGE_W, IMAGE_H),
-                1,
-            ).otherwise(0)
-        ).alias("skipped"),
+    with_split = (
+        augmented.join(split.select("patient_id", "split"), "patient_id")
+        .select("*", rel.box_valid(IMAGE_W, IMAGE_H).alias("_valid"))
+        .observe(obs, F.expr("count_if(x IS NOT NULL AND NOT _valid)")
+                 .alias("skipped"))
     )
-
-    mask = F.col("x").isNotNull() & rel.box_valid(IMAGE_W, IMAGE_H)
-    x, y, w, h = (F.col(c) for c in ("x", "y", "width", "height"))
-    box_struct = F.when(
-        mask,
-        F.struct(
-            F.struct("x", "y", "width", "height").alias("k"),
-            F.round(x / IMAGE_W, 9).alias("xmin"),
-            F.round((x + w) / IMAGE_W, 9).alias("xmax"),
-            F.round(y / IMAGE_H, 9).alias("ymin"),
-            F.round((y + h) / IMAGE_H, 9).alias("ymax"),
-        ),
+    collected = with_split.selectExpr(
+        "image_id", "patient_id", "split",
+        "CASE WHEN x IS NOT NULL AND _valid THEN named_struct("
+        "'k', named_struct('x', x, 'y', y, 'width', width, 'height', height), "
+        f"'xmin', round(x / {IMAGE_W}, 9), "
+        f"'xmax', round((x + width) / {IMAGE_W}, 9), "
+        f"'ymin', round(y / {IMAGE_H}, 9), "
+        f"'ymax', round((y + height) / {IMAGE_H}, 9)) END AS _box",
+    ).groupBy("image_id").agg(
+        F.expr("first(patient_id) AS patient_id"),
+        F.expr("first(split) AS split"),
+        F.expr("sort_array(collect_list(_box)) AS _boxes"),
     )
-    collected = with_split.groupBy("image_id").agg(
-        F.first("patient_id").alias("patient_id"),
-        F.first("split").alias("split"),
-        F.sort_array(F.collect_list(box_struct)).alias("_boxes"),
-    )
-
-    def arr(field: str) -> F.Column:
-        return F.transform(F.col("_boxes"), lambda b: b[field])
-
-    records = collected.select(
-        "image_id",
-        "patient_id",
-        "split",
-        arr("xmin").alias("xmins"),
-        arr("xmax").alias("xmaxs"),
-        arr("ymin").alias("ymins"),
-        arr("ymax").alias("ymaxs"),
-        F.size("_boxes").alias("n_boxes"),
+    records = collected.selectExpr(
+        "image_id", "patient_id", "split",
+        *(f"transform(_boxes, b -> b.{f}) AS {f}s"
+          for f in ("xmin", "xmax", "ymin", "ymax")),
+        "size(_boxes) AS n_boxes",
     )
 
     def to_features(row) -> dict[str, list]:
@@ -146,22 +127,20 @@ def run_rsna_pipeline(
     records = records.persist(StorageLevel.MEMORY_AND_DISK)
     try:
         counts = {
-            r["split"]: r["n"]
-            for r in records.groupBy("split")
-            .agg(F.count("*").alias("n"))
-            .collect()
+            r["split"]: r["count"]
+            for r in records.groupBy("split").count().collect()
         }
         n_train = int(counts.get("train", 0))
         n_val = int(counts.get("val", 0))
         skipped = int(obs.get["skipped"] or 0)
         tfr.write_tfrecord_shards(
-            records.filter(F.col("split") == "train"),
+            records.where("split = 'train'"),
             f"{out_dir}/train",
             train_shards,
             to_features,
         )
         tfr.write_tfrecord_shards(
-            records.filter(F.col("split") == "val"),
+            records.where("split = 'val'"),
             f"{out_dir}/val",
             val_shards,
             to_features,

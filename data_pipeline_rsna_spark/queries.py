@@ -2514,25 +2514,24 @@ def q_box_geometry(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators import geometry as geo
 
     boxes = _boxes_from_lineitem(spark, sf_dir)
-    rx = (F.col("box_id") % 21 - 10).cast("int")
-    ry = (F.col("box_id") % 15 - 7).cast("int")
-    rf = 1.0 + ((F.col("box_id") % 5) - 2) * 0.03125
-    x, y, w, h = F.col("x"), F.col("y"), F.col("width"), F.col("height")
-    sx, sy = geo.shift_box(x, y, rx, ry)
-    ax, ay, aw, ah = geo.scale_image_box_affine(x, y, w, h, rf, 1024, 1024)
-    zx, zy, _, _ = geo.scale_bbox_recenter(x, y, w, h, rf)
-    return boxes.select(
+    rx, ry = "CAST(box_id % 21 - 10 AS INT)", "CAST(box_id % 15 - 7 AS INT)"
+    rf = "(1.0D + (box_id % 5 - 2) * 0.03125D)"
+    box = ("x", "y", "width", "height")
+    sx, sy = geo.shift_box("x", "y", rx, ry)
+    ax, ay, aw, ah = geo.scale_image_box_affine(*box, rf, 1024, 1024)
+    zx, zy, _, _ = geo.scale_bbox_recenter(*box, rf)
+    return boxes.selectExpr(
         "patient_id",
         "box_id",
-        sx.alias("shift_x"),
-        sy.alias("shift_y"),
-        geo.flip_box_x(x, w, 1024).alias("flip_x"),
-        ax.alias("affine_x"),
-        ay.alias("affine_y"),
-        aw.alias("affine_w"),
-        ah.alias("affine_h"),
-        zx.alias("zoom_x"),
-        zy.alias("zoom_y"),
+        f"{sx} AS shift_x",
+        f"{sy} AS shift_y",
+        f"{geo.flip_box_x('x', 'width', 1024)} AS flip_x",
+        f"{ax} AS affine_x",
+        f"{ay} AS affine_y",
+        f"{aw} AS affine_w",
+        f"{ah} AS affine_h",
+        f"{zx} AS zoom_x",
+        f"{zy} AS zoom_y",
     )
 
 
@@ -3237,19 +3236,21 @@ def q_multimodal_augmented(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="O19+O20+O21 full 7-stage augmentation DAG as ONE lazy plan "
     "(vs the reference's 7 rescans, generate_images_from_dicom.py:"
-    "282-561): per-stage patient eligibility, explode fan-out x flip "
-    "twin, synthetic ids, unionByName. Checked invariants: 20 variants "
+    "282-561): one patient-box join, one fan-out over the 7-row stage "
+    "table (inline, positives-only filter, explode(sequence) x flip "
+    "twin, per-stage CASE geometry), synthetic ids, no union. Checked "
+    "invariants: 20 variants "
     "per negative / 190 per positive, id uniqueness, box-row fan-out.",
     tags=("core", "headline"),
 )
 def q_augmentation_dag(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators import augmentation as aug
 
-    # typed-labels subtree fans out to patients + boxes, each consumed
-    # by all 7 augmentation stages: persist pins the one stringify+parse
-    # shuffle instead of 14 statically re-derived copies (runtime
-    # exchange reuse already collapses most, but the pin is explicit
-    # and survives plan changes that would break reuse-by-canonical-form)
+    # typed-labels subtree fans out to patients + boxes: persist pins
+    # the one stringify+parse shuffle instead of two statically
+    # re-derived copies (runtime exchange reuse would collapse them, but
+    # the pin is explicit and survives plan changes that would break
+    # reuse-by-canonical-form)
     labels = labels_ops.typed_labels(
         _lineitem_as_raw_labels(spark, sf_dir)
     ).persist()

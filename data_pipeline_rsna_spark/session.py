@@ -132,6 +132,10 @@ def get_spark(
             "spark.python.daemon.module",
             "data_pipeline_rsna_spark.worker_daemon",
         )
+        # --- generated-code cache: one pass of the iterative operators
+        # compiles ~160 distinct classes, past Spark's default of 100
+        # entries, so every repeat pass recompiled most of them ---
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         # --- determinism for differential testing ---
         .config("spark.sql.session.timeZone", "UTC")
         # ANSI mode is Spark 4's default; pinned so a deployment's

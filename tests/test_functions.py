@@ -17,6 +17,10 @@ def test_session_pins_ansi_mode(spark):
         spark.sql("SELECT CAST(9223372036854775807 AS BIGINT) + 1").collect()
 
 
+def test_session_sizes_codegen_cache(spark):
+    assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == "1000"
+
+
 def test_strip_suffix_only_trailing(spark):
     df = spark.createDataFrame(
         [("a.dcm",), ("a.dcm.dcm",), ("x.dcmy",)], "s string"

@@ -3,7 +3,7 @@ flip is an involution, shifts compose additively, normalization lands in
 [0,1], collision-dropped boxes never overlap survivors.
 
 Inputs are seeded-random batches; each property is evaluated through
-the real Column expressions on a DataFrame (one Spark job per property,
+the real SQL expressions on a DataFrame (one Spark job per property,
 with hundreds of generated examples riding along as rows — not one job
 per example, which is what makes property testing affordable on Spark).
 """
@@ -42,18 +42,18 @@ def _df(spark, rows):
 
 def test_flip_is_involution(spark):
     df = _df(spark, _random_boxes(300, seed=1))
-    once = geo.flip_box_x(F.col("x"), F.col("width"), W)
-    twice = geo.flip_box_x(once, F.col("width"), W)
-    bad = df.filter(twice != F.col("x")).count()
+    once = geo.flip_box_x("x", "width", W)
+    twice = geo.flip_box_x(once, "width", W)
+    bad = df.filter(f"{twice} != x").count()
     assert bad == 0
 
 
 def test_shift_composes_additively(spark):
     df = _df(spark, _random_boxes(300, seed=2))
-    a1, b1 = geo.shift_box(F.col("x"), F.col("y"), F.lit(7), F.lit(-3))
-    a2, b2 = geo.shift_box(a1, b1, F.lit(-2), F.lit(9))
-    direct = geo.shift_box(F.col("x"), F.col("y"), F.lit(5), F.lit(6))
-    bad = df.filter((a2 != direct[0]) | (b2 != direct[1])).count()
+    a1, b1 = geo.shift_box("x", "y", "7", "-3")
+    a2, b2 = geo.shift_box(a1, b1, "-2", "9")
+    direct = geo.shift_box("x", "y", "5", "6")
+    bad = df.filter(f"{a2} != {direct[0]} OR {b2} != {direct[1]}").count()
     assert bad == 0
 
 
@@ -72,12 +72,10 @@ def test_normalized_coords_in_unit_interval(spark):
 def test_affine_identity_at_rf_one(spark):
     df = _df(spark, _random_boxes(300, seed=4))
     ax, ay, aw, ah = geo.scale_image_box_affine(
-        F.col("x"), F.col("y"), F.col("width"), F.col("height"),
-        F.lit(1.0), W, H,
+        "x", "y", "width", "height", "1.0D", W, H,
     )
     bad = df.filter(
-        (ax != F.col("x")) | (ay != F.col("y"))
-        | (aw != F.col("width")) | (ah != F.col("height"))
+        f"{ax} != x OR {ay} != y OR {aw} != width OR {ah} != height"
     ).count()
     assert bad == 0
 

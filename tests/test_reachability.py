@@ -135,13 +135,31 @@ def _defaulted(fn: ast.FunctionDef) -> list[tuple[int | None, str]]:
     return out
 
 
+def _bound_names(tree: ast.Module) -> dict[str, str]:
+    """Local name -> original name of everything the file imports with
+    ``from`` (at any depth) or defines at top level."""
+    out = {
+        stmt.name: stmt.name
+        for stmt in tree.body
+        if isinstance(
+            stmt, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+        )
+    }
+    for n in ast.walk(tree):
+        if isinstance(n, ast.ImportFrom):
+            out.update((a.asname or a.name, a.name) for a in n.names)
+    return out
+
+
 def unpassed_options() -> list[str]:
     """``module::function(param)`` of every defaulted parameter of a
     top-level package function that no call passes, by keyword or
     positionally. A call matches by callee name. Exempt: names defined
     more than once in the package, names also used as values (passed
     around, so their calls are not all visible by name), functions
-    some call reaches with ``*``/``**``, and ``KEEP`` entries."""
+    some call reaches with ``*``/``**``, and ``KEEP`` entries. A bare
+    name counts as a value only in a file that imports it or defines it
+    at top level; elsewhere it is some other, local binding."""
     files = [
         *PKG.rglob("*.py"),
         *(ROOT / "tools").rglob("*.py"),
@@ -154,6 +172,7 @@ def unpassed_options() -> list[str]:
     values: set[str] = set()
     for path in files:
         tree = ast.parse(path.read_text())
+        bound = _bound_names(tree)
         callees = set()
         for n in ast.walk(tree):
             if isinstance(n, ast.Call):
@@ -163,8 +182,8 @@ def unpassed_options() -> list[str]:
                     calls.setdefault(name, []).append(n)
         for n in ast.walk(tree):
             if id(n) not in callees:
-                if isinstance(n, ast.Name):
-                    values.add(n.id)
+                if isinstance(n, ast.Name) and n.id in bound:
+                    values.add(bound[n.id])
                 elif isinstance(n, ast.Attribute):
                     values.add(n.attr)
     out = []
