@@ -13,15 +13,18 @@ The Python boundary is crossed exactly where unavoidable, via
 
 Codecs: ``decode_dicom``/``encode_png`` prefer pydicom/PIL when
 installed, and otherwise run the stdlib-only implementations in
-``functions.codecs`` (zlib+struct PNG, explicit-VR-LE uncompressed
-DICOM) — so both execute for real in this container; the
-``multimodal_codec_roundtrip`` query hash-checks the full
-encode→decode→stats chain against a closed-form oracle.
+``functions.codecs`` (zlib+struct PNG; a DICOM reader for native, RLE
+and JPEG-family PixelData) — so both execute for real in this
+container; the ``multimodal_codec_roundtrip`` query hash-checks the
+full encode→decode→stats chain against a closed-form oracle.
+
+Operators that change each image's pixels are one ``map_pixels`` call
+with a per-image function.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import numpy as np
 import pandas as pd
@@ -32,6 +35,8 @@ from pyspark.sql import functions as F
 from . import image_kernels as ik
 
 SHIFT_MAX = 4
+BRIGHTEN_DELTA = 3
+FIXTURE_N = 40
 FIXTURE_SIDE = 16
 DHASH_H = 8
 DHASH_W = 8
@@ -39,6 +44,7 @@ DHASH_W = 8
 PIXELS_SCHEMA = (
     "img_id long, pixels binary, dtype string, height int, width int"
 )
+PIXEL_COLUMNS = ["img_id", "pixels", "dtype", "height", "width"]
 STATS_SCHEMA = (
     "img_id long, sum_px long, mean_px double, min_px int, max_px int"
 )
@@ -51,9 +57,9 @@ STATS_SCHEMA = (
 def decode_dicom(content: bytes) -> np.ndarray:
     """DICOM bytes → pixel array (O7, ref generate_images_from_dicom.py:
     48-51). pydicom when installed (full transfer-syntax coverage);
-    otherwise the stdlib-only explicit-VR-LE uncompressed reader in
-    ``functions.codecs`` — which covers the monochrome shape the
-    reference pipeline actually consumes."""
+    otherwise the stdlib-only reader in ``functions.codecs``, which
+    decodes monochrome native, RLE and JPEG-family PixelData (every
+    syntax but HTJ2K)."""
     try:
         import io
 
@@ -108,18 +114,42 @@ def encode_png(arr: np.ndarray) -> bytes:
         return encode_png_gray(np.ascontiguousarray(arr))
 
 
+def map_pixels(images: DataFrame,
+               fn: Callable[[int, np.ndarray], np.ndarray]) -> DataFrame:
+    """Per-image pixel map over a ``PIXELS_SCHEMA`` frame: ``fn(img_id,
+    ndarray) -> ndarray`` runs on every row inside ``mapInPandas``
+    (Arrow batches, on executors), and each result is re-emitted with
+    its own dtype and shape. The input array is read-only; ``fn``
+    copies before writing into it."""
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            out = []
+            for r in pdf.itertuples(index=False):
+                arr = np.frombuffer(r.pixels, dtype=np.dtype(r.dtype))
+                res = np.ascontiguousarray(
+                    fn(r.img_id, arr.reshape(r.height, r.width))
+                )
+                out.append(
+                    (r.img_id, res.tobytes(), str(res.dtype), *res.shape)
+                )
+            yield pd.DataFrame(out, columns=PIXEL_COLUMNS)
+
+    return images.mapInPandas(run, PIXELS_SCHEMA)
+
+
 # ---------------------------------------------------------------------------
 # binary-file source (O6/O8)
 # ---------------------------------------------------------------------------
 
 
-def read_binary_dir(spark: SparkSession, path: str,
-                    glob: str = "*.dcm") -> DataFrame:
-    """O6+O8: binaryFile scan with suffix filter and patient-id derivation
-    (basename minus extension, generate_images_from_dicom.py:75-77)."""
+def read_binary_dir(spark: SparkSession, path: str) -> DataFrame:
+    """O6+O8: binaryFile scan of the ``.dcm`` files under ``path`` with
+    patient-id derivation (basename minus extension,
+    generate_images_from_dicom.py:75-77)."""
     df = (
         spark.read.format("binaryFile")
-        .option("pathGlobFilter", glob)
+        .option("pathGlobFilter", "*.dcm")
         .load(path)
     )
     base = F.regexp_extract(F.col("path"), r"([^/]+)$", 1)
@@ -155,9 +185,7 @@ def synth_images(spark: SparkSession, n: int = 200, height: int = 16,
                     (int(img_id), px.astype(np.uint8).tobytes(), "uint8",
                      height, width)
                 )
-            yield pd.DataFrame(
-                rows, columns=["img_id", "pixels", "dtype", "height", "width"]
-            )
+            yield pd.DataFrame(rows, columns=PIXEL_COLUMNS)
 
     return spark.range(n).mapInPandas(gen, PIXELS_SCHEMA)
 
@@ -182,9 +210,7 @@ def synth_images16(spark: SparkSession, n: int = 120, height: int = 10,
                     (int(img_id), px.astype(np.uint16).tobytes(), "uint16",
                      height, width)
                 )
-            yield pd.DataFrame(
-                rows, columns=["img_id", "pixels", "dtype", "height", "width"]
-            )
+            yield pd.DataFrame(rows, columns=PIXEL_COLUMNS)
 
     return spark.range(n).mapInPandas(gen, PIXELS_SCHEMA)
 
@@ -199,29 +225,14 @@ def jpeg_lossless_roundtrip(images: DataFrame) -> DataFrame:
     checks exact pixel equality through the decode."""
     from ..functions import codecs as C
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples(index=False):
-                arr = np.frombuffer(r.pixels, dtype=np.dtype(r.dtype)).reshape(
-                    r.height, r.width
-                )
-                back = C.decode_dicom_gray(C.encode_dicom_jpeg_lossless(arr))
-                out.append(
-                    (r.img_id, back.tobytes(), str(back.dtype),
-                     back.shape[0], back.shape[1])
-                )
-            yield pd.DataFrame(
-                out, columns=["img_id", "pixels", "dtype", "height", "width"]
-            )
-
-    return images.mapInPandas(run, PIXELS_SCHEMA)
+    return map_pixels(images, lambda _, arr: C.decode_dicom_gray(
+        C.encode_dicom_jpeg_lossless(arr)))
 
 
 def j2k_lossy_roundtrip_check(images: DataFrame,
                               delta: float = 1.0 / 64.0) -> DataFrame:
     """Pixels → irreversible-9/7 J2K DICOM encode (.4.91,
-    functions/jpeg2000.py round 9) → decode → per-image error audit,
+    functions/jpeg2000.py) → decode → per-image error audit,
     inside the Arrow batch. Lossy, so the contract is a BOUND, not
     equality: emits (img_id, n_px, within_bound, syntax_ok) where
     within_bound asserts max |out − in| ≤ ceil(1.5·delta·2^prec) (the
@@ -269,31 +280,15 @@ def j2k_lossy_roundtrip_check(images: DataFrame,
 
 
 def jpegls_roundtrip(images: DataFrame) -> DataFrame:
-    """Pixels → JPEG-LS DICOM encode → decode → pixels, all inside the
-    Arrow batch: the T.87/LOCO-I transfer syntaxes
-    (1.2.840.10008.1.2.4.80 lossless / .4.81 near-lossless —
-    functions/jpegls.py) through the encapsulated-PixelData wrapper.
-    Lossless (``near=0``): this must reproduce ANY corpus bit-exactly,
-    same contract as ``jpeg_lossless_roundtrip``."""
+    """Pixels → JPEG-LS lossless DICOM encode → decode → pixels, all
+    inside the Arrow batch: the T.87/LOCO-I transfer syntax
+    1.2.840.10008.1.2.4.80 (functions/jpegls.py) through the
+    encapsulated-PixelData wrapper. Must reproduce ANY corpus
+    bit-exactly, same contract as ``jpeg_lossless_roundtrip``."""
     from ..functions import codecs as C
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples(index=False):
-                arr = np.frombuffer(r.pixels, dtype=np.dtype(r.dtype)).reshape(
-                    r.height, r.width
-                )
-                back = C.decode_dicom_gray(C.encode_dicom_jpegls(arr, 0))
-                out.append(
-                    (r.img_id, back.tobytes(), str(back.dtype),
-                     back.shape[0], back.shape[1])
-                )
-            yield pd.DataFrame(
-                out, columns=["img_id", "pixels", "dtype", "height", "width"]
-            )
-
-    return images.mapInPandas(run, PIXELS_SCHEMA)
+    return map_pixels(images, lambda _, arr: C.decode_dicom_gray(
+        C.encode_dicom_jpegls(arr, 0)))
 
 
 def j2k_roundtrip(images: DataFrame) -> DataFrame:
@@ -302,61 +297,41 @@ def j2k_roundtrip(images: DataFrame) -> DataFrame:
     (reversible 5/3 + EBCOT/MQ — functions/jpeg2000.py) through the
     encapsulated-PixelData wrapper. LOSSLESS: must reproduce ANY
     corpus bit-exactly, same contract as ``jpeg_lossless_roundtrip``
-    and ``jpegls_roundtrip``; closes the last compressed-DICOM family
-    the reference reaches through pydicom
-    (generate_images_from_dicom.py:44-51)."""
+    and ``jpegls_roundtrip`` (the reference reaches this syntax through
+    pydicom, generate_images_from_dicom.py:44-51)."""
     from ..functions import codecs as C
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples(index=False):
-                arr = np.frombuffer(r.pixels, dtype=np.dtype(r.dtype)).reshape(
-                    r.height, r.width
-                )
-                back = C.decode_dicom_gray(C.encode_dicom_j2k(arr, 2))
-                out.append(
-                    (r.img_id, back.tobytes(), str(back.dtype),
-                     back.shape[0], back.shape[1])
-                )
-            yield pd.DataFrame(
-                out, columns=["img_id", "pixels", "dtype", "height", "width"]
-            )
-
-    return images.mapInPandas(run, PIXELS_SCHEMA)
+    return map_pixels(images, lambda _, arr: C.decode_dicom_gray(
+        C.encode_dicom_j2k(arr)))
 
 
-def multiframe_roundtrip_stats(spark: SparkSession, n: int = 40,
-                               frames: int = 4, height: int = 9,
-                               width: int = 7,
-                               syntax: str = "j2k") -> DataFrame:
+def multiframe_roundtrip_stats(spark: SparkSession) -> DataFrame:
     """Multi-frame DICOM path (CT/MR series shape): synthesize a
-    closed-form (F, H, W) uint16 stack per image id — pixel =
+    closed-form (4, 9, 7) uint16 stack per image id 0..39 — pixel =
     (img_id*523 + frame*277 + i*659) % 65536 — encode it as ONE
-    multi-frame DICOM (encapsulated, Basic Offset Table), decode with
-    ``decode_dicom_frames``, and emit per-(img, frame) stats. The
-    whole synth→encode→decode→stats chain runs inside the Arrow
-    batch; a hash match against the closed-form oracle asserts exact
-    per-frame recovery THROUGH the multi-frame container, which
+    multi-frame JPEG 2000 DICOM (encapsulated, Basic Offset Table),
+    decode with ``decode_dicom_frames``, and emit per-(img, frame)
+    stats. The whole synth→encode→decode→stats chain runs inside the
+    Arrow batch; a hash match against the closed-form oracle asserts
+    exact per-frame recovery THROUGH the multi-frame container, which
     single-frame roundtrips cannot see (fragment/BOT bookkeeping).
     Reference behavior via pydicom's (F, H, W) ``pixel_array``
     (generate_images_from_dicom.py:48-51)."""
     from ..functions import codecs as C
 
-    npx = height * width
+    idx = np.arange(9 * 7, dtype=np.int64)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             out = []
             for img_id in pdf["id"].to_numpy():
-                idx = np.arange(npx, dtype=np.int64)
                 stack = np.stack([
                     ((img_id * 523 + f * 277 + idx * 659) % 65536)
-                    .astype(np.uint16).reshape(height, width)
-                    for f in range(frames)
+                    .astype(np.uint16).reshape(9, 7)
+                    for f in range(4)
                 ])
                 back = C.decode_dicom_frames(
-                    C.encode_dicom_multiframe(stack, syntax)
+                    C.encode_dicom_multiframe(stack, "j2k")
                 )
                 for f in range(back.shape[0]):
                     fr = back[f].astype(np.int64)
@@ -371,7 +346,7 @@ def multiframe_roundtrip_stats(spark: SparkSession, n: int = 40,
             )
 
     return (
-        spark.range(n)
+        spark.range(40)
         .repartition(8)
         .mapInPandas(
             run,
@@ -406,65 +381,49 @@ def pixel_stats(images: DataFrame) -> DataFrame:
     return images.mapInPandas(stats, STATS_SCHEMA)
 
 
-def apply_kernel(images: DataFrame, op: str, variant: int = 0,
-                 delta: int = 3) -> DataFrame:
+def apply_kernel(images: DataFrame, op: str, variant: int = 0) -> DataFrame:
     """Run one augmentation pixel kernel over a multimodal column, with
-    the engine's seeded-RNG convention. Returns the same schema with
-    transformed pixels and a synthetic image id suffix (O19).
-    ``delta`` parameterizes the deterministic ``brighten`` kernel; the
-    ``scale`` kernel samples nearest-neighbor."""
+    the engine's seeded-RNG convention (O19): ``flip``, ``shift`` (by up
+    to ``SHIFT_MAX``), ``scale`` (nearest-neighbor) or ``brighten`` (by
+    ``BRIGHTEN_DELTA``, deterministic)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples(index=False):
-                arr = np.frombuffer(r.pixels, dtype=np.dtype(r.dtype)).reshape(
-                    r.height, r.width
-                )
-                if op == "flip":
-                    res = ik.flip_image(arr)
-                elif op == "shift":
-                    rng = ik.seeded_rng(str(r.img_id), variant, op)
-                    rx = int(rng.integers(-SHIFT_MAX, SHIFT_MAX + 1))
-                    ry = int(rng.integers(-SHIFT_MAX, SHIFT_MAX + 1))
-                    res = ik.shift_image(arr, rx, ry)
-                elif op == "scale":
-                    rng = ik.seeded_rng(str(r.img_id), variant, op)
-                    rf = float(rng.uniform(0.8, 1.25))
-                    res = ik.scale_image(arr, rf, interp="nearest")
-                elif op == "brighten":
-                    res = ik.brighten(arr, delta)
-                else:
-                    raise ValueError(f"unknown kernel op {op!r}")
-                out.append(
-                    (r.img_id, np.ascontiguousarray(res).tobytes(), r.dtype,
-                     r.height, r.width)
-                )
-            yield pd.DataFrame(
-                out, columns=["img_id", "pixels", "dtype", "height", "width"]
-            )
+    def kernel(img_id: int, arr: np.ndarray) -> np.ndarray:
+        if op == "flip":
+            return ik.flip_image(arr)
+        if op == "brighten":
+            return ik.brighten(arr, BRIGHTEN_DELTA)
+        rng = ik.seeded_rng(str(img_id), variant, op)
+        if op == "shift":
+            rx = int(rng.integers(-SHIFT_MAX, SHIFT_MAX + 1))
+            ry = int(rng.integers(-SHIFT_MAX, SHIFT_MAX + 1))
+            return ik.shift_image(arr, rx, ry)
+        if op == "scale":
+            rf = float(rng.uniform(0.8, 1.25))
+            return ik.scale_image(arr, rf, interp="nearest")
+        raise ValueError(f"unknown kernel op {op!r}")
 
-    return images.mapInPandas(run, PIXELS_SCHEMA)
+    return map_pixels(images, kernel)
 
 
-def stage_dicom_fixture_dir(n: int = 40) -> str:
-    """Write a deterministic directory of real ``.dcm`` files (once) —
-    the file-based input the reference job consumes (a dir of DICOMs,
-    generate_images_from_dicom.py:70-78). pixel[i] of patient p is
-    ``(p*31 + i*7) % 256``, the same closed form the synthetic corpus
-    uses, so file-based results stay oracle-checkable."""
+def stage_dicom_fixture_dir() -> str:
+    """Write a deterministic directory of ``FIXTURE_N`` real ``.dcm``
+    files (once) — the file-based input the reference job consumes (a
+    dir of DICOMs, generate_images_from_dicom.py:70-78). pixel[i] of
+    patient p is ``(p*31 + i*7) % 256``, the same closed form the
+    synthetic corpus uses, so file-based results stay oracle-checkable."""
     import os
     import pathlib
 
     from ..functions.codecs import encode_dicom_gray
 
     side = FIXTURE_SIDE
-    d = pathlib.Path("/tmp/spark_graft_fixtures") / f"dicom_{n}_{side}x{side}"
+    d = (pathlib.Path("/tmp/spark_graft_fixtures")
+         / f"dicom_{FIXTURE_N}_{side}x{side}")
     marker = d / ".complete"
     if not marker.exists():
         d.mkdir(parents=True, exist_ok=True)
         npx = side * side
-        for pid in range(n):
+        for pid in range(FIXTURE_N):
             px = ((pid * 31 + np.arange(npx, dtype=np.int64) * 7) % 256)
             arr = px.astype(np.uint8).reshape(side, side)
             tmp = d / f".tmp_{pid:04d}"
@@ -490,9 +449,7 @@ def decode_dicom_batch(files: DataFrame) -> DataFrame:
                      np.ascontiguousarray(arr).tobytes(), str(arr.dtype),
                      arr.shape[0], arr.shape[1])
                 )
-            yield pd.DataFrame(
-                out, columns=["img_id", "pixels", "dtype", "height", "width"]
-            )
+            yield pd.DataFrame(out, columns=PIXEL_COLUMNS)
 
     return files.mapInPandas(run, PIXELS_SCHEMA)
 
@@ -509,53 +466,34 @@ def codec_roundtrip(images: DataFrame) -> DataFrame:
     correctness gate, not just unit tests."""
     from ..functions import codecs as C
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples(index=False):
-                arr = np.frombuffer(r.pixels, dtype=np.dtype(r.dtype)).reshape(
-                    r.height, r.width
-                )
-                via_png = C.decode_png_gray(encode_png(arr))
-                via_rle = C.decode_dicom_gray(C.encode_dicom_rle(via_png))
-                via_dcm = C.decode_dicom_gray(C.encode_dicom_gray(via_rle))
-                out.append(
-                    (r.img_id, via_dcm.tobytes(), str(via_dcm.dtype),
-                     via_dcm.shape[0], via_dcm.shape[1])
-                )
-            yield pd.DataFrame(
-                out, columns=["img_id", "pixels", "dtype", "height", "width"]
-            )
+    def chain(_: int, arr: np.ndarray) -> np.ndarray:
+        via_png = C.decode_png_gray(encode_png(arr))
+        via_rle = C.decode_dicom_gray(C.encode_dicom_rle(via_png))
+        return C.decode_dicom_gray(C.encode_dicom_gray(via_rle))
 
-    return images.mapInPandas(run, PIXELS_SCHEMA)
+    return map_pixels(images, chain)
 
 
-def synth_block_images(spark: SparkSession, n: int = 150,
-                       height: int = 16, width: int = 16) -> DataFrame:
-    """n deterministic uint8 images, constant per 8x8 block:
+def synth_block_images(spark: SparkSession) -> DataFrame:
+    """150 deterministic 16x16 uint8 images, constant per 8x8 block:
     value = (img_id*37 + block_id*11) % 256, block_id row-major over
     the 8x8 grid. Purpose-built for the JPEG roundtrip gate: a
     constant block has only a DC coefficient, and the Annex-K DC
     quantizer at the default quality reconstructs it to < 0.5 gray
     levels — so even the LOSSY codec roundtrips these bit-exactly and
     the oracle stays a closed form."""
-    bx = width // 8
+    yy, xx = np.mgrid[0:16, 0:16]
+    blk = (yy // 8) * 2 + (xx // 8)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
             for img_id in pdf["id"].to_numpy():
-                yy, xx = np.mgrid[0:height, 0:width]
-                blk = (yy // 8) * bx + (xx // 8)
                 px = ((int(img_id) * 37 + blk * 11) % 256).astype(np.uint8)
-                rows.append(
-                    (int(img_id), px.tobytes(), "uint8", height, width)
-                )
-            yield pd.DataFrame(
-                rows, columns=["img_id", "pixels", "dtype", "height", "width"]
-            )
+                rows.append((int(img_id), px.tobytes(), "uint8", 16, 16))
+            yield pd.DataFrame(rows, columns=PIXEL_COLUMNS)
 
-    return spark.range(n).mapInPandas(gen, PIXELS_SCHEMA)
+    return spark.range(150).mapInPandas(gen, PIXELS_SCHEMA)
 
 
 def jpeg_roundtrip(images: DataFrame) -> DataFrame:
@@ -567,23 +505,8 @@ def jpeg_roundtrip(images: DataFrame) -> DataFrame:
     (``synth_block_images``) when they need bit-exact recovery."""
     from ..functions import codecs as C
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples(index=False):
-                arr = np.frombuffer(r.pixels, dtype=np.dtype(r.dtype)).reshape(
-                    r.height, r.width
-                )
-                back = C.decode_dicom_gray(C.encode_dicom_jpeg(arr))
-                out.append(
-                    (r.img_id, back.tobytes(), str(back.dtype),
-                     back.shape[0], back.shape[1])
-                )
-            yield pd.DataFrame(
-                out, columns=["img_id", "pixels", "dtype", "height", "width"]
-            )
-
-    return images.mapInPandas(run, PIXELS_SCHEMA)
+    return map_pixels(images, lambda _, arr: C.decode_dicom_gray(
+        C.encode_dicom_jpeg(arr)))
 
 
 # ---------------------------------------------------------------------------
@@ -597,25 +520,13 @@ def resize(images: DataFrame, out_h: int, out_w: int) -> DataFrame:
     data. Index mapping is exact integer arithmetic (no interpolation
     library), deterministic across platforms."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples(index=False):
-                arr = np.frombuffer(r.pixels, dtype=np.dtype(r.dtype)).reshape(
-                    r.height, r.width
-                )
-                ys = (np.arange(out_h) * r.height) // out_h
-                xs = (np.arange(out_w) * r.width) // out_w
-                res = arr[np.ix_(ys, xs)]
-                out.append(
-                    (r.img_id, np.ascontiguousarray(res).tobytes(), r.dtype,
-                     out_h, out_w)
-                )
-            yield pd.DataFrame(
-                out, columns=["img_id", "pixels", "dtype", "height", "width"]
-            )
+    def nearest(_: int, arr: np.ndarray) -> np.ndarray:
+        h, w = arr.shape
+        ys = (np.arange(out_h) * h) // out_h
+        xs = (np.arange(out_w) * w) // out_w
+        return arr[np.ix_(ys, xs)]
 
-    return images.mapInPandas(run, PIXELS_SCHEMA)
+    return map_pixels(images, nearest)
 
 
 # ---------------------------------------------------------------------------
@@ -804,12 +715,13 @@ PATCH_SCHEMA = (
 )
 
 
-def tile_patches(images: DataFrame, patch: int = 8) -> DataFrame:
-    """Split each image into non-overlapping patch×patch tiles, one row
-    per tile — the vision-transformer data-prep step. Pure ndarray
-    reshaping inside the Arrow batch (fan-out (H/p)·(W/p) per image, no
-    shuffle); images must be divisible by ``patch`` (normalize with
+def tile_patches(images: DataFrame) -> DataFrame:
+    """Split each image into non-overlapping 8×8 tiles, one row per
+    tile — the vision-transformer data-prep step. Pure ndarray
+    reshaping inside the Arrow batch (fan-out (H/8)·(W/8) per image, no
+    shuffle); image sides must be multiples of 8 (normalize with
     ``resize`` first)."""
+    patch = 8
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -934,10 +846,10 @@ def image_entropy(images: DataFrame) -> DataFrame:
     )
 
 
-def audio_frame_features(clips: DataFrame, frame: int = 256) -> DataFrame:
+def audio_frame_features(clips: DataFrame) -> DataFrame:
     """Frame-level waveform features — the framing step every audio
     pipeline runs before any spectral transform: split each clip into
-    fixed ``frame``-sample windows (full frames only; the ragged tail
+    fixed 256-sample windows (full frames only; the ragged tail
     carries no complete window) and emit per-frame integer energy and
     zero-crossing counts.
 
@@ -947,6 +859,7 @@ def audio_frame_features(clips: DataFrame, frame: int = 256) -> DataFrame:
     rows = clips × n_frames; the reshape is a numpy view (no copy),
     per-frame reductions vectorized over the frame axis.
     """
+    frame = 256
 
     def feats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -1041,7 +954,7 @@ def audio_silence_gate(clips: DataFrame) -> DataFrame:
     and its scale shape (one mapInPandas pass, one
     map-side-combined groupBy(clip)).
     """
-    frames = audio_frame_features(clips, frame=256)
+    frames = audio_frame_features(clips)
     return (
         frames.groupBy("clip_id")
         .agg(
@@ -1062,34 +975,23 @@ def audio_silence_gate(clips: DataFrame) -> DataFrame:
     )
 
 
-def plant_watermark(images: DataFrame, every: int = 5) -> DataFrame:
-    """Overwrite the 8×8 tile at grid position (1, 1) of every
-    ``every``-th image with a FIXED pattern (w[i] = i·13 % 200) — the
-    deterministic stand-in for a corpus whose pages carry a shared
-    logo/watermark. Pure narrow Arrow work; the closed-form pattern
-    keeps the corpus fully SQL-rederivable (the multimodal oracle
-    contract)."""
+def plant_watermark(images: DataFrame) -> DataFrame:
+    """Overwrite the 8×8 tile at grid position (1, 1) of every 5th
+    image (``img_id % 5 == 0``) with a FIXED pattern (w[i] = i·13 % 200)
+    — the deterministic stand-in for a corpus whose pages carry a
+    shared logo/watermark. Pure narrow Arrow work; the closed-form
+    pattern keeps the corpus fully SQL-rederivable (the multimodal
+    oracle contract)."""
+    mark = (np.arange(64, dtype=np.int64) * 13 % 200).reshape(8, 8)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples(index=False):
-                px = np.frombuffer(
-                    r.pixels, dtype=np.dtype(r.dtype)
-                ).reshape(r.height, r.width).copy()
-                if r.img_id % every == 0:
-                    w = (np.arange(64, dtype=np.int64) * 13 % 200).reshape(
-                        8, 8
-                    )
-                    px[8:16, 8:16] = w.astype(px.dtype)
-                out.append(
-                    (r.img_id, px.tobytes(), r.dtype, r.height, r.width)
-                )
-            yield pd.DataFrame(
-                out, columns=["img_id", "pixels", "dtype", "height", "width"]
-            )
+    def plant(img_id: int, arr: np.ndarray) -> np.ndarray:
+        if img_id % 5:
+            return arr
+        out = arr.copy()
+        out[8:16, 8:16] = mark.astype(arr.dtype)
+        return out
 
-    return images.mapInPandas(run, PIXELS_SCHEMA)
+    return map_pixels(images, plant)
 
 
 def patch_dhash(patches: DataFrame) -> DataFrame:

@@ -95,20 +95,16 @@ def _partition_offsets(ranked: DataFrame) -> tuple[dict[int, int], int]:
 
 
 def _offset_col(offsets: dict[int, int]) -> Column:
-    """Partition-offset lookup as a scalar expression (a literal map):
-    no join, no broadcast exchange, no second scan. Partition counts are
+    """Partition-offset lookup as a scalar expression: one SQL map
+    literal (one plan-building call whatever the partition count), no
+    join, no broadcast exchange, no second scan. Partition counts are
     bounded by the shuffle partition count (thousands at 100 TB), well
     inside expression-size limits; a 100k-partition deployment would
     switch to a broadcast-join lookup, with everything else unchanged."""
     if not offsets:
         return F.lit(0)
-    pairs: list[Column] = []
-    for pid, off in offsets.items():
-        pairs.append(F.lit(pid))
-        pairs.append(F.lit(off))
-    return F.coalesce(
-        F.create_map(*pairs)[F.col("_pid")].cast("bigint"), F.lit(0)
-    )
+    pairs = ", ".join(f"{pid}, {off}L" for pid, off in offsets.items())
+    return F.expr(f"coalesce(map({pairs})[_pid], 0L)")
 
 
 def global_row_number(

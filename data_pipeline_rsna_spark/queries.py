@@ -2682,11 +2682,12 @@ def q_xml_annotation_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM px GROUP BY img_id
     """,
     doc="O7+O10 executed for real: pixels -> PNG encode -> PNG decode -> "
-    "DICOM encode -> DICOM decode -> stats, all inside Arrow batches "
-    "using the stdlib-only codecs (functions/codecs.py: zlib+struct PNG "
-    "with full filter support, explicit-VR-LE uncompressed DICOM; "
-    "pydicom/PIL preferred when installed). Both formats are lossless, "
-    "so the stats after two codec roundtrips must equal the closed-form "
+    "RLE Lossless DICOM encode -> decode -> native DICOM encode -> "
+    "decode -> stats, all inside Arrow batches using the stdlib-only "
+    "codecs (functions/codecs.py: zlib+struct PNG with full filter "
+    "support, explicit-VR-LE DICOM; pydicom/PIL preferred when "
+    "installed). Every leg is lossless, so the stats after the three "
+    "codec roundtrips must equal the closed-form "
     "synthetic corpus — hash-checked. Ref generate_images_from_dicom.py"
     ":48-51 (decode), :80 (PNG write).",
     tags=("multimodal",),
@@ -2708,7 +2709,7 @@ def q_multimodal_codec_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT 1000 + id, CAST(100 AS BIGINT), TRUE, TRUE
     FROM (SELECT unnest(generate_series(0, 59)) AS id)
     """,
-    doc="O7 lossy archival syntax executed for real (round 9): uint8 "
+    doc="O7 lossy archival syntax executed for real: uint8 "
     "and uint16 synthetic corpora -> irreversible-9/7 JPEG 2000 DICOM "
     "encode (.4.91, from-scratch functions/jpeg2000.py: float 9/7 DWT "
     "Annex F.4.8, dead-zone scalar quantization E.4, shared EBCOT) -> "
@@ -3141,8 +3142,8 @@ def q_dicom_png_export(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators import multimodal as mm
     from .sinks.images import write_png_dir
 
-    src = mm.stage_dicom_fixture_dir(n=40)
-    files = mm.read_binary_dir(spark, src, glob="*.dcm")
+    src = mm.stage_dicom_fixture_dir()
+    files = mm.read_binary_dir(spark, src)
     # the decoded-pixels subtree feeds FOUR consumers (split derivation,
     # the two per-split PNG writers, pixel_stats): pin it with an
     # explicit persist instead of relying on exchange-output reuse, so
@@ -4926,7 +4927,7 @@ def q_multimodal_patch_tiling(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators import multimodal as mm
 
     imgs = mm.synth_images(spark, n=50, height=16, width=16)
-    patches = mm.tile_patches(imgs, patch=8)
+    patches = mm.tile_patches(imgs)
 
     import pandas as pd  # noqa: F401
 
@@ -8537,7 +8538,6 @@ def q_multimodal_dhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             "img_id", F.col("img_id") + 10000
         ),
         "brighten",
-        delta=3,
     )
     hashes = mm.dhash_images(base.unionByName(twins))
     return (
@@ -15619,8 +15619,8 @@ def q_multimodal_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators import multimodal as mm
 
     imgs = mm.synth_images(spark, n=200, height=16, width=16, mod=200)
-    marked = mm.plant_watermark(imgs, every=5)
-    tiles = mm.tile_patches(marked, patch=8)
+    marked = mm.plant_watermark(imgs)
+    tiles = mm.tile_patches(marked)
     hashes = mm.patch_dhash(tiles)
     return (
         hashes.groupBy("patch_row", "patch_col", "dhash")
@@ -15933,7 +15933,7 @@ def q_events_slo_burn_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_multimodal_jpeg_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators import multimodal as mm
 
-    imgs = mm.synth_block_images(spark, n=150, height=16, width=16)
+    imgs = mm.synth_block_images(spark)
     return mm.pixel_stats(mm.jpeg_roundtrip(imgs))
 
 
@@ -15952,8 +15952,8 @@ def q_multimodal_jpeg_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(max(v) AS INTEGER) AS max_px
     FROM px GROUP BY img_id
     """,
-    doc="O7+ JPEG-Lossless SV1 transfer syntax (VERDICT r7 #3, the "
-    "archival CR/DX syntax 1.2.840.10008.1.2.4.70): 16-bit pixels -> "
+    doc="O7+ JPEG-Lossless SV1 transfer syntax (the archival CR/DX "
+    "syntax 1.2.840.10008.1.2.4.70): 16-bit pixels -> "
     "SOF3 predictive encode (T.81 process 14, predictor 1, "
     "functions/jpeg.py) in encapsulated PixelData -> decode -> stats. "
     "LOSSLESS, so the oracle is the closed-form pixel grid itself and "
@@ -15994,11 +15994,11 @@ def q_multimodal_jpeg_lossless_roundtrip(
     "stuffing): 16-bit pixels -> JPEG-LS encode in encapsulated "
     "PixelData -> decode -> stats. LOSSLESS, so the oracle is the "
     "closed-form pixel grid itself and the hash match asserts EXACT "
-    "16-bit recovery of a modulus-wrapping corpus. With jpeg.py this "
-    "closes the whole compressed-DICOM family the reference reaches "
-    "through pydicom (generate_images_from_dicom.py:44-51) except "
-    "JPEG 2000; the 12x11 shape exercises run mode at line "
-    "boundaries and the adaptive contexts across 100 images.",
+    "16-bit recovery of a modulus-wrapping corpus. The reference "
+    "reaches this input class through pydicom "
+    "(generate_images_from_dicom.py:44-51); the 12x11 shape exercises "
+    "run mode at line boundaries and the adaptive contexts across 100 "
+    "images.",
     tags=("multimodal", "codec"),
 )
 def q_multimodal_jpegls_roundtrip(
@@ -16081,6 +16081,4 @@ def q_multimodal_multiframe_roundtrip(
 ) -> DataFrame:
     from .operators import multimodal as mm
 
-    return mm.multiframe_roundtrip_stats(
-        spark, n=40, frames=4, height=9, width=7, syntax="j2k"
-    )
+    return mm.multiframe_roundtrip_stats(spark)

@@ -4,6 +4,8 @@ codec-roundtrip chain, and the PNG directory sink (O7/O10)."""
 from __future__ import annotations
 
 import glob
+import hashlib
+import os
 import struct
 import zlib
 
@@ -137,6 +139,10 @@ def test_png_dir_sink_writes_decodable_files(spark, tmp_path):
     assert len(manifest) == 6
     files = sorted(glob.glob(str(tmp_path / "png_out" / "*.png")))
     assert len(files) == 6
+    # each file is renamed into place: no temporary names are left over
+    assert sorted(os.listdir(tmp_path / "png_out")) == sorted(
+        f"{r.img_id}.png" for r in manifest
+    )
     # every written file decodes back to the closed-form pixels
     for r in manifest:
         got = C.decode_png_gray(open(r.file, "rb").read())
@@ -822,3 +828,213 @@ def test_dicom_j2k_lossy_smooth_image_compresses():
     lossy = C.encode_dicom_j2k_lossy(img, delta=1 / 32)
     lossless = C.encode_dicom_j2k(img)
     assert len(lossy) < len(lossless) * 0.6
+
+
+# ---------------------------------------------------------------------------
+# golden encoder bytes
+# ---------------------------------------------------------------------------
+
+
+def _golden_image(dt: str, shape: tuple) -> np.ndarray:
+    """Closed-form pixels spanning each dtype's whole range."""
+    v = (np.arange(int(np.prod(shape)), dtype=np.int64) * 40503 + 12345)
+    v %= 65536
+    if dt == "uint8":
+        v %= 256
+    elif dt == "int16":
+        v -= 32768
+    return v.astype(dt).reshape(shape)
+
+
+def _golden_blob(key: str) -> bytes:
+    name, dt, shape = key.split("/")
+    arr = _golden_image(dt, tuple(int(s) for s in shape.split("x")))
+    if name.startswith("multiframe_"):
+        return C.encode_dicom_multiframe(arr, name[len("multiframe_"):])
+    if name == "jpegls_near2":
+        return C.encode_dicom_jpegls(arr, near=2)
+    return getattr(C, f"encode_dicom_{name}")(arr)
+
+
+# sha256 of every encoder's output at its default options, pinned from the
+# encoders as they were before all of them shared one Part-10 writer
+GOLDEN_SHA256 = {
+    "gray/uint8/4x6":
+        "f37b7e9d463141b4904f37dee67c800d29d74507f4b61aa649def23d182fa120",
+    "gray/uint8/5x3":
+        "1d934043f7e4b2ba4e6b26f7bbe7fcaeff58ac0043d96d95c2f235ba7720e95a",
+    "gray/uint16/4x6":
+        "37a6b42e8cc9aa9bdab109a1a171cad25ecb54f037380f82951bc7c686f5f04e",
+    "gray/uint16/5x3":
+        "b7533a24f93f5c1c02f11d77edcfbf58bdd39b87ecdc62227e0ea4e40469355e",
+    "gray/int16/4x6":
+        "ea6cea1478df4b57070d801dc196e642663e2fad02d16ce083b21b0af73d5e26",
+    "gray/int16/5x3":
+        "4505af87faabafe743ebf50abffa91615c7e663a73a3cd9a8a34cf8a3e04cb70",
+    "rle/uint8/4x6":
+        "bc62f0a2c235988ce480fcf704bfa8889416d94690a94d416378abd359a7991a",
+    "rle/uint8/5x3":
+        "1d87fd76af109d611d98fbb1c13511e712df672cc287072e947800ea80b071d6",
+    "rle/uint16/4x6":
+        "c18b0200a2e34dd9fae17c3284b2b3beb9fe6b741559d5857b9192bda03f4c9e",
+    "rle/uint16/5x3":
+        "50cb893246e21460b962cdd5a82b7c2e625f97df6fddaba76e62e92feb3a953d",
+    "rle/int16/4x6":
+        "f429a1c6cb7b055827a4162005e203554ce45008495d6b9cb61795030b37eaa7",
+    "rle/int16/5x3":
+        "098321046f888fd81bbbed3c6efee539a5a8e0ddf07f772c2037c82dbe883fc7",
+    "jpeg/uint8/4x6":
+        "79e06247dcb0aea7e4ec15ba80c62c367dad8aa877f59451f139fa439f1ce850",
+    "jpeg/uint8/5x3":
+        "39acce50215022da8662e56baf951a568978c4bf466847bfdfec4a5ef1e97e3f",
+    "jpeg_lossless/uint8/4x6":
+        "11c914d8ff3cef227a5f5581333395f5b6f7e3fb96b8dcfb9127e82b8daad44c",
+    "jpeg_lossless/uint8/5x3":
+        "83fd41ae89e89521ee28a84c3dae9694b526f12ac39828015dd64b820ec82d4e",
+    "jpeg_lossless/uint16/4x6":
+        "ab962e8646059a7bcab257f1abb65c00532955ebc6bcbf84c7c4fad60c4c20e4",
+    "jpeg_lossless/uint16/5x3":
+        "5dace9f1f6d0b4102e4043f4eb644350a73daf98fb8bf2bc0fe16cc583ad02a4",
+    "jpeg_lossless/int16/4x6":
+        "0167388c4f94e405f3a1b914ae70cf6d6e5ddbb4e10a3e6970b3918d6d9a3913",
+    "jpeg_lossless/int16/5x3":
+        "73b85cd0c26e464572bf4a97ed918ab5b3c56d08283adec494a2f5633882d6fd",
+    "jpegls/uint8/4x6":
+        "3be15b5523f2a0828d563f1ea82b2c7e94670c9842a3834db616311bb27eebbe",
+    "jpegls/uint8/5x3":
+        "ae2446425f64c9d670d8b5e530d6f9be9e797ef320c0e1570fcb9b6b24f956f8",
+    "jpegls/uint16/4x6":
+        "efaabc89f45f928442618e17bfba1e56df3da83739d200b2297824e577241e63",
+    "jpegls/uint16/5x3":
+        "cb13b05f29a7a459f70cf780aea75e7ec341d9cc660c6d97ba9f5c737c401e51",
+    "jpegls/int16/4x6":
+        "981a5e98be24a873bd0d20bf7ad51c18faa61f8ef910ef591a99d935a2851df1",
+    "jpegls/int16/5x3":
+        "f5775974cc38dd7f24eabf4ad2bbe4ec4ed715bf8739dce4ae250159799fa7a4",
+    "jpegls_near2/uint8/4x6":
+        "7d1e6ee99dd330e80d80f0d9d875876eb3634e18b1ab576ebe38698ab26d5fda",
+    "jpegls_near2/uint8/5x3":
+        "6c307bedd342107d19b22c31643239b9904d38e424850d6bc647ed4bf12962de",
+    "jpegls_near2/uint16/4x6":
+        "b022573b38763bb99d00ec7cfdbf9e2e37a87c5c7e4232316ab808d4e711be39",
+    "jpegls_near2/uint16/5x3":
+        "e7b601f954f29432a98c9d1f37c7939e17482e45a50de5ffdd3a5ee5e7a36b80",
+    "jpegls_near2/int16/4x6":
+        "d8d452a47d258be8cf60823ce34e4e27257138f25cb319776ddd56669272fd88",
+    "jpegls_near2/int16/5x3":
+        "e1caa8b5a4c7215f8ef5833f4d1979e4fb4e46de97bc9583124d183a5d954750",
+    "j2k/uint8/4x6":
+        "7cd7729926f927eee1c3781b7f4533b5725429d293743f3495db03a97989f169",
+    "j2k/uint8/5x3":
+        "7d28b27c20aa2a2fa3183dbcd88ff854b445fc3c6538a045877e2993147b30c9",
+    "j2k/uint16/4x6":
+        "86fdaabd65e85659dff67f4d707d03540e7679744efb9d4bee2433acb13061fd",
+    "j2k/uint16/5x3":
+        "d529283a90024fa46552d489d0f19b1814682384d49e19ff729dbd438abf2cce",
+    "j2k/int16/4x6":
+        "8ec93020984f4a090bf8340e69217b9b536eb92f3e742b298928bc228b65efdb",
+    "j2k/int16/5x3":
+        "1c914164f649f8c5cbfd094bb854093beddf38dff84babc2f85f959f02733bd0",
+    "j2k_lossy/uint8/4x6":
+        "4b9fee6099ee3ac0dd6f5b997c1dffe8bd3f790e8c49d9eba85baa41487b0d88",
+    "j2k_lossy/uint8/5x3":
+        "26cb7ac23c76b80d81daa75d2914a351fe2226db0cbd4939ccbaf27d7c612847",
+    "j2k_lossy/uint16/4x6":
+        "191b8c03c184736c37d587ee2f4f7fe7c065379186628c6baab64d5f1afd65f7",
+    "j2k_lossy/uint16/5x3":
+        "41f4ffa3ced76c981c06d2d17d998ebabd0565dde493f7f4b155c9c2291a7f6b",
+    "j2k_lossy/int16/4x6":
+        "936a3c151a8580968de5e7e3ab6455cdb03e1b41bf023b6dbead9fa477fcd693",
+    "j2k_lossy/int16/5x3":
+        "24047085ebba29fc1174e40f29a47ea19af089a03f8b54d70a8f6fc372acf915",
+    "multiframe_rle/uint8/2x4x6":
+        "ce90e500c687c3846bd6eec0b308028aff1db9e9935c4dc6e999d23540914b23",
+    "multiframe_rle/uint8/3x5x3":
+        "cd7a2083d01d29385e7e1b0509b1049f93517e3da3f2adefeb7653f4fad5d14e",
+    "multiframe_rle/uint16/2x4x6":
+        "81475bf4f1d91615e31ac44a6d2737a1cd1ec5a20805b4387d46342fc2ae9390",
+    "multiframe_rle/uint16/3x5x3":
+        "239b84b1a0ad31951ae6572f86631e67df7a11db82cf06e08051e93fc4c11607",
+    "multiframe_rle/int16/2x4x6":
+        "a56c5971da3a81d333725cf72d91c2b5743a04e4ceeeaa037a2efa2b3a457c3d",
+    "multiframe_rle/int16/3x5x3":
+        "bddfba41ae8de52927218d08695eff7a5e52f4aafe52880472f4b750bf158d4f",
+    "multiframe_jpegls/uint8/2x4x6":
+        "83d7e38ed1af34ea0576b68f2c3b6884baebb6e309f73b2a30fe83f7790f0c43",
+    "multiframe_jpegls/uint8/3x5x3":
+        "a078b82a18b7987aea167beee8de23cc8a7f450d1f0ef507e35f88f5fadc7a65",
+    "multiframe_jpegls/uint16/2x4x6":
+        "cbca7b9ec926d3f26cb5eb15bad0d17f0251fb8020d93415f66b5cd1652472f3",
+    "multiframe_jpegls/uint16/3x5x3":
+        "ba402adebe0426a7dccd8bb4257574a6787fd0cfd37fa9b4ec2eb599c52dd112",
+    "multiframe_jpegls/int16/2x4x6":
+        "f765b9378e9e25a9b2ea778bdabd2546e7522d1b46d93d9a27a50c25d8e9983c",
+    "multiframe_jpegls/int16/3x5x3":
+        "32d010f073a35db877b074a3fdae660a4218dc179ab1daffddfd1cc0e21b51bd",
+    "multiframe_jpeg_lossless/uint8/2x4x6":
+        "b67e4ca577fb955f46af09005cebf277c6df09fc3b8c6fcaeec2f82ed3dc5fb6",
+    "multiframe_jpeg_lossless/uint8/3x5x3":
+        "026f5a92ee8e218ba48c12faf316025d4a044228fdee9db4bd15cadbd30c2d9f",
+    "multiframe_jpeg_lossless/uint16/2x4x6":
+        "de4d30ad5075d6b1bfe82b398891f754906d434150d5500040a0d25a44bd22d8",
+    "multiframe_jpeg_lossless/uint16/3x5x3":
+        "a0f0ce429066a89cd9f73e379e73d4ef28f19617699b530e0110a78dbe198cba",
+    "multiframe_jpeg_lossless/int16/2x4x6":
+        "0b79493f2457564465ad31b674f34d96bb8b0c50f0223457318407a6885ffdab",
+    "multiframe_jpeg_lossless/int16/3x5x3":
+        "5a6dd20263d66b34f7dac9a7431171ba293829696d98082be3d56f285a378e29",
+    "multiframe_j2k/uint8/2x4x6":
+        "858270b961e2b61a26d7bee182f310481fc14ac92b148976c6aa71b6b21cd631",
+    "multiframe_j2k/uint8/3x5x3":
+        "df7ca4e2c81a64c69f68de78f4ca394b75d2612a6c8e5850a3c3884b09104730",
+    "multiframe_j2k/uint16/2x4x6":
+        "3ab5cd44d6b86ee9fcbe947fc56229434874a9866012da864fe33279f4ec983b",
+    "multiframe_j2k/uint16/3x5x3":
+        "07c6250e7bd2c86dd0346e162d7b82cb0492292ccd4141d2cbf26f1df3f5e142",
+    "multiframe_j2k/int16/2x4x6":
+        "964f43256d7e0d19f7102b1daa4f6bfef68f4d35caab626906729dee040f69fb",
+    "multiframe_j2k/int16/3x5x3":
+        "f6c616309700a4003b9c1e1b1c5e5e4fd79ead755d6c4c6f8640db6c157b2496",
+}
+
+
+def test_encoder_bytes_match_golden():
+    got = {
+        k: hashlib.sha256(_golden_blob(k)).hexdigest() for k in GOLDEN_SHA256
+    }
+    assert got == GOLDEN_SHA256
+
+
+# Raw multi-frame follows the single-frame native rules: PixelData is OW
+# above 8 bits (PS3.5 A.2) and has an even value length (PS3.5 7.1.1).
+# The encoder before the shared writer wrote OB and odd uint8 lengths, so
+# these pins are the corrected bytes.
+RAW_MULTIFRAME_SHA256 = {
+    "multiframe_raw/uint8/2x4x6":
+        "6ddd48be30dfab2168e0a7dbefb0c6cffd5107df776dbba5d33e7184003d7317",
+    "multiframe_raw/uint8/3x5x3":
+        "32d6f59bb1a4ba2a72e1ac18bcea81c0522c56d38d144e4a482ca9f9b1dad8a1",
+    "multiframe_raw/uint16/2x4x6":
+        "6902df45e9d0b71ed31404b80eb73a673a32efe8c8a5a36bc95aa5937bac559f",
+    "multiframe_raw/uint16/3x5x3":
+        "f85fdb4cdc4ab3219be27cde7a1b9f7d761008b5d445a9a0bcf3fbbb4b498faf",
+    "multiframe_raw/int16/2x4x6":
+        "4e1e2538ca5e78a59c51e371462c57701b55c875a11109cddf11df332575a641",
+    "multiframe_raw/int16/3x5x3":
+        "a1848300b49cc2204f76a9fa54e84a787590770156f32852a4411905b0f0190c",
+}
+
+
+def test_raw_multiframe_bytes_follow_native_rules():
+    for key, want in RAW_MULTIFRAME_SHA256.items():
+        blob = _golden_blob(key)
+        assert hashlib.sha256(blob).hexdigest() == want, key
+        at = blob.index(struct.pack("<HH", 0x7FE0, 0x0010))
+        (n,) = struct.unpack("<I", blob[at + 8 : at + 12])
+        assert blob[at + 4 : at + 6] == (
+            b"OB" if "/uint8/" in key else b"OW"
+        ), key
+        assert n % 2 == 0 and at + 12 + n == len(blob), key
+        _, dt, shape = key.split("/")
+        stack = _golden_image(dt, tuple(int(s) for s in shape.split("x")))
+        assert np.array_equal(C.decode_dicom_frames(blob), stack), key

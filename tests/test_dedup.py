@@ -175,7 +175,6 @@ def test_image_dhash_invariant_to_brightness_twins(spark):
             "img_id", SF.col("img_id") + 10000
         ),
         "brighten",
-        delta=3,
     )
     hashes = mm.dhash_images(base.unionByName(twins))
     by_id = {r.img_id: r.dhash for r in hashes.collect()}

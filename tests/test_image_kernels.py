@@ -153,7 +153,7 @@ def test_tile_patches_reassemble(spark):
     imgs = mm.synth_images(spark, n=2, height=16, width=16)
     orig = {r.img_id: np.frombuffer(r.pixels, dtype=np.uint8).reshape(16, 16)
             for r in imgs.collect()}
-    tiles = mm.tile_patches(imgs, patch=8).collect()
+    tiles = mm.tile_patches(imgs).collect()
     assert len(tiles) == 2 * 4
     rebuilt = {i: np.zeros((16, 16), dtype=np.uint8) for i in orig}
     for t in tiles:
@@ -330,7 +330,7 @@ def test_audio_frame_features_consistent_with_clip_totals(spark):
     from data_pipeline_rsna_spark.operators import multimodal as mm
 
     clips = mm.synth_audio(spark, n=10, n_samples=1024)
-    frames = mm.audio_frame_features(clips, frame=256).collect()
+    frames = mm.audio_frame_features(clips).collect()
     whole = {r.clip_id: r for r in mm.audio_features(clips).collect()}
     by_clip = {}
     for r in frames:

@@ -40,8 +40,8 @@ def test_watermark_patch_detection(spark):
     from pyspark.sql import functions as F
 
     imgs = mm.synth_images(spark, n=50, height=16, width=16, mod=200)
-    marked = mm.plant_watermark(imgs, every=5)
-    hashes = mm.patch_dhash(mm.tile_patches(marked, patch=8))
+    marked = mm.plant_watermark(imgs)
+    hashes = mm.patch_dhash(mm.tile_patches(marked))
     groups = (
         hashes.groupBy("patch_row", "patch_col", "dhash")
         .agg(F.count(F.lit(1)).alias("n"))
@@ -53,7 +53,7 @@ def test_watermark_patch_detection(spark):
     assert (g.patch_row, g.patch_col, g.n) == (1, 1, 10)
     # unmarked corpus: no tile repeats at that threshold
     clean = (
-        mm.patch_dhash(mm.tile_patches(imgs, patch=8))
+        mm.patch_dhash(mm.tile_patches(imgs))
         .groupBy("patch_row", "patch_col", "dhash")
         .agg(F.count(F.lit(1)).alias("n"))
         .filter("n >= 5")
