@@ -411,10 +411,10 @@ def stage_dicom_fixture_dir() -> str:
     dir of DICOMs, generate_images_from_dicom.py:70-78). pixel[i] of
     patient p is ``(p*31 + i*7) % 256``, the same closed form the
     synthetic corpus uses, so file-based results stay oracle-checkable."""
-    import os
     import pathlib
 
     from ..functions.codecs import encode_dicom_gray
+    from ..sinks import atomic_write
 
     side = FIXTURE_SIDE
     d = (pathlib.Path("/tmp/spark_graft_fixtures")
@@ -426,10 +426,8 @@ def stage_dicom_fixture_dir() -> str:
         for pid in range(FIXTURE_N):
             px = ((pid * 31 + np.arange(npx, dtype=np.int64) * 7) % 256)
             arr = px.astype(np.uint8).reshape(side, side)
-            tmp = d / f".tmp_{pid:04d}"
-            with open(tmp, "wb") as f:
+            with atomic_write(str(d / f"patient_{pid:04d}.dcm")) as f:
                 f.write(encode_dicom_gray(arr))
-            os.replace(tmp, d / f"patient_{pid:04d}.dcm")
         marker.touch()
     return str(d)
 

@@ -87,7 +87,7 @@ def run_rsna_pipeline(
                  .alias("skipped"))
     )
     collected = with_split.selectExpr(
-        "image_id", "patient_id", "split",
+        "image_id", "split",
         "CASE WHEN x IS NOT NULL AND _valid THEN named_struct("
         "'k', named_struct('x', x, 'y', y, 'width', width, 'height', height), "
         f"'xmin', round(x / {IMAGE_W}, 9), "
@@ -95,28 +95,21 @@ def run_rsna_pipeline(
         f"'ymin', round(y / {IMAGE_H}, 9), "
         f"'ymax', round((y + height) / {IMAGE_H}, 9)) END AS _box",
     ).groupBy("image_id").agg(
-        F.expr("first(patient_id) AS patient_id"),
         F.expr("first(split) AS split"),
         F.expr("sort_array(collect_list(_box)) AS _boxes"),
     )
+    # the columns besides split are the Example's features, under their
+    # TF Object Detection API names; the sink takes each list kind from
+    # the column type (boxes double → FloatList, labels int → Int64List)
     records = collected.selectExpr(
-        "image_id", "patient_id", "split",
-        *(f"transform(_boxes, b -> b.{f}) AS {f}s"
+        "split",
+        "image_id AS `image/source_id`",
+        f"{IMAGE_H} AS `image/height`",
+        f"{IMAGE_W} AS `image/width`",
+        *(f"transform(_boxes, b -> b.{f}) AS `image/object/bbox/{f}`"
           for f in ("xmin", "xmax", "ymin", "ymax")),
-        "size(_boxes) AS n_boxes",
+        "array_repeat(1, size(_boxes)) AS `image/object/class/label`",
     )
-
-    def to_features(row) -> dict[str, list]:
-        return {
-            "image/source_id": [row.image_id.encode()],
-            "image/height": [IMAGE_H],
-            "image/width": [IMAGE_W],
-            "image/object/bbox/xmin": list(row.xmins),
-            "image/object/bbox/xmax": list(row.xmaxs),
-            "image/object/bbox/ymin": list(row.ymins),
-            "image/object/bbox/ymax": list(row.ymaxs),
-            "image/object/class/label": [1] * row.n_boxes,
-        }
 
     # Materialize the assembled records ONCE: counts and both shard
     # writes fan out from the cache instead of re-running the
@@ -134,16 +127,14 @@ def run_rsna_pipeline(
         n_val = int(counts.get("val", 0))
         skipped = int(obs.get["skipped"] or 0)
         tfr.write_tfrecord_shards(
-            records.where("split = 'train'"),
+            records.where("split = 'train'").drop("split"),
             f"{out_dir}/train",
             train_shards,
-            to_features,
         )
         tfr.write_tfrecord_shards(
-            records.where("split = 'val'"),
+            records.where("split = 'val'").drop("split"),
             f"{out_dir}/val",
             val_shards,
-            to_features,
         )
     finally:
         records.unpersist()

@@ -3538,12 +3538,7 @@ def q_tfrecord_scan_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = tables.load(spark, sf_dir, "documents").select("doc_id", "text")
     out = _scratch_dir("tfrec_roundtrip_") + "/shards"
-    tfr.write_tfrecord_shards(
-        docs,
-        out,
-        8,
-        lambda r: {"doc_id": [r["doc_id"]], "text": [r["text"]]},
-    )
+    tfr.write_tfrecord_shards(docs, out, 8)
 
     def decode(batches):
         import pandas as pd

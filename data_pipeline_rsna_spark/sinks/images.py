@@ -14,9 +14,7 @@ encode stage is identical).
 
 from __future__ import annotations
 
-import contextlib
 import os
-import uuid
 from collections.abc import Iterator
 
 import numpy as np
@@ -24,16 +22,17 @@ import pandas as pd
 
 from pyspark.sql import DataFrame
 
+from . import atomic_write
+
 
 def write_png_dir(images: DataFrame, path: str) -> DataFrame:
     """Encode every (pixels, dtype, height, width) row to ``{path}/
     {img_id}.png`` and return the written-file manifest. Lazy like every
     DataFrame op — materializing the manifest performs the writes.
 
-    Each PNG is written under a unique temporary name in ``path`` and
-    renamed into place, so a speculative or killed task attempt never
-    truncates a file another attempt already completed: readers see
-    either no file or a whole one."""
+    Each PNG goes through ``sinks.atomic_write``, so a speculative or
+    killed task attempt never truncates a file another attempt already
+    completed: readers see either no file or a whole one."""
     from ..operators.multimodal import encode_png
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -46,15 +45,8 @@ def write_png_dir(images: DataFrame, path: str) -> DataFrame:
                 )
                 png = encode_png(arr)
                 fn = os.path.join(path, f"{r.img_id}.png")
-                tmp = os.path.join(path, f".{r.img_id}.{uuid.uuid4().hex}.tmp")
-                try:
-                    with open(tmp, "xb") as f:
-                        f.write(png)
-                    os.replace(tmp, fn)
-                except BaseException:
-                    with contextlib.suppress(FileNotFoundError):
-                        os.remove(tmp)
-                    raise
+                with atomic_write(fn) as f:
+                    f.write(png)
                 out.append((r.img_id, fn, len(png)))
             yield pd.DataFrame(out, columns=["img_id", "file", "n_bytes"])
 

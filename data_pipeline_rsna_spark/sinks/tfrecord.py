@@ -7,6 +7,16 @@ Both layers of the format are public specifications:
   reference builds these with TF helper constructors
   (``dataset_util.py:21-38``, ``images_to_tfrecord.py:135-169``); here
   they are encoded directly.
+- **The feature spec is the DataFrame schema**, as in the
+  spark-tensorflow-connector: ``write_tfrecord_shards`` writes each
+  column as the feature of that name, with its list kind fixed by the
+  column's Spark type — ``string`` (UTF-8) and ``binary`` → BytesList;
+  ``tinyint``, ``smallint``, ``int``, ``bigint`` → Int64List;
+  ``float``, ``double`` → FloatList (float32). ``array<T>`` of these
+  is the list itself, a scalar a one-value list; any other type is a
+  ``TypeError``. An empty list is written as protobuf writes an empty
+  list message of its kind (float ``12 00``, int64 ``1a 00``, bytes
+  ``0a 00``), so its kind survives for a parser that checks it.
 - **TFRecord framing** is ``uint64 length | uint32 masked_crc(length) |
   payload | uint32 masked_crc(payload)`` with CRC32C and the mask
   ``((crc >> 15) | (crc << 17)) + 0xa282ead8``.
@@ -19,7 +29,8 @@ fallback and the byte-level ground truth for tests.
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterable
+
+from . import atomic_write
 
 # ---------------------------------------------------------------------------
 # CRC32C (Castagnoli), table-driven
@@ -124,56 +135,63 @@ def _varint(n: int) -> bytes:
             return bytes(out)
 
 
-def _tag(field: int, wire: int) -> bytes:
-    return _varint((field << 3) | wire)
-
-
 def _len_delim(field: int, payload: bytes) -> bytes:
-    return _tag(field, 2) + _varint(len(payload)) + payload
+    # tag (field number, wire type 2) | varint length | payload
+    return _varint((field << 3) | 2) + _varint(len(payload)) + payload
 
 
-def _bytes_list(values: Iterable[bytes]) -> bytes:
+def _bytes_list(values: list[bytes]) -> bytes:
     # BytesList { repeated bytes value = 1; }
     return b"".join(_len_delim(1, v) for v in values)
 
 
-def _int64_list(values: Iterable[int]) -> bytes:
-    # Int64List { repeated int64 value = 1 [packed=true]; }
+def _int64_list(values: list[int]) -> bytes:
+    # Int64List { repeated int64 value = 1 [packed=true]; } — protobuf
+    # writes no field at all for an empty packed list
     packed = b"".join(_varint(v & 0xFFFFFFFFFFFFFFFF) for v in values)
-    return _len_delim(1, packed)
+    return _len_delim(1, packed) if packed else b""
 
 
-def _float_list(values: Iterable[float]) -> bytes:
+def _float_list(values: list[float]) -> bytes:
     # FloatList { repeated float value = 1 [packed=true]; }
     packed = b"".join(struct.pack("<f", v) for v in values)
-    return _len_delim(1, packed)
+    return _len_delim(1, packed) if packed else b""
 
 
-def encode_feature(value: list) -> bytes:
+# Feature kind → (its arm of the Feature oneof, the list encoder)
+_KINDS = {
+    "bytes": (1, _bytes_list),
+    "float": (2, _float_list),
+    "int64": (3, _int64_list),
+}
+
+# Spark column type → Feature kind, the mapping the
+# spark-tensorflow-connector applies to a DataFrame schema; an array of
+# one of these types is the list itself, a scalar a one-value list
+_SPARK_KINDS = {
+    **dict.fromkeys(("string", "binary"), "bytes"),
+    **dict.fromkeys(("tinyint", "smallint", "int", "bigint"), "int64"),
+    **dict.fromkeys(("float", "double"), "float"),
+}
+
+
+def encode_feature(kind: str, values: list) -> bytes:
     """Feature { oneof: BytesList=1, FloatList=2, Int64List=3 } — the
-    dataset_util.py:21-38 constructors, chosen by element type."""
-    if not value:
-        return _len_delim(3, _int64_list([]))
-    v0 = value[0]
-    if isinstance(v0, bytes):
-        return _len_delim(1, _bytes_list(value))
-    if isinstance(v0, str):
-        return _len_delim(1, _bytes_list([s.encode("utf8") for s in value]))
-    if isinstance(v0, float):
-        return _len_delim(2, _float_list(value))
-    if isinstance(v0, int):
-        return _len_delim(3, _int64_list(value))
-    raise TypeError(f"unsupported feature element type {type(v0).__name__}")
+    dataset_util.py:21-38 constructors. ``kind`` is ``"bytes"``,
+    ``"float"`` or ``"int64"``; floats are written as float32."""
+    field, encode_list = _KINDS[kind]
+    return _len_delim(field, encode_list(values))
 
 
-def encode_example(features: dict[str, list]) -> bytes:
+def encode_example(features: dict[str, tuple[str, list]]) -> bytes:
     """Example { Features features = 1 }; Features { map<string,Feature>
-    features = 1 }. Map entries are encoded as repeated (key=1, value=2)
-    submessages, sorted by key for deterministic output."""
+    features = 1 }, from ``{name: (kind, values)}``. Map entries are
+    encoded as repeated (key=1, value=2) submessages, sorted by key for
+    deterministic output."""
     entries = b""
     for name in sorted(features):
         entry = _len_delim(1, name.encode("utf8")) + _len_delim(
-            2, encode_feature(features[name])
+            2, encode_feature(*features[name])
         )
         entries += _len_delim(1, entry)
     return _len_delim(1, entries)
@@ -479,21 +497,6 @@ def count_tfrecords(path: str) -> int:
     return sum(1 for _ in iter_verified_frames(path, with_payloads=False))
 
 
-class _FeatureRow(dict):
-    """Row facade handed to ``to_features``: attribute AND item access
-    over one record's column values (the subset of the pyspark Row
-    surface every caller uses), built from Arrow batches instead of
-    pickled Rows."""
-
-    __slots__ = ()
-
-    def __getattr__(self, name):
-        try:
-            return self[name]
-        except KeyError:
-            raise AttributeError(name) from None
-
-
 def _frame_examples(chunk: list[bytes]):
     """Frame a chunk of encoded Example payloads: CRCs through the
     lockstep batch kernel, one framed byte blob per record."""
@@ -519,61 +522,98 @@ def _frame_examples(chunk: list[bytes]):
         )
 
 
-def write_tfrecord_shards(df, out_dir: str, num_shards: int,
-                          to_features) -> int:
-    """O33: one ``-%05d-of-%05d.tfrecord`` file per shard (the
-    reference's shard filename pattern, images_to_tfrecord.py:229).
-    ``to_features(row) -> dict[str, list]`` maps a row to its Example
-    feature dict (attribute or item access). Runs on executors — no
-    driver materialization. Returns the number of records written,
-    summed from the writer tasks' counts, so callers need no second
-    counting job.
+def write_tfrecord_shards(df, out_dir: str, num_shards: int) -> int:
+    """O33: write every row of ``df`` as one tf.train.Example, into one
+    ``-%05d-of-%05d.tfrecord`` file per shard (the reference's shard
+    filename pattern, images_to_tfrecord.py:229). Returns the number of
+    records written, summed from the writer tasks' counts, so callers
+    need no second counting job.
 
-    Both JVM↔Python crossings are Arrow (``mapInArrow``), not pickled
-    Rows: encode receives columnar
-    batches at the INPUT's parallelism, the framed byte blobs shuffle
-    as binary rows into ``num_shards`` writer tasks, and the writer
-    receives Arrow binary batches and appends them to disk. Encoding
-    at input parallelism (not inside the writers) keeps the CPU-heavy
-    step decoupled from the file-count contract; the proto encode
-    itself stays per-record python (~15% of the pre-batch-CRC cost),
-    while the CRCs — the dominant cost — run through the lockstep
-    numpy kernel over ~8k-record chunks."""
+    Every column is one feature: the column name is the feature key and
+    the column's Spark type fixes the list kind, as in the
+    spark-tensorflow-connector:
+
+    ===========================================  ==========
+    column type                                  Feature
+    ===========================================  ==========
+    ``string`` (written as UTF-8), ``binary``    BytesList
+    ``tinyint``, ``smallint``, ``int``,          Int64List
+    ``bigint``
+    ``float``, ``double`` (written as float32)   FloatList
+    ===========================================  ==========
+
+    ``array<T>`` of one of these types is the list itself, a scalar a
+    one-value list, so an empty array is an empty list of its column's
+    kind. The kinds are read from the schema here, on the driver: a
+    column of any other type raises ``TypeError`` naming it before any
+    job runs (cast such a column to choose its kind). A NULL cell or
+    array element fails the write with an error naming its column.
+
+    Both JVM↔Python crossings are Arrow (``mapInArrow``): encode
+    receives columnar batches at the INPUT's parallelism, the framed
+    byte blobs shuffle as binary rows into ``num_shards`` writer tasks,
+    and each writer appends its blobs to its shard file. Encoding at
+    input parallelism (not inside the writers) keeps the CPU-heavy step
+    decoupled from the file-count contract; the proto encode itself is
+    per-record python, while the CRCs run through the lockstep numpy
+    kernel over ~8k-record chunks."""
     import os
 
     from pyspark.sql import functions as F
+    from pyspark.sql.types import ArrayType
 
+    spec = []  # (column, kind, is_array), in column order
+    for field in df.schema.fields:
+        t = field.dataType
+        is_array = isinstance(t, ArrayType)
+        kind = _SPARK_KINDS.get(
+            (t.elementType if is_array else t).simpleString()
+        )
+        if kind is None:
+            raise TypeError(
+                f"column {field.name!r} has type {t.simpleString()}, "
+                "which maps to no tf.train.Feature kind"
+            )
+        spec.append((field.name, kind, is_array))
     os.makedirs(out_dir, exist_ok=True)
-    cols = list(df.columns)
 
     def _encode_batches(batches):
         import pyarrow as pa
+
+        def framed(chunk):
+            return pa.record_batch(
+                [pa.array(list(_frame_examples(chunk)), type=pa.binary())],
+                names=["blob"],
+            )
 
         # accumulate encoded payloads across (possibly small) incoming
         # Arrow batches so the CRC kernel always sees full chunks
         chunk: list[bytes] = []
         chunk_bytes = 0
-
-        def _flush():
-            nonlocal chunk, chunk_bytes
-            if chunk:
-                yield pa.record_batch(
-                    [pa.array(list(_frame_examples(chunk)),
-                              type=pa.binary())],
-                    names=["blob"],
-                )
-                chunk = []
-                chunk_bytes = 0
-
         for batch in batches:
-            for rec in batch.to_pylist():
-                chunk.append(
-                    encode_example(to_features(_FeatureRow(rec)))
-                )
+            columns = []
+            for (name, kind, is_array), col in zip(spec, batch.columns):
+                if col.null_count or (is_array and col.flatten().null_count):
+                    raise ValueError(
+                        f"column {name!r} holds a NULL, which a "
+                        "tf.train.Feature cannot carry"
+                    )
+                if kind == "bytes":  # a string column's UTF-8 bytes
+                    col = col.cast(
+                        pa.list_(pa.binary()) if is_array else pa.binary()
+                    )
+                columns.append(col.to_pylist())
+            for values in zip(*columns):
+                chunk.append(encode_example({
+                    name: (kind, v if is_array else [v])
+                    for (name, kind, is_array), v in zip(spec, values)
+                }))
                 chunk_bytes += len(chunk[-1])
                 if len(chunk) >= 8192 or chunk_bytes >= (16 << 20):
-                    yield from _flush()
-        yield from _flush()
+                    yield framed(chunk)
+                    chunk, chunk_bytes = [], 0
+        if chunk:
+            yield framed(chunk)
 
     # shuffle the framed blobs into exactly num_shards writer
     # partitions, HASH-partitioned on the blob bytes: content-keyed,
@@ -583,10 +623,8 @@ def write_tfrecord_shards(df, out_dir: str, num_shards: int,
     # sortBeforeRepartition local sort of the blobs. Distinct records
     # hash ~uniformly, so shards balance for real data (a degenerate
     # all-identical-records input would co-locate; acceptable).
-    framed = (
-        df.select(cols)
-        .mapInArrow(_encode_batches, "blob binary")
-        .repartition(num_shards, F.xxhash64("blob"))
+    framed = df.mapInArrow(_encode_batches, "blob binary").repartition(
+        num_shards, F.xxhash64("blob")
     )
 
     def _write_batches(batches):
@@ -600,11 +638,10 @@ def write_tfrecord_shards(df, out_dir: str, num_shards: int,
         n = 0
         # the file is created even for an EMPTY partition — an empty
         # shard is a valid TFRecord file and the -of-%05d contract
-        # promises num_shards files (same as the old foreachPartition)
-        with open(fname, "wb") as f:
+        # promises num_shards files
+        with atomic_write(fname) as f:
             for batch in batches:
-                col = batch.column(0)
-                for blob in col:
+                for blob in batch.column(0):
                     f.write(blob.as_py())
                 n += batch.num_rows
         yield pa.record_batch([pa.array([n], type=pa.int64())],

@@ -54,6 +54,26 @@ def test_pipeline_end_to_end(spark, tmp_path):
         for _, payload in tfr.iter_verified_frames(f)
     ]
     assert len(examples) == total
+    # a box-less record (every negative patient's) still carries its box
+    # features as FloatList and its labels as Int64List, as the TF
+    # Object Detection API's decoder declares them: read from the raw
+    # payload bytes, since decode_example returns values, not kinds
+    def entry(key, feature):
+        return tfr._len_delim(
+            1, tfr._len_delim(1, key.encode()) + tfr._len_delim(2, feature)
+        )
+
+    boxless = [
+        p
+        for f in sorted(glob.glob(f"{out}/*/*.tfrecord"))
+        for _, p in tfr.iter_verified_frames(f)
+        if not tfr.decode_example(p)["image/object/bbox/xmin"]
+    ]
+    assert len(boxless) == 6 * 20
+    for p in boxless:
+        for side in ("xmin", "xmax", "ymin", "ymax"):
+            assert entry(f"image/object/bbox/{side}", b"\x12\x00") in p
+        assert entry("image/object/class/label", b"\x1a\x00") in p
     for ex in examples:
         assert ex["image/height"] == [1024]
         assert ex["image/width"] == [1024]

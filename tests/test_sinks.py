@@ -26,6 +26,38 @@ def test_scratch_dir_registers_atexit_cleanup(monkeypatch):
     assert not os.path.exists(path)
 
 
+def test_atomic_write_replaces_on_success_and_cleans_up_on_failure(
+    tmp_path,
+):
+    """A clean exit renames the temporary file to its final name; a
+    raising block leaves no file behind and an earlier complete file
+    untouched."""
+    import os
+
+    from data_pipeline_rsna_spark.sinks import atomic_write
+
+    final = tmp_path / "data-00000-of-00001.tfrecord"
+    with atomic_write(str(final)) as f:
+        assert os.path.basename(f.name).startswith(".")
+        assert not f.name.endswith(".tfrecord")
+        f.write(b"whole")
+    assert os.listdir(tmp_path) == [final.name]
+    assert final.read_bytes() == b"whole"
+
+    with pytest.raises(RuntimeError, match="mid-write"):
+        with atomic_write(str(final)) as f:
+            f.write(b"par")
+            raise RuntimeError("mid-write")
+    assert os.listdir(tmp_path) == [final.name]
+    assert final.read_bytes() == b"whole"
+
+    fresh = tmp_path / "fresh.png"
+    with pytest.raises(RuntimeError):
+        with atomic_write(str(fresh)) as f:
+            raise RuntimeError("before any byte")
+    assert os.listdir(tmp_path) == [final.name]
+
+
 @pytest.mark.slow
 def test_rsna_pipeline_counts_cleans_its_shards(spark):
     """The E2E counts query counts the written shards eagerly and must

@@ -26,7 +26,7 @@ def test_varint_golden():
 
 def test_example_encoding_golden():
     # Example{features{feature{key:"a" value{int64_list{value:[1,2]}}}}}
-    enc = tfr.encode_example({"a": [1, 2]})
+    enc = tfr.encode_example({"a": ("int64", [1, 2])})
     # outer: field 1 (features), map entry (key "a" = field 1, value
     # Feature = field 2), Feature.int64_list = field 3 (tag 0x1a),
     # Int64List.value packed = field 1
@@ -43,22 +43,20 @@ def test_frame_roundtrip(tmp_path):
 
 
 def test_write_tfrecord_shards(spark, tmp_path):
-    df = spark.range(100).selectExpr("id", "cast(id * 2 as double) as v")
+    df = spark.range(100).selectExpr(
+        "id", "cast(id * 2 as double) as v", "concat('rec-', id) AS name"
+    )
     out = str(tmp_path / "shards")
 
-    def to_features(row):
-        return {
-            "id": [int(row.id)],
-            "v": [float(row.v)],
-            "name": [f"rec-{row.id}"],
-        }
-
-    n_written = tfr.write_tfrecord_shards(
-        df, out, num_shards=4, to_features=to_features
-    )
+    n_written = tfr.write_tfrecord_shards(df, out, num_shards=4)
     assert n_written == 100
     files = sorted(glob.glob(f"{out}/*.tfrecord"))
     assert len(files) == 4
+    # the shard files are written through temporary names: none is
+    # left behind, hidden or not
+    assert sorted(os.listdir(out)) == [
+        f"data-{i:05d}-of-00004.tfrecord" for i in range(4)
+    ]
     n = sum(tfr.count_tfrecords(f) for f in files)
     assert n == 100
     # spot-check one payload parses as the expected deterministic bytes
@@ -69,61 +67,169 @@ def test_write_tfrecord_shards(spark, tmp_path):
 def test_write_tfrecord_shards_empty_shards(spark, tmp_path):
     """num_shards > rows: every shard file must still exist (the
     -of-%05d contract), the empty ones as valid zero-record TFRecord
-    files — pins the Arrow writer running for EMPTY partitions too
-    (round 12: the pickled-Row foreachPartition ingress became
-    mapInArrow; an Arrow writer that skips empty partitions would
-    silently break the shard-count contract)."""
+    files — pins the Arrow writer running for EMPTY partitions too; a
+    writer that skips empty partitions would silently break the
+    shard-count contract."""
     df = spark.range(3).selectExpr("id")
     out = str(tmp_path / "eshards")
-    assert tfr.write_tfrecord_shards(
-        df, out, 6, lambda r: {"id": [r["id"]]}
-    ) == 3
+    assert tfr.write_tfrecord_shards(df, out, 6) == 3
     files = sorted(glob.glob(f"{out}/*.tfrecord"))
     assert len(files) == 6
+    assert len(os.listdir(out)) == 6
     counts = [tfr.count_tfrecords(f) for f in files]
     assert sum(counts) == 3
 
 
-def test_write_tfrecord_shards_row_facade(spark, tmp_path):
-    """to_features sees attribute access, item access, array columns
-    as lists, and bytes-exact framing — the full surface the pickled
-    Row used to provide (round 12 Arrow ingress)."""
+def _shard_payloads(out):
+    return [
+        p
+        for f in sorted(glob.glob(f"{out}/*.tfrecord"))
+        for _, p in tfr.iter_verified_frames(f)
+    ]
+
+
+def test_write_tfrecord_shards_column_kinds(spark, tmp_path):
+    """Scalar columns are one-value lists, array columns the list
+    itself, strings their UTF-8 bytes, each under its column's kind:
+    the payloads equal the reference encoder's with those kinds given,
+    bytes-exact, and decode back to the column values."""
     df = spark.range(5).selectExpr(
         "id",
         "cast(id as double) as score",
         "array(cast(id as double), 2.5) as vec",
-        "concat('nm-', id) as name",
+        "array(cast(id as int), -1) as ints",
+        "concat('nm-é', id) as name",
+        "array(concat('t', id), '') as tags",
     )
     out = str(tmp_path / "fshards")
+    assert tfr.write_tfrecord_shards(df, out, 2) == 5
 
-    def to_features(row):
+    def want(i):
         return {
-            "id": [int(row.id)],              # attribute access
-            "score": [float(row["score"])],   # item access
-            "vec": list(row.vec),             # array column -> list
-            "name": [row.name],               # str
+            "id": ("int64", [i]),
+            "score": ("float", [float(i)]),
+            "vec": ("float", [float(i), 2.5]),
+            "ints": ("int64", [i, -1]),
+            "name": ("bytes", [f"nm-é{i}".encode()]),
+            "tags": ("bytes", [f"t{i}".encode(), b""]),
         }
 
-    tfr.write_tfrecord_shards(df, out, 2, to_features)
-    payloads = []
-    for f in sorted(glob.glob(f"{out}/*.tfrecord")):
-        payloads.extend(p for _, p in tfr.iter_verified_frames(f))
-    got = sorted(
-        tuple(
-            (k, tuple(v)) for k, v in sorted(tfr.decode_example(p).items())
-        )
-        for p in payloads
+    payloads = _shard_payloads(out)
+    assert sorted(payloads) == sorted(
+        tfr.encode_example(want(i)) for i in range(5)
     )
-    want = sorted(
-        (
-            ("id", (i,)),
-            ("name", (f"nm-{i}".encode(),)),
-            ("score", (float(i),)),
-            ("vec", (float(i), 2.5)),
-        )
+    assert sorted(
+        tuple(sorted(tfr.decode_example(p).items())) for p in payloads
+    ) == sorted(
+        tuple(sorted((k, v) for k, (_, v) in want(i).items()))
         for i in range(5)
     )
-    assert got == want
+
+
+# One column of every supported Spark type, scalar and array, no list
+# empty. The shard digests were taken from an independent encoder (a
+# row callback choosing each kind from the Python value), so they pin
+# every non-empty encoding and the record→shard assignment.
+GOLDEN_COLUMNS = (
+    "cast(id AS tinyint) AS i8",
+    "cast(id * 300 - 1000 AS smallint) AS i16",
+    "cast(id * 70000 - 400000 AS int) AS i32",
+    "id * 5000000000 - 7 AS i64",
+    "cast(id / 3 AS float) AS f32",
+    "cast(id AS double) * 0.25 - 1 AS f64",
+    "concat('é-', id) AS s",
+    "cast(concat('b', id) AS binary) AS b",
+    "array(cast(id AS tinyint), cast(-1 AS tinyint)) AS a_i8",
+    "array(cast(id AS smallint)) AS a_i16",
+    "array(cast(id AS int), 1, -2) AS a_i32",
+    "array(id, -id << 40) AS a_i64",
+    "array(cast(id AS float) / 7, cast(1.5 AS float)) AS a_f32",
+    "array(cast(id AS double) / 4, 1.5d, -0.1d) AS a_f64",
+    "array(concat('x', id), 'y') AS a_s",
+    "array(cast(concat('z', id) AS binary)) AS a_b",
+)
+GOLDEN_SHARD_SHA256 = {
+    "data-00000-of-00003.tfrecord":
+        "31c4d6933d42b582c36c809739012ed21a874f0ccd08a0f0cd8e08acd70f59c8",
+    "data-00001-of-00003.tfrecord":
+        "9e03a0af9586c6ea0119eb45c5396ae8ee7311e0f33a280778a91a85946eb3ab",
+    "data-00002-of-00003.tfrecord":
+        "71631e1ab5de53ebce19c6af4c798e86d8d9105608710e0d3922febf9374e76e",
+}
+
+
+def test_write_tfrecord_shards_golden_bytes(spark, tmp_path):
+    import hashlib
+
+    df = spark.range(0, 12, 1, 2).selectExpr(*GOLDEN_COLUMNS)
+    out = str(tmp_path / "golden")
+    assert tfr.write_tfrecord_shards(df, out, 3) == 12
+    got = {
+        name: hashlib.sha256(open(os.path.join(out, name), "rb").read())
+        .hexdigest()
+        for name in os.listdir(out)
+    }
+    assert got == GOLDEN_SHARD_SHA256
+
+
+def test_empty_lists_keep_their_kind(spark, tmp_path):
+    """An empty list is written as protobuf writes an empty list message
+    of its kind, so a parser that checks the kind (TF's Example parser
+    does, even for empty lists) reads the column's kind."""
+    assert tfr.encode_feature("float", []) == bytes.fromhex("1200")
+    assert tfr.encode_feature("int64", []) == bytes.fromhex("1a00")
+    assert tfr.encode_feature("bytes", []) == bytes.fromhex("0a00")
+    df = spark.range(1).selectExpr(
+        "cast(array() AS array<double>) AS f",
+        "cast(array() AS array<bigint>) AS i",
+        "cast(array() AS array<string>) AS s",
+    )
+    out = str(tmp_path / "empty")
+    assert tfr.write_tfrecord_shards(df, out, 1) == 1
+    # Example{features{feature{key:"f" value{float_list{}}} ... "i"
+    # int64_list{} ... "s" bytes_list{}}}
+    assert _shard_payloads(out) == [bytes.fromhex(
+        "0a1b"
+        "0a070a016612021200"
+        "0a070a016912021a00"
+        "0a070a017312020a00"
+    )]
+
+
+@pytest.mark.parametrize(
+    "expr",
+    [
+        "cast(1.5 AS decimal(5, 2))",
+        "true",
+        "named_struct('a', 1)",
+        "array(true)",
+    ],
+)
+def test_unsupported_column_type_raises_before_any_job(spark, tmp_path,
+                                                        expr):
+    sc = spark.sparkContext
+    df = spark.range(3).selectExpr("id", f"{expr} AS bad")
+    out = str(tmp_path / "never")
+    group = "tfrecord-kind-check"
+    sc.setJobGroup(group, "sink type check")
+    try:
+        with pytest.raises(TypeError, match="column 'bad'"):
+            tfr.write_tfrecord_shards(df, out, 2)
+        assert sc.statusTracker().getJobIdsForGroup(group) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert not os.path.exists(out)
+
+
+@pytest.mark.parametrize(
+    "expr",
+    ["if(id = 1, NULL, id)", "array(id, if(id = 1, NULL, 2))"],
+)
+def test_null_cell_names_its_column(spark, tmp_path, expr):
+    df = spark.range(3).selectExpr("id", f"{expr} AS holey")
+    with pytest.raises(Exception, match="column 'holey' holds a NULL"):
+        tfr.write_tfrecord_shards(df, str(tmp_path / "nulls"), 1)
 
 
 def test_float_list_layout():
@@ -139,16 +245,18 @@ def test_float_list_layout():
 
 def test_decode_example_inverts_encode():
     ex = {
-        "doc_id": [42],
-        "text": [b"hello \xc3\xa9 world", b"second"],
-        "scores": [1.5, -2.25, 0.0],
-        "labels": [1, -7, 1 << 40, -(1 << 40)],
-        "empty": [],
+        "doc_id": ("int64", [42]),
+        "text": ("bytes", [b"hello \xc3\xa9 world", b"second"]),
+        "scores": ("float", [1.5, -2.25, 0.0]),
+        "labels": ("int64", [1, -7, 1 << 40, -(1 << 40)]),
+        "empty_floats": ("float", []),
+        "empty_ints": ("int64", []),
+        "empty_bytes": ("bytes", []),
     }
     dec = tfr.decode_example(tfr.encode_example(ex))
-    # empty lists encode as an empty Int64List — type is unrecoverable,
-    # value (the empty list) is
-    assert dec == ex
+    # decode_example returns each feature's values, not its kind (the
+    # byte-level tests above pin the kinds)
+    assert dec == {k: v for k, (_, v) in ex.items()}
 
 
 def test_decode_example_hypothesis_roundtrip():
@@ -156,16 +264,25 @@ def test_decode_example_hypothesis_roundtrip():
     from hypothesis import strategies as st
 
     feature = st.one_of(
-        st.lists(st.binary(max_size=40), min_size=1, max_size=5),
-        st.lists(
-            st.integers(min_value=-(1 << 63), max_value=(1 << 63) - 1),
-            min_size=1,
-            max_size=8,
+        st.tuples(
+            st.just("bytes"),
+            st.lists(st.binary(max_size=40), min_size=0, max_size=5),
         ),
-        st.lists(
-            st.floats(width=32, allow_nan=False, allow_infinity=False),
-            min_size=1,
-            max_size=8,
+        st.tuples(
+            st.just("int64"),
+            st.lists(
+                st.integers(min_value=-(1 << 63), max_value=(1 << 63) - 1),
+                min_size=0,
+                max_size=8,
+            ),
+        ),
+        st.tuples(
+            st.just("float"),
+            st.lists(
+                st.floats(width=32, allow_nan=False, allow_infinity=False),
+                min_size=0,
+                max_size=8,
+            ),
         ),
     )
     names = st.text(
@@ -175,7 +292,9 @@ def test_decode_example_hypothesis_roundtrip():
     @settings(max_examples=60, deadline=None)
     @given(st.dictionaries(names, feature, max_size=5))
     def check(ex):
-        assert tfr.decode_example(tfr.encode_example(ex)) == ex
+        assert tfr.decode_example(tfr.encode_example(ex)) == {
+            k: v for k, (_, v) in ex.items()
+        }
 
     check()
 
@@ -197,9 +316,7 @@ def test_tfrecord_source_scan_matches_write(spark, tmp_path, n_rows,
         "id", "concat('payload-', id) AS text"
     )
     out = str(tmp_path / "shards")
-    tfr.write_tfrecord_shards(
-        df, out, n_shards, lambda r: {"id": [r["id"]], "text": [r["text"]]}
-    )
+    tfr.write_tfrecord_shards(df, out, n_shards)
     back = tfs.scan_tfrecords(spark, out)
     assert back.count() == n_rows
     non_empty = [f for f in glob.glob(out + "/*.tfrecord")
@@ -211,7 +328,10 @@ def test_tfrecord_source_scan_matches_write(spark, tmp_path, n_rows,
 
     pre = sorted(
         hashlib.sha256(
-            tfr.encode_example({"id": [r["id"]], "text": [r["text"]]})
+            tfr.encode_example({
+                "id": ("int64", [r["id"]]),
+                "text": ("bytes", [r["text"].encode()]),
+            })
         ).hexdigest()
         for r in df.collect()
     )
@@ -235,7 +355,7 @@ def test_tfrecord_source_detects_corruption(spark, tmp_path):
 
     df = spark.range(20).selectExpr("id")
     out = str(tmp_path / "cshards")
-    tfr.write_tfrecord_shards(df, out, 1, lambda r: {"id": [r["id"]]})
+    tfr.write_tfrecord_shards(df, out, 1)
     shard = glob.glob(out + "/*.tfrecord")[0]
     blob = bytearray(open(shard, "rb").read())
     blob[len(blob) // 2] ^= 0xFF  # flip one payload byte mid-file
@@ -249,7 +369,7 @@ def test_tfrecord_source_glob_and_single_file(spark, tmp_path):
 
     df = spark.range(10).selectExpr("id")
     out = str(tmp_path / "gshards")
-    tfr.write_tfrecord_shards(df, out, 2, lambda r: {"id": [r["id"]]})
+    tfr.write_tfrecord_shards(df, out, 2)
     files = sorted(glob.glob(out + "/*.tfrecord"))
     assert tfs.scan_tfrecords(spark, out + "/*.tfrecord").count() == 10
     one = tfs.scan_tfrecords(spark, files[0])
