@@ -15,8 +15,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..lineage import lineage_cut
-
 KEY_COL = "user_id"
 TS_COL = "ts"
 VALUE_COL = "value"
@@ -282,10 +280,10 @@ def session_concurrency_by_day(events: DataFrame) -> DataFrame:
     key), and the running sum of deltas in key order IS the concurrency
     curve; max per calendar day of the delta's timestamp.
 
-    The global prefix sum runs on ``relational.grouped_running_sum``
-    with a constant group — one logical sequence spread over many range
-    partitions, the exact skew shape that helper exists for; a naive
-    ``Window.orderBy(k)`` would drag every session through one task.
+    The global prefix sum runs on the unkeyed ``relational.prefix_scan``
+    — one logical sequence spread over many range partitions, the exact
+    skew shape that helper exists for; a naive ``Window.orderBy(k)``
+    would drag every session through one task.
     Key ties (two sessions starting the same microsecond) permute only
     the intra-tie running values; the per-day MAX is invariant because
     -1s sort after the +1s of the same instant."""
@@ -305,9 +303,11 @@ def session_concurrency_by_day(events: DataFrame) -> DataFrame:
         F.lit(-1).alias("delta"),
         F.col("e").alias("ts"),
     )
-    deltas = starts.unionAll(ends).withColumn("_g", F.lit(1))
-    cum = rel.grouped_running_sum(
-        deltas, "_g", "k", "delta", out_col="concurrency"
+    cum, _ = rel.prefix_scan(
+        starts.unionAll(ends), "k", {"concurrency": ("sum", "delta")}
+    )
+    cum = cum.withColumn(
+        "concurrency", F.coalesce("concurrency", F.lit(0)) + F.col("delta")
     )
     return cum.groupBy(
         F.datediff(F.to_date("ts"), F.lit("1970-01-01")).alias("epoch_day")
@@ -685,54 +685,29 @@ def late_arrival_audit(
     n_dropped hits the loss budget.
 
     The high-watermark is a GLOBAL running max of event time in arrival
-    order — computed with the two-phase range-partition pattern
-    (``relational.grouped_running_sum``'s shape under the max monoid):
-    local running max per range slice, per-slice maxima form a
-    #partitions-row metadata table whose exclusive prefix max broadcasts
-    back. Never a single-task global window. Output is per-hour (≤ a few
-    thousand rows per audited month), window start as epoch seconds.
+    order: ``relational.prefix_scan``'s max over the rows that arrived
+    before, joined with the row's own event time. Never a single-task
+    global window. Output is per-hour (≤ a few thousand rows per
+    audited month), window start as epoch seconds.
     """
+    from . import relational as rel
+
     arrival_cols = arrival_cols or ["event_id"]
-    n = partitions or events.sparkSession.conf.get(
-        "spark.sql.shuffle.partitions"
-    )
-    arr = [F.col(c) for c in arrival_cols]
     proj = events.select(
-        *arr,
+        *arrival_cols,
         F.expr(f"unix_micros(`{TS_COL}`)").alias("_tsu"),
         F.expr(
             f"unix_seconds(date_trunc('hour', `{TS_COL}`))"
         ).alias("window_start"),
     )
-    part = (
-        proj.repartitionByRange(int(n), *arr)
-        .sortWithinPartitions(*arr)
-        .withColumn("_pid", F.spark_partition_id())
-        .transform(lineage_cut)
-    )
-    local_w = (
-        Window.partitionBy("_pid")
-        .orderBy(*arr)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    local = part.withColumn("_lmax", F.max("_tsu").over(local_w))
-    submax = local.groupBy("_pid").agg(F.max("_lmax").alias("_sub"))
-    earlier = submax.select(
-        F.col("_pid").alias("_pid2"), F.col("_sub").alias("_sub2")
-    )
-    offsets = (
-        submax.join(earlier, F.col("_pid2") < F.col("_pid"), "left")
-        .groupBy("_pid")
-        .agg(F.max("_sub2").alias("_off"))
+    seen, _ = rel.prefix_scan(
+        proj, arrival_cols, {"_hwm": ("max", "_tsu")}, partitions=partitions
     )
     allowance_us = allowed_lateness_sec * 1_000_000
     return (
-        local.join(F.broadcast(offsets), "_pid")
+        seen
         # lateness at arrival = high-watermark so far − event time
-        .withColumn(
-            "_late_us",
-            F.expr("greatest(_lmax, coalesce(_off, _lmax)) - _tsu"),
-        )
+        .withColumn("_late_us", F.expr("greatest(_hwm, _tsu) - _tsu"))
         .groupBy("window_start")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_events"),

@@ -7,6 +7,8 @@ here uses a Python UDF.
 
 from __future__ import annotations
 
+import operator
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -19,7 +21,7 @@ SIZE_COL = "size_bytes"
 FILE_COL = "file_id"
 
 # ---------------------------------------------------------------------------
-# O9 — deterministic train/val split
+# Range-partitioned prefix scan (global ranks, running sums, max and min)
 # ---------------------------------------------------------------------------
 
 
@@ -31,112 +33,155 @@ FILE_COL = "file_id"
 _MID_PART_BITS = 33
 _MID_ROW_MASK = (1 << _MID_PART_BITS) - 1
 
+# how the earlier partitions' value and the local value combine: on the
+# driver over Python values, and in the row projection as SQL text
+_FOLD = {"count": operator.add, "sum": operator.add, "max": max, "min": min}
+_ADD = "coalesce({here} + {before}, {here}, {before})"
+_COMBINE = {"count": _ADD, "sum": _ADD, "max": "greatest({here}, {before})",
+            "min": "least({here}, {before})"}
 
-def _order_cols(order_col) -> list[str]:
-    """Normalize a rank key spec — one column name or a sequence of
-    names (a composite key ranked lexicographically) — to a list."""
-    if isinstance(order_col, str):
-        return [order_col]
-    return list(order_col)
+
+def _fold(fn: str, a, b):
+    return a if b is None else b if a is None else _FOLD[fn](a, b)
 
 
-def _ranked_by_mid(df: DataFrame, order_col) -> DataFrame:
-    """Range-partition + local sort, with ``(_pid, _local_rn)`` derived
-    from ``monotonically_increasing_id`` instead of a WindowExec.
+def prefix_scan(
+    df: DataFrame,
+    order,
+    aggs: dict[str, tuple[str, str]],
+    key: str | None = None,
+    partitions: int | None = None,
+) -> tuple[DataFrame, dict]:
+    """For each ``out → (fn, col)`` of ``aggs``, with ``fn`` one of
+    ``count``, ``sum``, ``max`` or ``min``, add ``fn(col)`` over the
+    rows that come strictly before the row in ``order``, among rows
+    with the same ``key``. With no such rows a count is 0 and the others
+    are NULL; a caller that needs its own row adds it back in one
+    projection. Also returns, per key value (None when unkeyed), a dict
+    of ``out → fn(col)`` over the whole key.
 
-    The previous form stamped ``spark_partition_id`` and ranked with
-    ``row_number() OVER (PARTITION BY _pid)`` — but the eager checkpoint
-    (see below) erases partitioning metadata (``UnknownPartitioning`` on
-    the LogicalRDD scan), so Catalyst re-shuffled AND re-sorted the whole
-    dataset just to feed a window that computes an index the sort already
-    determined. The mid-based form is pure narrow projection: no window,
-    no post-checkpoint exchange, one data pass.
+    A ``Window.orderBy`` with no partition key runs the whole frame in
+    one task, and ``Window.partitionBy(key)`` runs each key in one task
+    (fatal for a handful of languages over billions of documents). The
+    scan instead:
 
-    The eager localCheckpoint pins the range partitioner's sampled
-    boundaries and the assigned ids, so every consumer (the rows, the
-    per-partition counts metadata) sees one immutable layout — a
-    re-executed range exchange over a shuffle-fed input can sample
-    different boundaries per execution, which would silently misalign
-    the offsets. ``order_col`` must be unique for a stable rank.
+    1. range-partitions on ``(key, *order)`` into ``partitions`` parts
+       (default ``spark.sql.shuffle.partitions``) and sorts each one — a
+       parallel total order in which one key can span many partitions —
+       then stamps ``_pid`` and the local row index from
+       ``monotonically_increasing_id`` and cuts once. Every consumer
+       sees that one layout; a re-executed range exchange can sample
+       other boundaries and misalign the offsets.
+    2. Local part: one ``(_pid, key)`` window that ends one row before
+       the current row. An unkeyed ``("count", "*")`` is the local row
+       index itself: no window, so no exchange — the cut hides the range
+       layout from Catalyst, and any window re-shuffles the rows.
+    3. Earlier partitions: the per-``(_pid, key)`` totals of the cut
+       (at most partitions + keys rows) are collected and folded on the
+       driver in ``_pid`` order. In the range order only a partition's
+       first key can continue from earlier partitions, so the offsets
+       are one SQL map literal keyed by ``_pid``, applied to the rows
+       whose partition-mates before them all share their key (NULL keys
+       form one group, as in ``Window.partitionBy``). Unlike a broadcast
+       join, the literal adds no job to each action over the result.
+
+    ``order`` is a column name, a sort Column, or a sequence of them; it
+    should be unique within a key, since ties are taken in the order the
+    sort leaves them. Aggregated columns are integral or floating point,
+    and the key is not floating point (the driver matches keys by
+    Python equality).
     """
-    n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    cols = _order_cols(order_col)
+    n = int(partitions or df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    if isinstance(order, (str, Column)):
+        order = [order]
+    order = [F.col(c) if isinstance(c, str) else c for c in order]
+    keys = [F.col(key)] if key else []
     part = (
-        df.repartitionByRange(n, *[F.col(c) for c in cols])
-        .sortWithinPartitions(*cols)
+        df.repartitionByRange(n, *keys, *order)
+        .sortWithinPartitions(*keys, *order)
         .withColumn("_mid", F.monotonically_increasing_id())
         .transform(lineage_cut)
-    )
-    return (
-        part.withColumn(
-            "_pid",
-            F.shiftright(F.col("_mid"), _MID_PART_BITS).cast("int"),
-        )
-        .withColumn(
-            "_local_rn", (F.col("_mid").bitwiseAND(_MID_ROW_MASK)) + 1
+        .selectExpr(
+            "*",
+            f"CAST(shiftright(_mid, {_MID_PART_BITS}) AS INT) AS _pid",
+            f"_mid & {_MID_ROW_MASK} AS _rn",
         )
         .drop("_mid")
     )
+    totals = part.groupBy("_pid", *keys).agg(
+        *[getattr(F, fn)(c).alias(out) for out, (fn, c) in aggs.items()]
+    )
+    types = dict(totals.dtypes)
+    per_key: dict = {}
+    offsets: dict[int, dict] = {}
+    for r in sorted(totals.collect(), key=lambda r: r["_pid"]):
+        k = r[key] if key else None
+        if k in per_key:
+            offsets[r["_pid"]] = per_key[k]
+        per_key[k] = {
+            out: _fold(fn, per_key.get(k, {}).get(out), r[out])
+            for out, (fn, _) in aggs.items()
+        }
 
-
-def _partition_offsets(ranked: DataFrame) -> tuple[dict[int, int], int]:
-    """Exclusive prefix-sum start offset per physical partition, plus the
-    total row count. The per-partition counts are METADATA — one row per
-    partition, the same cardinality AQE ships to the driver after every
-    shuffle — so they are collected and folded driver-side; the data
-    itself is never moved."""
-    rows = ranked.groupBy("_pid").agg(F.count("*").alias("_cnt")).collect()
-    offsets: dict[int, int] = {}
-    total = 0
-    for r in sorted(rows, key=lambda r: r["_pid"]):
-        offsets[r["_pid"]] = total
-        total += r["_cnt"]
-    return offsets, total
-
-
-def _offset_col(offsets: dict[int, int]) -> Column:
-    """Partition-offset lookup as a scalar expression: one SQL map
-    literal (one plan-building call whatever the partition count), no
-    join, no broadcast exchange, no second scan. Partition counts are
-    bounded by the shuffle partition count (thousands at 100 TB), well
-    inside expression-size limits; a 100k-partition deployment would
-    switch to a broadcast-join lookup, with everything else unchanged."""
-    if not offsets:
-        return F.lit(0)
-    pairs = ", ".join(f"{pid}, {off}L" for pid, off in offsets.items())
-    return F.expr(f"coalesce(map({pairs})[_pid], 0L)")
+    w = (
+        Window.partitionBy("_pid", *keys)
+        .orderBy(*order)
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
+    local = [
+        (
+            F.col("_rn")
+            if key is None and (fn, c) == ("count", "*")
+            else getattr(F, fn)(c).over(w)
+        ).alias(f"_l{i}")
+        for i, (fn, c) in enumerate(aggs.values())
+    ]
+    if key:
+        local.append((F.count("*").over(w) == F.col("_rn")).alias("_head"))
+    outs = []
+    for i, (out, (fn, _)) in enumerate(aggs.items()):
+        off = "NULL"
+        if offsets:
+            pairs = ", ".join(
+                f"{p}, CAST({'NULL' if v[out] is None else repr(str(v[out]))}"
+                f" AS {types[out]})"
+                for p, v in offsets.items()
+            )
+            off = f"map({pairs})[_pid]"
+            if key:
+                off = f"IF(_head, {off}, NULL)"
+        combined = _COMBINE[fn].format(here=f"_l{i}", before=off)
+        outs.append(f"CAST({combined} AS {types[out]}) AS `{out}`")
+    scanned = part.select("*", *local).selectExpr("*", *outs)
+    return (
+        scanned.drop("_pid", "_rn", "_head", *[f"_l{i}" for i in range(len(aggs))]),
+        per_key,
+    )
 
 
 def global_row_number(
     df: DataFrame, order_col, out_col: str = "rn"
 ) -> DataFrame:
-    """Scalable deterministic global 1-based rank by ``order_col``.
-
-    A bare ``row_number().over(Window.orderBy(c))`` collapses the whole
-    dataset into ONE task (Spark's WindowExec warns about exactly this) —
-    correct at test scale, fatal at 100 TB. Two-phase form:
-
-    1. range-partition + sort within partitions on ``order_col`` (a
-       parallel total order: every value in partition i ≤ partition i+1),
-       local index free from ``monotonically_increasing_id``,
-    2. add each partition's start offset, computed from the tiny
-       (#partitions rows) counts metadata and applied as a literal map.
-
-    Exact sampling boundaries of the range partitioner don't affect the
-    result — the rank depends only on the total order, which any boundary
-    placement preserves. ``order_col`` is one column name or a sequence
-    of names (a composite key, ranked lexicographically — preferred over
-    arithmetic key-packing, which silently corrupts on overflow); the
-    key must be unique for a stable rank.
+    """Deterministic global 1-based rank by ``order_col`` (one column
+    name or a sequence of names, ranked lexicographically — preferred
+    over arithmetic key-packing, which silently corrupts on overflow):
+    ``prefix_scan``'s count of the rows before, plus one. A bare
+    ``row_number().over(Window.orderBy(c))`` collapses the whole dataset
+    into ONE task; this is a narrow projection over the range-sorted
+    cut. The key must be unique for a stable rank.
     """
-    ranked = _ranked_by_mid(df, order_col)
-    offsets, _ = _partition_offsets(ranked)
-    return (
-        ranked.withColumn(
-            out_col, (F.col("_local_rn") + _offset_col(offsets)).cast("int")
-        )
-        .drop("_pid", "_local_rn")
-    )
+    ranked, _ = prefix_scan(df, order_col, {"_before": ("count", "*")})
+    return ranked.withColumn(
+        out_col, (F.col("_before") + 1).cast("int")
+    ).drop("_before")
+
+
+# ---------------------------------------------------------------------------
+# O9 — deterministic train/val split
+# ---------------------------------------------------------------------------
+
+# share of rows the split labels 'train' (split_images' 80/20)
+TRAIN_FRAC = 0.8
 
 
 def exact_rank_statistic(
@@ -337,15 +382,11 @@ def _kth_smallest_in_range(
             )
 
 
-def deterministic_split(
-    df: DataFrame,
-    order_col: str,
-    train_frac: float = 0.8,
-) -> DataFrame:
+def deterministic_split(df: DataFrame, order_col: str) -> DataFrame:
     """Reference ``split_images`` (generate_images_from_dicom.py:54-104):
-    first ``round(N*frac)`` rows in a deterministic order → 'train',
-    rest → 'val'. The reference's listing order becomes an explicit
-    ``ORDER BY order_col``; ``randomSplit`` is rejected as
+    first ``round(N * TRAIN_FRAC)`` rows in a deterministic order →
+    'train', rest → 'val'. The reference's listing order becomes an
+    explicit ``ORDER BY order_col``; ``randomSplit`` is rejected as
     nondeterministic. The reference's ``index < training_size - 1``
     (one row short, ``:78``) is a bug and is not reproduced.
 
@@ -356,34 +397,28 @@ def deterministic_split(
     shuffle-free narrow projection. No global sort, no checkpoint, no
     data movement at all: at 100 TB the labeling pass is embarrassingly
     parallel and the order-statistic costs ~3 metadata-sized
-    aggregations. Non-numeric keys fall back to the two-phase rank
-    (``_ranked_by_mid``). ``order_col`` must be unique for a stable
-    rank either way. For re-partition-stable assignment prefer
-    ``kfold_assign``, which needs no order statistic either.
+    aggregations. Non-numeric (or NULL-bearing) keys rank with
+    ``prefix_scan``'s count, whose per-partition totals also give the
+    row count. ``order_col`` must be unique for a stable rank either
+    way. For re-partition-stable assignment prefer ``kfold_assign``,
+    which needs no order statistic either.
     """
     import math
 
-    def _label(total: int) -> tuple[int, str | None]:
+    def _cutoff(total: int) -> int:
         # HALF_UP to match both Spark's and DuckDB's round() for positives
-        cutoff = int(math.floor(total * train_frac + 0.5))
-        if cutoff < 1:
-            return cutoff, "val"
-        if cutoff >= total:
-            return cutoff, "train"
-        return cutoff, None
+        return int(math.floor(total * TRAIN_FRAC + 0.5))
 
-    dtype = dict(df.dtypes).get(order_col)
-    numeric = dtype in ("tinyint", "smallint", "int", "bigint")
-    if numeric:
+    if dict(df.dtypes).get(order_col) in ("tinyint", "smallint", "int", "bigint"):
         # ONE fused job (_bucketed_stats) yields the row count — which
         # the cutoff rank depends on, so an unfused design serializes a
         # stats job before any histogram — plus the null count (NULL
         # keys cannot rank here; they belong to the sort-based path)
         # AND the first histogram round's buckets with real min/max.
         total, n_nonnull, buckets = _bucketed_stats(df, order_col)
-        cutoff, const = _label(total)
-        if const is not None:
-            return df.withColumn("split", F.lit(const))
+        cutoff = _cutoff(total)
+        if cutoff < 1 or cutoff >= total:
+            return df.withColumn("split", F.lit("val" if cutoff < 1 else "train"))
         if n_nonnull == total:
             kk, lo, hi, in_range = _select_bucket(buckets, cutoff)
             cutoff_key = _kth_smallest_in_range(
@@ -397,21 +432,11 @@ def deterministic_split(
             )
         # NULL keys present → sort-based fallback below
 
-    ranked = _ranked_by_mid(df, order_col)
-    offsets, total = _partition_offsets(ranked)
-    cutoff, const = _label(total)
-    if const is not None:
-        return df.withColumn("split", F.lit(const))
-    return (
-        ranked.withColumn(
-            "split",
-            F.when(
-                F.col("_local_rn") + _offset_col(offsets) <= cutoff,
-                "train",
-            ).otherwise("val"),
-        )
-        .drop("_pid", "_local_rn")
-    )
+    ranked, totals = prefix_scan(df, order_col, {"_before": ("count", "*")})
+    cutoff = _cutoff(totals[None]["_before"] if totals else 0)
+    return ranked.withColumn(
+        "split", F.when(F.col("_before") < cutoff, "train").otherwise("val")
+    ).drop("_before")
 
 
 # ---------------------------------------------------------------------------
@@ -629,121 +654,6 @@ def incremental_agg_merge(
     )
 
 
-def grouped_running_sum(
-    df: DataFrame,
-    key: str,
-    order_col: str,
-    value_col: str,
-    out_col: str = "cum",
-    partitions: int | None = None,
-) -> DataFrame:
-    """Per-group running sum of ``value_col`` in ``order_col`` order,
-    WITHOUT a ``Window.partitionBy(key)`` — which at scale pins each
-    group onto one task (fatal when ``key`` is low-cardinality, e.g.
-    a handful of languages over billions of documents).
-
-    Grouped two-phase form (the keyed generalization of
-    ``global_row_number``):
-
-    1. range-partition on ``(key, order_col)`` — a parallel per-group
-       total order: within a key, every value in physical partition i
-       precedes partition i+1, and one group spans MANY partitions,
-    2. local running sum per ``(key, partition)`` slice — each task
-       holds only its slice of a group, never the whole group,
-    3. per-slice subtotals form a tiny (#partitions × #keys rows)
-       metadata table; a per-key triangular join computes each slice's
-       exclusive prefix offset, broadcast back and added to the local
-       running sum.
-
-    ``order_col`` must be unique per key for a deterministic result
-    (pass a composite/tie-broken column otherwise).
-
-    The range-partitioned, ``_pid``-stamped rows are materialized ONCE
-    (eager localCheckpoint) before fan-out: the local-sums branch and
-    the subtotal/offsets branch both consume this subtree, and if each
-    execution re-ran the range exchange, its sampled boundaries — which
-    can shift when upstream shuffle read order varies — could assign
-    DIFFERENT ``_pid`` values to the two branches, silently misaligning
-    offsets. Materializing pins one layout for every consumer (same
-    pattern as the iterative localCheckpoint in connected_components);
-    the cost is one extra write of the projected columns.
-    """
-    return grouped_running_sums(
-        df, key, order_col, {out_col: value_col}, partitions=partitions
-    )
-
-
-def grouped_running_sums(
-    df: DataFrame,
-    key: str,
-    order_col: str,
-    sums: dict[str, str],
-    partitions: int | None = None,
-) -> DataFrame:
-    """Multi-column form of ``grouped_running_sum``: one range exchange
-    carries ALL the requested running sums (``sums`` maps out_col →
-    value_col). Consumers that need several aligned prefix sums over the
-    same order (e.g. the PR curve's cumulative positives AND cumulative
-    total) would otherwise pay one full range shuffle per column."""
-    n = partitions or df.sparkSession.conf.get("spark.sql.shuffle.partitions")
-    part = (
-        df.repartitionByRange(int(n), F.col(key), F.col(order_col))
-        .sortWithinPartitions(key, order_col)
-        .withColumn("_pid", F.spark_partition_id())
-        .transform(lineage_cut)
-    )
-    local_w = (
-        Window.partitionBy("_pid", key)
-        .orderBy(order_col)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    out_cols = list(sums)
-    local = part
-    for i, out_col in enumerate(out_cols):
-        local = local.withColumn(
-            f"_lc{i}", F.sum(sums[out_col]).over(local_w)
-        )
-    # slice subtotal = the slice's LAST running value (max_by order, NOT
-    # max — values may be negative): aggregating the window output keys
-    # the groupBy on the same (_pid, key) distribution the WindowExec
-    # just established, so the subtotals branch rides that exchange
-    # instead of paying its own full-data shuffle of the checkpoint
-    # (one data exchange total)
-    subtotals = local.groupBy("_pid", key).agg(
-        *[
-            F.max_by(f"_lc{i}", F.col(order_col)).alias(f"_sub{i}")
-            for i in range(len(out_cols))
-        ]
-    )
-    earlier = subtotals.select(
-        F.col("_pid").alias("_pid2"),
-        F.col(key).alias("_key2"),
-        *[F.col(f"_sub{i}").alias(f"_sub{i}b") for i in range(len(out_cols))],
-    )
-    offsets = (
-        subtotals.join(
-            earlier,
-            (F.col("_key2") == F.col(key)) & (F.col("_pid2") < F.col("_pid")),
-            "left",
-        )
-        .groupBy("_pid", key)
-        .agg(
-            *[
-                F.coalesce(F.sum(f"_sub{i}b"), F.lit(0)).alias(f"_off{i}")
-                for i in range(len(out_cols))
-            ]
-        )
-    )
-    out = local.join(F.broadcast(offsets), ["_pid", key])
-    for i, out_col in enumerate(out_cols):
-        out = out.withColumn(out_col, F.col(f"_lc{i}") + F.col(f"_off{i}"))
-    return out.drop(
-        "_pid",
-        *[f"_lc{i}" for i in range(len(out_cols))],
-        *[f"_off{i}" for i in range(len(out_cols))],
-    )
-
-
 def kfold_assign(df: DataFrame, key_col: str, k: int) -> DataFrame:
     """K-fold cross-validation fold assignment: a pure narrow
     transformation (no shuffle, no global state) that hashes the key to
@@ -922,60 +832,6 @@ def cogrouped_reconcile(old: DataFrame, new: DataFrame) -> DataFrame:
     )
 
 
-def global_running_max_desc(
-    df: DataFrame,
-    order_col: str,
-    val_col: str,
-    out_col: str,
-) -> DataFrame:
-    """Strict-predecessor running max over ``order_col`` DESCENDING,
-    two-phase (no unpartitioned WindowExec): range-partition on the
-    order, local strict-predecessor max per partition, then combine
-    with the broadcast max of all strictly-earlier partitions. The
-    first row in the global order gets NULL (it has no predecessor).
-
-    Assumes ``order_col`` values are distinct (callers aggregate to the
-    per-key grain first), so "predecessor" and "strictly greater" are
-    the same thing across partition boundaries. Eagerly materialized
-    like ``_ranked_with_partition_counts`` — the rows and the
-    per-partition maxima are two consumers of the range exchange, and
-    re-executed boundary sampling must not diverge between them.
-    """
-    n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    part = (
-        df.repartitionByRange(n, F.col(order_col).desc())
-        .sortWithinPartitions(F.col(order_col).desc())
-        .withColumn("_pid", F.spark_partition_id())
-        .transform(lineage_cut)
-    )
-    local_w = (
-        Window.partitionBy("_pid")
-        .orderBy(F.col(order_col).desc())
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    local = part.withColumn("_lmax", F.max(val_col).over(local_w))
-    # per-partition max aggregated from the WINDOW OUTPUT, not the
-    # checkpoint: groupBy(_pid) then rides the WindowExec's hash(_pid)
-    # exchange instead of shuffling the data a second time (same move
-    # as grouped_running_sum's subtotals)
-    pmax = local.groupBy("_pid").agg(F.max(val_col).alias("_pmax"))
-    earlier = pmax.select(
-        F.col("_pid").alias("_pid2"), F.col("_pmax").alias("_pmax2")
-    )
-    prefix = (
-        pmax.join(earlier, F.col("_pid2") < F.col("_pid"), "left")
-        .groupBy("_pid")
-        .agg(F.max("_pmax2").alias("_prefix"))
-    )
-    return (
-        local.join(F.broadcast(prefix), "_pid")
-        # greatest() skips NULLs: NULL only when both sides are (the
-        # global first row), exactly the strict-predecessor semantics.
-        .withColumn(out_col, F.greatest(F.col("_lmax"), F.col("_prefix")))
-        .drop("_pid", "_lmax", "_prefix")
-    )
-
-
 def pareto_frontier_2d(df: DataFrame, x: str, y: str) -> DataFrame:
     """2-D skyline: rows not STRICTLY dominated in both dimensions
     (no other row has x' > x AND y' > y). Multi-objective selection —
@@ -985,12 +841,13 @@ def pareto_frontier_2d(df: DataFrame, x: str, y: str) -> DataFrame:
     Shape: collapse to the per-x max of y (one shuffle, map-side
     combined), then a running max over x-descending tells each x the
     best y among strictly-greater x; a row survives iff its y is not
-    beaten by that. The sweep is the two-phase range-partitioned
-    running max (``global_running_max_desc``) — parallel even when
-    distinct x is data-sized, no single-partition WindowExec.
+    beaten by that. The sweep is ``prefix_scan``'s max of ``_ymax``
+    before each x in descending x (NULL for the largest x) — parallel
+    even when distinct x is data-sized, no single-partition WindowExec.
     """
     per_x = df.groupBy(x).agg(F.max(y).alias("_ymax"))
-    sweep = global_running_max_desc(per_x, x, "_ymax", "_sgm").select(x, "_sgm")
+    sweep, _ = prefix_scan(per_x, F.col(x).desc(), {"_sgm": ("max", "_ymax")})
+    sweep = sweep.select(x, "_sgm")
     return (
         df.join(sweep, x)
         .filter(F.col("_sgm").isNull() | (F.col("_sgm") <= F.col(y)))
@@ -1122,7 +979,7 @@ def exact_auc(df: DataFrame, score_col: str, label_col: str) -> DataFrame:
 
     Aggregates to distinct scores first (pos/neg counts — map-side
     combined, so the shuffle is |distinct scores|, not |rows|), then
-    takes a running negative count through ``grouped_running_sum`` —
+    takes the negative count below each score from ``prefix_scan`` —
     the scale-safe two-phase prefix sum — instead of an unpartitioned
     ``OVER (ORDER BY score)`` that would pin every distinct score on
     one task. The numerator is kept in DOUBLED units so each tie's
@@ -1137,9 +994,8 @@ def exact_auc(df: DataFrame, score_col: str, label_col: str) -> DataFrame:
         F.sum(label_col).cast("bigint").alias("pos"),
         (F.count("*") - F.sum(label_col)).cast("bigint").alias("neg"),
     )
-    c = grouped_running_sum(
-        g.withColumn("_all", F.lit(1)), "_all", score_col, "neg", "cum_neg"
-    ).withColumn("below", F.col("cum_neg") - F.col("neg"))
+    c, _ = prefix_scan(g, score_col, {"below": ("sum", "neg")})
+    c = c.fillna(0, ["below"])
     return c.agg(
         F.sum("pos").cast("bigint").alias("npos"),
         F.sum("neg").cast("bigint").alias("nneg"),
@@ -1174,25 +1030,25 @@ def exact_average_precision(
     and the oracle's flooring // agree).
 
     Scale: aggregates to distinct scores first (map-side combined;
-    shuffle = |distinct scores|), then ONE range exchange carries both
-    cumulative counts via ``grouped_running_sums`` — never an
-    unpartitioned ``OVER (ORDER BY score)``. ``score_col`` must be an
+    shuffle = |distinct scores|), then ONE ``prefix_scan`` in descending
+    score carries both cumulative counts — never an unpartitioned
+    ``OVER (ORDER BY score)``. ``score_col`` must be an
     exact integer type; ``label_col`` 0/1 int.
     """
     g = df.groupBy(score_col).agg(
         F.sum(label_col).cast("bigint").alias("pos"),
         F.count("*").cast("bigint").alias("all"),
     )
-    # descending score order = ascending negated score
-    c = grouped_running_sums(
-        g.withColumn("_g", F.lit(1)).withColumn(
-            "_ord", -F.col(score_col)
-        ),
-        "_g",
-        "_ord",
-        {"cum_pos": "pos", "cum_all": "all"},
+    c, _ = prefix_scan(
+        g,
+        F.col(score_col).desc(),
+        {"cum_pos": ("sum", "pos"), "cum_all": ("sum", "all")},
     )
-    term = F.expr("pos * ((1000000 * cum_pos) DIV cum_all)")
+    # the block's own counts: cumulative counts are inclusive of it
+    term = F.expr(
+        "pos * ((1000000 * (coalesce(cum_pos, 0) + pos)) "
+        "DIV (coalesce(cum_all, 0) + `all`))"
+    )
     return (
         c.agg(
             F.sum("pos").cast("bigint").alias("npos"),
@@ -1216,15 +1072,16 @@ def weighted_median(
     integer arithmetic (2*cumw >= totw — no float quantile ambiguity).
 
     Built for LOW-cardinality keys (brands, languages, countries):
-    collapses to (key, value) weight sums map-side, then rides the
-    grouped two-phase prefix sum — a ``partitionBy(key)`` window here
-    would drag each key's full 100 TB slice onto a single task.
+    collapses to (key, value) weight sums map-side, then rides the keyed
+    ``prefix_scan`` — a ``partitionBy(key)`` window here would drag
+    each key's full 100 TB slice onto a single task.
     Weights must be non-negative integers (cast upstream).
     """
     g = df.groupBy(key, value_col).agg(
         F.sum(weight_col).cast("bigint").alias("_w")
     )
-    c = grouped_running_sum(g, key, value_col, "_w", "_cumw")
+    c, _ = prefix_scan(g, value_col, {"_cumw": ("sum", "_w")}, key=key)
+    c = c.withColumn("_cumw", F.coalesce("_cumw", F.lit(0)) + F.col("_w"))
     t = g.groupBy(key).agg(F.sum("_w").cast("bigint").alias("_totw"))
     return (
         c.join(F.broadcast(t), key)
@@ -1263,7 +1120,7 @@ def ring_successor_join(
     bucket holds no successor falls through to the first point of the
     next non-empty bucket, which is metadata: one ``n_buckets``-row
     aggregate folded driver-side into a literal map (the same pattern
-    as the two-phase rank's offsets). Scale: one shuffle of
+    as ``prefix_scan``'s offsets). Scale: one shuffle of
     |points|+|targets| rows on the prefix; bucket count grows with the
     ring so each partition stays memory-sized; skew impossible —
     md5 prefixes are uniform by construction.
@@ -1376,8 +1233,8 @@ def exact_auc_by_group(
     model scoring 0.9 globally and 0.55 on one slice.
 
     Same rank-sum identity and integer discipline as ``exact_auc``;
-    the running negative count now keys on ``group_col``, which is
-    precisely what ``grouped_running_sum`` exists for: one group can
+    the negative count below each score now keys on ``group_col``,
+    which is what the keyed ``prefix_scan`` exists for: one group can
     span many partitions, no group ever pins a task. Groups with no
     positives or no negatives report NULL auc_ppm (undefined), with
     counts still exported.
@@ -1386,9 +1243,8 @@ def exact_auc_by_group(
         F.sum(label_col).cast("bigint").alias("pos"),
         (F.count("*") - F.sum(label_col)).cast("bigint").alias("neg"),
     )
-    c = grouped_running_sum(
-        g, group_col, score_col, "neg", "cum_neg"
-    ).withColumn("below", F.col("cum_neg") - F.col("neg"))
+    c, _ = prefix_scan(g, score_col, {"below": ("sum", "neg")}, key=group_col)
+    c = c.fillna(0, ["below"])
     return (
         c.groupBy(group_col)
         .agg(

@@ -19,8 +19,9 @@ Scale notes per operator are in each docstring; the common theme: every
 statistic reduces to counts grouped by a bounded-cardinality key
 (distinct cents values, buckets, categories, replicate ids), so each is
 one map-side-combined shuffle over the fact table plus metadata-sized
-joins. No unpartitioned windows anywhere — the one global prefix sum
-(KS) rides the two-phase ``grouped_running_sum``.
+joins. No unpartitioned windows anywhere — the prefix sums (KS,
+Wasserstein, CUSUM) ride the range-partitioned
+``relational.prefix_scan``.
 """
 
 from __future__ import annotations
@@ -28,9 +29,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..lineage import lineage_cut
-
-from .relational import grouped_running_sum
+from .relational import prefix_scan
 
 VALUE_COL = "value"
 
@@ -83,9 +82,11 @@ def ks_two_sample(
 
     Scale shape: one map-side-combined shuffle to count per distinct
     cents value (bounded by value-domain cardinality, not row count), a
-    1-row totals broadcast, then the two-phase global prefix sum
-    (``grouped_running_sum`` with a constant key — range-partitioned,
-    never a single-task window) over the |distinct values| count table.
+    1-row totals broadcast, then the unkeyed ``prefix_scan`` sum
+    (range-partitioned, never a single-task window) over the |distinct
+    values| count table. The prefix before the first value is 0, and
+    the one through the last is Σd = n_a·n_b − n_b·n_a = 0, so the
+    prefixes before each value cover every CDF gap.
     """
     v = df.filter(F.col(group_col).isin(group_a, group_b)).select(
         cents(VALUE_COL).alias("cents"),
@@ -98,19 +99,15 @@ def ks_two_sample(
     totals = counts.agg(
         F.sum("ca").alias("n_a"), F.sum("cb").alias("n_b")
     )
-    d = (
-        counts.crossJoin(F.broadcast(totals))
-        .withColumn(
-            "d", F.col("ca") * F.col("n_b") - F.col("cb") * F.col("n_a")
-        )
-        .withColumn("_g", F.lit(0))
+    d = counts.crossJoin(F.broadcast(totals)).withColumn(
+        "d", F.col("ca") * F.col("n_b") - F.col("cb") * F.col("n_a")
     )
-    cum = grouped_running_sum(d, "_g", "cents", "d", out_col="cum_d")
+    cum, _ = prefix_scan(d, "cents", {"cum_d": ("sum", "d")})
     return (
         cum.agg(
             F.any_value("n_a").alias("n_a"),
             F.any_value("n_b").alias("n_b"),
-            F.max(F.abs(F.col("cum_d"))).alias("ks_num"),
+            F.max(F.abs(F.coalesce("cum_d", F.lit(0)))).alias("ks_num"),
         )
         .select(
             "n_a",
@@ -723,13 +720,10 @@ def wasserstein_1d(
     distance to the next distinct value. Exported as the exact integer
     numerator (micro-cent quotient alongside).
 
-    The prefix sum AND the next-value lead are computed in one
-    two-phase pass (the ``grouped_running_sum`` idiom): range-partition
-    by value, one local window per partition serves both ``sum`` and
-    ``lead``, and the two cross-partition fixups — earlier-partition
-    subtotals, next-partition first value — are both |partitions|-row
-    metadata broadcasts off the SAME eagerly-pinned layout. No
-    unpartitioned window at any scale.
+    Both come from ONE ``prefix_scan`` in descending value order: the
+    sum of d over the larger values is Σd − cum_d(v) = −cum_d(v)
+    (Σd = n_a·n_b − n_b·n_a = 0), and the min of the larger values is
+    the next distinct value. No unpartitioned window at any scale.
     """
     v = df.filter(F.col(group_col).isin(group_a, group_b)).select(
         cents(VALUE_COL).alias("cents"),
@@ -745,51 +739,15 @@ def wasserstein_1d(
     d = counts.crossJoin(F.broadcast(totals)).withColumn(
         "d", F.col("ca") * F.col("n_b") - F.col("cb") * F.col("n_a")
     )
-    n = partitions or df.sparkSession.conf.get(
-        "spark.sql.shuffle.partitions"
+    above, _ = prefix_scan(
+        d,
+        F.col("cents").desc(),
+        {"_above": ("sum", "d"), "_next": ("min", "cents")},
+        partitions=partitions,
     )
-    from pyspark.sql import Window
-
-    part = (
-        d.repartitionByRange(int(n), F.col("cents"))
-        .sortWithinPartitions("cents")
-        .withColumn("_pid", F.spark_partition_id())
-        .transform(lineage_cut)
-    )
-    local_w = Window.partitionBy("_pid").orderBy("cents")
-    local = part.withColumn(
-        "_lcum",
-        F.sum("d").over(
-            local_w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        ),
-    ).withColumn("_llead", F.lead("cents").over(local_w))
-    # one metadata row per partition: its running-sum subtotal and its
-    # first value (the lead fill for the previous partition's last row)
-    pmeta = local.groupBy("_pid").agg(
-        F.max_by("_lcum", F.col("cents")).alias("_sub"),
-        F.min("cents").alias("_first"),
-    )
-    earlier = pmeta.select(
-        F.col("_pid").alias("_pid2"), F.col("_sub").alias("_sub2")
-    )
-    offsets = (
-        pmeta.join(earlier, F.col("_pid2") < F.col("_pid"), "left")
-        .groupBy("_pid", "_first")
-        .agg(F.coalesce(F.sum("_sub2"), F.lit(0)).alias("_offset"))
-    )
-    nxt = pmeta.select((F.col("_pid") - 1).alias("_pid"),
-                       F.col("_first").alias("_next_first"))
-    fixed = (
-        local.join(F.broadcast(offsets.drop("_first")), "_pid")
-        .join(F.broadcast(nxt), "_pid", "left")
-        .select(
-            "n_a",
-            "n_b",
-            (F.col("_lcum") + F.col("_offset")).alias("cum_d"),
-            (F.coalesce("_llead", "_next_first") - F.col("cents")).alias(
-                "gap"
-            ),
-        )
+    fixed = above.select(
+        (-F.col("_above")).alias("cum_d"),
+        (F.col("_next") - F.col("cents")).alias("gap"),
     )
     # the globally-last row has no successor: gap NULL, and its cum_d
     # is the total Σd = n_a·n_b − n_b·n_a = 0 anyway — excluded. The
@@ -911,7 +869,7 @@ def ks_two_sample_by_group(
     global KS can stay flat while one source's distribution walks off).
 
     Same integer machinery; the prefix sum keys on the segment, which
-    is exactly ``grouped_running_sum``'s contract — a segment spans
+    is exactly the keyed ``prefix_scan``'s contract — a segment spans
     many partitions, no segment pins a task. Totals are per-segment
     rows (metadata) joined back broadcast. Segments where either side
     is empty report NULL ks_ppm (undefined), counts intact.
@@ -931,13 +889,13 @@ def ks_two_sample_by_group(
     d = counts.join(F.broadcast(totals), "seg").withColumn(
         "d", F.col("ca") * F.col("n_b") - F.col("cb") * F.col("n_a")
     )
-    cum = grouped_running_sum(d, "seg", "cents", "d", out_col="cum_d")
+    cum, _ = prefix_scan(d, "cents", {"cum_d": ("sum", "d")}, key="seg")
     return (
         cum.groupBy("seg")
         .agg(
             F.any_value("n_a").alias("n_a"),
             F.any_value("n_b").alias("n_b"),
-            F.max(F.abs(F.col("cum_d"))).alias("ks_num"),
+            F.max(F.abs(F.coalesce("cum_d", F.lit(0)))).alias("ks_num"),
         )
         .selectExpr(
             "seg",
@@ -1071,10 +1029,9 @@ def cusum_changepoint(
     read it in value units).
 
     Scale: the series is an already-aggregated bounded table, but the
-    prefix sum still rides the two-phase ``grouped_running_sum`` (with
-    a constant key) rather than an unpartitioned window, per the
-    engine-wide contract — the same code path serves a series of any
-    length. Totals join back broadcast.
+    prefix sum still rides the unkeyed ``prefix_scan`` rather than an
+    unpartitioned window, per the engine-wide contract — the same code
+    path serves a series of any length. Totals join back broadcast.
     """
     v = series.select(
         F.lit(0).alias("_g"),
@@ -1088,7 +1045,8 @@ def cusum_changepoint(
     d = v.crossJoin(F.broadcast(totals)).withColumn(
         "_d", F.col("t_periods") * F.col("_x") - F.col("s_total")
     )
-    cum = grouped_running_sum(d, "_g", "_t", "_d", out_col="_c")
+    cum, _ = prefix_scan(d, "_t", {"_c": ("sum", "_d")})
+    cum = cum.withColumn("_c", F.coalesce("_c", F.lit(0)) + F.col("_d"))
     return cum.groupBy("_g").agg(
         F.any_value("t_periods").alias("t_periods"),
         F.any_value("s_total").alias("s_total"),

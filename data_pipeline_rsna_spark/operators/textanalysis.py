@@ -194,8 +194,8 @@ def token_budget_sample(docs: DataFrame, budget_tokens: int) -> DataFrame:
     count reaches ``budget_tokens``; the document that crosses the budget
     is kept (budget is a floor on coverage, not a cap).
 
-    The running count uses ``relational.grouped_running_sum`` — the
-    grouped two-phase prefix sum — NOT ``Window.partitionBy(lang)``,
+    The tokens taken before each document come from the keyed
+    ``relational.prefix_scan`` — NOT ``Window.partitionBy(lang)``,
     which would pin each language onto a single task: with a handful of
     languages over billions of documents that window is the textbook
     low-cardinality skew trap.
@@ -210,13 +210,11 @@ def token_budget_sample(docs: DataFrame, budget_tokens: int) -> DataFrame:
         ws_token_count(TEXT_COL).cast("bigint").alias("n_tokens"),
         pri.alias("_pri"),
     )
-    cum = rel.grouped_running_sum(
-        toks, key="lang", order_col="_pri", value_col="n_tokens",
-        out_col="cum_tokens",
+    before, _ = rel.prefix_scan(
+        toks, "_pri", {"_before": ("sum", "n_tokens")}, key="lang"
     )
-    return (
-        cum.filter(F.col("cum_tokens") - F.col("n_tokens") < budget_tokens)
-        .select("lang", ID_COL, "n_tokens", "cum_tokens")
+    return before.where(f"coalesce(_before, 0) < {budget_tokens}").selectExpr(
+        "lang", ID_COL, "n_tokens", "coalesce(_before, 0) + n_tokens AS cum_tokens"
     )
 
 

@@ -265,7 +265,7 @@ def q_labels_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_deterministic_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = tables.load(spark, sf_dir, "orders").select("o_orderkey")
-    split = rel.deterministic_split(orders, "o_orderkey", 0.8)
+    split = rel.deterministic_split(orders, "o_orderkey")
     return split.groupBy("split").agg(
         F.count("*").alias("n_rows"),
         F.min("o_orderkey").alias("min_key"),
@@ -1406,9 +1406,9 @@ def q_text_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="X4+ training-corpus quota sampling: per-language document "
     "selection in seeded-shuffle order (md5 priority) until a token "
-    "budget is covered. Runs on the grouped two-phase prefix sum "
-    "(range partition on (lang, priority) + per-slice subtotals + "
-    "broadcast offsets), never a partitionBy(lang) window — a handful "
+    "budget is covered. Runs on the keyed prefix_scan (range "
+    "partition on (lang, priority) + per-slice totals folded into "
+    "per-partition offsets), never a partitionBy(lang) window — a handful "
     "of languages over billions of docs would pin each language to one "
     "task.",
     tags=("text",),
@@ -2011,7 +2011,7 @@ def q_events_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="X5+ peak concurrent sessions per day by sweep line: +1/-1 "
     "deltas at session span boundaries, global running sum on the "
-    "grouped two-phase prefix sum (constant group spread across range "
+    "unkeyed prefix_scan (one sequence spread across range "
     "partitions — never a single-task Window.orderBy), day-max "
     "invariant to intra-instant tie order.",
     tags=("events",),
@@ -5709,8 +5709,8 @@ def q_graph_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="Model-evaluation decile lift table: rank orders by a score "
     "(total price, tie-broken by key into a UNIQUE bigint sort key), "
     "cut into 10 equal-width rank deciles, report per-decile size / "
-    "positives / positive-rate ppm. The global rank is the two-phase "
-    "range-partitioned row_number (no single-partition window, unlike "
+    "positives / positive-rate ppm. The global rank is "
+    "global_row_number's range-partitioned count (no single-partition window, unlike "
     "the oracle's count(*) OVER ()); decile boundaries are "
     "floor((rn-1)*10/N) in exact integer arithmetic on both engines.",
     tags=("relational", "ml-eval"),
@@ -6307,8 +6307,8 @@ def q_events_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="EXACT tie-aware ROC AUC via the rank-sum (Mann-Whitney) "
     "identity: aggregate to distinct scores (pos/neg counts), running "
     "negative count below each score, numerator = sum pos*(2*below + "
-    "ties) in doubled units so tie halves stay integral. The running "
-    "sum is the two-phase range-partitioned prefix sum — the oracle's "
+    "ties) in doubled units so tie halves stay integral. The count "
+    "below is the range-partitioned prefix_scan sum — the oracle's "
     "unpartitioned OVER (ORDER BY score) would pin 100 TB of distinct "
     "scores on one task. auc_ppm is pure bigint floor division.",
     tags=("relational", "ml-eval"),
@@ -6414,7 +6414,7 @@ def q_market_concentration_hhi(spark: SparkSession, sf_dir: str) -> DataFrame:
     "smallest price whose cumulative weight reaches half the total, "
     "decided in exact integer arithmetic (2*cumw >= totw). p_brand "
     "is LOW-cardinality (25), so the cumulative weight rides the "
-    "grouped two-phase prefix sum instead of a partitionBy(brand) "
+    "keyed prefix_scan sum instead of a partitionBy(brand) "
     "window that would pin each brand's 100 TB slice on one task.",
     tags=("relational", "stats"),
 )
@@ -6630,8 +6630,8 @@ def q_customer_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     "order, cumulative revenue share cut at 80%/95% — decided as "
     "20*cum <= 16|19*total in pure integer arithmetic. The descending "
     "order is encoded into one UNIQUE bigint sort key (-(rev*1e6 + "
-    "partkey%1e6)) and the cumulative sum rides the two-phase "
-    "range-partitioned prefix sum; the oracle's OVER (ORDER BY) "
+    "partkey%1e6)) and the cumulative sum rides the "
+    "range-partitioned prefix_scan; the oracle's OVER (ORDER BY) "
     "single-task scan is exactly what the engine refuses to do.",
     tags=("relational", "inventory"),
 )
@@ -6647,9 +6647,9 @@ def q_inventory_abc(spark: SparkSession, sf_dir: str) -> DataFrame:
                 + F.pmod(F.col("l_partkey"), F.lit(1_000_000))
             )
         ).alias("sk"),
-        F.lit(1).alias("_all"),
     )
-    c = rel.grouped_running_sum(keyed, "_all", "sk", "rev_cents", "cum")
+    c, _ = rel.prefix_scan(keyed, "sk", {"cum": ("sum", "rev_cents")})
+    c = c.withColumn("cum", F.coalesce("cum", F.lit(0)) + F.col("rev_cents"))
     total = per_part.agg(F.sum("rev_cents").alias("total"))
     cls = (
         F.when(20 * F.col("cum") <= 16 * F.col("total"), "A")
@@ -8771,7 +8771,7 @@ def q_multimodal_shot_boundaries(
     doc="The epoch-shuffle step of a training pipeline: a deterministic "
     "global permutation (order by md5(epoch_salt|id) — reshuffleable "
     "per epoch by changing the salt, reproducible across runs) dealt "
-    "round-robin into shards. Rides the mid-based two-phase rank: "
+    "round-robin into shards. Rides prefix_scan's mid-based count: "
     "range-partition on the hash IS the permutation, no WindowExec, no "
     "single-task sort. The order_digest hashes ids in permuted order, "
     "so the oracle checks the ORDER itself, not just membership — at "
@@ -10753,8 +10753,8 @@ def q_multimodal_image_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="X8+ exact two-sample Kolmogorov-Smirnov drift statistic "
     "(click vs purchase value distributions): per-distinct-cents count "
-    "difference cross-multiplied and prefix-summed via the two-phase "
-    "grouped_running_sum (no unpartitioned window), max |prefix| = "
+    "difference cross-multiplied and prefix-summed via the range-"
+    "partitioned prefix_scan (no unpartitioned window), max |prefix| = "
     "D*n_a*n_b exported as integer numerator + ppm quotient. The "
     "new-snapshot-vs-serving-population admission gate.",
     tags=("stats", "drift"),
@@ -11167,10 +11167,9 @@ def q_drift_chi2(spark: SparkSession, sf_dir: str) -> DataFrame:
     "click and purchase value distributions — weighs how FAR the mass "
     "moved where KS only sees the worst CDF gap. Integer numerator "
     "sum(|cum_d|*gap) over distinct values; the prefix sum and the "
-    "next-value lead come from ONE two-phase range-partitioned pass "
-    "(per-partition window + two metadata broadcasts: earlier-"
-    "partition subtotals and next-partition first values) — no "
-    "unpartitioned window at any scale.",
+    "next value come from ONE descending prefix_scan (the sum of d "
+    "over larger values is -cum_d, and their min is the next value) "
+    "— no unpartitioned window at any scale.",
     tags=("stats", "drift"),
 )
 def q_drift_wasserstein(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -11708,8 +11707,8 @@ def q_events_attribution_full_outer_streaming(
     doc="X8+ Gini coefficient of supplier revenue concentration — the "
     "companion of the HHI share metric (Gini reads inequality of the "
     "whole distribution; HHI reads top-heaviness). Exact: per-row "
-    "cents BEFORE summation (no float accumulation), ranks from the "
-    "two-phase global_row_number (never a one-task window; the rank "
+    "cents BEFORE summation (no float accumulation), ranks from "
+    "global_row_number's prefix_scan count (never a one-task window; the rank "
     "key is the unique (cents, suppkey) composite), and the "
     "(2*Sum(i*x) - (n+1)*Sum(x)) / (n*Sum(x)) identity exported as "
     "integer numerator/denominator plus a ppm floor quotient.",
@@ -12220,7 +12219,7 @@ def q_events_fingerprint_streaming(
     "grouped by the leakage-safe md5 customer fold of "
     "kfold_split_assignment — a model scoring 0.9 globally and 0.55 "
     "on one fold is a leak or a shift, and this is the query that "
-    "sees it. The keyed running count rides grouped_running_sum: one "
+    "sees it. The keyed count below each score rides prefix_scan: one "
     "fold spans many partitions, no fold pins a task.",
     tags=("relational", "ml-eval"),
 )
@@ -12862,7 +12861,7 @@ def q_sketch_hll_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="X8+ per-segment exact KS in one pass — the drift gate sliced "
     "by cohort, where drift actually starts (a global KS stays flat "
     "while one source's distribution walks off). The keyed prefix sum "
-    "is grouped_running_sum's contract: segments span partitions, no "
+    "is the keyed prefix_scan's contract: segments span partitions, no "
     "segment pins a task; per-segment totals join back broadcast; "
     "one-sided segments report NULL ks_ppm with counts intact.",
     tags=("stats", "drift"),
@@ -13009,7 +13008,7 @@ def q_privacy_l_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     "mean peaks (earliest on ties) plus the peak height — the "
     "single-shift estimate a volume monitor alarms on. All-integer "
     "(deviations scaled by T, no mean division); the prefix sum rides "
-    "the two-phase grouped_running_sum, never an unpartitioned "
+    "the range-partitioned prefix_scan, never an unpartitioned "
     "window.",
     tags=("stats", "events", "drift"),
 )
@@ -14526,7 +14525,7 @@ def q_incremental_join_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     "positive's rank, tied blocks scored at block-end precision. "
     "Distinct-score aggregation (map-side combined), then ONE range "
     "exchange carries BOTH cumulative counts "
-    "(relational.grouped_running_sums) — the oracle's unpartitioned "
+    "(relational.prefix_scan) — the oracle's unpartitioned "
     "OVER (ORDER BY score DESC) would pin 100 TB of distinct scores "
     "on one task. All-bigint floor arithmetic (every term "
     "non-negative, so DIV == //).",
@@ -14913,9 +14912,9 @@ def q_experiment_did(spark: SparkSession, sf_dir: str) -> DataFrame:
     "per-device upload order (day, user, ts) and report, per event-time "
     "hour, the rows that arrived behind the high-watermark and the rows "
     "a withWatermark('10 minutes') stream would have dropped (watermark "
-    "past their window close at arrival). The global running max rides "
-    "the two-phase range-partition prefix pattern - local running max "
-    "per slice, slice maxima as a metadata-row broadcast - never a "
+    "past their window close at arrival). The global running max is "
+    "prefix_scan's max over earlier arrivals - local max per slice, "
+    "earlier slices folded into a literal offset - never a "
     "single-task global window. How you SIZE a production watermark "
     "from history instead of guessing.",
     tags=("events", "streaming", "scale"),

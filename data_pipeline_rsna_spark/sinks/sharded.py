@@ -4,8 +4,8 @@ The reference writes records round-robin across N open writers
 (``images_to_tfrecord.py:228-231,252``: shard = idx % num_shards, 256
 train / 32 val). In Spark the same outcome is a repartition + per-
 partition file write. ``roundrobin_shards`` keeps the faithful
-semantics — a global row index modulo N, ranked by the parallel
-two-phase ``global_row_number``. The TFRecord sink
+semantics — a global row index modulo N, ranked by
+``global_row_number`` (a ``prefix_scan`` count). The TFRecord sink
 (``tfrecord.write_tfrecord_shards``) is the file-writing half.
 """
 
@@ -19,8 +19,8 @@ from ..operators.relational import global_row_number
 
 def roundrobin_shards(df: DataFrame, order_col: str, num_shards: int) -> DataFrame:
     """Faithful O33: shard = (rank in global order) % num_shards.
-    Rank comes from the parallel two-phase ``global_row_number`` — no
-    single-partition WindowExec."""
+    Rank comes from ``global_row_number`` — the range-partitioned
+    ``prefix_scan`` count, no single-partition WindowExec."""
     ranked = global_row_number(df, order_col, "_rn")
     return ranked.withColumn(
         "shard", F.pmod(F.col("_rn") - 1, F.lit(num_shards)).cast("int")

@@ -7,6 +7,7 @@ decide whether a query survives a 100× scale-up.
 from __future__ import annotations
 
 import contextlib
+import re
 from pyspark.sql import functions as F
 
 from data_pipeline_rsna_spark import tables
@@ -180,6 +181,40 @@ def test_deterministic_split_plan_no_window_no_joins(spark, sf_dir):
     assert rep.n_broadcast_hash_joins == 0, rep.text
     assert rep.n_sort_merge_joins == 0, rep.text
     assert rep.n_shuffle_exchanges <= 1, rep.text
+
+
+def test_prefix_scan_plan_one_range_exchange(spark, monkeypatch):
+    """prefix_scan shuffles the data once, by range, before its cut; the
+    offsets are a literal, so no plan joins them back. An unkeyed count
+    is a narrow projection of the cut — no Window, no exchange."""
+    from data_pipeline_rsna_spark.operators import relational as rel
+
+    cut_plans = []
+    real_cut = rel.lineage_cut
+
+    def recording_cut(df):
+        cut_plans.append(audit.plan_report(df))
+        return real_cut(df)
+
+    monkeypatch.setattr(rel, "lineage_cut", recording_cut)
+    df = spark.range(40).selectExpr(
+        "CAST(id % 3 AS STRING) AS k", "id AS o", "id - 20 AS v"
+    )
+    for key, aggs in (
+        (None, {"c": ("count", "*")}),
+        ("k", {"s": ("sum", "v"), "m": ("max", "v")}),
+    ):
+        out, _ = rel.prefix_scan(df, "o", aggs, key=key, partitions=4)
+        pre = cut_plans.pop()
+        assert pre.n_exchanges == 1, pre.text
+        assert len(re.findall(r"rangepartitioning\(", pre.text)) == 1, pre.text
+        rep = audit.plan_report(out)
+        assert "rangepartitioning" not in rep.text, rep.text
+        assert "NestedLoopJoin" not in rep.text, rep.text
+        assert rep.n_broadcast_hash_joins == rep.n_sort_merge_joins == 0
+        if key is None:
+            assert "Window" not in rep.text, rep.text
+            assert rep.n_exchanges == 0, rep.text
 
 
 @contextlib.contextmanager
@@ -462,19 +497,12 @@ def test_nested_struct_schema_pruning(spark, tmp_path):
 # ---------------------------------------------------------------------------
 
 # Non-equi joins whose nested-loop side is bounded BY CONSTRUCTION —
-# by a session constant (the per-partition offsets tables of the
-# two-phase range-partition prefix pattern: ≤ shuffle partitions rows),
-# a calendar/config grain (daily band joins, histogram buckets), or an
+# by a calendar/config grain (daily band joins, histogram buckets), or an
 # enumerated vocabulary (priority strings, language set) — bounds that
 # Catalyst's static maxRows cannot see through an Aggregate. Each entry
 # names its bound; the test asserts the entry is still NEEDED (the
 # query really has such a join), so removed patterns clean this list.
 BOUNDED_NONEQUI_OK = {
-    # _pid2 < _pid prefix joins: both sides are per-range-partition
-    # aggregates, ≤ spark.sql.shuffle.partitions rows each
-    "drift_wasserstein_1d": "per-partition offsets (two-phase prefix)",
-    "events_late_arrival_audit": "per-partition offsets (two-phase prefix)",
-    "pareto_frontier_suppliers": "per-partition offsets (two-phase prefix)",
     # band joins over a DAILY-grain aggregate: side size ≤ days in the
     # retention window (calendar-bounded, not data-volume-bounded)
     "events_acf_lags": "daily-grain band join, width max_lag=7",

@@ -21,6 +21,89 @@ def test_deterministic_split_golden(spark):
     assert got == {"train": 8, "val": 2}
 
 
+def test_deterministic_split_string_key_golden(spark):
+    """String keys take the sort path (prefix_scan's count): the
+    round(N * 0.8) smallest ids are train, over 3 range partitions."""
+    saved = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "3")
+    try:
+        def split(ids):
+            df = spark.createDataFrame([(i,) for i in ids], "pid string")
+            return {
+                r.pid: r.split
+                for r in rel.deterministic_split(df, "pid").collect()
+            }
+
+        ids = [f"p{i:02d}" for i in (7, 2, 9, 0, 5, 1, 8, 3, 6, 4)]
+        got = split(ids)
+        assert got == {
+            i: "train" if i < "p08" else "val" for i in ids
+        }, got
+        assert split(["solo"]) == {"solo": "train"}
+        assert split(["c", "a", "b"]) == {
+            "a": "train", "b": "train", "c": "val"
+        }
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", saved)
+
+
+@pytest.mark.parametrize("partitions", [1, 3, 16, 64])
+def test_prefix_scan_matches_window(spark, partitions):
+    """Every aggregate of prefix_scan equals a plain Window over the
+    frame (unboundedPreceding, -1): unkeyed and keyed by a string (NULL
+    keys included), ascending, descending and two-column orders, with
+    negative and NULL values. 64 partitions over 48 rows leaves some
+    partitions empty."""
+    import random
+
+    from pyspark.sql import Window
+
+    rng = random.Random(partitions)
+    rows = [
+        (
+            rng.choice(["a", "b", "c", None]),
+            i,
+            i % 5,
+            rng.choice([None, rng.randint(-50, 50), rng.randint(-50, 50)]),
+        )
+        for i in rng.sample(range(48), 48)
+    ]
+    df = spark.createDataFrame(rows, "k string, o long, o1 long, v long")
+    aggs = {
+        "c": ("count", "*"),
+        "s": ("sum", "v"),
+        "hi": ("max", "v"),
+        "lo": ("min", "v"),
+    }
+    orders = (["o"], [F.col("o").desc()], ["o1", F.col("o").desc()])
+    for key in (None, "k"):
+        for order in orders:
+            got, totals = rel.prefix_scan(
+                df, order, aggs, key=key, partitions=partitions
+            )
+            w = (
+                Window.partitionBy(*([key] if key else []))
+                .orderBy(*order)
+                .rowsBetween(Window.unboundedPreceding, -1)
+            )
+            want = df.select(
+                "o", *[getattr(F, fn)(c).over(w).alias(out)
+                       for out, (fn, c) in aggs.items()]
+            )
+            cols = ["o", *aggs]
+            assert sorted(map(tuple, got.select(cols).collect())) == sorted(
+                map(tuple, want.collect())
+            ), (key, order)
+            whole = df.groupBy(*([key] if key else [])).agg(
+                *[getattr(F, fn)(c).alias(out)
+                  for out, (fn, c) in aggs.items()]
+            )
+            assert totals == {
+                (r[key] if key else None): {out: r[out] for out in aggs}
+                for r in whole.collect()
+            }, (key, order)
+
+
 def test_dispatch_on_suffix(spark):
     df = spark.createDataFrame(
         [("a-shift-0-1",), ("b-scale-3-4",), ("c-x-1-9",)], "id string"
@@ -125,9 +208,10 @@ def test_stratified_sample_deterministic_and_proportional(spark, sf_dir):
 
 
 def test_grouped_running_sum_matches_window(spark):
-    """The grouped two-phase prefix sum must equal the naive
-    Window.partitionBy(key) cumulative sum — on a frame spread across
-    many more range partitions than keys, so slices really split."""
+    """The keyed prefix_scan sum, plus the row's own value, must equal
+    the naive Window.partitionBy(key) cumulative sum — on a frame spread
+    across many more range partitions than keys, so slices really
+    split."""
     import random
 
     from pyspark.sql import Window
@@ -138,10 +222,13 @@ def test_grouped_running_sum_matches_window(spark):
     rng = random.Random(7)
     rows = [(f"k{i % 3}", i, rng.randint(1, 100)) for i in range(500)]
     df = spark.createDataFrame(rows, "key string, ord long, v long")
+    before, _ = rel.prefix_scan(
+        df, "ord", {"cum": ("sum", "v")}, key="key", partitions=16
+    )
     got = {
         (r.key, r.ord): r.cum
-        for r in rel.grouped_running_sum(
-            df, "key", "ord", "v", partitions=16
+        for r in before.withColumn(
+            "cum", F.coalesce("cum", F.lit(0)) + F.col("v")
         ).collect()
     }
     w = (
@@ -513,9 +600,10 @@ def test_blocked_levenshtein_join_blocks_and_matches(spark):
 
 
 def test_grouped_running_sums_multi_col_matches_two_windows(spark):
-    """The multi-column prefix sum must equal two independent naive
-    window sums — with negative values so the max_by subtotal logic is
-    exercised, and more partitions than keys so slices split."""
+    """Two prefix_scan sums in one scan, plus the row's own values,
+    must equal two independent naive window sums — with negative values
+    (a partition's total is not its largest running value), and more
+    partitions than keys so slices split."""
     import random
 
     from pyspark.sql import Window
@@ -529,10 +617,15 @@ def test_grouped_running_sums_multi_col_matches_two_windows(spark):
         for i in range(400)
     ]
     df = spark.createDataFrame(rows, "key string, ord long, a long, b long")
+    before, _ = rel.prefix_scan(
+        df, "ord", {"ca": ("sum", "a"), "cb": ("sum", "b")}, key="key",
+        partitions=16,
+    )
     got = {
         (r.key, r.ord): (r.ca, r.cb)
-        for r in rel.grouped_running_sums(
-            df, "key", "ord", {"ca": "a", "cb": "b"}, partitions=16
+        for r in before.selectExpr(
+            "key", "ord",
+            "coalesce(ca, 0) + a AS ca", "coalesce(cb, 0) + b AS cb",
         ).collect()
     }
     w = (

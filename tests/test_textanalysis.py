@@ -88,6 +88,27 @@ def test_sequence_packing_bin_contract(spark):
         assert bins == list(range(len(bins)))
 
 
+def test_token_budget_sample_keeps_null_language(spark):
+    """Documents with a NULL language form one quota group, as in
+    Window.partitionBy: none is dropped, and each group's last running
+    count is its token total."""
+    docs = spark.createDataFrame(
+        [(1, "a", "x y"), (2, "a", "x y z"), (3, None, "x"),
+         (4, None, "x y z w")],
+        "doc_id long, lang string, text string",
+    )
+    rows = tx.token_budget_sample(docs, budget_tokens=100).collect()
+    assert sorted(r.doc_id for r in rows) == [1, 2, 3, 4]
+    last = {}
+    for r in rows:
+        last[r.lang] = max(last.get(r.lang, 0), r.cum_tokens)
+    assert last == {"a": 5, None: 5}
+    # a budget of 1 keeps each group's first document only
+    first = tx.token_budget_sample(docs, budget_tokens=1).collect()
+    assert sorted(r.lang or "" for r in first) == ["", "a"]
+    assert all(r.cum_tokens == r.n_tokens for r in first)
+
+
 def test_benchmark_contamination_flags_planted_leak(spark):
     bench = spark.createDataFrame(
         [(1, "alpha beta gamma delta epsilon zeta eta theta iota kappa")],

@@ -35,8 +35,8 @@ def main() -> None:
         "parquet scan carries pushed filters. Executing queries (streaming",
         "replays, sink writers) are marked `executes` — their behavior is",
         "covered by tests, not static plans. Counts are STATIC plan-node",
-        "counts: branches that re-derive a shared subtree (e.g. the",
-        "two-phase rank's counts/offsets/cutoff) each count their own",
+        "counts: branches that re-derive a shared subtree (e.g. a",
+        "totals aggregate joined back to the rows it sums) each count their own",
         "exchange here; at runtime Spark reuses the map output of",
         "identical shuffles (the repeated stages show as skipped), so",
         "executed shuffle WORK is lower than these static counts.",
