@@ -1082,9 +1082,12 @@ def weighted_median(
     )
     c, _ = prefix_scan(g, value_col, {"_cumw": ("sum", "_w")}, key=key)
     c = c.withColumn("_cumw", F.coalesce("_cumw", F.lit(0)) + F.col("_w"))
-    t = g.groupBy(key).agg(F.sum("_w").cast("bigint").alias("_totw"))
+    t = g.groupBy(F.col(key).alias("_k")).agg(
+        F.sum("_w").cast("bigint").alias("_totw")
+    )
     return (
-        c.join(F.broadcast(t), key)
+        # NULL-safe, so the NULL key keeps its median as in GROUP BY
+        c.join(F.broadcast(t), F.col(key).eqNullSafe(F.col("_k")))
         .groupBy(key)
         .agg(
             F.min(

@@ -883,11 +883,15 @@ def ks_two_sample_by_group(
     counts = v.groupBy("seg", "cents").agg(
         F.sum("_a").alias("ca"), F.sum("_b").alias("cb")
     )
-    totals = counts.groupBy("seg").agg(
+    totals = counts.groupBy(F.col("seg").alias("_seg")).agg(
         F.sum("ca").alias("n_a"), F.sum("cb").alias("n_b")
     )
-    d = counts.join(F.broadcast(totals), "seg").withColumn(
-        "d", F.col("ca") * F.col("n_b") - F.col("cb") * F.col("n_a")
+    # NULL-safe, so the NULL segment is reported like any other
+    d = counts.join(
+        F.broadcast(totals), F.col("seg").eqNullSafe(F.col("_seg"))
+    ).select(
+        "seg", "cents", "n_a", "n_b",
+        (F.col("ca") * F.col("n_b") - F.col("cb") * F.col("n_a")).alias("d"),
     )
     cum, _ = prefix_scan(d, "cents", {"cum_d": ("sum", "d")}, key="seg")
     return (

@@ -1,14 +1,18 @@
-"""End-to-end RSNA pipeline: the reference's two drivers as ONE lazy job.
+"""End-to-end RSNA pipeline: the reference's two drivers as one DAG,
+cut once before one sink action.
 
 Reference EP1 (``generate_images_from_dicom.py:255-581``) and EP2
 (``images_to_tfrecord.py:214-261``) run as separate processes with a
-JSON-file handoff and 7 full input rescans. Here the whole thing is one
-DataFrame DAG: labels ingest → deterministic split → 7-stage
-augmentation fan-out → validity filter → coordinate normalization →
-nested record assembly → sharded TFRecord sink. The JSON handoff
-disappears (it existed only because the scripts were separate
-processes; ``sinks/json_sink.py`` still writes the annotation files for
-byte-shape compatibility when asked).
+JSON-file handoff and 7 full input rescans, and EP2 runs its writer
+twice, once per split (images_to_tfrecord.py:274-285). Here the whole
+thing is one DataFrame DAG: labels ingest → deterministic split →
+7-stage augmentation fan-out → validity filter → coordinate
+normalization → nested record assembly, materialized by one lineage
+cut (which also yields the skipped-box count), then one sharded
+TFRecord sink action that writes both splits and returns their record
+counts. The JSON handoff disappears (it existed only because the
+scripts were separate processes; ``sinks/json_sink.py`` still writes
+the annotation files for byte-shape compatibility when asked).
 
 Pixels: when a binary image corpus rides along, ``multimodal`` kernels
 apply the same augmentation ops per synthetic id; this driver function
@@ -22,8 +26,8 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
+from .lineage import lineage_cut
 from .operators import augmentation as aug
 from .operators import labels as labels_ops
 from .operators import relational as rel
@@ -111,31 +115,12 @@ def run_rsna_pipeline(
         "array_repeat(1, size(_boxes)) AS `image/object/class/label`",
     )
 
-    # Materialize the assembled records ONCE: counts and both shard
-    # writes fan out from the cache instead of re-running the
-    # ingest->split->augment->assembly DAG per consumer. At cluster
-    # scale the same staging is a write to a parquet scratch table;
-    # MEMORY_AND_DISK spills rather than recomputing when records
-    # outgrow executor memory.
-    records = records.persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        counts = {
-            r["split"]: r["count"]
-            for r in records.groupBy("split").count().collect()
-        }
-        n_train = int(counts.get("train", 0))
-        n_val = int(counts.get("val", 0))
-        skipped = int(obs.get["skipped"] or 0)
-        tfr.write_tfrecord_shards(
-            records.where("split = 'train'").drop("split"),
-            f"{out_dir}/train",
-            train_shards,
-        )
-        tfr.write_tfrecord_shards(
-            records.where("split = 'val'").drop("split"),
-            f"{out_dir}/val",
-            val_shards,
-        )
-    finally:
-        records.unpersist()
-    return PipelineResult(n_train, n_val, skipped, out_dir)
+    # Cut the assembled records once, which runs the skip observation;
+    # then one sink action encodes, shuffles and writes both splits.
+    records = lineage_cut(records)
+    skipped = int(obs.get["skipped"] or 0)
+    counts = tfr.write_tfrecord_shards(
+        records, out_dir, {"train": train_shards, "val": val_shards},
+        by="split",
+    )
+    return PipelineResult(counts["train"], counts["val"], skipped, out_dir)

@@ -14,11 +14,13 @@ broadcast threshold) is cluster-size independent.
 Python workers fork from ``worker_daemon`` instead of ``pyspark.daemon``.
 Stock workers re-read every zip archive on ``sys.path`` (``pyspark.zip``
 among them) at the start of each task; the package daemon skips an
-archive that has not changed. Executors must therefore be able to import
-this package, as its Python UDFs already require. The package's parent
-directory is appended to the workers' ``PYTHONPATH``, which covers
-local mode and any executor that shares the driver's file system; on
-other clusters ship the package (``--py-files`` or an install).
+archive that has not changed, and pre-imports ``pyarrow`` so the Arrow
+UDF workers share it instead of each importing its own. Executors must
+therefore be able to import this package, as its Python UDFs already
+require. The package's parent directory is appended to the workers'
+``PYTHONPATH``, which covers local mode and any executor that shares
+the driver's file system; on other clusters ship the package
+(``--py-files`` or an install).
 """
 
 from __future__ import annotations

@@ -6,7 +6,10 @@ train / 32 val). In Spark the same outcome is a repartition + per-
 partition file write. ``roundrobin_shards`` keeps the faithful
 semantics — a global row index modulo N, ranked by
 ``global_row_number`` (a ``prefix_scan`` count). The TFRecord sink
-(``tfrecord.write_tfrecord_shards``) is the file-writing half.
+(``tfrecord.write_tfrecord_shards``) is the file-writing half: it hashes
+each record to a shard instead, and with ``by`` writes several groups
+(the reference's train and val splits) in one shuffle and one writer
+action, the groups' shards laid end to end over the writer partitions.
 """
 
 from __future__ import annotations

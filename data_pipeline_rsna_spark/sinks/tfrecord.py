@@ -522,15 +522,23 @@ def _frame_examples(chunk: list[bytes]):
         )
 
 
-def write_tfrecord_shards(df, out_dir: str, num_shards: int) -> int:
+def write_tfrecord_shards(df, out_dir: str, num_shards, by: str | None = None):
     """O33: write every row of ``df`` as one tf.train.Example, into one
-    ``-%05d-of-%05d.tfrecord`` file per shard (the reference's shard
-    filename pattern, images_to_tfrecord.py:229). Returns the number of
-    records written, summed from the writer tasks' counts, so callers
-    need no second counting job.
+    ``data-%05d-of-%05d.tfrecord`` file per shard (the reference's shard
+    filename pattern, images_to_tfrecord.py:229).
 
-    Every column is one feature: the column name is the feature key and
-    the column's Spark type fixes the list kind, as in the
+    With ``by=None``, ``num_shards`` is an int, the files go straight
+    into ``out_dir`` and the call returns the number of records written.
+    With ``by`` a column name, ``num_shards`` maps each value of that
+    column to its shard count (``{"train": 256, "val": 32}``), a row's
+    file goes to ``out_dir/<value>/`` and the call returns
+    ``{value: records written}``; the ``by`` column is not written. A
+    NULL or unmapped ``by`` value fails the write. Every group gets all
+    its shard files, empty ones included, and the counts are summed from
+    the writer tasks' own counts, so callers need no counting job.
+
+    Every other column is one feature: the column name is the feature
+    key and the column's Spark type fixes the list kind, as in the
     spark-tensorflow-connector:
 
     ===========================================  ==========
@@ -549,11 +557,13 @@ def write_tfrecord_shards(df, out_dir: str, num_shards: int) -> int:
     job runs (cast such a column to choose its kind). A NULL cell or
     array element fails the write with an error naming its column.
 
-    Both JVM↔Python crossings are Arrow (``mapInArrow``): encode
-    receives columnar batches at the INPUT's parallelism, the framed
-    byte blobs shuffle as binary rows into ``num_shards`` writer tasks,
-    and each writer appends its blobs to its shard file. Encoding at
-    input parallelism (not inside the writers) keeps the CPU-heavy step
+    One action writes every group. Both JVM↔Python crossings are Arrow
+    (``mapInArrow``): encode receives columnar batches at the INPUT's
+    parallelism, the framed byte blobs shuffle once as binary rows into
+    the groups' shards laid end to end (the int form is the one-group
+    case), and each writer task maps its partition id to its group and
+    shard and appends its blobs to that file. Encoding at input
+    parallelism (not inside the writers) keeps the CPU-heavy step
     decoupled from the file-count contract; the proto encode itself is
     per-record python, while the CRCs run through the lockstep numpy
     kernel over ~8k-record chunks."""
@@ -564,6 +574,8 @@ def write_tfrecord_shards(df, out_dir: str, num_shards: int) -> int:
 
     spec = []  # (column, kind, is_array), in column order
     for field in df.schema.fields:
+        if field.name == by:
+            continue
         t = field.dataType
         is_array = isinstance(t, ArrayType)
         kind = _SPARK_KINDS.get(
@@ -575,24 +587,42 @@ def write_tfrecord_shards(df, out_dir: str, num_shards: int) -> int:
                 "which maps to no tf.train.Feature kind"
             )
         spec.append((field.name, kind, is_array))
-    os.makedirs(out_dir, exist_ok=True)
+    # (value, directory, first writer partition, shard count) per group;
+    # the groups' shards lie end to end over the writer partitions
+    groups = []
+    n_writers = 0
+    for value, n in (num_shards.items() if by else [(None, num_shards)]):
+        if n < 1:
+            raise ValueError(f"group {value!r} needs at least one shard")
+        path = os.path.join(out_dir, str(value)) if by else out_dir
+        os.makedirs(path, exist_ok=True)
+        groups.append((value, path, n_writers, n))
+        n_writers += n
+    placement = {value: (first, n) for value, _, first, n in groups}
+
+    def group_of(pid):
+        return next(g for g in groups if g[2] <= pid < g[2] + g[3])
 
     def _encode_batches(batches):
         import pyarrow as pa
 
-        def framed(chunk):
+        def framed(chunk, placed):
+            first, n = zip(*placed)
             return pa.record_batch(
-                [pa.array(list(_frame_examples(chunk)), type=pa.binary())],
-                names=["blob"],
+                [pa.array(list(_frame_examples(chunk)), type=pa.binary()),
+                 pa.array(first, pa.int32()), pa.array(n, pa.int32())],
+                names=["blob", "first", "n"],
             )
 
         # accumulate encoded payloads across (possibly small) incoming
         # Arrow batches so the CRC kernel always sees full chunks
         chunk: list[bytes] = []
+        placed: list[tuple[int, int]] = []
         chunk_bytes = 0
         for batch in batches:
             columns = []
-            for (name, kind, is_array), col in zip(spec, batch.columns):
+            for name, kind, is_array in spec:
+                col = batch.column(name)
                 if col.null_count or (is_array and col.flatten().null_count):
                     raise ValueError(
                         f"column {name!r} holds a NULL, which a "
@@ -603,28 +633,39 @@ def write_tfrecord_shards(df, out_dir: str, num_shards: int) -> int:
                         pa.list_(pa.binary()) if is_array else pa.binary()
                     )
                 columns.append(col.to_pylist())
-            for values in zip(*columns):
+            keys = (batch.column(by).to_pylist() if by
+                    else [None] * batch.num_rows)
+            for key, values in zip(keys, zip(*columns)):
+                if (by and key is None) or key not in placement:
+                    raise ValueError(
+                        f"column {by!r} holds {key!r}, which num_shards "
+                        "gives no shard count"
+                    )
+                placed.append(placement[key])
                 chunk.append(encode_example({
                     name: (kind, v if is_array else [v])
                     for (name, kind, is_array), v in zip(spec, values)
                 }))
                 chunk_bytes += len(chunk[-1])
                 if len(chunk) >= 8192 or chunk_bytes >= (16 << 20):
-                    yield framed(chunk)
-                    chunk, chunk_bytes = [], 0
+                    yield framed(chunk, placed)
+                    chunk, placed, chunk_bytes = [], [], 0
         if chunk:
-            yield framed(chunk)
+            yield framed(chunk, placed)
 
-    # shuffle the framed blobs into exactly num_shards writer
-    # partitions, HASH-partitioned on the blob bytes: content-keyed,
-    # so retried/speculated tasks reproduce the same record→shard
-    # assignment (guide §2.5 — no rand()-derived keys), and unlike a
-    # DataFrame round-robin repartition it pays no
+    # shuffle the framed blobs into the groups' shards laid end to end,
+    # a blob's shard within its group HASH-partitioned on its bytes
+    # (the same pmod(murmur3) a repartition(n, xxhash64(blob)) computes):
+    # content-keyed, so retried/speculated tasks reproduce the same
+    # record→shard assignment (guide §2.5 — no rand()-derived keys), and
+    # unlike a DataFrame round-robin repartition it pays no
     # sortBeforeRepartition local sort of the blobs. Distinct records
     # hash ~uniformly, so shards balance for real data (a degenerate
     # all-identical-records input would co-locate; acceptable).
-    framed = df.mapInArrow(_encode_batches, "blob binary").repartition(
-        num_shards, F.xxhash64("blob")
+    framed = df.mapInArrow(
+        _encode_batches, "blob binary, first int, n int"
+    ).repartitionById(
+        n_writers, F.expr("first + pmod(hash(xxhash64(blob)), n)")
     )
 
     def _write_batches(batches):
@@ -632,27 +673,35 @@ def write_tfrecord_shards(df, out_dir: str, num_shards: int) -> int:
         from pyspark import TaskContext
 
         pid = TaskContext.get().partitionId()
+        _, path, first, n = group_of(pid)
         fname = os.path.join(
-            out_dir, f"data-{pid:05d}-of-{num_shards:05d}.tfrecord"
+            path, f"data-{pid - first:05d}-of-{n:05d}.tfrecord"
         )
-        n = 0
+        written = 0
         # the file is created even for an EMPTY partition — an empty
         # shard is a valid TFRecord file and the -of-%05d contract
-        # promises num_shards files
+        # promises every group all its shard files
         with atomic_write(fname) as f:
             for batch in batches:
                 for blob in batch.column(0):
                     f.write(blob.as_py())
-                n += batch.num_rows
-        yield pa.record_batch([pa.array([n], type=pa.int64())],
-                              names=["n_written"])
-
-    written = framed.mapInArrow(_write_batches, "n_written long").collect()
-    # the explicit repartition count is what keeps AQE from coalescing
-    # the writer exchange, and the -of-%05d names depend on it
-    if len(written) != num_shards:
-        raise RuntimeError(
-            f"{len(written)} TFRecord writer tasks ran, expected "
-            f"{num_shards}: {out_dir}"
+                written += batch.num_rows
+        yield pa.record_batch(
+            [pa.array([pid], pa.int32()), pa.array([written], pa.int64())],
+            names=["pid", "n_written"],
         )
-    return sum(r.n_written for r in written)
+
+    written = framed.mapInArrow(
+        _write_batches, "pid int, n_written long"
+    ).collect()
+    # the explicit partition count is what keeps AQE from coalescing
+    # the writer exchange, and the -of-%05d names depend on it
+    if sorted(r.pid for r in written) != list(range(n_writers)):
+        raise RuntimeError(
+            f"{len(written)} TFRecord writer tasks reported, expected one "
+            f"from each of {n_writers} partitions: {out_dir}"
+        )
+    counts = {value: 0 for value, _, _, _ in groups}
+    for r in written:
+        counts[group_of(r.pid)[0]] += r.n_written
+    return counts if by else counts[None]

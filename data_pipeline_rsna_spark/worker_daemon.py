@@ -13,8 +13,15 @@ since that importer's last re-read. An archive added or rewritten while
 the worker lives (``addPyFile``) is therefore still re-read, and what a
 worker can import does not change.
 
-Importing this module patches nothing; the patch is installed only when
-it runs as the daemon.
+The daemon also imports ``pyarrow`` before it forks. Every Arrow UDF
+worker (``mapInArrow``, ``mapInPandas``, pandas UDFs) imports it, and a
+worker forked with it loaded shares the daemon's copy instead of
+loading its own. Pickled-row workers need only numpy, which
+``pyspark.daemon`` already loads; pandas is left to the workers that
+use it.
+
+Importing this module patches and pre-imports nothing; both happen
+only when it runs as the daemon.
 """
 
 from __future__ import annotations
@@ -49,6 +56,7 @@ if __name__ == "__main__":
 
     zipimport.zipimporter.invalidate_caches = invalidate_if_changed
 
+    import pyarrow  # noqa: F401  (shared by the forked Arrow workers)
     from pyspark import daemon
 
     # stamp the importers pyspark's import just made, so the workers

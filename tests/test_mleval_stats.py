@@ -76,6 +76,17 @@ def test_weighted_median_per_key_independent(spark):
     assert got == {"a": 1, "b": 100}
 
 
+def test_weighted_median_keeps_null_key(spark):
+    # the NULL key is one group, as in GROUP BY: a 1 and 2 (w 1 each),
+    # NULL 5 (w 1) and 6 (w 3) -> NULL: total 4, cum at 5 is 1, at 6 is 4
+    df = _wm(spark, [("a", 1, 1), ("a", 2, 1), (None, 5, 1), (None, 6, 3)])
+    got = {
+        r["k"]: (r["wmedian"], r["total_weight"])
+        for r in rel.weighted_median(df, "k", "v", "w").collect()
+    }
+    assert got == {"a": (1, 2), None: (6, 4)}
+
+
 def test_linear_trend_known_slope(spark):
     # v = 7*t exactly -> slope_num/slope_den == 7
     from data_pipeline_rsna_spark import queries  # noqa: F401  (registry)

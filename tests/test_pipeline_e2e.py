@@ -14,10 +14,9 @@ from data_pipeline_rsna_spark.sinks import tfrecord as tfr
 import pytest
 
 
-@pytest.mark.slow
-def test_pipeline_end_to_end(spark, tmp_path):
+def _labels(spark):
+    """4 positive patients with 2 boxes each, 6 negatives."""
     rows = []
-    # 4 positive patients with 2 boxes each, 6 negatives
     for p in range(4):
         rows += [
             (f"pos{p}", "100.0", "100.0", "50.0", "60.0", "1"),
@@ -25,10 +24,36 @@ def test_pipeline_end_to_end(spark, tmp_path):
         ]
     for n in range(6):
         rows.append((f"neg{n}", "", "", "", "", "0"))
-    raw = spark.createDataFrame(
+    return spark.createDataFrame(
         rows, "patientId string, x string, y string, width string, "
         "height string, Target string"
     )
+
+
+def test_pipeline_job_count(spark, tmp_path):
+    """The pipeline's Spark jobs, counted under one job group: the split,
+    one lineage cut of the records and one sink action that writes both
+    splits."""
+    sc = spark.sparkContext
+    group = "rsna-pipeline-jobs"
+    sc.setJobGroup(group, "run_rsna_pipeline job count")
+    try:
+        res = run_rsna_pipeline(
+            spark, _labels(spark), str(tmp_path / "tfrecords"),
+            train_shards=4, val_shards=2,
+        )
+        jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # by id order neg0-5, pos0, pos1 train and pos2, pos3 val
+    assert (res.train_records, res.val_records) == (6 * 20 + 2 * 190, 2 * 190)
+    assert jobs == 15
+
+
+@pytest.mark.slow
+def test_pipeline_end_to_end(spark, tmp_path):
+    raw = _labels(spark)
     out = str(tmp_path / "tfrecords")
     res = run_rsna_pipeline(
         spark, raw, out, train_shards=4, val_shards=2

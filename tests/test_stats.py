@@ -251,6 +251,31 @@ def test_ks_by_group_matches_per_segment_global(spark):
     assert out["s3"].ks_ppm is None and out["s3"].n_b == 0
 
 
+def test_ks_by_group_keeps_null_segment(spark):
+    """The NULL segment is a segment: its KS equals ks_two_sample over
+    its own slice, as s1's does."""
+    rows = (
+        [("s1", "a", float(v)) for v in (1, 2, 3)]
+        + [("s1", "b", float(v)) for v in (3, 4)]
+        + [(None, "a", float(v)) for v in (5, 5, 6)]
+        + [(None, "b", float(v)) for v in (7, 8)]
+    )
+    df = spark.createDataFrame(rows, "seg string, grp string, value double")
+    out = {
+        r.seg: tuple(r)[1:]
+        for r in st.ks_two_sample_by_group(
+            df, "seg", "grp", "a", "b"
+        ).collect()
+    }
+    want = {
+        seg: tuple(st.ks_two_sample(
+            df.filter(F.col("seg").eqNullSafe(F.lit(seg))), "grp", "a", "b"
+        ).collect()[0])
+        for seg in ("s1", None)
+    }
+    assert out == want
+
+
 def test_cohens_kappa_golden_and_negative(spark):
     """Hand-computed kappa: 2x2 confusion [[20,5],[10,15]] -> n=50,
     agree=35, pe_num = 25*30 + 25*20 = 1250, num = 50*35-1250 = 500,

@@ -172,6 +172,90 @@ def test_write_tfrecord_shards_golden_bytes(spark, tmp_path):
     assert got == GOLDEN_SHARD_SHA256
 
 
+def _split_rows(spark, n_train, n_val):
+    """Records with a ``split`` column: ``n_train`` train rows, then
+    ``n_val`` val rows, each with its own id."""
+    return spark.range(n_train + n_val).selectExpr(
+        f"IF(id < {n_train}, 'train', 'val') AS split",
+        "id", "concat('rec-', id) AS name",
+    )
+
+
+@pytest.mark.parametrize("n_train,n_val", [(8, 2), (1, 0)])
+def test_grouped_shards_files_and_counts(spark, tmp_path, n_train, n_val):
+    """One call writes each ``by`` group's shard files under its own
+    directory, named as the int form names them, returns each group's
+    record count, and leaves the ``by`` column out of the records. A
+    group that gets no rows still gets all its shard files, empty."""
+    out = str(tmp_path / "grouped")
+    counts = tfr.write_tfrecord_shards(
+        _split_rows(spark, n_train, n_val), out, {"train": 4, "val": 2},
+        by="split",
+    )
+    assert counts == {"train": n_train, "val": n_val}
+    assert sorted(os.listdir(out)) == ["train", "val"]
+    for split, n_shards, n in (("train", 4, n_train), ("val", 2, n_val)):
+        names = sorted(os.listdir(os.path.join(out, split)))
+        assert names == [
+            f"data-{i:05d}-of-{n_shards:05d}.tfrecord"
+            for i in range(n_shards)
+        ]
+        assert sum(
+            tfr.count_tfrecords(os.path.join(out, split, f)) for f in names
+        ) == n
+    examples = [tfr.decode_example(p) for p in _shard_payloads(out + "/*")]
+    assert sorted(ex["id"][0] for ex in examples) == list(
+        range(n_train + n_val)
+    )
+    assert all(sorted(ex) == ["id", "name"] for ex in examples)
+
+
+def test_grouped_shards_match_int_form_per_group(spark, tmp_path):
+    """Each group's shard i holds the same records as shard i of the int
+    form writing that group's rows alone."""
+    df = _split_rows(spark, 150, 50)
+    shards = {"train": 3, "val": 2}
+    out = str(tmp_path / "grouped")
+    tfr.write_tfrecord_shards(df, out, shards, by="split")
+    for split, n_shards in shards.items():
+        alone = str(tmp_path / f"alone_{split}")
+        tfr.write_tfrecord_shards(
+            df.where(f"split = '{split}'").drop("split"), alone, n_shards
+        )
+        for i in range(n_shards):
+            name = f"data-{i:05d}-of-{n_shards:05d}.tfrecord"
+            got, want = (
+                sorted(p for _, p in tfr.iter_verified_frames(
+                    os.path.join(d, name)))
+                for d in (os.path.join(out, split), alone)
+            )
+            assert got == want and want, (split, i)
+
+
+@pytest.mark.parametrize(
+    "expr,value",
+    [("IF(id = 3, NULL, 'train')", "None"),
+     ("IF(id = 3, 'test', 'train')", "'test'")],
+)
+def test_grouped_shards_unmapped_value_fails(spark, tmp_path, expr, value):
+    df = spark.range(6).selectExpr(f"{expr} AS split", "id")
+    with pytest.raises(
+        Exception, match=f"column 'split' holds {value}, which num_shards"
+    ):
+        tfr.write_tfrecord_shards(
+            df, str(tmp_path / "unmapped"), {"train": 2, "val": 1},
+            by="split",
+        )
+
+
+def test_grouped_shards_zero_shard_group_raises(spark, tmp_path):
+    df = spark.range(6).selectExpr("'train' AS split", "id")
+    with pytest.raises(ValueError, match="'val' needs at least one shard"):
+        tfr.write_tfrecord_shards(
+            df, str(tmp_path / "zero"), {"train": 2, "val": 0}, by="split"
+        )
+
+
 def test_empty_lists_keep_their_kind(spark, tmp_path):
     """An empty list is written as protobuf writes an empty list message
     of its kind, so a parser that checks the kind (TF's Example parser
