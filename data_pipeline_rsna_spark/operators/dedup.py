@@ -11,10 +11,11 @@ Four methods, ordered by cost:
   candidate join is output-bound, not O(n²).
 - **SimHash**: one 16-bit signature per document; near-dups have small
   Hamming distance. Signature computation is a single explode+groupBy.
-- **exact n-gram Jaccard**: inverted-index join on shingles (pairs that
-  share at least one shingle), then exact Jaccard from shared/total
-  counts — the verifier for the approximate methods, and itself scalable
-  because the join is on the shingle inverted index, never a crossJoin.
+- **exact set similarity**: one kernel, ``_similarity_join``, joins
+  rarity-ordered prefix postings of the distinct vectors and verifies
+  each candidate over the full postings — n-gram Jaccard and containment
+  (the verifiers for the approximate methods), token-set Jaccard and
+  tf-idf cosine, all exact and never a crossJoin.
 
 Portability note: every hash here is ``md5`` of a string and every
 "minimum" is the lexicographic min of hex strings. That makes the whole
@@ -260,17 +261,17 @@ def minhash_lsh_candidates(docs: DataFrame, id_col: str = "doc_id",
         num_hashes,
         rows_per_band,
     )
-    # Streamed bucket-local self-join on (band, band_hash) — the round-9
-    # form of the pair expansion (VERDICT r8 #1 closed the last per-task
-    # pair array). A join MATCHES rows pair-by-pair as they stream out of
-    # the sorted/ hashed bucket, so a degenerate mega-bucket (10⁵-10⁶
-    # near-identical docs surviving exact dedup) produces many OUTPUT
-    # rows across many tasks instead of one N²/2 in-memory struct array
-    # inside one task; AQE skew-join splitting further splits a hot
-    # bucket across tasks. Both join inputs are the identical plan
-    # subtree, so Spark's exchange reuse (spark.sql.exchange.reuse, on by
-    # default) computes the signature pipeline and its shuffle ONCE —
-    # asserted by the plan test (ReusedExchange under the join).
+    # Streamed bucket-local self-join on (band, band_hash). A join
+    # MATCHES rows pair-by-pair as they stream out of the sorted/hashed
+    # bucket, so a degenerate mega-bucket (10⁵-10⁶ near-identical docs
+    # surviving exact dedup) produces many OUTPUT rows across many tasks
+    # instead of one N²/2 in-memory struct array inside one task; AQE
+    # skew-join splitting further splits a hot bucket across tasks. Both
+    # join inputs are the identical plan subtree, so Spark's exchange
+    # reuse (spark.sql.exchange.reuse, on by default) computes the
+    # signature pipeline and its shuffle ONCE — asserted by the plan
+    # tests (ReusedExchange under the join).
+    flags = []
     if max_bucket is not None:
         # mega-bucket guard: keep only the max_bucket smallest ids per
         # (band, band_hash) BEFORE the join (rank-before-join, so both
@@ -287,48 +288,32 @@ def minhash_lsh_candidates(docs: DataFrame, id_col: str = "doc_id",
             .withColumn("_capped", F.col("_members") > max_bucket)
             .drop("_rn", "_members")
         )
-    if max_bucket is None:
-        lhs = bands.select(
-            "band", "band_hash", F.col(id_col).alias("doc_a"),
+        # Both sides carry the flag, so the two join inputs stay
+        # identical subtrees and the exchange is reused; if only one
+        # side did, column pruning would make them differ and the
+        # window rank would run twice. The two flags are equal (the
+        # same bucket on both sides of the equi-join), and ORing them
+        # keeps the right side's flag from being pruned.
+        flags = [F.max(F.col("_capped_a") | F.col("_capped_b"))
+                 .alias("capped")]
+
+    def side(s: str) -> DataFrame:
+        return bands.select(
+            "band", "band_hash", F.col(id_col).alias(f"doc_{s}"),
+            *([F.col("_capped").alias(f"_capped_{s}")] if flags else []),
         )
-        rhs = bands.select(
-            "band", "band_hash", F.col(id_col).alias("doc_b"),
-        )
-        pairs = lhs.join(rhs, ["band", "band_hash"]).filter(
-            F.col("doc_a") < F.col("doc_b")
-        )
-        return pairs.groupBy("doc_a", "doc_b").agg(
-            F.count("*").alias("n_shared_bands")
-        )
-    # capped form: BOTH sides project the same (band, band_hash, id,
-    # _capped) columns so the two join inputs stay byte-identical plan
-    # subtrees and the signature pipeline's exchange is reused exactly
-    # like the uncapped form (pre-r10 only lhs carried _capped, so
-    # column pruning de-synchronized the subtrees and the window rank
-    # ran twice). The aggregate consumes BOTH flags — they are equal
-    # (the bucket is the SAME bucket on both sides of the equi-join),
-    # so the OR is semantics-preserving, and keeping _capped_b live
-    # stops Catalyst pruning it back out of rhs.
-    lhs = bands.select(
-        "band", "band_hash", F.col(id_col).alias("doc_a"),
-        F.col("_capped").alias("_capped_a"),
-    )
-    rhs = bands.select(
-        "band", "band_hash", F.col(id_col).alias("doc_b"),
-        F.col("_capped").alias("_capped_b"),
-    )
-    pairs = lhs.join(rhs, ["band", "band_hash"]).filter(
-        F.col("doc_a") < F.col("doc_b")
-    )
-    return pairs.groupBy("doc_a", "doc_b").agg(
-        F.count("*").alias("n_shared_bands"),
-        F.max(F.col("_capped_a") | F.col("_capped_b")).alias("capped"),
+
+    return (
+        side("a").join(side("b"), ["band", "band_hash"])
+        .filter(F.col("doc_a") < F.col("doc_b"))
+        .groupBy("doc_a", "doc_b")
+        .agg(F.count("*").alias("n_shared_bands"), *flags)
     )
 
 
 def _expand_classes(members: DataFrame, rep_pairs: DataFrame,
-                    within: DataFrame,
-                    max_class: int | None = None) -> DataFrame:
+                    within: DataFrame, max_class: int | None = None,
+                    directed: bool = False) -> DataFrame:
     """Member pairs of duplicate classes whose representatives were
     verified once: the expansion step of every collapse-first pair
     operator.
@@ -341,7 +326,9 @@ def _expand_classes(members: DataFrame, rep_pairs: DataFrame,
     - ``within`` is ``(_g, *values)``: the values of a pair inside
       class ``_g``. A class with no row emits no within pairs.
 
-    Returns ``(doc_a, doc_b, *values)`` with ``doc_a < doc_b``. Both
+    Returns ``(doc_a, doc_b, *values)`` with ``doc_a < doc_b``, or,
+    when ``directed``, in the order of its representative pair and with
+    both orders of a pair inside a class. Both
     expansions are streamed member-row joins, so no task materializes
     a member or pair array: a class duplicated 10⁶ times streams its
     pairs across the join instead of OOMing one reducer.
@@ -374,19 +361,19 @@ def _expand_classes(members: DataFrame, rep_pairs: DataFrame,
 
     # classes are disjoint id sets, so least/greatest normalizes each
     # unordered cross pair exactly once
+    lo, hi = (F.col("_ma"), F.col("_mb")) if directed else (
+        F.least("_ma", "_mb"), F.greatest("_ma", "_mb")
+    )
     cross = (
         rep_pairs.join(side("a", "_ga"), "_ga")
         .join(side("b", "_gb"), "_gb")
-        .select(
-            F.least("_ma", "_mb").alias("doc_a"),
-            F.greatest("_ma", "_mb").alias("doc_b"),
-            *values, *cap,
-        )
+        .select(lo.alias("doc_a"), hi.alias("doc_b"), *values, *cap)
     )
     inner = (
         side("a", "_g")
         .join(side("b", "_g"), "_g")
-        .filter(F.col("_ma") < F.col("_mb"))
+        .filter(F.col("_ma") != F.col("_mb") if directed
+                else F.col("_ma") < F.col("_mb"))
         .join(within, "_g")
         .select(
             F.col("_ma").alias("doc_a"), F.col("_mb").alias("doc_b"),
@@ -743,50 +730,301 @@ def simhash_near_pairs(docs: DataFrame, max_hamming: int = 3) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# X2c — exact n-gram Jaccard via inverted index
+# X2c — exact set-similarity joins: one kernel behind four pair operators
 # ---------------------------------------------------------------------------
+
+# What differs by measure in ``_similarity_join``, as SQL text over the
+# columns it builds. A representative's posting row has its norm
+# ``_n2`` (Σw², the set size when every weight is 1), its 1-based
+# position ``_rn`` in the global term order, and window sums over the
+# postings before it: ``_cum`` (Σ û·mw) and ``_q`` (Σ û²), with
+# ``_tot`` the whole document's Σ û·mw, where û = w/‖d‖ and ``_mw`` is
+# the term's largest û. ``_df`` is the term's document frequency.
+# Verified pairs have ``_dot`` = Σ w_a·w_b and norms ``_na``/``_nb``; a
+# class of identical vectors is scored with all three equal to its norm.
+# Thresholds enter as the exact rational {tn}/{td} (floats {t}, {t2} =
+# t² only in the cosine pruning bounds, widened by {eps}). Fields:
+# - order: the global term order (rarest first for sets, Bayardo's
+#   decreasing max weight for cosine). Any fixed order is exact; the
+#   order only decides how short the prefixes are.
+# - prefix: the postings a document indexes. Any pair at or above the
+#   threshold shares a term inside both prefixes, its first shared term:
+#   J ≥ t and A-in-B containment ≥ t both need an overlap of at least
+#   t·|x|, so a set indexes position p while the n − p + 1 terms from p
+#   on could still hold it; a cosine ≥ t needs the suffix bounds
+#   Σ û·mw (Bayardo) and, by Cauchy–Schwarz, Σ û² to reach t and t².
+# - pairs: the filters on each matched posting pair. A candidate's row
+#   at its first shared term passes them whenever the pair qualifies, so
+#   rows at later shared terms may be dropped. Jaccard: sizes within
+#   t·|x| ≤ |y| ≤ |x|/t; the overlap left from the matched positions,
+#   1 + min(|x| − p_x, |y| − p_y), reaches t/(1+t)·(|x|+|y|); and two
+#   distinct sets of equal size n overlap in at most n − 1 terms.
+#   Containment: the same tests with |A| alone on the right. Cosine: the
+#   ℓ² bound (1 − q_a)(1 − q_b) ≥ t² over the norm mass after the
+#   prefixes (L2AP).
+# - accept: the exact test in integers.
+# - out: the output columns.
+# - directed: containment is asymmetric, so it probes A's prefix against
+#   B's full postings (containment ≥ t needs only A's prefix to meet B)
+#   and keeps both orders of a pair.
+_MEASURES = {
+    "jaccard": (
+        "_df, _term",
+        "(_n2 - _rn + 1) * {td} >= {tn} * _n2",
+        "a._d < b._d AND b._n2 * {td} >= a._n2 * {tn}"
+        " AND a._n2 * {td} >= b._n2 * {tn}"
+        " AND (1 + least(a._n2 - a._rn, b._n2 - b._rn)) * ({tn} + {td})"
+        " >= (a._n2 + b._n2) * {tn}"
+        " AND (a._n2 != b._n2 OR (a._n2 - 1) * {td} >= {tn} * (a._n2 + 1))",
+        "_dot * {td} >= {tn} * (_na + _nb - _dot)",
+        ("_dot AS overlap", "round(_dot / (_na + _nb - _dot), 6) AS jaccard"),
+        False,
+    ),
+    "containment": (
+        "_df, _term",
+        "(_n2 - _rn + 1) * {td} >= {tn} * _n2",
+        "a._d != b._d AND b._n2 * {td} >= a._n2 * {tn}"
+        " AND (1 + least(a._n2 - a._rn, b._n2 - b._rn)) * {td}"
+        " >= {tn} * a._n2"
+        " AND (a._n2 != b._n2 OR (a._n2 - 1) * {td} >= {tn} * a._n2)",
+        "_dot * {td} >= {tn} * _na",
+        ("_dot AS shared", "round(_dot / _na, 6) AS containment"),
+        True,
+    ),
+    "cosine": (
+        "_mw DESC, _term",
+        "_tot - _cum >= {t} - {eps} AND 1.0 - _q >= {t2} - {eps}",
+        "a._d < b._d AND (1.0 - a._q) * (1.0 - b._q) >= {t2} - {eps}",
+        "{td} * {td} * CAST(_dot AS DECIMAL(38,0)) * _dot"
+        " >= {tn} * {tn} * CAST(_na AS DECIMAL(38,0)) * _nb",
+        ("CAST(floor(1000000 * CAST(_dot AS DOUBLE) / (sqrt(CAST(_na AS "
+         "DOUBLE)) * sqrt(CAST(_nb AS DOUBLE)))) AS BIGINT) AS cosine_ppm",),
+        False,
+    ),
+}
+
+# round(x, 6) >= t holds iff x >= t - 5e-7; the ngram wrappers prune
+# 1e-7 below that, so a quotient whose double rounds up onto the
+# boundary still reaches their rounded filter.
+_ROUND_SLACK = Fraction(6, 10**7)
+
+
+def _similarity_join(post: DataFrame, measure: str, t: Fraction,
+                     max_class: int | None) -> DataFrame:
+    """Every document pair whose similarity under ``measure`` (a
+    ``_MEASURES`` key) is at least ``t``, exactly, over postings
+    ``(_d, _term, _w)``: one row per distinct (document, term) with a
+    positive integer weight.
+
+    1. Documents with identical postings collapse into a class; its
+       minimum id represents it and the classes are the only vectors
+       the next steps see.
+    2. Terms get one global order (the measure's).
+    3. Each representative indexes the prefix of its ordered postings
+       that the measure's bound keeps.
+    4. One join of prefix postings on the term, under the measure's
+       pair filters, gives the candidate representative pairs.
+    5. Each candidate's Σ w_a·w_b is summed over the full postings.
+    6. The measure's exact test accepts it.
+    7. ``_expand_classes`` expands the accepted pairs and the classes to
+       member pairs ``(doc_a, doc_b, *out)``; ``max_class`` is its
+       mega-class guard.
+
+    The class key is injective: each element is ``md5(term):w``, of
+    fixed-width hex then digits, and ``,`` separates the elements."""
+    order, prefix, pairs, accept, out, directed = _MEASURES[measure]
+    sql = dict(tn=t.numerator, td=t.denominator, t=float(t),
+               t2=float(t * t), eps=1e-9)
+    docs = (
+        post.groupBy("_d")
+        .agg(
+            F.expr("sort_array(collect_list(struct(_term, _w))) AS _p"),
+            F.expr("sum(_w * _w) AS _n2"),
+        )
+        .selectExpr("_d", "_p", "_n2", "min(_d) OVER (PARTITION BY md5("
+                    "array_join(transform(_p, x -> concat(md5(x._term), ':',"
+                    " x._w)), ','))) AS _g")
+        .transform(lineage_cut)
+    )
+    members = docs.selectExpr("_g", "_d AS _id")
+    classes = docs.filter("_d = _g")
+    reps = classes.selectExpr("_g AS _d", "_n2", "inline(_p)")
+    stats = reps.groupBy("_term").agg(
+        F.expr("count(*) AS _df"), F.expr("max(_w / sqrt(_n2)) AS _mw")
+    )
+    frame = ("OVER (PARTITION BY _d ORDER BY " + order
+             + " ROWS BETWEEN UNBOUNDED PRECEDING AND {})")
+    ranked = reps.join(stats, "_term").selectExpr(
+        "_d", "_term", "_n2", "_df", "_mw", "_w / sqrt(_n2) AS _u"
+    ).selectExpr(
+        "_d", "_term", "_n2",
+        f"row_number() OVER (PARTITION BY _d ORDER BY {order}) AS _rn",
+        "coalesce(sum(_u * _mw) " + frame.format("1 PRECEDING") + ", 0D)"
+        " AS _cum",
+        "sum(_u * _mw) " + frame.format("UNBOUNDED FOLLOWING") + " AS _tot",
+        "coalesce(sum(_u * _u) " + frame.format("1 PRECEDING") + ", 0D)"
+        " AS _q",
+    )
+    indexed = ranked.filter(prefix.format(**sql))
+    cand = (
+        indexed.alias("a")
+        .join((ranked if directed else indexed).alias("b"),
+              F.expr(f"a._term = b._term AND {pairs.format(**sql)}"))
+        .selectExpr("a._d AS _ga", "b._d AS _gb")
+        .distinct()
+    )
+
+    def side(s: str) -> DataFrame:
+        return reps.selectExpr(f"_d AS _g{s}", "_term", f"_w AS _w{s}",
+                               f"_n2 AS _n{s}")
+
+    rep_pairs = (
+        cand.join(side("a"), "_ga")
+        .join(side("b"), ["_gb", "_term"])
+        .groupBy("_ga", "_gb", "_na", "_nb")
+        .agg(F.expr("sum(_wa * _wb) AS _dot"))
+        .filter(accept.format(**sql))
+        .selectExpr("_ga", "_gb", *out)
+    )
+    within = classes.selectExpr(
+        "_g", "_n2 AS _dot", "_n2 AS _na", "_n2 AS _nb"
+    ).selectExpr("_g", *out)
+    return _expand_classes(members, rep_pairs, within, max_class, directed)
+
+
+def _doc_words(docs: DataFrame) -> DataFrame:
+    """``(_d, _ws)``: each document's lowercased words, hash-partitioned
+    by id before any posting exists: the exchange moves text, not
+    postings, and a grouping by document right after it needs no other
+    exchange."""
+    return docs.selectExpr(
+        f"`{ID_COL}` AS _d", f"split(lower(`{TEXT_COL}`), '\\\\s+') AS _ws"
+    ).repartition("_d")
 
 
 def ngram_jaccard_pairs(docs: DataFrame, shingle_n: int = 3,
                         threshold: float = 0.5) -> DataFrame:
-    """Exact Jaccard similarity on shingle sets for every pair sharing at
-    least one shingle. jaccard = shared / (|A| + |B| - shared).
-
-    The join is shingle-keyed (inverted index): a shingle shared by k
-    docs contributes k² join rows, so ubiquitous shingles are the skew
-    risk — at scale, drop shingles with document frequency above a cap
-    (they contribute near-zero Jaccard evidence anyway)."""
-    # Shingle rows feed the self-join twice plus the sizes agg — compute
-    # one copy instead of shingling the corpus three times. Local
-    # checkpoint, not persist(): a CacheManager entry would pin executor
-    # storage for the whole session (no caller can unpersist a lazy
-    # result), while checkpoint blocks are freed by the ContextCleaner
-    # as soon as the returned DataFrame is dropped.
-    sh = lineage_cut(exploded_shingles(docs, ID_COL, TEXT_COL, shingle_n))
-    sizes = sh.groupBy(ID_COL).agg(F.count("*").alias("n_sh"))
-    a = sh.select(F.col(ID_COL).alias("doc_a"), "shingle")
-    b = sh.select(F.col(ID_COL).alias("doc_b"), "shingle")
-    shared = (
-        a.join(b, "shingle")
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count("*").alias("shared"))
+    """Exact Jaccard similarity of shingle sets, jaccard = shared /
+    (|A| + |B| − shared) rounded to 6 decimals, for every pair at or
+    above ``threshold``: (doc_a, doc_b, shared, jaccard), doc_a < doc_b.
+    Documents shorter than ``shingle_n`` words have no shingles and no
+    pairs."""
+    post = exploded_shingles(docs, ID_COL, TEXT_COL, shingle_n).selectExpr(
+        f"`{ID_COL}` AS _d", "shingle AS _term", "1L AS _w"
     )
-    sa = sizes.select(F.col(ID_COL).alias("doc_a"), F.col("n_sh").alias("n_a"))
-    sb = sizes.select(F.col(ID_COL).alias("doc_b"), F.col("n_sh").alias("n_b"))
+    t = Fraction(str(threshold)) - _ROUND_SLACK
     return (
-        shared.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("shared")
-                / (F.col("n_a") + F.col("n_b") - F.col("shared")),
-                6,
-            ),
-        )
+        _similarity_join(post, "jaccard", t, None)
         .filter(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "shared", "jaccard")
+        .withColumnRenamed("overlap", "shared")
+    )
+
+
+def ngram_containment_pairs(docs: DataFrame,
+                            threshold: float = 0.8) -> DataFrame:
+    """Shingle-set CONTAINMENT — the asymmetric cousin of Jaccard:
+    containment(A in B) = |A ∩ B| / |A|. This is the right measure for
+    "document A is embedded inside document B" (a quoted article inside
+    a scrape, a README pasted into a repo dump): a short doc fully
+    contained in a long one has containment 1.0 while its Jaccard is
+    tiny, so a Jaccard-threshold dedup never sees it.
+
+    Pairs are DIRECTED — (contained, container) with contained ≠
+    container — because the measure is asymmetric. Returns pairs whose
+    containment, rounded to 6 decimals, is at least ``threshold``:
+    (doc_small, doc_big, shared, containment)."""
+    post = exploded_shingles(docs, ID_COL, TEXT_COL, 3).selectExpr(
+        f"`{ID_COL}` AS _d", "shingle AS _term", "1L AS _w"
+    )
+    t = Fraction(str(threshold)) - _ROUND_SLACK
+    return (
+        _similarity_join(post, "containment", t, None)
+        .filter(F.col("containment") >= threshold)
+        .withColumnsRenamed({"doc_a": "doc_small", "doc_b": "doc_big"})
+    )
+
+
+def prefix_filter_jaccard_pairs(
+    docs: DataFrame,
+    threshold: float = 0.5,
+    max_class: int | None = None,
+) -> DataFrame:
+    """Exact token-set Jaccard pairs ≥ ``threshold`` via PREFIX
+    FILTERING (Chaudhuri/Xiao PPJoin family) — the other classical
+    route to n²-free set similarity, complementary to MinHash-LSH:
+    deterministic and exact (no probabilistic recall), best when the
+    threshold is high and token frequencies are skewed. Returns
+    (doc_a, doc_b, overlap, jaccard), doc_a < doc_b; ``jaccard`` is
+    rounded to 6 decimals for display only.
+
+    The threshold is the exact rational of the decimal the caller wrote
+    (0.95 → 19/20), so the test overlap·20 ≥ 19·union is in integers.
+    Identical token sets collapse first, so a corpus that collapses to
+    k distinct sets costs O(k²-ish candidate work + true output).
+    ``max_class`` is the mega-class guard of :func:`_expand_classes`
+    and adds a ``capped`` column; ``None`` keeps the oracle-checked
+    schema."""
+    post = _doc_words(docs).selectExpr(
+        "_d", "explode(array_distinct(_ws)) AS _term", "1L AS _w"
+    )
+    return _similarity_join(post, "jaccard", Fraction(str(threshold)),
+                            max_class)
+
+
+def tfidf_cosine_pairs(
+    docs: DataFrame,
+    threshold_num: int = 4,
+    threshold_den: int = 5,
+    shingle_n: int | None = 3,
+    max_class: int | None = None,
+) -> DataFrame:
+    """All-pairs TF-IDF cosine similarity join (Bayardo, Ma & Srikant,
+    WWW'07): every document pair with cos(tfidf_a, tfidf_b) ≥ t =
+    ``threshold_num/threshold_den``, as (doc_a, doc_b, cosine_ppm),
+    doc_a < doc_b. Terms are ``shingle_n``-word shingles, or words when
+    it is None, counted with multiplicity.
+
+    EXACT at the threshold: weights are integers (w = tf ·
+    (round(ln N·1e3) − round(ln df·1e3)) milli-nat idf — bit-stable in
+    any engine; only w > 0 is kept), and the acceptance test is the
+    integer cross-multiplication den²·dot² ≥ num²·n2a·n2b (dot ≥ 0, so
+    squaring preserves the inequality). Floats appear ONLY in the
+    candidate-pruning bounds (made conservative by an epsilon) and in
+    the reported cosine_ppm display value. Identical weight vectors
+    collapse first; ``max_class`` is the mega-class guard of
+    :func:`_expand_classes`."""
+    words = _doc_words(docs)
+    if shingle_n is None:
+        toks = words.selectExpr("_d", "explode(_ws) AS _term")
+    else:
+        toks = (
+            words
+            # sequence(0, negative) would generate a DESCENDING range
+            .filter(f"size(_ws) >= {shingle_n}")
+            .selectExpr(
+                "_d",
+                f"explode(transform(sequence(0, size(_ws) - {shingle_n}),"
+                f" i -> concat_ws(' ', slice(_ws, i + 1, {shingle_n}))))"
+                " AS _term",
+            )
+        )
+    tf = toks.groupBy("_d", "_term").agg(F.expr("count(*) AS _tf"))
+    dfreq = tf.groupBy("_term").agg(F.expr("count(*) AS _df"))
+    nd = tf.selectExpr(
+        "CAST(round(ln(count(DISTINCT _d)) * 1000) AS BIGINT) AS _ln_n_milli"
+    )
+    post = (
+        tf.join(dfreq, "_term")
+        .crossJoin(F.broadcast(nd))
+        .selectExpr(
+            "_d", "_term",
+            "_tf * (_ln_n_milli - CAST(round(ln(_df) * 1000) AS BIGINT))"
+            " AS _w",
+        )
+        .filter("_w > 0")
+    )
+    return _similarity_join(
+        post, "cosine", Fraction(threshold_num, threshold_den), max_class
     )
 
 
@@ -840,11 +1078,11 @@ def connected_components(edges: DataFrame, src: str = "doc_a",
     return labels
 
 
-def dedup_clusters(docs: DataFrame, **lsh_kwargs) -> DataFrame:
+def dedup_clusters(docs: DataFrame) -> DataFrame:
     """End-to-end near-dup grouping: MinHash-LSH candidates → connected
     components → one row per clustered doc with its component id and the
     deterministic keeper (min id in component)."""
-    pairs = minhash_lsh_candidates(docs, ID_COL, TEXT_COL, **lsh_kwargs)
+    pairs = minhash_lsh_candidates(docs, ID_COL, TEXT_COL)
     comps = connected_components(pairs)
     sizes = comps.groupBy("component").agg(F.count("*").alias("cluster_size"))
     return (
@@ -1085,46 +1323,6 @@ def remove_duplicate_spans(docs: DataFrame, window: int = 5,
     )
 
 
-def ngram_containment_pairs(docs: DataFrame,
-                            threshold: float = 0.8) -> DataFrame:
-    """Shingle-set CONTAINMENT — the asymmetric cousin of Jaccard:
-    containment(A in B) = |A ∩ B| / |A|. This is the right measure for
-    "document A is embedded inside document B" (a quoted article inside
-    a scrape, a README pasted into a repo dump): a short doc fully
-    contained in a long one has containment 1.0 while its Jaccard is
-    tiny, so a Jaccard-threshold dedup never sees it.
-
-    Same inverted-index join shape (and the same ubiquitous-shingle skew
-    note) as ``ngram_jaccard_pairs``; pairs are emitted DIRECTED —
-    (contained, container) with contained ≠ container — because the
-    measure is asymmetric. Returns pairs with containment >= threshold:
-    (doc_small, doc_big, shared, containment)."""
-    # localCheckpoint, not persist — see ngram_jaccard_pairs for why
-    # (cache lifetime bounded by the result, not the session).
-    sh = lineage_cut(exploded_shingles(docs, ID_COL, TEXT_COL, 3))
-    sizes = sh.groupBy(ID_COL).agg(F.count("*").alias("n_sh"))
-    a = sh.select(F.col(ID_COL).alias("doc_small"), "shingle")
-    b = sh.select(F.col(ID_COL).alias("doc_big"), "shingle")
-    shared = (
-        a.join(b, "shingle")
-        .filter(F.col("doc_small") != F.col("doc_big"))
-        .groupBy("doc_small", "doc_big")
-        .agg(F.count("*").alias("shared"))
-    )
-    ssm = sizes.select(
-        F.col(ID_COL).alias("doc_small"), F.col("n_sh").alias("n_small")
-    )
-    return (
-        shared.join(ssm, "doc_small")
-        .withColumn(
-            "containment",
-            F.round(F.col("shared") / F.col("n_small"), 6),
-        )
-        .filter(F.col("containment") >= threshold)
-        .select("doc_small", "doc_big", "shared", "containment")
-    )
-
-
 def lsh_bucket_histogram(docs: DataFrame, num_hashes: int = 12,
                          rows_per_band: int = 2,
                          shingle_n: int = 3) -> DataFrame:
@@ -1156,437 +1354,3 @@ def lsh_bucket_histogram(docs: DataFrame, num_hashes: int = 12,
         .agg(F.count("*").cast("bigint").alias("n_buckets"))
         .select("band", F.col("bucket_size").cast("bigint").alias("bucket_size"), "n_buckets")
     )
-
-
-def prefix_filter_jaccard_pairs(
-    docs: DataFrame,
-    threshold: float = 0.5,
-    max_class: int | None = None,
-) -> DataFrame:
-    """Exact token-set Jaccard pairs ≥ ``threshold`` via PREFIX
-    FILTERING (Chaudhuri/Xiao PPJoin family) — the other classical
-    route to n²-free set similarity, complementary to MinHash-LSH:
-    deterministic and exact (no probabilistic recall), best when the
-    threshold is high and token frequencies are skewed.
-
-    The filter: order every doc's distinct tokens by one GLOBAL rarity
-    order (document frequency asc, token asc); if J(x,y) ≥ t, the
-    first ``|x| − ceil(t·|x|) + 1`` tokens of x and the analogous
-    prefix of y must share at least one token — so only PREFIX tokens
-    enter the inverted index, and rare-token prefixes generate few,
-    high-precision candidates (stopwords almost never index).
-    Candidates then verify exactly against the full token sets
-    (array_intersect of two doc-bounded arrays), so the output is
-    EXACT — an oracle can recompute it with a plain inverted-index
-    join and must agree pair-for-pair.
-
-    Scale: the pipeline is OUTPUT-OPTIMAL on duplicate-heavy corpora
-    because identical token SETS collapse FIRST (hash groupBy on the
-    sorted set — the exact-dedup move): the prefix index, candidate
-    join, and verification all run over DISTINCT sets only, and member
-    pairs expand arithmetically afterwards. A corpus whose docs
-    collapse to k distinct sets costs O(k²-ish candidate work + true
-    output), where the uncollapsed form re-verified every Jaccard-1
-    mega-class pair (measured on the 31-word-vocab driver corpus at
-    sf0.1: 133 s → output-bound seconds, same 286k-pair answer).
-    Remaining shape: df count and the per-set rank window (partitioned
-    by set) are one shuffle each; the candidate join carries only
-    prefix postings of distinct sets (≈ (1−t)·tokens); the known
-    adversary is a rare token shared by many DISTINCT sets —
-    bucket-cap the posting list like the LSH mega-bucket guard if a
-    corpus manufactures one.
-
-    Member pairs expand with :func:`_expand_classes`; ``max_class``
-    is its mega-class guard and adds a ``capped`` column. Default
-    ``None`` keeps exact semantics and the oracle-checked schema.
-    """
-    # Injective class key for the sorted token set: md5 each token to a
-    # fixed-width 32-hex digest, join, md5. Tokens are split on \s+ so
-    # they may contain ANY non-space byte (including \x00-\x02 control
-    # chars — Java \s excludes them); hashing elements first is what
-    # makes the concatenation injective.
-    mem0 = docs.selectExpr(
-        f"`{ID_COL}` AS _id",
-        "sort_array(array_distinct(split(lower("
-        f"`{TEXT_COL}`), '\\\\s+'))) AS _ws",
-    ).withColumn(
-        "_ck", F.md5(F.expr("array_join(transform(_ws, t -> md5(t)), '')"))
-    ).transform(lineage_cut)  # feeds members AND groups
-    # one representative row per distinct set (_ck determines _ws, so
-    # first() is deterministic)
-    groups = (
-        mem0.groupBy("_ck")
-        .agg(F.min("_id").alias("_g"), F.first("_ws").alias("_ws"))
-        .withColumn("_sz", F.size("_ws").cast("bigint"))
-        .transform(lineage_cut)  # members, index, verify and within
-    )
-    members = mem0.select("_ck", "_id").join(
-        groups.select("_ck", "_g"), "_ck"
-    ).select("_g", "_id")
-    # prefix-filter candidate generation over DISTINCT sets only
-    gtoks = groups.selectExpr("_g", "explode(_ws) AS w")
-    dfc = gtoks.groupBy("w").agg(F.count("*").alias("_dfw"))
-    w_doc = Window.partitionBy("_g").orderBy("_dfw", "w")
-    ranked = (
-        gtoks.join(dfc, "w")
-        .withColumn("_rn", F.row_number().over(w_doc))
-        .withColumn("_n", F.count("*").over(Window.partitionBy("_g")))
-    )
-    prefix = ranked.filter(
-        F.col("_rn")
-        <= F.col("_n") - F.expr(f"CAST(ceil({threshold} * _n) AS INT)") + 1
-    ).select("_g", "w", "_rn", "_n")
-    # The threshold as an exact rational (0.95 -> 19/20): str() recovers
-    # the decimal the caller wrote, so the integer filters below test
-    # the INTENDED threshold, not the float's binary neighbor.
-    _t = Fraction(str(threshold))
-    _tn, _td = _t.numerator, _t.denominator
-    # PPJoin's two candidate-side filters, both exact integer tests,
-    # applied INSIDE the join so mega posting lists (a "rare" token
-    # still shared by thousands of sets) never fan out:
-    #  - length: J ≥ t forces t·|x| ≤ |y| ≤ |x|/t (sizes within the
-    #    threshold band),
-    #  - positional: the overlap can't exceed 1 + min(|x|−px, |y|−py)
-    #    given the matched prefix positions, and J ≥ t needs
-    #    overlap ≥ t/(1+t)·(|x|+|y|).
-    # Measured on the driver corpus at sf0.1: 5.8M candidates → the
-    # true near-band only, 64 s → seconds for the identical answer.
-    cand = (
-        prefix.alias("a")
-        .join(
-            prefix.alias("b"),
-            (F.col("a.w") == F.col("b.w"))
-            & (F.col("a._g") < F.col("b._g"))
-            & (F.col("b._n") * _td >= F.col("a._n") * _tn)
-            & (F.col("a._n") * _td >= F.col("b._n") * _tn)
-            & (
-                (
-                    F.lit(1)
-                    + F.least(
-                        F.col("a._n") - F.col("a._rn"),
-                        F.col("b._n") - F.col("b._rn"),
-                    )
-                )
-                * (_tn + _td)
-                >= (F.col("a._n") + F.col("b._n")) * _tn
-            )
-            # distinct-sets bound: the join is over DISTINCT token
-            # sets (identical sets collapsed upstream), so two sets of
-            # EQUAL size n overlap in at most n−1 tokens and can reach
-            # J ≥ t only if (n−1)/(n+1) ≥ t — at t=0.95 that needs
-            # n ≥ 39, wiping the equal-small-size candidate class that
-            # dominates low-vocab corpora (driver corpus at sf0.1:
-            # 989k → 670k distinct candidates). Unequal sizes are
-            # already banded by the length filter above.
-            & (
-                (F.col("a._n") != F.col("b._n"))
-                | ((F.col("a._n") - 1) * _td >= _tn * (F.col("a._n") + 1))
-            ),
-        )
-        .select(F.col("a._g").alias("_ga"), F.col("b._g").alias("_gb"))
-        .distinct()
-    )
-    sa = groups.select(
-        F.col("_g").alias("_ga"),
-        F.col("_ws").alias("_wsa"),
-        F.col("_sz").alias("_sza"),
-    )
-    sb = groups.select(
-        F.col("_g").alias("_gb"),
-        F.col("_ws").alias("_wsb"),
-        F.col("_sz").alias("_szb"),
-    )
-    rep_pairs = (
-        cand.join(sa, "_ga")
-        .join(sb, "_gb")
-        .withColumn(
-            "overlap",
-            F.size(F.array_intersect("_wsa", "_wsb")).cast("bigint"),
-        )
-        # Threshold test in EXACT integer arithmetic: overlap/union >= t
-        # iff overlap * td >= tn * union. Filtering on a float rounded
-        # to 6 decimals would admit pairs up to 5e-7 BELOW threshold,
-        # contradicting the exact contract; `jaccard` stays rounded for
-        # display only.
-        .filter(
-            F.col("overlap") * F.lit(_td)
-            >= F.lit(_tn)
-            * (F.col("_sza") + F.col("_szb") - F.col("overlap"))
-        )
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("overlap")
-                / (F.col("_sza") + F.col("_szb") - F.col("overlap")),
-                6,
-            ),
-        )
-        .select("_ga", "_gb", "overlap", "jaccard")
-    )
-    # within a class the sets are identical: Jaccard 1, overlap = size
-    within = groups.select(
-        "_g", F.col("_sz").alias("overlap"),
-        F.lit(1.0).cast("double").alias("jaccard"),
-    )
-    return _expand_classes(members, rep_pairs, within, max_class)
-
-
-def tfidf_cosine_pairs(
-    docs: DataFrame,
-    threshold_num: int = 4,
-    threshold_den: int = 5,
-    shingle_n: int | None = 3,
-    max_class: int | None = None,
-) -> DataFrame:
-    """All-pairs TF-IDF cosine similarity join (Bayardo, Ma & Srikant,
-    WWW'07): every document pair with cos(tfidf_a, tfidf_b) ≥ t,
-    without the n² self-join — the weighted-vector counterpart of
-    ``prefix_filter_jaccard_pairs`` and the standard way to sweep a
-    100 TB corpus for templated/boilerplate near-duplicates that
-    Jaccard-on-sets underweights.
-
-    EXACT at the threshold: weights are integers (w = tf ·
-    (round(ln N·1e3) − round(ln df·1e3)) milli-nat idf — bit-stable in
-    any engine), norms and dot products are exact decimal(38,0) sums,
-    and the acceptance test is the integer cross-multiplication
-    den²·dot² ≥ num²·n2a·n2b (dot ≥ 0, so squaring preserves the
-    inequality). Floats appear ONLY in the candidate-pruning bound
-    (made conservative by an epsilon) and in the reported cosine_ppm
-    display value.
-
-    Prefix filter: terms get a global order by decreasing corpus max
-    normalized weight mw(term) = max_d w(d,term)/‖d‖. Each doc indexes
-    its terms in that order only while the remaining suffix could still
-    reach t on its own (Σ_suffix û·mw ≥ t − ε); if a pair reaches t,
-    then IN EACH doc some shared term is indexed (else that doc's
-    shared-suffix bound alone caps the cosine below t), so joining
-    indexed⋈indexed postings finds every qualifying pair. Candidates
-    dedupe, then verify exactly against the FULL postings.
-
-    Plan shape: tf/df/norm/mw are four map-side-combined aggregations;
-    the per-doc running bound is a window PARTITIONED BY DOC (state =
-    one doc's vocabulary, never a global sort); the candidate join is
-    bucket-local per indexed term with a pair-level ℓ² cross bound
-    (see inline note) pruning collisions in the join itself;
-    verification joins candidate pairs back to full postings (shuffles
-    scale with candidates, which the prefix bound caps — at threshold
-    1−ε only genuine near-dups survive pruning).
-
-    OUTPUT-OPTIMAL on duplicate-heavy corpora (the
-    prefix_filter_jaccard_pairs move): identical token MULTISETS
-    collapse first (df/idf/N stay full-corpus, so weights are
-    unchanged — a duplicate's vector equals its representative's
-    exactly), the prefix index / candidate join / verification run
-    over distinct vectors only, and member pairs expand with
-    :func:`_expand_classes` (``max_class`` is its mega-class guard):
-    within-class pairs are cosine 1 by construction, cross-class pairs
-    copy their representative pair's exact values. Measured at sf1
-    (10× replication ⇒ every class ~10 members): 315 s → output-bound
-    seconds for the identical 407,500-pair answer.
-    """
-    eps = 1e-9
-    t = threshold_num / threshold_den
-    if shingle_n is None:
-        toks = docs.selectExpr(
-            f"`{ID_COL}` AS _d",
-            f"explode(split(lower(`{TEXT_COL}`), '\\\\s+')) AS _term",
-        )
-    else:
-        # n-gram shingle terms WITH multiplicity (tf counts repeats);
-        # bind the token array to a real column first so the split runs
-        # once per doc, not once per shingle position (see shingles_col)
-        toks = (
-            docs.selectExpr(
-                f"`{ID_COL}` AS _d",
-                f"split(lower(`{TEXT_COL}`), '\\\\s+') AS _ws",
-            )
-            # sequence(0, negative) would generate a DESCENDING range
-            .filter(f"size(_ws) >= {shingle_n}")
-            .selectExpr(
-                "_d",
-                f"explode(transform(sequence(0, size(_ws) - {shingle_n}),"
-                f" i -> concat_ws(' ', slice(_ws, i + 1, {shingle_n}))))"
-                " AS _term",
-            )
-        )
-    tf = toks.groupBy("_d", "_term").agg(
-        F.count(F.lit(1)).cast("bigint").alias("_tf")
-    ).transform(lineage_cut)  # feeds df/N AND the collapse
-    dfreq = tf.groupBy("_term").agg(
-        F.count(F.lit(1)).cast("bigint").alias("_df")
-    )
-    nd = tf.agg(
-        F.countDistinct("_d").cast("bigint").alias("_n")
-    ).selectExpr("CAST(round(ln(_n) * 1000) AS BIGINT) AS _ln_n_milli")
-    # identical-multiset collapse: docs whose (term, tf) multisets are
-    # equal have IDENTICAL weight vectors (df/idf/N are full-corpus),
-    # so one representative runs the pipeline and members expand at
-    # the end. The class key is INJECTIVE: each (term, tf) element is
-    # md5'd first — md5(term) is fixed-width so 'digest:tf' parses
-    # uniquely, and the element digests are fixed-width so their sorted
-    # concatenation is too. (Raw separators would be ambiguous: \s+-split
-    # tokens CAN contain control chars.)
-    mem = (
-        tf.groupBy("_d")
-        .agg(
-            F.md5(
-                F.array_join(
-                    F.sort_array(
-                        F.collect_list(
-                            F.md5(
-                                F.concat(
-                                    F.md5("_term"),
-                                    F.lit(":"),
-                                    F.col("_tf").cast("string"),
-                                )
-                            )
-                        )
-                    ),
-                    "",
-                )
-            ).alias("_ck")
-        )
-        .transform(lineage_cut)  # feeds members AND classes
-    )
-    # rep = min id per class
-    classes = (
-        mem.groupBy("_ck")
-        .agg(F.min("_d").alias("_g"))
-        .transform(lineage_cut)  # reps and members
-    )
-    members = mem.join(classes, "_ck").select("_g", F.col("_d").alias("_id"))
-    reps = classes.select(F.col("_g").alias("_d"))
-    post = (
-        tf.join(reps, "_d", "left_semi")
-        .join(dfreq, "_term")
-        .crossJoin(F.broadcast(nd))
-        .selectExpr(
-            "_d",
-            "_term",
-            "CAST(_tf * (_ln_n_milli - "
-            "CAST(round(ln(_df) * 1000) AS BIGINT)) AS BIGINT) AS _w",
-            "_df",
-        )
-        .filter("_w > 0")
-        # the postings table fans out to five consumers (norms, unit,
-        # both candidate sides, both verify sides); without truncating
-        # lineage each one re-runs the shingle explode + two shuffles
-        # (measured 25 s -> 7 s at sf0.1)
-        .transform(lineage_cut)
-    )
-    norms = post.groupBy("_d").agg(
-        F.sum(F.expr("CAST(_w AS DECIMAL(38,0)) * _w")).alias("_n2")
-    )
-    unit = post.join(norms, "_d").selectExpr(
-        "_d",
-        "_term",
-        "_w",
-        "_n2",
-        "CAST(_w AS DOUBLE) / sqrt(CAST(_n2 AS DOUBLE)) AS _u",
-    )
-    mw = unit.groupBy("_term").agg(F.max("_u").alias("_mw"))
-    ranked = unit.join(mw, "_term")
-    # suffix bound: total Σû·mw per doc minus the running prefix
-    w_doc = Window.partitionBy("_d").orderBy(
-        F.col("_mw").desc(), F.col("_term")
-    )
-    prefix = w_doc.rowsBetween(Window.unboundedPreceding, -1)
-    bounded = (
-        ranked.withColumn("_c", F.expr("_u * _mw"))
-        .withColumn(
-            "_cum_prev",
-            F.coalesce(F.sum("_c").over(prefix), F.lit(0.0)),
-        )
-        # Σû² = 1 per doc, so the suffix's norm mass is 1 − prefix mass
-        .withColumn(
-            "_cumsq_prev",
-            F.coalesce(
-                F.sum(F.expr("_u * _u")).over(prefix), F.lit(0.0)
-            ),
-        )
-        .withColumn(
-            "_total",
-            F.sum("_c").over(
-                Window.partitionBy("_d").rowsBetween(
-                    Window.unboundedPreceding, Window.unboundedFollowing
-                )
-            ),
-        )
-    )
-    # two independent per-doc suffix bounds, both conservative: the
-    # Bayardo Σû·mw bound AND the Cauchy–Schwarz norm bound
-    # cos ≤ ‖a_suffix‖·‖b‖ = sqrt(1 − prefix û² mass). A term is
-    # indexed only while BOTH say the suffix alone could still reach t.
-    indexed = bounded.filter(
-        F.expr(
-            f"_total - _cum_prev >= {t} - {eps} AND "
-            f"1.0 - _cumsq_prev >= {t * t} - {eps}"
-        )
-    ).select("_d", "_term", "_cumsq_prev").transform(lineage_cut)
-    ia = indexed.selectExpr("_d AS doc_a", "_term", "_cumsq_prev AS _qa")
-    ib = indexed.selectExpr("_d AS doc_b", "_term", "_cumsq_prev AS _qb")
-    # Pair-level ℓ² cross bound (L2AP family), sound because each doc
-    # indexes a PREFIX of its globally-ordered vocab: at a pair's
-    # FIRST shared indexed term t0, every shared term of the pair lies
-    # in both suffixes-from-t0 (a shared term before t0 would be
-    # indexed in both — prefix property — contradicting minimality),
-    # so Cauchy–Schwarz gives cos ≤ √((1−Σ_prefix û_a²)(1−Σ_prefix
-    # û_b²)). A colliding row may be dropped whenever the product
-    # fails: the qualifying pair's t0 row always passes. Measured on
-    # the driver corpus at sf0.1: 409k → 276k candidates.
-    cand = (
-        ia.join(ib, "_term")
-        .filter("doc_a < doc_b")
-        .filter(F.expr(f"(1.0 - _qa) * (1.0 - _qb) >= {t * t} - {eps}"))
-        .select("doc_a", "doc_b")
-        .distinct()
-    )
-    pa = post.selectExpr("_d AS doc_a", "_term", "_w AS _wa")
-    pb = post.selectExpr("_d AS doc_b", "_term", "_w AS _wb")
-    # products/sums in int64 (w ~ tf·milli-nats keeps each product
-    # ≤ ~1e12 for real documents; ANSI mode turns a true overflow into
-    # a loud error, never a silent wrap) — decimal(38,0) arithmetic in
-    # this hot aggregate measured 2.5x slower; the overflow-proof
-    # decimal form survives in the threshold compare below. (A
-    # map<term,w>-vector merge per pair was measured and REJECTED:
-    # Spark map lookups are linear scans, so map_zip_with on two
-    # ~50-term string-keyed maps is O(|a|·|b|) string compares per
-    # pair — 13.7 s vs this fan-out's 4.3 s on the sf0.1 corpus.)
-    dots = (
-        cand.join(pa, "doc_a")
-        .join(pb, ["doc_b", "_term"])
-        .groupBy("doc_a", "doc_b")
-        .agg(F.sum(F.expr("_wa * _wb")).cast("bigint").alias("_dot"))
-    )
-    na = norms.selectExpr("_d AS doc_a", "_n2 AS _n2a")
-    nb = norms.selectExpr("_d AS doc_b", "_n2 AS _n2b")
-    ppm = (
-        "CAST(floor(1000000 * CAST({dot} AS DOUBLE) / "
-        "(sqrt(CAST({a} AS DOUBLE)) * sqrt(CAST({b} AS DOUBLE)))) "
-        "AS BIGINT) AS cosine_ppm"
-    )
-    rep_pairs = (
-        dots.join(na, "doc_a")
-        .join(nb, "doc_b")
-        .filter(
-            F.expr(
-                f"{threshold_den * threshold_den} * "
-                "CAST(_dot AS DECIMAL(38,0)) * _dot >= "
-                f"{threshold_num * threshold_num} * _n2a * _n2b"
-            )
-        )
-        .selectExpr(
-            "doc_a AS _ga",
-            "doc_b AS _gb",
-            ppm.format(dot="_dot", a="_n2a", b="_n2b"),
-        )
-    )
-    # within-class pairs: identical vectors, cosine exactly 1 — the
-    # ppm export uses the SAME float display expression (dot = n2) so
-    # values match the uncollapsed oracle bit-for-bit; classes whose
-    # rep has no positive-weight posting (no norm row) drop, exactly
-    # as their members did pre-collapse.
-    within = norms.selectExpr(
-        "_d AS _g", ppm.format(dot="_n2", a="_n2", b="_n2")
-    )
-    return _expand_classes(members, rep_pairs, within, max_class)

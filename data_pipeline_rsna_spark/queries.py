@@ -1336,9 +1336,9 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE round(shared / (sa.n_sh + sb.n_sh - shared), 6) >= 0.5
     """,
     doc="X2 exact n-gram Jaccard near-dup pairs (threshold 0.5) via "
-    "shingle inverted-index join - the exactness oracle for MinHash/"
-    "SimHash, itself n^2-free. Skew note: cap shingle document-frequency "
-    "at scale.",
+    "the rarity-ordered prefix index of shingle postings, verified over "
+    "the full postings - the exactness oracle for MinHash/SimHash, "
+    "itself n^2-free.",
     tags=("dedup",),
 )
 def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -10487,8 +10487,8 @@ def q_text_dedup_span_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="X2 shingle-set containment |A∩B|/|A| (asymmetric Jaccard): the "
     "embedded-document detector - a near-dup PLANTED as a suffix of its "
     "source has containment ~1.0 while its Jaccard can sit under any "
-    "symmetric threshold. Directed pairs over the same inverted-index "
-    "join as the Jaccard verifier.",
+    "symmetric threshold. Directed pairs from the same similarity-join "
+    "kernel as the Jaccard verifier: A's prefix probes B's full postings.",
     tags=("dedup", "text"),
 )
 def q_dedup_ngram_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -13554,7 +13554,7 @@ def q_record_linkage_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
     "FILTERING: only the rarity-ordered first |x|-ceil(t|x|)+1 tokens "
     "enter the inverted index (the prefix theorem guarantees every "
     "qualifying pair still collides), then candidates verify exactly "
-    "on full token arrays. The oracle recomputes the SAME answer with "
+    "over the full token postings. The oracle recomputes the SAME answer with "
     "a plain full inverted-index join — agreement proves the "
     "blocking loses nothing. Deterministic-exact counterpart to "
     "MinHash-LSH for high thresholds. Oracle + output cap at sf0.1: "

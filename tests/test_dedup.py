@@ -103,6 +103,89 @@ def test_ngram_jaccard(docs):
     assert all({a, b} != {4, 5} for a, b in pairs)
 
 
+def _shingle_sets(rows, n=3):
+    """Python reference: each document's distinct word ``n``-shingles;
+    documents shorter than ``n`` words have none."""
+    out = {}
+    for d, text in rows:
+        ws = text.lower().split()
+        if len(ws) >= n:
+            out[d] = {" ".join(ws[i:i + n]) for i in range(len(ws) - n + 1)}
+    return out
+
+
+def _round6(x):
+    """Half-up rounding to 6 decimals of the value's shortest decimal
+    form, as the oracle SQL's round does."""
+    from decimal import ROUND_HALF_UP, Decimal
+
+    return float(Decimal(repr(x)).quantize(Decimal("1e-6"), ROUND_HALF_UP))
+
+
+# On SMALL, the near-duplicate 4 shares 19 of its 21 shingles with each
+# member of the class 1/2/9: Jaccard 19/23 and containment 19/21 both
+# lie just below their 6-decimal roundings, which these thresholds are,
+# so those pairs are kept only because they round up onto them.
+@pytest.mark.parametrize("rows,threshold", [
+    pytest.param(SMALL, 0.826087, id="small"),
+    pytest.param(DOCS, 0.5, id="planted", marks=pytest.mark.slow),
+])
+def test_ngram_jaccard_brute_force_parity(spark, rows, threshold):
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    got = {
+        (r.doc_a, r.doc_b): (r.shared, r.jaccard)
+        for r in dedup.ngram_jaccard_pairs(
+            docs, threshold=threshold
+        ).collect()
+    }
+    sets = _shingle_sets(rows)
+    want = {}
+    for a in sets:
+        for b in sets:
+            ov = len(sets[a] & sets[b])
+            j = _round6(ov / len(sets[a] | sets[b]))
+            if a < b and j >= threshold:
+                want[(a, b)] = (ov, j)
+    assert got == want
+    dups = _exact_dup_pairs(rows, min_words=3)
+    assert dups and all(got[p] == (len(sets[p[0]]), 1.0) for p in dups)
+    if rows is SMALL:
+        assert 19 / 23 < threshold and got[(1, 4)] == (19, threshold)
+        assert not any(set(p) & {30, 31} for p in got)
+
+
+@pytest.mark.parametrize("rows,threshold", [
+    pytest.param(SMALL, 0.904762, id="small"),
+    pytest.param(DOCS, 0.8, id="planted", marks=pytest.mark.slow),
+])
+def test_ngram_containment_brute_force_parity(spark, rows, threshold):
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    got = {
+        (r.doc_small, r.doc_big): (r.shared, r.containment)
+        for r in dedup.ngram_containment_pairs(
+            docs, threshold=threshold
+        ).collect()
+    }
+    sets = _shingle_sets(rows)
+    want = {}
+    for a in sets:
+        for b in sets:
+            ov = len(sets[a] & sets[b])
+            c = _round6(ov / len(sets[a]))
+            if a != b and c >= threshold:
+                want[(a, b)] = (ov, c)
+    assert got == want
+    # directed: both orders of every exact-duplicate pair
+    dups = _exact_dup_pairs(rows, min_words=3)
+    assert dups and all(
+        got[(a, b)] == got[(b, a)] == (len(sets[a]), 1.0) for a, b in dups
+    )
+    if rows is SMALL:
+        assert {(1, 2), (1, 9), (2, 9)} <= dups
+        assert 19 / 21 < threshold and got[(4, 1)] == (19, threshold)
+        assert not any(set(p) & {30, 31} for p in got)
+
+
 def test_connected_components_chain_and_clique(spark):
     # chain 1-2-3-4 (diameter 3) + disjoint pair 10-11
     edges = spark.createDataFrame(
@@ -638,11 +721,15 @@ def test_prefix_filter_identical_set_collapse(spark):
 
 @pytest.mark.slow
 def test_pair_expansion_distributed_no_pair_array(spark):
-    """Round-8 scale contract (VERDICT r7 #1): member-pair expansion is a
-    streamed self-join, never a per-row pair array — the physical plan of
-    both pair operators must contain NO `flatten` (the old form exploded
-    a flattened N²/2 struct array built inside ONE task, an OOM cliff on
-    a mega-duplicate class)."""
+    """Scale contract: member-pair expansion is a streamed self-join,
+    never a per-row pair array, so the physical plan of every pair
+    operator contains NO `flatten` (a flattened N²/2 struct array built
+    inside ONE task is an OOM cliff on a mega-duplicate class), and no
+    join runs as a nested loop without a row-bounded side."""
+    from data_pipeline_rsna_spark.plans.audit import (
+        unbounded_nested_loop_joins,
+    )
+
     docs = spark.createDataFrame(
         [(i, "alpha beta gamma delta") for i in range(50)]
         + [(50, "alpha beta gamma zeta")],
@@ -651,9 +738,12 @@ def test_pair_expansion_distributed_no_pair_array(spark):
     for out in (
         dedup.prefix_filter_jaccard_pairs(docs, threshold=0.6),
         dedup.tfidf_cosine_pairs(docs, 4, 5, shingle_n=None),
+        dedup.ngram_jaccard_pairs(docs, threshold=0.5),
+        dedup.ngram_containment_pairs(docs, threshold=0.8),
     ):
         plan = out._jdf.queryExecution().executedPlan().toString()
         assert "flatten" not in plan
+        assert unbounded_nested_loop_joins(out) == []
 
 
 def test_prefix_filter_max_class_caps_mega_duplicate_class(spark):
@@ -733,12 +823,12 @@ def test_tfidf_max_class_caps_mega_class(spark):
 
 
 def test_tfidf_collapse_key_injective_on_control_char_tokens(spark):
-    """ADVICE r7 (medium): tokens may legally contain \\x01/\\x02 (Java
-    \\s excludes control chars), so the collapse key must not merge
-    distinct term multisets whose raw concatenations collide. Doc 1's
-    single token 'a\\x021\\x01b' must NOT collapse with doc 2's tokens
-    {a, b} (tf 1 each) — under the old key both concatenated to the same
-    pre-md5 string."""
+    """Tokens may legally contain \\x01/\\x02 (Java \\s excludes
+    control chars), so the collapse key must not merge distinct term
+    multisets whose raw concatenations collide. Doc 1's single token
+    'a\\x021\\x01b' must NOT collapse with doc 2's tokens {a, b} (tf 1
+    each): a key that concatenates raw terms and counts with those
+    control chars as separators gives both the same pre-md5 string."""
     docs = spark.createDataFrame(
         [(1, "a\x021\x01b"), (2, "a b")], "doc_id long, text string"
     )
@@ -840,12 +930,11 @@ def test_minhash_collapsed_signature_stage_sees_reps_only(spark):
 
 
 def test_planted_corpus_ids_unique_at_any_replication(spark, tmp_path):
-    """Round-9 regression (VERDICT r8 #2): plant offsets derive from
-    1 + max(doc_id), so replicated corpora with ids far beyond the old
-    fixed +100000/+200000 offsets still get disjoint plant id ranges.
-    A corpus whose ids straddle 100000/200000 would have collided under
-    the old scheme; stride-based plants must keep every doc_id unique
-    and plant the exact expected counts."""
+    """Plant offsets derive from 1 + max(doc_id), so replicated corpora
+    get disjoint plant id ranges whatever their id range. A corpus whose
+    ids straddle 100000/200000 would collide with fixed +100000/+200000
+    offsets; stride-based plants must keep every doc_id unique and
+    plant the exact expected counts."""
     from data_pipeline_rsna_spark import queries as Q
 
     rows = [(i, f"text body number {i} with several words")
@@ -895,10 +984,10 @@ def test_minhash_adaptive_picks_form_by_duplication(spark):
 
 
 def test_minhash_capped_pair_join_reuses_signature_exchange(spark):
-    """ADVICE r9: the capped form's _capped column must not
-    de-synchronize the two join subtrees — both sides project the same
-    columns, so the signature pipeline's exchange is reused in the
-    capped form exactly like the uncapped one."""
+    """The capped form's _capped column must not de-synchronize the
+    two join subtrees — both sides project the same columns, so the
+    signature pipeline's exchange is reused in the capped form exactly
+    like the uncapped one."""
     docs = spark.createDataFrame(
         [(i, f"variant {i % 2} of a sufficiently long boilerplate "
              "sentence for shingling") for i in range(20)],
@@ -944,7 +1033,7 @@ def test_minhash_adaptive_probe_memoized(spark):
 
 
 def test_minhash_probe_stratified_unbiased_by_layout(spark, tmp_path):
-    """VERDICT r10 #7: a layout-clustered duplicate corpus (all the
+    """A layout-clustered duplicate corpus (all the
     duplicates packed in the LARGEST file, which a prefix take() reads
     first) must not flip the adaptive form. The stratified per-file
     row-group probe estimates the true corpus ratio; the old prefix

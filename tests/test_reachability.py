@@ -21,8 +21,9 @@ with its reason.
 The third test applies the same rule to options: every defaulted
 parameter of a top-level package function is passed by some call in
 the package, ``tools/``, ``perfbench/``, ``bench.py``,
-``__spark_entry__.py`` or ``tests/``. A value no call sets is a
-constant, not an option.
+``__spark_entry__.py`` or ``tests/``, and every ``**kwargs`` parameter
+is filled by some call with a keyword the function does not name. A
+value no call sets is a constant, not an option.
 """
 
 from __future__ import annotations
@@ -154,7 +155,9 @@ def _bound_names(tree: ast.Module) -> dict[str, str]:
 def unpassed_options() -> list[str]:
     """``module::function(param)`` of every defaulted parameter of a
     top-level package function that no call passes, by keyword or
-    positionally. A call matches by callee name. Exempt: names defined
+    positionally, and ``module::function(**kwargs)`` of every ``**``
+    parameter that no call fills with a keyword the function does not
+    name. A call matches by callee name. Exempt: names defined
     more than once in the package, names also used as values (passed
     around, so their calls are not all visible by name), functions
     some call reaches with ``*``/``**``, and ``KEEP`` entries. A bare
@@ -207,6 +210,12 @@ def unpassed_options() -> list[str]:
                 for c in cs
             ):
                 out.append(f"{mod}::{name}({param})")
+        a = fn.args
+        named = {p.arg for p in a.posonlyargs + a.args + a.kwonlyargs}
+        if a.kwarg and not any(
+            k.arg not in named for c in cs for k in c.keywords
+        ):
+            out.append(f"{mod}::{name}(**{a.kwarg.arg})")
     return sorted(out)
 
 
