@@ -273,11 +273,10 @@ def _encapsulated_fragments(
 
 
 def _walk_part10(data: bytes) -> dict:
-    """Shared Part-10 element walk for the single- and multi-frame
-    readers: preamble check, explicit-VR-LE elements (implicit-VR
-    fallback), transfer-syntax gate, geometry tags, NumberOfFrames,
-    and PixelData (native value or encapsulated fragments + offsets +
-    Basic Offset Table)."""
+    """Part-10 element walk: preamble check, explicit-VR-LE elements
+    (implicit-VR fallback), transfer-syntax gate, geometry tags,
+    NumberOfFrames, and PixelData (native value or encapsulated
+    fragments + offsets + Basic Offset Table)."""
     if len(data) < 132 or data[128:132] != b"DICM":
         raise ValueError("not a Part-10 DICOM file")
     pos = 132
@@ -366,29 +365,16 @@ def decode_dicom_gray(data: bytes) -> np.ndarray:
     family through the from-scratch codecs (``functions/jpeg.py``,
     ``jpegls.py``, ``jpeg2000.py``); other syntaxes raise ValueError
     naming the syntax (see ``_STDLIB_SYNTAXES``). Single-frame only:
-    NumberOfFrames > 1 raises a named error pointing to
-    :func:`decode_dicom_frames`."""
-    m = _walk_part10(data)
-    if m["nframes"] > 1:
-        raise ValueError(
-            f"multi-frame DICOM (NumberOfFrames={m['nframes']}); use "
-            "decode_dicom_frames"
-        )
-    ts, rows, cols = m["ts"], m["rows"], m["cols"]
-    bits, repr_, dt = m["bits"], m["repr"], m["dt"]
-    encap_frags, pixel = m["frags"], m["pixel"]
-    if encap_frags is not None:
-        return _decode_encap_frame(ts, encap_frags, rows, cols,
-                                   bits, repr_, dt)
-    arr = np.frombuffer(pixel[: rows * cols * np.dtype(dt).itemsize], dtype=dt)
-    return arr.reshape(rows, cols)
+    the one-frame case of :func:`decode_dicom_frames`, and
+    NumberOfFrames > 1 raises a named error pointing there."""
+    return _decode_part10(data, single=True)[0]
 
 
 def _decode_encap_frame(ts: str, frags: list[bytes], rows: int,
                         cols: int, bits: int, repr_: int,
                         dt: type) -> np.ndarray:
     """Decode ONE frame's encapsulated fragments for transfer syntax
-    ``ts`` (shared by the single- and multi-frame readers). JPEG-family
+    ``ts``. JPEG-family
     frames may span fragments (joined); an RLE frame is always exactly
     one fragment (PS3.5 Annex G), so RLE uses the first fragment."""
     stream = b"".join(frags)
@@ -438,8 +424,7 @@ def _frame_payloads(frags: list[bytes], offsets: list[int],
     Table entries (each names the byte offset of its frame's first
     fragment item header); ambiguous fragmentation is a named error,
     never a guess. A single-frame file is never ambiguous — all
-    fragments belong to the one frame regardless of BOT presence,
-    matching decode_dicom_gray's join-all behavior."""
+    fragments belong to the one frame regardless of BOT presence."""
     if nframes == 1:
         return [frags]
     if nframes == len(frags):
@@ -464,17 +449,28 @@ def _frame_payloads(frags: list[bytes], offsets: list[int],
 def decode_dicom_frames(data: bytes) -> np.ndarray:
     """Multi-frame twin of :func:`decode_dicom_gray`: Part-10 bytes →
     (NumberOfFrames, Rows, Cols) ndarray. Single-frame files come back
-    as shape (1, H, W). Native PixelData is one contiguous buffer of
-    F·H·W samples; encapsulated syntaxes split fragments per frame via
-    :func:`_frame_payloads` and decode each frame with the same
-    per-syntax path the single-frame reader uses. The reference meets
-    multi-frame series (CT/MR) through pydicom's ``pixel_array``
-    (generate_images_from_dicom.py:48-51), which returns the same
-    (F, H, W) shape."""
+    as shape (1, H, W). The reference meets multi-frame series (CT/MR)
+    through pydicom's ``pixel_array`` (generate_images_from_dicom.py:
+    48-51), which returns the same (F, H, W) shape."""
+    return _decode_part10(data, single=False)
+
+
+def _decode_part10(data: bytes, single: bool) -> np.ndarray:
+    """The one Part-10 pixel read behind both readers → (F, H, W).
+    Native PixelData is one contiguous buffer of F·H·W samples and must
+    hold all of them; encapsulated syntaxes split fragments per frame
+    via :func:`_frame_payloads` and decode each with
+    :func:`_decode_encap_frame`. ``single`` rejects NumberOfFrames > 1
+    before any pixel is read."""
     m = _walk_part10(data)
     ts, rows, cols = m["ts"], m["rows"], m["cols"]
     bits, repr_, dt = m["bits"], m["repr"], m["dt"]
     nframes = m["nframes"]
+    if single and nframes > 1:
+        raise ValueError(
+            f"multi-frame DICOM (NumberOfFrames={nframes}); use "
+            "decode_dicom_frames"
+        )
     if m["frags"] is not None:
         groups = _frame_payloads(m["frags"], m["offsets"], m["bot"],
                                  nframes)
@@ -575,7 +571,7 @@ _WRITERS = {
     "jpegls": (_JPEGLS_LOSSLESS_SYNTAX, jpegls.encode_jpegls_gray, True),
     "jpegls_near": (_JPEGLS_NEAR_SYNTAX, jpegls.encode_jpegls_gray, True),
     "j2k": (_J2K_LOSSLESS_SYNTAX, jpeg2000.encode_j2k_gray, False),
-    "j2k_lossy": (_J2K_SYNTAX, jpeg2000.encode_j2k_gray_lossy, False),
+    "j2k_lossy": (_J2K_SYNTAX, jpeg2000.encode_j2k_gray, False),
 }
 _MULTIFRAME_SYNTAXES = ("raw", "rle", "jpegls", "jpeg_lossless", "j2k")
 

@@ -211,6 +211,151 @@ def _decode_huff(r: _BitReader, table: dict[tuple[int, int], int]) -> int:
 
 
 # ---------------------------------------------------------------------------
+# marker segments (T.81 B.1-B.2; T.87 JPEG-LS reuses the same syntax)
+# ---------------------------------------------------------------------------
+
+SOI, EOI, SOS, DHT, DQT, DRI = 0xD8, 0xD9, 0xDA, 0xC4, 0xDB, 0xDD
+# SOF0-SOF15 minus DHT (C4), JPG (C8) and DAC (CC)
+_SOF_MARKERS = frozenset(range(0xC0, 0xD0)) - {0xC4, 0xC8, 0xCC}
+# markers without a length field: TEM and RST0-7
+_STANDALONE = frozenset({0x01, *range(0xD0, 0xD8)})
+
+
+def read_segments(data: bytes,
+                  codec: str = "JPEG") -> tuple[list[tuple[int, bytes]], int]:
+    """Walk the marker segments of a stream from SOI up to and
+    including SOS: ``([(marker, body), ...], scan_start)`` with SOS last
+    and ``scan_start`` the offset of its entropy-coded data. Fill bytes
+    (B.1.1.2) are skipped; TEM and RSTn come back with an empty body.
+    A missing SOI, a length that runs past the data, or a stream that
+    ends before SOS raises a ValueError naming ``codec``."""
+    n = len(data)
+    if n < 2 or data[0] != 0xFF or data[1] != SOI:
+        raise ValueError(f"not a {codec} stream (missing SOI)")
+    segs: list[tuple[int, bytes]] = []
+    pos = 2
+    while pos + 1 < n:
+        if data[pos] != 0xFF:
+            raise ValueError(f"{codec} marker expected")
+        marker = data[pos + 1]
+        if marker == 0xFF:  # fill byte
+            pos += 1
+            continue
+        pos += 2
+        if marker == EOI:
+            break
+        if marker in _STANDALONE:
+            segs.append((marker, b""))
+            continue
+        end = pos + int.from_bytes(data[pos:pos + 2], "big")
+        if not pos + 2 <= end <= n:
+            raise ValueError(
+                f"truncated {codec} stream (segment length out of bounds)"
+            )
+        segs.append((marker, data[pos + 2:end]))
+        if marker == SOS:
+            return segs, end
+        pos = end
+    raise ValueError(f"{codec} has no SOS segment")
+
+
+def write_segments(segments: list[tuple[int, bytes]], entropy: bytes) -> bytes:
+    """SOI, each ``(marker, body)`` as a length-prefixed segment (the
+    last one SOS), the entropy-coded data, EOI: the one stream layout
+    the T.81 and T.87 encoders here emit."""
+    return b"\xFF\xD8" + b"".join(
+        struct.pack(">BBH", 0xFF, m, len(body) + 2) + body
+        for m, body in segments
+    ) + entropy + b"\xFF\xD9"
+
+
+def parse_sof(seg: bytes, codec: str = "JPEG"
+              ) -> tuple[int, int, int, list[tuple[int, int, int, int]]]:
+    """SOFn body → ``(precision, height, width, [(id, h, v, tq)])``;
+    the component count must fit the segment and the sampling factors
+    lie in 1..4 (B.2.2)."""
+    nc = seg[5] if len(seg) > 5 else 0
+    if nc == 0 or len(seg) < 6 + 3 * nc:
+        raise ValueError(f"malformed {codec} SOF segment")
+    comps = [
+        (seg[6 + 3 * c], seg[7 + 3 * c] >> 4, seg[7 + 3 * c] & 0x0F,
+         seg[8 + 3 * c])
+        for c in range(nc)
+    ]
+    if not all(1 <= hs <= 4 and 1 <= vs <= 4 for _, hs, vs, _ in comps):
+        raise ValueError(f"{codec} sampling factor outside 1..4")
+    h, w = struct.unpack(">HH", seg[1:5])
+    return seg[0], h, w, comps
+
+
+def parse_sos(seg: bytes, codec: str = "JPEG"
+              ) -> tuple[list[tuple[int, int, int]], int, int, int]:
+    """SOS body → ``([(id, td, ta)], Ss, Se, AhAl)``; the component
+    count must fit the segment (B.2.3). JPEG-LS carries NEAR in Ss and
+    ILV in Se."""
+    ns = seg[0] if seg else 0
+    if ns == 0 or len(seg) < 4 + 2 * ns:
+        raise ValueError(f"malformed {codec} SOS segment")
+    scan = [(seg[1 + 2 * c], seg[2 + 2 * c] >> 4, seg[2 + 2 * c] & 0x0F)
+            for c in range(ns)]
+    return scan, seg[1 + 2 * ns], seg[2 + 2 * ns], seg[3 + 2 * ns]
+
+
+def _read_header(segs: list[tuple[int, bytes]], sof: int):
+    """The segments both T.81 decoders read: DHT, DRI, the frame (SOF
+    ``sof``, or SOF1 alongside SOF0; any other SOFn is a named error)
+    and SOS, whose components must be the frame's and whose Huffman
+    tables must be defined. Returns ``(frame, scan, Ss, AhAl,
+    restart_interval)`` with ``scan = [(id, dc_table, ac_table)]``."""
+    htabs: dict[tuple[int, int], dict[tuple[int, int], int]] = {}
+    restart_interval = 0
+    frame = None
+    lossless = sof == 0xC3
+    for marker, seg in segs[:-1]:
+        if marker == DHT:
+            i = 0
+            while i < len(seg):
+                bits = list(seg[i + 1:i + 17])
+                nv = sum(bits)
+                vals = list(seg[i + 17:i + 17 + nv])
+                if len(bits) < 16 or len(vals) < nv:
+                    raise ValueError("truncated JPEG DHT")
+                htabs[(seg[i] >> 4, seg[i] & 0x0F)] = _huff_decode_table(
+                    bits, vals
+                )
+                i += 17 + nv
+        elif marker == DRI:
+            if len(seg) < 2:
+                raise ValueError("truncated JPEG DRI")
+            restart_interval = (seg[0] << 8) | seg[1]
+        elif marker == sof or (marker == 0xC1 and not lossless):
+            frame = parse_sof(seg)
+        elif marker in _SOF_MARKERS:
+            k = marker - 0xC0
+            if lossless:
+                raise ValueError(f"JPEG SOF{k} is not lossless process 14; "
+                                 "use decode_jpeg_baseline for SOF0/1")
+            if k == 3:
+                raise ValueError("JPEG SOF3 is lossless process 14; use "
+                                 "decode_jpeg_lossless")
+            raise ValueError(f"JPEG SOF{k} (non-baseline: progressive/"
+                             "hierarchical/arithmetic) unsupported")
+    if frame is None:
+        raise ValueError("JPEG SOS before SOF")
+    scan, ss, _se, ahal = parse_sos(segs[-1][1])
+    if sorted(c[0] for c in scan) != sorted(c[0] for c in frame[3]):
+        raise ValueError("JPEG scan/frame component mismatch")
+    tables = []
+    for cs, td, ta in scan:
+        dc, ac = htabs.get((0, td)), htabs.get((1, ta))
+        if dc is None or (ac is None and not lossless):
+            raise ValueError(f"JPEG scan component {cs} uses an undefined "
+                             "DHT")
+        tables.append((cs, dc, ac))
+    return frame, tables, ss, ahal, restart_interval
+
+
+# ---------------------------------------------------------------------------
 # decoder
 # ---------------------------------------------------------------------------
 
@@ -219,101 +364,36 @@ def decode_jpeg_baseline(data: bytes) -> np.ndarray:
     """Decode a baseline sequential-DCT 8-bit JPEG. Returns HxW uint8
     for single-component images, HxWxC uint8 otherwise (planes
     upsampled to full resolution, no color-space conversion)."""
-    if data[:2] != b"\xFF\xD8":
-        raise ValueError("not a JPEG (missing SOI)")
-    pos = 2
+    segs, scan_pos = read_segments(data)
     qtabs: dict[int, np.ndarray] = {}
-    htabs: dict[tuple[int, int], dict[tuple[int, int], int]] = {}
-    restart_interval = 0
-    frame = None  # (h, w, comps) with comps = [(cid, hs, vs, tq)]
-    n = len(data)
-    while pos + 4 <= n:
-        if data[pos] != 0xFF:
-            raise ValueError("JPEG marker expected")
-        # T.81 B.1.1.2: any number of 0xFF fill bytes may pad before a
-        # marker; collapse them so the id byte is never read as a length
-        while pos + 1 < n and data[pos + 1] == 0xFF:
-            pos += 1
-        marker = data[pos + 1]
-        pos += 2
-        if marker == 0xD8:
+    for marker, seg in segs:
+        if marker != DQT:
             continue
-        if marker == 0xD9:
-            break
-        (seglen,) = struct.unpack(">H", data[pos:pos + 2])
-        body_end = pos + seglen
-        if body_end > n:
-            raise ValueError("truncated JPEG (segment extends past end)")
-        seg = data[pos + 2:pos + seglen]
-        if marker == 0xDB:  # DQT
-            i = 0
-            while i < len(seg):
-                pq, tq = seg[i] >> 4, seg[i] & 0x0F
-                i += 1
-                if pq == 0:
-                    tab = np.frombuffer(seg[i:i + 64], dtype=np.uint8)
-                    i += 64
-                else:
-                    tab = np.frombuffer(
-                        seg[i:i + 128], dtype=">u2"
-                    ).astype(np.int64)
-                    i += 128
-                q = np.zeros(64, dtype=np.int64)
-                q[ZIGZAG] = tab  # stored in zigzag order
-                qtabs[tq] = q.reshape(8, 8)
-        elif marker == 0xC4:  # DHT
-            i = 0
-            while i < len(seg):
-                tc, th = seg[i] >> 4, seg[i] & 0x0F
-                bits = list(seg[i + 1:i + 17])
-                nv = sum(bits)
-                vals = list(seg[i + 17:i + 17 + nv])
-                htabs[(tc, th)] = _huff_decode_table(bits, vals)
-                i += 17 + nv
-        elif marker == 0xC0 or marker == 0xC1:  # SOF0/1 (baseline)
-            prec = seg[0]
-            if prec != 8:
-                raise ValueError(f"JPEG precision {prec} unsupported "
-                                 "(baseline is 8-bit)")
-            h, w = struct.unpack(">HH", seg[1:5])
-            nc = seg[5]
-            comps = []
-            for c in range(nc):
-                cid = seg[6 + 3 * c]
-                hv = seg[7 + 3 * c]
-                comps.append((cid, hv >> 4, hv & 0x0F, seg[8 + 3 * c]))
-            frame = (h, w, comps)
-        elif marker == 0xC3:
-            raise ValueError(
-                "JPEG SOF3 is lossless process 14; use "
-                "decode_jpeg_lossless"
-            )
-        elif marker in (0xC2, 0xC5, 0xC6, 0xC7,
-                        0xC9, 0xCA, 0xCB, 0xCD, 0xCE, 0xCF):
-            raise ValueError(
-                f"JPEG SOF{marker - 0xC0} (non-baseline: progressive/"
-                "hierarchical/arithmetic) unsupported"
-            )
-        elif marker == 0xDD:  # DRI
-            (restart_interval,) = struct.unpack(">H", seg[:2])
-        elif marker == 0xDA:  # SOS — entropy data follows
-            if frame is None:
-                raise ValueError("JPEG SOS before SOF")
-            ns = seg[0]
-            scan = []
-            for c in range(ns):
-                cs = seg[1 + 2 * c]
-                tdta = seg[2 + 2 * c]
-                scan.append((cs, tdta >> 4, tdta & 0x0F))
-            return _decode_scan(
-                data, body_end, frame, scan, qtabs, htabs,
-                restart_interval,
-            )
-        pos = body_end
-    raise ValueError("JPEG has no SOS segment")
+        i = 0
+        while i < len(seg):
+            pq, tq = seg[i] >> 4, seg[i] & 0x0F
+            size = 128 if pq else 64
+            if i + 1 + size > len(seg):
+                raise ValueError("truncated JPEG DQT")
+            tab = np.frombuffer(seg[i + 1:i + 1 + size],
+                                dtype=">u2" if pq else np.uint8)
+            i += 1 + size
+            q = np.zeros(64, dtype=np.int64)
+            q[ZIGZAG] = tab  # stored in zigzag order
+            qtabs[tq] = q.reshape(8, 8)
+    frame, scan, _ss, _ahal, restart_interval = _read_header(segs, 0xC0)
+    prec, h, w, comps = frame
+    if prec != 8:
+        raise ValueError(f"JPEG precision {prec} unsupported "
+                         "(baseline is 8-bit)")
+    for cid, _hs, _vs, tq in comps:
+        if tq not in qtabs:
+            raise ValueError(f"JPEG component {cid} uses an undefined DQT")
+    return _decode_scan(data, scan_pos, (h, w, comps), scan, qtabs,
+                        restart_interval)
 
 
-def _decode_scan(data, pos, frame, scan, qtabs, htabs, restart_interval):
+def _decode_scan(data, pos, frame, scan, qtabs, restart_interval):
     h, w, comps = frame
     hmax = max(c[1] for c in comps)
     vmax = max(c[2] for c in comps)
@@ -323,14 +403,12 @@ def _decode_scan(data, pos, frame, scan, qtabs, htabs, restart_interval):
     # per-scan component state in scan order
     state = []
     planes: dict[int, np.ndarray] = {}
-    for cs, td, ta in scan:
+    for cs, dc, ac in scan:
         cid, hs, vs, tq = by_id[cs]
         planes[cid] = np.zeros((mcuy * vs * 8, mcux * hs * 8), dtype=np.int64)
         state.append({
             "cid": cid, "hs": hs, "vs": vs,
-            "q": qtabs[tq],
-            "dc": htabs[(0, td)], "ac": htabs[(1, ta)],
-            "pred": 0,
+            "q": qtabs[tq], "dc": dc, "ac": ac, "pred": 0,
         })
     r = _BitReader(data, pos)
     coef = np.zeros(64, dtype=np.int64)
@@ -351,8 +429,9 @@ def _decode_scan(data, pos, frame, scan, qtabs, htabs, restart_interval):
                     for bxx in range(hs):
                         coef[:] = 0
                         t = _decode_huff(r, st["dc"])
-                        diff = _extend(r.read_bits(t), t) if t else 0
-                        st["pred"] += diff
+                        if t > 11:  # 8-bit DCT: DC categories 0..11
+                            raise ValueError(f"JPEG DC category {t} > 11")
+                        st["pred"] += _extend(r.read_bits(t), t)
                         coef[0] = st["pred"]
                         k = 1
                         while k < 64:
@@ -364,8 +443,9 @@ def _decode_scan(data, pos, frame, scan, qtabs, htabs, restart_interval):
                                     continue
                                 break  # EOB
                             k += rr
-                            if k > 63:
-                                raise ValueError("JPEG AC run overflow")
+                            if k > 63 or ss > 10:  # AC categories 1..10
+                                raise ValueError("JPEG AC run or category "
+                                                 "overflow")
                             coef[ZIGZAG[k]] = _extend(r.read_bits(ss), ss)
                             k += 1
                         block = (coef.reshape(8, 8) * st["q"]).astype(float)
@@ -393,12 +473,13 @@ def _decode_scan(data, pos, frame, scan, qtabs, htabs, restart_interval):
 
 
 class _BitWriter:
-    __slots__ = ("buf", "acc", "nbits")
+    __slots__ = ("buf", "acc", "nbits", "rst")
 
     def __init__(self) -> None:
         self.buf = bytearray()
         self.acc = 0
         self.nbits = 0
+        self.rst = 0
 
     def write(self, code: int, length: int) -> None:
         self.acc = (self.acc << length) | (code & ((1 << length) - 1))
@@ -410,19 +491,41 @@ class _BitWriter:
             if b == 0xFF:
                 self.buf.append(0x00)  # byte stuffing
 
+    def write_value(self, tab: dict[int, tuple[int, int]], run: int,
+                    v: int) -> None:
+        """Huffman code of symbol ``run | SSSS`` then the SSSS low bits
+        of ``v`` (one's complement when negative, T.81 F.1.2.1)."""
+        s = abs(v).bit_length()
+        self.write(*tab[run | s])
+        if s:
+            self.write(v if v >= 0 else v + (1 << s) - 1, s)
+
     def pad(self) -> None:
         """Pad to a byte boundary with 1-bits (T.81 F.1.2.3)."""
         if self.nbits:
             n = 8 - self.nbits
             self.write((1 << n) - 1, n)
 
+    def restart(self) -> None:
+        """Close the entropy segment with the next RSTn marker."""
+        self.pad()
+        self.buf += bytes([0xFF, 0xD0 + (self.rst & 7)])
+        self.rst += 1
+
     def flush(self) -> bytes:
         self.pad()
         return bytes(self.buf)
 
 
-def _csize(v: int) -> int:
-    return int(v).bit_length() if v >= 0 else int(-v).bit_length()
+def _dri(restart_interval: int) -> list[tuple[int, bytes]]:
+    if not restart_interval:
+        return []
+    return [(DRI, struct.pack(">H", restart_interval))]
+
+
+def gray_sof(prec: int, h: int, w: int) -> bytes:
+    """SOF body for one component, id 1, 1x1 sampling, table 0."""
+    return struct.pack(">BHHB", prec, h, w, 1) + bytes([1, 0x11, 0])
 
 
 def encode_jpeg_baseline_gray(
@@ -455,27 +558,18 @@ def encode_jpeg_baseline_gray(
     wtr = _BitWriter()
     pred = 0
     mcu_i = 0
-    rst = 0
     for yb in range(by):
         for xb in range(bx):
             if restart_interval and mcu_i and mcu_i % restart_interval == 0:
-                # close the entropy segment and resync
-                wtr.pad()
-                wtr.buf += bytes([0xFF, 0xD0 + (rst & 7)])
-                rst += 1
+                wtr.restart()
                 pred = 0
             mcu_i += 1
             block = padded[yb * 8:yb * 8 + 8, xb * 8:xb * 8 + 8]
             coefs = _DCT @ block @ _DCT.T
             qz = np.round(coefs / qm).astype(np.int64).reshape(64)
             zz = qz[ZIGZAG]
-            diff = int(zz[0]) - pred
+            wtr.write_value(dc_tab, 0, int(zz[0]) - pred)
             pred = int(zz[0])
-            t = _csize(diff)
-            code, ln = dc_tab[t]
-            wtr.write(code, ln)
-            if t:
-                wtr.write(diff if diff >= 0 else diff + (1 << t) - 1, t)
             run = 0
             for k in range(1, 64):
                 v = int(zz[k])
@@ -483,44 +577,23 @@ def encode_jpeg_baseline_gray(
                     run += 1
                     continue
                 while run > 15:
-                    code, ln = ac_tab[0xF0]  # ZRL
-                    wtr.write(code, ln)
+                    wtr.write(*ac_tab[0xF0])  # ZRL
                     run -= 16
-                s = _csize(v)
-                code, ln = ac_tab[(run << 4) | s]
-                wtr.write(code, ln)
-                wtr.write(v if v >= 0 else v + (1 << s) - 1, s)
+                wtr.write_value(ac_tab, run << 4, v)
                 run = 0
             if run:
-                code, ln = ac_tab[0x00]  # EOB
-                wtr.write(code, ln)
-    entropy = wtr.flush()
-
-    def seg(marker: int, body: bytes) -> bytes:
-        return struct.pack(">BBH", 0xFF, marker, len(body) + 2) + body
+                wtr.write(*ac_tab[0x00])  # EOB
 
     # DQT stores the table in zigzag order
     dqt = bytes([0x00]) + bytes(int(q[ZIGZAG[i]]) for i in range(64))
-    sof = struct.pack(">BHHB", 8, h, w, 1) + bytes([1, 0x11, 0])
-    dht_dc = bytes([0x00]) + bytes(DC_LUMA_BITS) + bytes(DC_LUMA_VALS)
-    dht_ac = bytes([0x10]) + bytes(AC_LUMA_BITS) + bytes(AC_LUMA_VALS)
-    sos = bytes([1, 1, 0x00, 0, 63, 0])
-    dri = (
-        seg(0xDD, struct.pack(">H", restart_interval))
-        if restart_interval
-        else b""
-    )
-    return (
-        b"\xFF\xD8"
-        + seg(0xDB, dqt)
-        + seg(0xC0, sof)
-        + seg(0xC4, dht_dc)
-        + seg(0xC4, dht_ac)
-        + dri
-        + seg(0xDA, sos)
-        + entropy
-        + b"\xFF\xD9"
-    )
+    return write_segments([
+        (DQT, dqt),
+        (0xC0, gray_sof(8, h, w)),
+        (DHT, bytes([0x00]) + bytes(DC_LUMA_BITS) + bytes(DC_LUMA_VALS)),
+        (DHT, bytes([0x10]) + bytes(AC_LUMA_BITS) + bytes(AC_LUMA_VALS)),
+        *_dri(restart_interval),
+        (SOS, bytes([1, 1, 0x00, 0, 63, 0])),
+    ], wtr.flush())
 
 
 # ---------------------------------------------------------------------------
@@ -573,9 +646,7 @@ def _predict(recon, y: int, x: int, sel: int, default: int) -> int:
         return ra + ((rb - rc) >> 1)
     if sel == 6:
         return rb + ((ra - rc) >> 1)
-    if sel == 7:
-        return (ra + rb) >> 1
-    raise ValueError(f"JPEG lossless predictor {sel} invalid")
+    return (ra + rb) >> 1  # 7; callers check 1..7
 
 
 def decode_jpeg_lossless(data: bytes) -> np.ndarray:
@@ -584,115 +655,36 @@ def decode_jpeg_lossless(data: bytes) -> np.ndarray:
     streams (1x1 sampling only — DICOM monochrome never interleaves).
     Supports predictors 1-7, point transform, and restart intervals
     (predictors reset to the scan-start state after each RSTn)."""
-    if data[:2] != b"\xFF\xD8":
-        raise ValueError("not a JPEG (missing SOI)")
-    pos = 2
-    htabs: dict[int, dict[tuple[int, int], int]] = {}
-    restart_interval = 0
-    frame = None  # (prec, h, w, comps) with comps = [(cid, hs, vs)]
-    n = len(data)
-    while pos + 4 <= n:
-        if data[pos] != 0xFF:
-            raise ValueError("JPEG marker expected")
-        while pos + 1 < n and data[pos + 1] == 0xFF:
-            pos += 1  # fill bytes
-        marker = data[pos + 1]
-        pos += 2
-        if marker == 0xD8:
-            continue
-        if marker == 0xD9:
-            break
-        (seglen,) = struct.unpack(">H", data[pos:pos + 2])
-        body_end = pos + seglen
-        if body_end > n:
-            raise ValueError("truncated JPEG (segment extends past end)")
-        seg = data[pos + 2:pos + seglen]
-        if marker == 0xC4:  # DHT (lossless uses DC-class tables)
-            i = 0
-            while i < len(seg):
-                tc, th = seg[i] >> 4, seg[i] & 0x0F
-                bits = list(seg[i + 1:i + 17])
-                nv = sum(bits)
-                vals = list(seg[i + 17:i + 17 + nv])
-                if len(vals) < nv:
-                    raise ValueError("truncated JPEG DHT")
-                if tc == 0:
-                    htabs[th] = _huff_decode_table(bits, vals)
-                i += 17 + nv
-        elif marker == 0xC3:  # SOF3 — lossless sequential Huffman
-            prec = seg[0]
-            if not 2 <= prec <= 16:
-                raise ValueError(f"JPEG lossless precision {prec} invalid")
-            h, w = struct.unpack(">HH", seg[1:5])
-            nc = seg[5]
-            comps = []
-            for c in range(nc):
-                cid = seg[6 + 3 * c]
-                hv = seg[7 + 3 * c]
-                if hv != 0x11:
-                    raise ValueError(
-                        "JPEG lossless with subsampling unsupported"
-                    )
-                comps.append(cid)
-            frame = (prec, h, w, comps)
-        elif marker in (0xC0, 0xC1, 0xC2, 0xC5, 0xC6, 0xC7,
-                        0xC9, 0xCA, 0xCB, 0xCD, 0xCE, 0xCF):
-            raise ValueError(
-                f"JPEG SOF{marker - 0xC0} is not lossless process 14; "
-                "use decode_jpeg_baseline for SOF0/1"
-            )
-        elif marker == 0xDD:  # DRI
-            (restart_interval,) = struct.unpack(">H", seg[:2])
-        elif marker == 0xDA:  # SOS
-            if frame is None:
-                raise ValueError("JPEG SOS before SOF3")
-            ns = seg[0]
-            scan = []
-            for c in range(ns):
-                cs = seg[1 + 2 * c]
-                td = seg[2 + 2 * c] >> 4
-                scan.append((cs, td))
-            sel = seg[1 + 2 * ns]        # Ss = predictor selection
-            pt = seg[3 + 2 * ns] & 0x0F  # Al = point transform
-            return _decode_lossless_scan(
-                data, body_end, frame, scan, htabs, sel, pt,
-                restart_interval,
-            )
-        pos = body_end
-    raise ValueError("JPEG has no SOS segment")
-
-
-def _decode_lossless_scan(data, pos, frame, scan, htabs, sel, pt,
-                          restart_interval):
+    segs, scan_pos = read_segments(data)
+    frame, scan, sel, ahal, restart_interval = _read_header(segs, 0xC3)
     prec, h, w, comps = frame
-    if sorted(cs for cs, _ in scan) != sorted(comps):
-        raise ValueError("JPEG lossless scan/frame component mismatch")
+    if not 2 <= prec <= 16:
+        raise ValueError(f"JPEG lossless precision {prec} invalid")
+    if any((hs, vs) != (1, 1) for _, hs, vs, _ in comps):
+        raise ValueError("JPEG lossless with subsampling unsupported")
+    pt = ahal & 0x0F  # Al = point transform
+    if not 1 <= sel <= 7 or pt >= prec:
+        raise ValueError(f"JPEG lossless predictor {sel} / point "
+                         f"transform {pt} invalid")
     default = 1 << (prec - pt - 1)
-    planes = {cs: np.zeros((h, w), dtype=np.int64) for cs, _ in scan}
-    tabs = {}
-    for cs, td in scan:
-        if td not in htabs:
-            raise ValueError(f"JPEG lossless missing DHT {td}")
-        tabs[cs] = htabs[td]
-    r = _BitReader(data, pos)
+    planes = {cs: np.zeros((h, w), dtype=np.int64) for cs, _, _ in scan}
+    r = _BitReader(data, scan_pos)
     mcu = 0
-    fresh = {cs: True for cs, _ in scan}  # scan-start / post-restart
+    fresh = {cs: True for cs, _, _ in scan}  # scan-start / post-restart
     for y in range(h):
         for x in range(w):
             if restart_interval and mcu and mcu % restart_interval == 0:
                 m = r.align_to_marker()
                 if not (0xD0 <= m <= 0xD7):
                     raise ValueError("expected JPEG restart marker")
-                for cs, _ in scan:
+                for cs in fresh:
                     fresh[cs] = True
-            for cs, _td in scan:
-                t = _decode_huff(r, tabs[cs])
-                if t == 16:  # T.81: category 16 carries no bits
-                    diff = 32768
-                elif t:
-                    diff = _extend(r.read_bits(t), t)
-                else:
-                    diff = 0
+            for cs, dc, _ac in scan:
+                t = _decode_huff(r, dc)
+                if t > 16:
+                    raise ValueError(f"JPEG lossless category {t} > 16")
+                # T.81 H.1.2.2: category 16 carries no bits
+                diff = 32768 if t == 16 else _extend(r.read_bits(t), t)
                 if fresh[cs]:
                     pred = default
                     fresh[cs] = False
@@ -700,16 +692,10 @@ def _decode_lossless_scan(data, pos, frame, scan, htabs, sel, pt,
                     pred = _predict(planes[cs], y, x, sel, default)
                 planes[cs][y, x] = (pred + diff) & 0xFFFF
             mcu += 1
-    out = []
     dt = np.uint8 if prec <= 8 else np.uint16
-    for cs in comps:
-        p = planes[cs]
-        if pt:
-            p = p << pt  # undo the point transform's downshift
-        out.append(p.astype(dt))
-    if len(out) == 1:
-        return out[0]
-    return np.stack(out, axis=-1)
+    # undo the point transform's downshift
+    out = [(planes[c[0]] << pt).astype(dt) for c in comps]
+    return out[0] if len(out) == 1 else np.stack(out, axis=-1)
 
 
 def encode_jpeg_lossless_gray(
@@ -732,14 +718,11 @@ def encode_jpeg_lossless_gray(
     default = 1 << (prec - 1)
     wtr = _BitWriter()
     mcu = 0
-    rst = 0
     fresh = True
     for y in range(h):
         for x in range(w):
             if restart_interval and mcu and mcu % restart_interval == 0:
-                wtr.pad()
-                wtr.buf += bytes([0xFF, 0xD0 + (rst & 7)])
-                rst += 1
+                wtr.restart()
                 fresh = True
             mcu += 1
             if fresh:
@@ -749,40 +732,15 @@ def encode_jpeg_lossless_gray(
                 pred = _predict(a, y, x, predictor, default)
             d = (int(a[y, x]) - pred) & 0xFFFF
             if d == 32768:
-                code, ln = tab[16]
-                wtr.write(code, ln)
-                continue
-            sd = d - 65536 if d > 32768 else d
-            t = _csize(sd)
-            code, ln = tab[t]
-            wtr.write(code, ln)
-            if t:
-                wtr.write(sd if sd >= 0 else sd + (1 << t) - 1, t)
-    entropy = wtr.flush()
-
-    def seg(marker: int, body: bytes) -> bytes:
-        return struct.pack(">BBH", 0xFF, marker, len(body) + 2) + body
-
-    sof = struct.pack(">BHHB", prec, h, w, 1) + bytes([1, 0x11, 0])
-    dht = (
-        bytes([0x00])
-        + bytes(LOSSLESS_DC_BITS)
-        + bytes(LOSSLESS_DC_VALS)
-    )
-    # SOS for lossless: Ss = predictor, Se = 0, AhAl = 0 (no point
-    # transform)
-    sos = bytes([1, 1, 0x00, predictor, 0, 0])
-    dri = (
-        seg(0xDD, struct.pack(">H", restart_interval))
-        if restart_interval
-        else b""
-    )
-    return (
-        b"\xFF\xD8"
-        + seg(0xC3, sof)
-        + seg(0xC4, dht)
-        + dri
-        + seg(0xDA, sos)
-        + entropy
-        + b"\xFF\xD9"
-    )
+                wtr.write(*tab[16])
+            else:
+                wtr.write_value(tab, 0, d - 65536 if d > 32768 else d)
+    dht = bytes([0x00]) + bytes(LOSSLESS_DC_BITS) + bytes(LOSSLESS_DC_VALS)
+    return write_segments([
+        (0xC3, gray_sof(prec, h, w)),
+        (DHT, dht),
+        *_dri(restart_interval),
+        # lossless SOS: Ss = predictor, Se = 0, AhAl = 0 (no point
+        # transform)
+        (SOS, bytes([1, 1, 0x00, predictor, 0, 0])),
+    ], wtr.flush())

@@ -971,10 +971,26 @@ def _get_numpasses(br: _HeaderBitReader) -> int:
 
 
 def encode_j2k_gray(arr: np.ndarray, levels: int = 2,
-                    cblk_exp: int = _DEFAULT_CBLK) -> bytes:
-    """HxW uint8/uint16/int16 ndarray → lossless JPEG 2000 Part-1
-    codestream (single tile/component, reversible 5/3, one layer,
-    LRCP). Bit-exact inverse of :func:`decode_j2k`."""
+                    cblk_exp: int = _DEFAULT_CBLK,
+                    delta: float | None = None,
+                    qcd_style: str = "expounded") -> bytes:
+    """HxW uint8/uint16/int16 ndarray → JPEG 2000 Part-1 codestream
+    (single tile/component, one layer, LRCP, one precinct per
+    resolution), the inverse of :func:`decode_j2k`.
+
+    ``delta=None`` is lossless: reversible 5/3, no quantization (QCD
+    style 0), bit-exact. A ``delta`` selects the irreversible path
+    behind DICOM transfer syntax 1.2.840.10008.1.2.4.91 (the common
+    lossy archival syntax the reference reaches through pydicom,
+    generate_images_from_dicom.py:44-51): float 9/7 DWT (Annex F.4.8)
+    and dead-zone scalar quantization (E.4) with per-subband steps.
+    ``delta`` is the base step relative to unit dynamic range: the
+    realized step per subband is ``delta · 2^prec / L2gain_b``, so
+    image-domain error is roughly uniform across subbands and scales
+    linearly with ``delta`` (≤ ~delta · 2^prec per sample, measured in
+    tests). ``qcd_style`` signals those steps: 'expounded' (one (ε,μ)
+    per subband, Sqcd style 2) or 'derived' (one value, ε_b = ε_0 − N +
+    n_b, style 1)."""
     if arr.ndim != 2:
         raise ValueError("encode_j2k_gray expects a 2-D array")
     if arr.size == 0:
@@ -987,6 +1003,10 @@ def encode_j2k_gray(arr: np.ndarray, levels: int = 2,
         prec, signed = 16, True
     else:
         raise ValueError(f"dtype {arr.dtype} unsupported")
+    if delta is not None and not 0 < delta <= 1.0:
+        raise ValueError("delta must be in (0, 1]")
+    if qcd_style not in ("expounded", "derived"):
+        raise ValueError("qcd_style must be 'expounded' or 'derived'")
     if not 4 <= cblk_exp <= 6:
         # xcb + ycb <= 12 for square blocks (A.6.1); 64x64 is the max
         raise ValueError("code-block exponent must be in 4..6")
@@ -997,75 +1017,72 @@ def encode_j2k_gray(arr: np.ndarray, levels: int = 2,
                          "(single-precinct codestream layout)")
     if h * w > (1 << 26):
         # mirror of the decoder's allocation bound: encode and decode
-        # must accept the SAME domain, or the documented bit-exact
-        # roundtrip contract breaks for large-but-legitimate images
+        # must accept the SAME domain, or the documented roundtrip
+        # contract breaks for large-but-legitimate images
         raise ValueError(
             f"image {w}x{h} exceeds 2^26-sample encode bound"
         )
     levels = max(0, min(int(levels), 32))
 
-    samples = arr.astype(np.int64)
+    samples = arr.astype(np.int64 if delta is None else np.float64)
     if not signed:
         samples -= 1 << (prec - 1)  # DC level shift (Annex G)
-    resolutions = forward_dwt53(samples, levels)
-
-    guard = 2
-    # per-subband exponents; bump guard bits until Mb covers the data
-    sub_eps: list[int] = []
-    need_extra = 0
-    for r, bands in enumerate(resolutions):
-        for bi, band in enumerate(bands):
-            ori = 0 if r == 0 else bi + 1
-            eps = prec + _band_gain(ori)
-            sub_eps.append(eps)
-            actual = int(np.abs(band).max()) if band.size else 0
-            nb = actual.bit_length()
-            if nb > eps + guard - 1:
-                need_extra = max(need_extra, nb - (eps + guard - 1))
-    if guard + need_extra > 7:
-        # QCD guard-bit field is 3 bits (max 7); silently capping would
-        # emit an undecodable stream (negative zbp) — refuse loudly.
-        # Empirically unreachable for 5/3 at prec<=16 (worst measured
-        # 17 bits vs Mb=24), but corruption must never be silent.
-        raise ValueError(
-            f"coefficient growth needs {guard + need_extra} guard bits "
-            "(QCD max 7); input exceeds reversible-5/3 headroom"
+    if delta is None:
+        resolutions = forward_dwt53(samples, levels)
+        sub_eps = [
+            prec + _band_gain(0 if r == 0 else bi + 1)
+            for r, bands in enumerate(resolutions) for bi in range(len(bands))
+        ]
+        style, spqcd = 0, bytes(e << 3 for e in sub_eps)
+    else:
+        derived = qcd_style == "derived"
+        resolutions, sub_eps, spqcd = _quantize97(
+            forward_dwt97(samples, levels), prec, levels, delta, derived
         )
-    guard += need_extra
+        style = 1 if derived else 2
 
-    out = bytearray()
-    out += struct.pack(">H", _SOC)
-    # SIZ
+    # guard bits: grow from 2 until Mb = ε_b + guard − 1 covers every
+    # subband's largest magnitude (E.4.2)
+    bands = [b for res in resolutions for b in res]
+    need = max(int(np.abs(b).max()).bit_length() - e - 1 if b.size else 0
+               for b, e in zip(bands, sub_eps))
+    guard = 2 + max(0, need)
+    if guard > 7:
+        # the QCD guard-bit field is 3 bits; capping it would emit an
+        # undecodable stream (negative zbp). Empirically unreachable
+        # for 5/3 at prec<=16 (worst measured 17 bits vs Mb=24).
+        raise ValueError(
+            f"coefficient growth needs {guard} guard bits (QCD max 7); "
+            + ("input exceeds reversible-5/3 headroom" if delta is None
+               else "raise delta")
+        )
+
     siz = struct.pack(
-        ">HIIIIIIIIH", 0, w, h, 0, 0, w, h, 0, 0, 1
-    ) + struct.pack(">BBB", (0x80 if signed else 0) | (prec - 1), 1, 1)
-    out += struct.pack(">HH", _SIZ, len(siz) + 2) + siz
-    # COD: Scod=0, LRCP, 1 layer, no MCT; 5/3 reversible
-    cod = struct.pack(
-        ">BBHB", 0, 0, 1, 0
-    ) + struct.pack(">BBBBB", levels, cblk_exp - 2, cblk_exp - 2, 0, 1)
-    out += struct.pack(">HH", _COD, len(cod) + 2) + cod
-    # QCD: no quantization (reversible), guard bits, one byte/subband
-    qcd = bytes([(guard << 5) | 0]) + bytes(e << 3 for e in sub_eps)
-    out += struct.pack(">HH", _QCD, len(qcd) + 2) + qcd
-
+        ">HIIIIIIIIHBBB", 0, w, h, 0, 0, w, h, 0, 0, 1,
+        (0x80 if signed else 0) | (prec - 1), 1, 1,
+    )
+    # COD: Scod=0, LRCP, 1 layer, no MCT; transform 1 = 5/3, 0 = 9/7
+    cod = struct.pack(">BBHBBBBBB", 0, 0, 1, 0, levels, cblk_exp - 2,
+                      cblk_exp - 2, 0, int(delta is None))
+    qcd = bytes([(guard << 5) | style]) + spqcd
     body = _write_tile_body(resolutions, sub_eps, guard, cblk_exp)
-
-    psot = 12 + 2 + len(body)
-    out += struct.pack(">HHHIBB", _SOT, 10, 0, psot, 0, 1)
-    out += struct.pack(">H", _SOD)
-    out += body
-    out += struct.pack(">H", _EOC)
-    return bytes(out)
+    return b"".join([
+        struct.pack(">H", _SOC),
+        *(struct.pack(">HH", m, len(seg) + 2) + seg
+          for m, seg in ((_SIZ, siz), (_COD, cod), (_QCD, qcd))),
+        struct.pack(">HHHIBBH", _SOT, 10, 0, 12 + 2 + len(body), 0, 1, _SOD),
+        body,
+        struct.pack(">H", _EOC),
+    ])
 
 
 def _write_tile_body(resolutions: list[tuple[np.ndarray, ...]],
                      sub_eps: list[int], guard: int,
                      cblk_exp: int) -> bytearray:
     """Tier-2 tile body: one packet per resolution (LRCP, 1 layer, 1
-    precinct) over integer subband coefficients — shared by the
-    reversible (raw 5/3 coefficients) and irreversible (quantizer
-    indices) encoders; Mb per subband = ε_b + guard − 1 (E.4.2)."""
+    precinct) over integer subband coefficients — raw 5/3 coefficients
+    on the reversible path, quantizer indices on the irreversible one;
+    Mb per subband = ε_b + guard − 1 (E.4.2)."""
     body = bytearray()
     ei = 0
     for r, bands in enumerate(resolutions):
@@ -1159,152 +1176,46 @@ def _quant_fields(delta: float, r_b: int) -> tuple[int, int, float]:
     return eps, mu, (2.0 ** e) * (1.0 + mu / 2048.0)
 
 
-def encode_j2k_gray_lossy(arr: np.ndarray, levels: int = 2,
-                          delta: float = 1.0 / 64.0,
-                          qcd_style: str = "expounded") -> bytes:
-    """HxW uint8/uint16/int16 ndarray → IRREVERSIBLE (9/7) JPEG 2000
-    Part-1 codestream — the lossy path behind DICOM transfer syntax
-    1.2.840.10008.1.2.4.91 (the common lossy archival syntax the
-    reference reaches through pydicom, generate_images_from_dicom.py:
-    44-51). Float 9/7 DWT (Annex F.4.8), dead-zone scalar quantization
-    (E.4) with per-subband steps, the shared EBCOT Tier-1/2 machinery.
-
-    ``delta`` is the base quantization step relative to unit dynamic
-    range: the realized step per subband is
-    ``delta · 2^prec / L2gain_b``, so image-domain error is roughly
-    uniform across subbands and scales linearly with ``delta``
-    (reconstruction error ≤ ~delta · 2^prec per sample, measured in
-    tests). ``qcd_style``: 'expounded' (one (ε,μ) per subband, Sqcd
-    style 2) or 'derived' (one value, ε_b = ε_0 − N + n_b, style 1) —
-    both decode paths are exercised in tests."""
-    if arr.ndim != 2:
-        raise ValueError("encode_j2k_gray_lossy expects a 2-D array")
-    if arr.size == 0:
-        raise ValueError("empty image")
-    if arr.dtype == np.uint8:
-        prec, signed = 8, False
-    elif arr.dtype == np.uint16:
-        prec, signed = 16, False
-    elif arr.dtype == np.int16:
-        prec, signed = 16, True
-    else:
-        raise ValueError(f"dtype {arr.dtype} unsupported")
-    if not 0 < delta <= 1.0:
-        raise ValueError("delta must be in (0, 1]")
-    if qcd_style not in ("expounded", "derived"):
-        raise ValueError("qcd_style must be 'expounded' or 'derived'")
-    h, w = arr.shape
-    if h > 32768 or w > 32768:
-        raise ValueError("images beyond 32768 px/side unsupported "
-                         "(single-precinct codestream layout)")
-    if h * w > (1 << 26):
-        # mirror of the decoder's allocation bound (same domain as
-        # decode_j2k, see encode_j2k_gray)
-        raise ValueError(
-            f"image {w}x{h} exceeds 2^26-sample encode bound"
-        )
-    levels = max(0, min(int(levels), 32))
-
-    samples = arr.astype(np.float64)
-    if not signed:
-        samples -= 1 << (prec - 1)  # DC level shift (Annex G)
-    resolutions = forward_dwt97(samples, levels)
-
-    # per-subband steps. L2 gain of the 9/7 synthesis basis grows
-    # ~2× per synthesis level for LL and ~1× for the finest H bands;
-    # dividing the base step by the per-level gain equalizes the
-    # image-domain contribution of each subband's quantization noise.
+def _quantize97(resolutions: list[tuple[np.ndarray, ...]], prec: int,
+                levels: int, delta: float, derived: bool
+                ) -> tuple[list[tuple[np.ndarray, ...]], list[int], bytes]:
+    """Dead-zone scalar quantization of 9/7 subbands,
+    q = sign(c) · floor(|c| / Δ_b) (E.4.1) → (quantizer-index
+    resolutions, per-subband ε_b, QCD SPqcd bytes). The 9/7 synthesis
+    L2 gain grows ~2× per coarser level (the finest bands contribute
+    their noise directly), so the base step ``delta · 2^prec`` is
+    divided by 2^n_b, n_b = decomposition levels of subband b: each
+    subband's noise then weighs about the same in the image. 'derived'
+    signals one (ε_0, μ_0) and the decoder derives
+    Δ_b = 2^(R_b − ε_b)(1+μ_0/2^11) with ε_b = ε_0 − N + n_b
+    (E.4.2 eq E-5); 'expounded' signals one (ε_b, μ_b) per subband."""
     base = delta * (1 << prec)
-    if qcd_style == "derived":
-        # style 1: one (ε0, μ0); the decoder derives
-        # Δ_b = 2^(R_b − ε_b)(1+μ/2^11) with ε_b = ε_0 − N + n_b,
-        # n_b = decomposition levels of subband b (E.4.2 eq E-5)
-        r0 = prec + _band_gain(0)
-        eps0, mu0, _d0 = _quant_fields(base / (1 << levels), r0)
+    fields = []
+    if derived:
+        eps0, mu0, _d0 = _quant_fields(base / (1 << levels),
+                                       prec + _band_gain(0))
         if eps0 - levels < 0 or eps0 > 31:
             raise ValueError("derived quantization exponent out of "
                              "range for this level count")
-        qcd_fields = [(eps0, mu0)]
-        deltas, sub_eps = [], []
-        ei = 0
-        for r, bands in enumerate(resolutions):
-            for bi, _band in enumerate(bands):
-                ori = 0 if r == 0 else bi + 1
-                nb_lvl = levels - (0 if r == 0 else r - 1)
-                eps_b = eps0 - levels + nb_lvl
-                r_b = prec + _band_gain(ori)
-                deltas.append(
-                    (2.0 ** (r_b - eps_b)) * (1.0 + mu0 / 2048.0)
-                )
-                sub_eps.append(eps_b)
-                ei += 1
-    else:
-        qcd_fields, deltas, sub_eps = [], [], []
-        for r, bands in enumerate(resolutions):
-            # synthesis L2 gain per level: finest bands contribute
-            # their noise directly; coarser levels amplify ~2×/level
-            lvl_gain = 1 << (levels - (0 if r == 0 else r - 1))
-            for bi, _band in enumerate(bands):
-                ori = 0 if r == 0 else bi + 1
-                r_b = prec + _band_gain(ori)
-                eps_b, mu_b, d_b = _quant_fields(base / lvl_gain, r_b)
-                qcd_fields.append((eps_b, mu_b))
-                deltas.append(d_b)
-                sub_eps.append(eps_b)
-
-    # quantize: q = sign(c) · floor(|c| / Δ_b)  (dead-zone, E.4.1)
-    guard = 2
-    need_extra = 0
-    q_res: list[tuple[np.ndarray, ...]] = []
-    di = 0
+        fields.append((eps0, mu0))
+    q_res, sub_eps = [], []
     for r, bands in enumerate(resolutions):
+        n_b = levels - (0 if r == 0 else r - 1)
         qbands = []
-        for band in bands:
-            d_b = deltas[di]
-            q = (np.sign(band)
-                 * np.floor(np.abs(band) / d_b)).astype(np.int64)
-            qbands.append(q)
-            nb = int(np.abs(q).max()).bit_length() if q.size else 0
-            eps_b = sub_eps[di]
-            if nb > eps_b + guard - 1:
-                need_extra = max(need_extra, nb - (eps_b + guard - 1))
-            di += 1
+        for bi, band in enumerate(bands):
+            r_b = prec + _band_gain(0 if r == 0 else bi + 1)
+            if derived:
+                eps_b = eps0 - levels + n_b
+                d_b = (2.0 ** (r_b - eps_b)) * (1.0 + mu0 / 2048.0)
+            else:
+                eps_b, mu_b, d_b = _quant_fields(base / (1 << n_b), r_b)
+                fields.append((eps_b, mu_b))
+            sub_eps.append(eps_b)
+            qbands.append((np.sign(band)
+                           * np.floor(np.abs(band) / d_b)).astype(np.int64))
         q_res.append(tuple(qbands))
-    if guard + need_extra > 7:
-        raise ValueError(
-            f"quantizer indices need {guard + need_extra} guard bits "
-            "(QCD max 7); raise delta"
-        )
-    guard += need_extra
-
-    out = bytearray()
-    out += struct.pack(">H", _SOC)
-    siz = struct.pack(
-        ">HIIIIIIIIH", 0, w, h, 0, 0, w, h, 0, 0, 1
-    ) + struct.pack(">BBB", (0x80 if signed else 0) | (prec - 1), 1, 1)
-    out += struct.pack(">HH", _SIZ, len(siz) + 2) + siz
-    # COD: tform=0 → irreversible 9/7
-    cod = struct.pack(
-        ">BBHB", 0, 0, 1, 0
-    ) + struct.pack(
-        ">BBBBB", levels, _DEFAULT_CBLK - 2, _DEFAULT_CBLK - 2, 0, 0
-    )
-    out += struct.pack(">HH", _COD, len(cod) + 2) + cod
-    # QCD: style 1 (derived) or 2 (expounded), 16-bit (ε<<11|μ) fields
-    style = 1 if qcd_style == "derived" else 2
-    qcd = bytes([(guard << 5) | style]) + b"".join(
-        struct.pack(">H", (e << 11) | m) for e, m in qcd_fields
-    )
-    out += struct.pack(">HH", _QCD, len(qcd) + 2) + qcd
-
-    body = _write_tile_body(q_res, sub_eps, guard, _DEFAULT_CBLK)
-
-    psot = 12 + 2 + len(body)
-    out += struct.pack(">HHHIBB", _SOT, 10, 0, psot, 0, 1)
-    out += struct.pack(">H", _SOD)
-    out += body
-    out += struct.pack(">H", _EOC)
-    return bytes(out)
+    spqcd = b"".join(struct.pack(">H", (e << 11) | m) for e, m in fields)
+    return q_res, sub_eps, spqcd
 
 
 def decode_j2k(data: bytes) -> np.ndarray:

@@ -44,6 +44,9 @@ import struct
 
 import numpy as np
 
+from .jpeg import (SOS, gray_sof, parse_sof, parse_sos, read_segments,
+                   write_segments)
+
 # geometric run-length code order table, T.87 A.7.1.1
 J = [0, 0, 0, 0, 1, 1, 1, 1, 2, 2, 2, 2, 3, 3, 3, 3,
      4, 4, 5, 5, 6, 6, 7, 7, 8, 9, 10, 11, 12, 13, 14, 15]
@@ -51,10 +54,8 @@ J = [0, 0, 0, 0, 1, 1, 1, 1, 2, 2, 2, 2, 3, 3, 3, 3,
 _RESET_DEFAULT = 64
 _MIN_C, _MAX_C = -128, 127
 
-_SOI, _EOI = 0xD8, 0xD9
 _SOF55 = 0xF7  # JPEG-LS frame
 _LSE = 0xF8    # JPEG-LS preset parameters
-_SOS = 0xDA
 
 
 def _clamp(v: int, lo: int, hi: int) -> int:
@@ -561,20 +562,11 @@ def encode_jpegls_gray(arr: np.ndarray, near: int = 0) -> bytes:
         raise ValueError("NEAR out of range")
     h, w_ = arr.shape
     p = _Params((1 << prec) - 1, near)
-    scan = _encode_scan(arr.astype(np.int64), p)
-    out = bytearray()
-    out += bytes([0xFF, _SOI])
-    # SOF55: Lf=11 for one component
-    out += bytes([0xFF, _SOF55]) + struct.pack(
-        ">HBHHB", 11, prec, h, w_, 1
-    ) + bytes([1, 0x11, 0])
-    # SOS: Ls=8 for one component; NEAR; ILV=0; point transform 0
-    out += bytes([0xFF, _SOS]) + struct.pack(">HB", 8, 1) + bytes(
-        [1, 0, near, 0, 0]
-    )
-    out += scan
-    out += bytes([0xFF, _EOI])
-    return bytes(out)
+    return write_segments([
+        (_SOF55, gray_sof(prec, h, w_)),
+        # one component, table 0; NEAR; ILV=0; point transform 0
+        (SOS, bytes([1, 1, 0, near, 0, 0])),
+    ], _encode_scan(arr.astype(np.int64), p))
 
 
 def decode_jpegls(data: bytes,
@@ -583,86 +575,47 @@ def decode_jpegls(data: bytes,
     With ``return_near=True`` returns ``(array, NEAR)`` so callers
     (the DICOM layer) can reject a near-lossless stream inside a
     lossless transfer syntax."""
-    if len(data) < 4 or data[0] != 0xFF or data[1] != _SOI:
-        raise ValueError("not a JPEG-LS stream (missing SOI)")
-    pos = 2
-    prec = h = w_ = None
-    maxval = None
-    t1 = t2 = t3 = None
+    segs, scan_pos = read_segments(data, "JPEG-LS")
+    frame = None
+    maxval = t1 = t2 = t3 = None
     reset = _RESET_DEFAULT
-    n = len(data)
-    while True:
-        if pos + 2 > n:
-            raise ValueError("truncated JPEG-LS stream")
-        if data[pos] != 0xFF:
-            raise ValueError("JPEG-LS marker expected")
-        pos += 1
-        while pos < n and data[pos] == 0xFF:  # legal fill bytes
-            pos += 1
-        if pos >= n:
-            raise ValueError("truncated JPEG-LS stream")
-        marker = data[pos]
-        pos += 1
-        if marker == _EOI:
-            raise ValueError("JPEG-LS EOI before SOS")
-        if pos + 2 > n:
-            raise ValueError("truncated JPEG-LS stream")
-        (ln,) = struct.unpack(">H", data[pos:pos + 2])
-        seg_end = pos + ln
-        if seg_end > n:
-            raise ValueError("truncated JPEG-LS segment")
-        body = data[pos + 2:seg_end]
+    for marker, body in segs[:-1]:
         if marker == _SOF55:
-            if len(body) < 9:
-                raise ValueError("truncated JPEG-LS SOF55 segment")
-            prec = body[0]
-            h, w_ = struct.unpack(">HH", body[1:5])
-            nf = body[5]
-            if nf != 1:
+            frame = parse_sof(body, "JPEG-LS")
+            prec, h, w_, comps = frame
+            if len(comps) != 1:
                 raise ValueError(
-                    f"JPEG-LS with {nf} components unsupported "
+                    f"JPEG-LS with {len(comps)} components unsupported "
                     "(monochrome DICOM is single-component; install "
                     "pydicom for color)"
                 )
-            if body[7] != 0x11:
+            if comps[0][1:3] != (1, 1):
                 raise ValueError("JPEG-LS subsampling unsupported")
             if not 2 <= prec <= 16:
                 raise ValueError(f"JPEG-LS precision {prec} invalid")
         elif marker == _LSE:
             if len(body) < 11:
                 raise ValueError("truncated JPEG-LS LSE segment")
-            if body[0] == 1:
-                maxval, t1, t2, t3, reset = struct.unpack(
-                    ">HHHHH", body[1:11]
-                )
-            else:
+            if body[0] != 1:
                 raise ValueError(
                     f"JPEG-LS LSE ID {body[0]} unsupported "
                     "(mapping tables / extended dimensions)"
                 )
-        elif marker == _SOS:
-            if prec is None:
-                raise ValueError("JPEG-LS SOS before SOF55")
-            if len(body) < 6:
-                raise ValueError("truncated JPEG-LS SOS segment")
-            ns = body[0]
-            if ns != 1:
-                raise ValueError("JPEG-LS multi-component scan "
-                                 "unsupported")
-            near = body[1 + 2 * ns]
-            ilv = body[2 + 2 * ns]
-            if ilv != 0:
-                raise ValueError("JPEG-LS interleave unsupported")
-            if body[3 + 2 * ns] != 0:
-                raise ValueError("JPEG-LS point transform unsupported")
-            mv = maxval if maxval else (1 << prec) - 1
-            p = _Params(mv, near, t1, t2, t3, reset)
-            rdr = _LsBitReader(data, seg_end)
-            img = _decode_scan(rdr, p, h, w_)
-            dt = np.uint8 if mv < 256 else np.uint16
-            arr = img.astype(dt)
-            return (arr, near) if return_near else arr
+            maxval, t1, t2, t3, reset = struct.unpack(">HHHHH", body[1:11])
         elif 0xD0 <= marker <= 0xD7:
             raise ValueError("JPEG-LS restart markers unsupported")
         # APPn / COM: skip
-        pos = seg_end
+    if frame is None:
+        raise ValueError("JPEG-LS SOS before SOF55")
+    scan, near, ilv, ahal = parse_sos(segs[-1][1], "JPEG-LS")
+    if len(scan) != 1:
+        raise ValueError("JPEG-LS multi-component scan unsupported")
+    if ilv != 0:
+        raise ValueError("JPEG-LS interleave unsupported")
+    if ahal != 0:
+        raise ValueError("JPEG-LS point transform unsupported")
+    mv = maxval if maxval else (1 << prec) - 1
+    p = _Params(mv, near, t1, t2, t3, reset)
+    img = _decode_scan(_LsBitReader(data, scan_pos), p, h, w_)
+    arr = img.astype(np.uint8 if mv < 256 else np.uint16)
+    return (arr, near) if return_near else arr

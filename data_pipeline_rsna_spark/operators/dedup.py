@@ -649,10 +649,11 @@ def minhash_lsh_candidates_adaptive(
 # ---------------------------------------------------------------------------
 
 SIMHASH_BITS = 32  # one bit per md5 hex digit (md5 has 32 hex digits)
+SIMHASH_SHINGLE_N = 3  # words per shingle
 
 
-def simhash(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
-            shingle_n: int = 3) -> DataFrame:
+def simhash(docs: DataFrame, id_col: str = "doc_id",
+            text_col: str = "text") -> DataFrame:
     """32-bit SimHash per document over its distinct shingle set.
 
     Bit j of shingle s = msb of hex digit j of md5(s) (± vote); document
@@ -661,9 +662,9 @@ def simhash(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
     every document contains nearly every token, which would collapse all
     token-based signatures onto one value; 3-gram shingle sets stay
     document-specific."""
-    sh = exploded_shingles(docs, id_col, text_col, shingle_n).withColumn(
-        "h", F.md5("shingle")
-    )
+    sh = exploded_shingles(
+        docs, id_col, text_col, SIMHASH_SHINGLE_N
+    ).withColumn("h", F.md5("shingle"))
     # One groupBy(doc) with 32 vote-sum aggregations (map-side partial
     # agg) instead of a 32× row explode + two shuffles: the single
     # shuffle moves |docs| rows of 32 ints, independent of doc length.

@@ -73,6 +73,7 @@ EXECUTING_QUERIES = frozenset({
     "events_slo_burn_streaming",
     "orc_sink_roundtrip",
     "tfrecord_scan_roundtrip",
+    "dicom_png_export_counts",
 })
 
 # the set above is easy to let drift as queries are added; pin it
@@ -3137,8 +3138,6 @@ def q_events_props_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("multimodal", "core"),
 )
 def q_dicom_png_export(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pathlib
-
     from .operators import multimodal as mm
     from .sinks.images import write_png_dir
 
@@ -3157,12 +3156,12 @@ def q_dicom_png_export(spark: SparkSession, sf_dir: str) -> DataFrame:
         decoded.select("img_id"), "img_id"
     ).select("img_id", "split")
     with_split = decoded.join(split, "img_id")
-    out_root = pathlib.Path("/tmp/spark_graft_out")
+    out_root = _scratch_dir("dicom_png_")
     manifests = []
     for s in ("train", "val"):
         m = write_png_dir(
             with_split.filter(F.col("split") == s).drop("split"),
-            str(out_root / f"dicom_png_{s}"),
+            f"{out_root}/{s}",
         )
         manifests.append(m.withColumn("split", F.lit(s)))
     manifest = manifests[0].unionByName(manifests[1])
@@ -4440,7 +4439,9 @@ def q_events_attribution_streaming(spark: SparkSession, sf_dir: str) -> DataFram
     from .streaming import events_stream as es
 
     stream = es.read_events_stream(spark, sf_dir)
-    return es.run_bounded(es.attribution_join_stream(stream), mode="append")
+    return es.run_bounded(
+        es.attribution_join_stream(stream, how="inner"), mode="append"
+    )
 
 
 @register(
@@ -7276,7 +7277,7 @@ def q_events_attribution_outer_streaming(
 
     stream = es.read_events_stream_with_flush(spark, sf_dir)
     return es.run_bounded(
-        es.attribution_left_outer_stream(stream), mode="append"
+        es.attribution_join_stream(stream, how="left_outer"), mode="append"
     ).filter(F.col("click_id") >= 0)
 
 
@@ -11668,7 +11669,7 @@ def q_events_attribution_full_outer_streaming(
 
     stream = es.read_events_stream_with_flush(spark, sf_dir)
     out = es.run_bounded(
-        es.attribution_full_outer_stream(stream), mode="append"
+        es.attribution_join_stream(stream, how="full_outer"), mode="append"
     )
     # drop the sentinel rows (event_id = -1 on either side)
     return out.filter(

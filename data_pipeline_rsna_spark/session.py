@@ -65,18 +65,16 @@ def get_spark(
         # --- adaptive execution: re-plan with runtime statistics ---
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        # parallelismFirst=true (Spark's default): coalesce no further
-        # than default parallelism. Round 8 set this to false (coalesce
-        # to the 64 MB advisory target) to avoid scheduling near-empty
-        # tasks; round 11 re-measured both across 14 queries at sf0.1
-        # and false LOST 7 s of 26 (CPU-bound mid-pipeline shuffles —
-        # distinct aggs over fan-outs, n-gram explodes, cogroup — were
-        # coalesced to a handful of tasks because their on-disk shuffle
-        # bytes compress far below 64 MB/core, serializing the CPU
-        # work; near-empty-task overhead is bounded by floor_s ≈ 0.03).
-        # No query measured worse under true. At cluster scale large
-        # shuffles exceed cores×64 MB either way, so this only affects
-        # the small-shuffle regime where parallelism matters more.
+        # parallelismFirst=true (Spark's default): coalesce no further than
+        # default parallelism. false (coalesce to the 64 MB advisory target)
+        # avoids scheduling near-empty tasks, but measured across 14 queries at
+        # sf0.1 it LOST 7 s of 26 (CPU-bound mid-pipeline shuffles — distinct
+        # aggs over fan-outs, n-gram explodes, cogroup — were coalesced to a
+        # handful of tasks because their on-disk shuffle bytes compress far
+        # below 64 MB/core, serializing the CPU work; near-empty-task overhead
+        # is bounded by floor_s ≈ 0.03). No query measured worse under true. At
+        # cluster scale large shuffles exceed cores×64 MB either way, so this
+        # only affects the small-shuffle regime where parallelism matters more.
         .config(
             "spark.sql.adaptive.coalescePartitions.parallelismFirst",
             "true",
@@ -86,7 +84,7 @@ def get_spark(
         # side's largest post-shuffle partition fits this threshold,
         # AQE swaps the sort-merge join for a hash join (skips both
         # sides' sorts; SHJ spills since 3.1 so the bound is a cost
-        # knob, not a correctness cliff). Measured round 9: the sf10
+        # knob, not a correctness cliff). Measured: the sf10
         # lineitem x filtered-orders join 9.9 -> 8.5 s. Broadcast
         # decisions and bucketed (exchange-free) joins are untouched —
         # the rule only rewrites real shuffle joins at runtime sizes.
@@ -100,15 +98,15 @@ def get_spark(
             shuffle_partitions or _DEFAULT_SHUFFLE_PARTITIONS,
         )
         # --- scan split sizing: keep Spark's 128 MB default ---
-        # Round 8 tested 32 MB byte-range splits against the default on
+        # 32 MB byte-range splits were tested against the default on
         # single-big-file tables at a 100x local SF (the regime where a
         # 110 MB parquet scans as one task): an interleaved same-session
         # A/B showed NO measurable difference on any scan-bound headline
         # query — the single scan task reads 110 MB in well under the
         # query's shuffle+floor cost. At 100 TB input is thousands of
         # files and split count is file-count bound anyway. Measured,
-        # not assumed (SCALING.md round 8).
-        # Round 10 refinement: that result holds for LOW-compression
+        # not assumed (SCALING.md).
+        # That result holds only for LOW-compression
         # tables (events: 40 B numeric rows). Text tables compress ~33:1
         # and Spark sizes splits by ON-DISK bytes, so a 148 MB-decoded
         # documents scan arrived as 4.5 MB on disk = TWO tasks. The

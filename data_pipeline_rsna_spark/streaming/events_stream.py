@@ -27,6 +27,7 @@ from ..tables import events_ts_kind, normalize_events_ts
 WATERMARK = "2 hours"
 ATTRIBUTION_WATERMARK = "4 hours"
 SESSION_GAP_SECONDS = 1800
+SESSION_GAP = f"{SESSION_GAP_SECONDS} seconds"
 
 
 def _source_schema(staged_dir: str):
@@ -72,14 +73,13 @@ def read_events_stream(spark: SparkSession, sf_dir: str,
     return normalize_events_ts(reader.parquet(staged))
 
 
-def hourly_type_agg_stream(events: DataFrame,
-                           watermark: str = "2 hours") -> DataFrame:
+def hourly_type_agg_stream(events: DataFrame) -> DataFrame:
     """Streaming twin of ``operators.events.hourly_type_agg``: tumbling
     1-hour windows per event type, late rows beyond the watermark
     dropped. State per key = one (window, type) row — bounded by
     watermark horizon, not stream length."""
     return (
-        events.withWatermark("ts", watermark)
+        events.withWatermark("ts", WATERMARK)
         .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(
             F.count("*").alias("n"),
@@ -137,18 +137,17 @@ def run_bounded_to_parquet(
                 os.path.join(out_dir, f"batch_id={batch_id}")
             )
 
-    # ``state_partitions`` sizes the stream's STATE sharding (baked
-    # into the checkpoint at first batch). Decomposed round 11
-    # (VERDICT r10 #6): a bounded replay's per-batch cost is dominated
-    # by state-store commits — a ZERO-row micro-batch still cost 4.0 s
-    # at 32 partitions (32 × 4 join state stores each committing
-    # checkpoint files per batch), while the equivalent batch join
-    # computes in 0.8 s. Partition count never changes results, only
-    # state layout: the full-outer attribution replay measured 17.4 s
-    # @32 / 10.4 s @8 / 9.2 s @4, identical output. A production
-    # (unbounded) stream sizes this to state volume; a bounded replay's
-    # state is tiny by construction. Set-and-restore around the drive:
-    # the conf is session-global but only read at stream start.
+    # ``state_partitions`` sizes the stream's STATE sharding (baked into the
+    # checkpoint at first batch). A bounded replay's per-batch cost is
+    # dominated by state-store commits — a ZERO-row micro-batch still cost
+    # 4.0 s at 32 partitions (32 × 4 join state stores each committing
+    # checkpoint files per batch), while the equivalent batch join computes
+    # in 0.8 s. Partition count never changes results, only state layout:
+    # the full-outer attribution replay measured 17.4 s @32 / 10.4 s @8 /
+    # 9.2 s @4, identical output. A production (unbounded) stream sizes this
+    # to state volume; a bounded replay's state is tiny by construction.
+    # Set-and-restore around the drive: the conf is session-global but only
+    # read at stream start.
     spark = agg.sparkSession
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     if state_partitions is not None:
@@ -263,18 +262,17 @@ def _prune_stale_roots(base: str) -> None:
         pass
 
 
-def session_agg_stream(events: DataFrame, gap: str = "30 minutes",
-                       watermark: str = "2 hours") -> DataFrame:
+def session_agg_stream(events: DataFrame) -> DataFrame:
     """Session-window aggregation (X6): events of a user merge into one
-    session while consecutive gaps stay under ``gap``. ``session_window``
-    is Spark's native merging-window state machine — state per key is one
-    open session, closed (and emitted, in append mode) once the watermark
-    passes session_end. The same expression runs in BATCH mode too, which
-    is what the stream-batch equivalence test exploits: one definition,
-    two execution models."""
+    session while consecutive gaps stay under ``SESSION_GAP``.
+    ``session_window`` is Spark's native merging-window state machine —
+    state per key is one open session, closed (and emitted, in append mode)
+    once the watermark passes session_end. The same expression runs in BATCH
+    mode too, which is what the stream-batch equivalence test exploits: one
+    definition, two execution models."""
     return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.session_window("ts", gap).alias("w"), "user_id")
+        events.withWatermark("ts", WATERMARK)
+        .groupBy(F.session_window("ts", SESSION_GAP).alias("w"), "user_id")
         .agg(
             F.count("*").alias("n_events"),
             F.round(F.sum("value"), 2).alias("sum_value"),
@@ -294,7 +292,7 @@ def session_agg_batch(events: DataFrame) -> DataFrame:
     no watermark (bounded input needs none)."""
     return (
         events.groupBy(
-            F.session_window("ts", "30 minutes").alias("w"), "user_id"
+            F.session_window("ts", SESSION_GAP).alias("w"), "user_id"
         )
         .agg(
             F.count("*").alias("n_events"),
@@ -348,7 +346,7 @@ def user_running_totals_stream(events: DataFrame) -> DataFrame:
 
 
 def attribution_join_stream(events: DataFrame,
-                            watermark: str = "4 hours") -> DataFrame:
+                            how: str = "inner") -> DataFrame:
     """Stream-stream interval join (X6): attribute click events to any
     purchase of the same user in the preceding 2 hours — the streaming
     twin of the batch range join (queries.range_join_attribution).
@@ -358,6 +356,17 @@ def attribution_join_stream(events: DataFrame,
     retains only rows inside watermark + interval horizon, then evicts.
     Unbounded-state stream joins (no time bound) are rejected by the
     engine — the time bound IS the scalability contract.
+
+    ``how`` is "inner", "left_outer" or "full_outer". The outer joins
+    are the subtle part of streaming joins: an unmatched row cannot be
+    emitted eagerly (its match may be in flight), so Spark holds it in
+    state and emits it null-padded only when the OTHER side's watermark
+    passes the join horizon — watermark-delayed, never lost. Left outer
+    emits every click exactly once; full outer also emits every
+    purchase that attracted no click inside its 2-hour window (the
+    "campaign spent, nobody came" rows a marketing feed needs), which
+    is why user_id coalesces across sides. Matched rows are the same
+    under all three.
     """
     clicks = (
         events.filter(F.col("event_type") == "click")
@@ -366,7 +375,7 @@ def attribution_join_stream(events: DataFrame,
             F.col("user_id").alias("c_user"),
             F.col("ts").alias("click_ts"),
         )
-        .withWatermark("click_ts", watermark)
+        .withWatermark("click_ts", ATTRIBUTION_WATERMARK)
     )
     purchases = (
         events.filter(F.col("event_type") == "purchase")
@@ -375,7 +384,7 @@ def attribution_join_stream(events: DataFrame,
             F.col("user_id").alias("p_user"),
             F.col("ts").alias("purchase_ts"),
         )
-        .withWatermark("purchase_ts", watermark)
+        .withWatermark("purchase_ts", ATTRIBUTION_WATERMARK)
     )
     return clicks.join(
         purchases,
@@ -386,8 +395,11 @@ def attribution_join_stream(events: DataFrame,
             click_ts < purchase_ts + INTERVAL 2 HOURS
             """
         ),
+        how,
     ).select(
-        "click_id", "purchase_id", F.col("c_user").alias("user_id")
+        "click_id",
+        "purchase_id",
+        F.coalesce(F.col("c_user"), F.col("p_user")).alias("user_id"),
     )
 
 
@@ -438,56 +450,6 @@ def dedup_counts_stream(events: DataFrame) -> DataFrame:
     )
 
 
-def attribution_left_outer_stream(events: DataFrame) -> DataFrame:
-    """Stream-stream LEFT OUTER interval join: every click emits exactly
-    once — joined to qualifying purchases when they exist, or with NULL
-    purchase columns once the watermark guarantees no match can still
-    arrive.
-
-    The outer semantics is the subtle part of streaming joins: an
-    unmatched left row cannot be emitted eagerly (its match may be in
-    flight), so Spark holds it in state and emits the null-padded row
-    only when the purchase-side watermark passes the join horizon.
-    Event-time bounds on BOTH sides remain mandatory — they are what
-    lets the state store evict; the null emission is therefore
-    watermark-delayed, never lost. Matched rows behave exactly as in
-    the inner join.
-    """
-    clicks = (
-        events.filter(F.col("event_type") == "click")
-        .select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id").alias("c_user"),
-            F.col("ts").alias("click_ts"),
-        )
-        .withWatermark("click_ts", ATTRIBUTION_WATERMARK)
-    )
-    purchases = (
-        events.filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id").alias("p_user"),
-            F.col("ts").alias("purchase_ts"),
-        )
-        .withWatermark("purchase_ts", ATTRIBUTION_WATERMARK)
-    )
-    return clicks.join(
-        purchases,
-        F.expr(
-            """
-            c_user = p_user AND
-            click_ts >= purchase_ts AND
-            click_ts < purchase_ts + INTERVAL 2 HOURS
-            """
-        ),
-        "left_outer",
-    ).select(
-        "click_id",
-        "purchase_id",
-        F.col("c_user").alias("user_id"),
-    )
-
-
 def read_events_stream_with_flush(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Events stream plus a far-future SENTINEL (one click + one
     purchase, event_id = -1, 30 days past the real data) staged as a
@@ -502,8 +464,8 @@ def read_events_stream_with_flush(spark: SparkSession, sf_dir: str) -> DataFrame
     ``event_id >= 0`` (sentinel rows never join: no real user -1
     exists).
 
-    Round 12 (guide §5, VERDICT r11 #8): no ``maxFilesPerTrigger=1``
-    here — both files land in ONE data micro-batch. Watermarks advance
+    No ``maxFilesPerTrigger=1`` here — both files land in ONE data
+    micro-batch. Watermarks advance
     BETWEEN batches from the previous batch's max event time, so the
     ordering the sentinel exists for is preserved: batch 0 joins with
     watermark 0 (everything held, matches emitted), the engine then
@@ -511,9 +473,8 @@ def read_events_stream_with_flush(spark: SparkSession, sf_dir: str) -> DataFrame
     (``noDataMicroBatches``, on by default) that flushes every
     unmatched outer row and evicts state. Output is batch-identical;
     the replay pays 2 batches of state-store commits instead of 3
-    (per-batch commit cost is the replay floor — the r11
-    decomposition measured a zero-row batch at 4.0 s / 32 state
-    partitions). The cross-batch DEDUP replay twin
+    (per-batch commit cost is the replay floor — a zero-row batch
+    measured 4.0 s at 32 state partitions). The cross-batch DEDUP replay twin
     (``read_events_stream_duplicated``) keeps its one-file-per-trigger
     staging — arriving in separate batches is its semantics.
     """
@@ -693,55 +654,6 @@ def session_finalizer_stream(events: DataFrame) -> DataFrame:
             outputMode="append",
             timeoutConf=GroupStateTimeout.EventTimeTimeout,
         )
-    )
-
-
-def attribution_full_outer_stream(events: DataFrame) -> DataFrame:
-    """Stream-stream FULL OUTER interval join — both directions of the
-    outer contract at once: every click emits exactly once (matched or
-    null-padded like the left-outer variant), AND every purchase that
-    attracted no click inside its 2-hour window emits null-padded too
-    (the "campaign spent, nobody came" rows a marketing feed needs).
-
-    State/eviction mechanics are identical to the one-sided outer: both
-    sides are watermarked, the interval bounds the retained horizon,
-    and each side's null emission waits for the OTHER side's watermark
-    to prove no match can still arrive. The only semantic addition is
-    that unmatched RIGHT rows also survive — which is why user_id must
-    coalesce across sides.
-    """
-    clicks = (
-        events.filter(F.col("event_type") == "click")
-        .select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id").alias("c_user"),
-            F.col("ts").alias("click_ts"),
-        )
-        .withWatermark("click_ts", ATTRIBUTION_WATERMARK)
-    )
-    purchases = (
-        events.filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id").alias("p_user"),
-            F.col("ts").alias("purchase_ts"),
-        )
-        .withWatermark("purchase_ts", ATTRIBUTION_WATERMARK)
-    )
-    return clicks.join(
-        purchases,
-        F.expr(
-            """
-            c_user = p_user AND
-            click_ts >= purchase_ts AND
-            click_ts < purchase_ts + INTERVAL 2 HOURS
-            """
-        ),
-        "full_outer",
-    ).select(
-        "click_id",
-        "purchase_id",
-        F.coalesce(F.col("c_user"), F.col("p_user")).alias("user_id"),
     )
 
 

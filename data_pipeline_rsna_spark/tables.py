@@ -112,7 +112,7 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 
 def _tune_scan_splits(spark: SparkSession, path: str) -> None:
-    """Decoded-size-aware scan split sizing (round 10).
+    """Decoded-size-aware scan split sizing.
 
     Spark sizes file splits by ON-DISK bytes
     (``spark.sql.files.maxPartitionBytes``, floored per-split by
@@ -139,7 +139,7 @@ def _tune_scan_splits(spark: SparkSession, path: str) -> None:
     documents scan with a lineitem scan plans both under one conf
     value, so true per-read scoping is impossible (verified: pyspark
     4.1.2 ignores `openCostInBytes`/`maxPartitionBytes` as
-    DataFrameReader options). Accepted contract (round 11): the tuner
+    DataFrameReader options). Accepted contract: the tuner
     is non-monotone — each FANOUT-table load sets the floor to
     ``min(needed, session baseline)`` and RESTORES the baseline when
     the table doesn't need a lowered floor, so the last fanout load
@@ -153,11 +153,10 @@ def _tune_scan_splits(spark: SparkSession, path: str) -> None:
     the ``totalBytes/cores`` term already adapts split size per TABLE,
     so a big low-compression table (lineitem: 1.4 GB → 43 MB/core)
     keeps its sizing no matter what this sets — the ONLY thing that
-    serializes a small-on-disk compressed text scan is the 4 MB
-    openCost floor. (The first r10 draft lowered maxPartitionBytes
-    session-wide; at sf10 that shattered every LATER lineitem scan
-    into ~1500 sub-MB tasks — measured as inflated three-way/pricing
-    rows in the same bench JVM. Lowering the floor instead is
+    serializes a small-on-disk compressed text scan is the 4 MB openCost floor.
+    (Lowering maxPartitionBytes session-wide instead shattered every LATER sf10
+    lineitem scan into ~1500 sub-MB tasks — measured as inflated
+    three-way/pricing rows in the same bench JVM. Lowering the floor instead is
     per-table-safe by construction.) Only ``documents``-class tables
     (FANOUT_TABLES) trigger the check.
     """
@@ -173,10 +172,9 @@ def _tune_scan_splits(spark: SparkSession, path: str) -> None:
     def _restore():
         # every this-table-needs-no-lowering exit RESTORES the session
         # baseline rather than leaving a previous table's lower value
-        # in place (round 11: the first version only ever lowered, a
-        # monotone ratchet that silently re-partitioned every later
-        # scan in the session — and its first fix restored on only ONE
-        # of the three early exits; ADVICE r10 + r11 review)
+        # in place: a tuner that only ever lowered would be a monotone
+        # ratchet silently re-partitioning every later scan in the
+        # session, so all three early exits restore
         spark.conf.set("spark.sql.files.openCostInBytes", str(baseline))
 
     files = sorted(p.glob("*.parquet")) if p.is_dir() else [p]
@@ -232,8 +230,8 @@ def _parse_size_bytes(value: object) -> int | None:
     multiples, case-insensitive, bare number = bytes). Returns None on
     anything un-parseable instead of raising — the tuner is an
     optimization and must never break ``tables.load`` because a user
-    set the conf with a suffix (round 11, ADVICE r10: the old
-    ``int(str(v).rstrip('b'))`` raised ValueError on '4m')."""
+    set the conf with a suffix (a plain ``int(str(v).rstrip('b'))``
+    raises ValueError on '4m')."""
     s = str(value).strip().lower()
     m = re.fullmatch(r"(\d+)\s*([a-z]*)", s)
     if not m or m.group(2) not in _SIZE_SUFFIXES:

@@ -579,21 +579,31 @@ def test_dicom_jpegls_near_syntax_and_lossless_mismatch_rejected():
         C.decode_dicom_gray(tampered)
 
 
-def test_jpegls_mutated_streams_raise_valueerror_never_crash():
+@pytest.mark.parametrize("codec", ["jpegls", "baseline", "lossless"])
+def test_jpegls_mutated_streams_raise_valueerror_never_crash(codec):
     """Seeded byte-mutation fuzz: corrupt streams must either decode
     (mutation hit a don't-care bit) or raise ValueError — never
-    IndexError/struct.error (the jpeg.py r7 contract, extended to
-    JPEG-LS; a truncated-segment IndexError was found exactly this
-    way)."""
-    img = np.random.default_rng(0).integers(0, 65536, (9, 9)).astype(np.uint16)
-    enc = bytearray(LS.encode_jpegls_gray(img))
+    IndexError/KeyError/OverflowError/ZeroDivisionError/struct.error.
+    All three decoders walk their headers with the one marker-segment
+    reader, so a truncated segment, a DHT whose counts exceed its
+    values, an undefined table or component at SOS, an out-of-range
+    category or a zero sampling factor each fail with a named error."""
+    encode, decode, dt, hi = {
+        "jpegls": (LS.encode_jpegls_gray, LS.decode_jpegls, np.uint16, 65536),
+        "baseline": (J.encode_jpeg_baseline_gray, J.decode_jpeg_baseline,
+                     np.uint8, 256),
+        "lossless": (J.encode_jpeg_lossless_gray, J.decode_jpeg_lossless,
+                     np.uint16, 65536),
+    }[codec]
+    img = np.random.default_rng(0).integers(0, hi, (9, 9)).astype(dt)
+    enc = bytearray(encode(img))
     for trial in range(300):
         blob = bytearray(enc)
         r = np.random.default_rng(trial)
         for _ in range(r.integers(1, 4)):
             blob[r.integers(0, len(blob))] = r.integers(0, 256)
         try:
-            LS.decode_jpegls(bytes(blob))
+            decode(bytes(blob))
         except ValueError:
             pass
 
@@ -673,6 +683,18 @@ def test_dicom_multiframe_gray_reader_rejects_with_named_error():
     blob = C.encode_dicom_multiframe(stack, "rle")
     with pytest.raises(ValueError, match="decode_dicom_frames"):
         C.decode_dicom_gray(blob)
+
+
+def test_dicom_native_short_pixeldata_same_error_in_both_readers():
+    """Both readers share one Part-10 pixel read: a native PixelData 40
+    bytes short of Rows x Cols fails with the same named error in
+    each, not numpy's reshape error."""
+    a = np.arange(64, dtype=np.uint16).reshape(8, 8)
+    short = C.encode_dicom_gray(a)[:-40]
+    msg = "native PixelData holds 88 bytes; 1 frames of 8x8 need 128"
+    for read in (C.decode_dicom_gray, C.decode_dicom_frames):
+        with pytest.raises(ValueError, match=msg):
+            read(short)
 
 
 def test_dicom_frames_on_single_frame_returns_1hw():

@@ -229,7 +229,7 @@ def test_codestream_named_error_contracts():
     with pytest.raises(ValueError, match="9/7.*quantized QCD"):
         J.decode_j2k(bytes(s))
     # conversely: quantized QCD style on a 5/3 stream is inconsistent
-    s = bytearray(J.encode_j2k_gray_lossy(a))
+    s = bytearray(J.encode_j2k_gray(a, delta=1 / 64))
     cod = s.find(b"\xff\x52")
     s[cod + 13] = 1  # claim reversible 5/3 against a quantized QCD
     with pytest.raises(ValueError, match="reversible.*inconsistent"):
@@ -379,7 +379,7 @@ def test_lossy_roundtrip_error_bound(dt, lo, hi, style):
     rng2 = np.random.default_rng(14)
     for levels in (0, 1, 2, 3):
         for delta in (1 / 256, 1 / 64):
-            s = J.encode_j2k_gray_lossy(
+            s = J.encode_j2k_gray(
                 a, levels=levels, delta=delta, qcd_style=style
             )
             out = J.decode_j2k(s)
@@ -399,7 +399,7 @@ def test_lossy_compresses_smooth_images():
     x = np.arange(64)[:, None] + np.arange(96)[None, :]
     img = ((np.sin(x / 9.0) * 100) + 120).astype(np.uint8)
     lossless = J.encode_j2k_gray(img, levels=3)
-    lossy = J.encode_j2k_gray_lossy(img, levels=3, delta=1 / 32)
+    lossy = J.encode_j2k_gray(img, levels=3, delta=1 / 32)
     assert len(lossy) < len(lossless) * 0.5
     out = J.decode_j2k(lossy)
     err = np.abs(out.astype(np.int64) - img.astype(np.int64)).max()
@@ -410,7 +410,7 @@ def test_lossy_constant_image_reconstructs_exactly():
     c = np.full((16, 16), 200, dtype=np.uint8)
     for style in ("expounded", "derived"):
         out = J.decode_j2k(
-            J.encode_j2k_gray_lossy(c, qcd_style=style)
+            J.encode_j2k_gray(c, delta=1 / 64, qcd_style=style)
         )
         assert np.array_equal(out, c)
 
@@ -418,13 +418,14 @@ def test_lossy_constant_image_reconstructs_exactly():
 def test_lossy_named_error_contracts():
     a = np.zeros((8, 8), dtype=np.uint8)
     with pytest.raises(ValueError, match="2-D"):
-        J.encode_j2k_gray_lossy(np.zeros(4, dtype=np.uint8))
+        J.encode_j2k_gray(np.zeros(4, dtype=np.uint8), delta=1 / 64)
     with pytest.raises(ValueError, match="delta"):
-        J.encode_j2k_gray_lossy(a, delta=0.0)
+        J.encode_j2k_gray(a, delta=0.0)
     with pytest.raises(ValueError, match="qcd_style"):
-        J.encode_j2k_gray_lossy(a, qcd_style="nope")
+        J.encode_j2k_gray(a, delta=1 / 64, qcd_style="nope")
     # derived QCD must carry exactly one field
-    s = bytearray(J.encode_j2k_gray_lossy(a, qcd_style="expounded"))
+    s = bytearray(J.encode_j2k_gray(a, delta=1 / 64,
+                                       qcd_style="expounded"))
     qcd = s.find(b"\xff\x5c")
     s[qcd + 4] = (s[qcd + 4] & 0xE0) | 1  # claim derived, many fields
     with pytest.raises(ValueError, match="exactly one"):
@@ -437,7 +438,7 @@ def test_lossy_mutated_streams_raise_valueerror_never_crash():
     ValueError — never IndexError/struct.error/MemoryError."""
     rng = np.random.default_rng(15)
     img = rng.integers(0, 256, (24, 24)).astype(np.uint8)
-    base = J.encode_j2k_gray_lossy(img, levels=2, delta=1 / 64)
+    base = J.encode_j2k_gray(img, levels=2, delta=1 / 64)
     muts = 0
     for seed in range(120):
         r = np.random.default_rng(seed)
@@ -459,10 +460,10 @@ def test_lossy_mutated_streams_raise_valueerror_never_crash():
 
 def test_encode_decode_accept_same_sample_domain():
     """Encode and decode must accept the SAME domain: the decoder's
-    2^26-sample allocation bound is mirrored by both encoders, so no
-    legitimate image encodes to a stream its own decoder rejects."""
+    2^26-sample allocation bound is mirrored by the encoder on both its
+    reversible and irreversible paths, so no legitimate image encodes to a stream its own decoder rejects."""
     too_big = np.zeros((8192 + 1, 8192), dtype=np.uint8)  # > 2^26 samples
     with pytest.raises(ValueError, match="2\\^26-sample encode bound"):
         J.encode_j2k_gray(too_big)
     with pytest.raises(ValueError, match="2\\^26-sample encode bound"):
-        J.encode_j2k_gray_lossy(too_big)
+        J.encode_j2k_gray(too_big, delta=1 / 64)

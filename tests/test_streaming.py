@@ -327,7 +327,7 @@ def test_stream_left_outer_join_equals_batch_left_join(spark, sf_dir):
     want = {(r.click_id, r.purchase_id) for r in batch.collect()}
     stream = es.read_events_stream_with_flush(spark, sf_dir)
     got_df = es.run_bounded(
-        es.attribution_left_outer_stream(stream), mode="append"
+        es.attribution_join_stream(stream, how="left_outer"), mode="append"
     ).filter("click_id >= 0")
     got = {(r.click_id, r.purchase_id) for r in got_df.collect()}
     assert got == want
@@ -595,7 +595,7 @@ def test_stream_full_outer_join_equals_batch_full_join(spark, sf_dir):
 
     stream = es.read_events_stream_with_flush(spark, sf_dir)
     got_df = es.run_bounded(
-        es.attribution_full_outer_stream(stream), mode="append"
+        es.attribution_join_stream(stream, how="full_outer"), mode="append"
     ).filter(
         (F.coalesce(F.col("click_id"), F.lit(0)) >= 0)
         & (F.coalesce(F.col("purchase_id"), F.lit(0)) >= 0)
